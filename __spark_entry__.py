@@ -295,9 +295,11 @@ def q_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q07 — full multi-source conciliation (J9/W3/A1/C3/F6): the reference's
 # export_csv_dept.sql as a DataFrame pipeline vs a literal SQL mirror.
-# The derived cumul_adresses input makes every attribute a function of
-# the join key (fantoir, num, source) so duplicates are exact and the
-# dedup window is deterministic in both engines.
+# The oracle keeps the reference's join + ROW_NUMBER shape. The derived
+# cumul_adresses input makes every attribute a function of the key
+# (fantoir, num, source) and the raw numero, with no null coordinates,
+# so that shape and the engine's keyed fold (per-source struct min, see
+# operators/conciliation.py) pick the same row for every id.
 # ---------------------------------------------------------------------------
 
 def _street_sql(expr: str) -> str:

@@ -1,20 +1,29 @@
 """Multi-source address conciliation (the reference's export megaquery).
 
 DataFrame re-expression of `bano/sql/export_csv_dept.sql` (SURVEY.md
-J9/W3/A1/A2/C3/F6): a distinct (fantoir, canonical-number) universe is
-left-joined to the OSM / BAL / BAN source subsets, coordinates and
-street names resolve by fixed priority OSM > BAL > BAN, the source
-label is the reference's CASE chain (OSM / O+O / OD / C+O / CAD), and
-duplicates collapse by ROW_NUMBER over id ordered by numero.
+J9/W3/A1/A2/C3/F6) as ONE keyed fold, the shape of the reference's
+Adresses dict keyed by (FANTOIR, number) (bano/models.py:22-165): rows
+group by (fantoir, canonical number) and each source side keeps a single
+pick — OSM, BAL with non-zero coordinates, BAN with non-zero
+coordinates. A row whose lat or lon is null is absent from its side.
 
-Everything is built-in column expressions — joins stay broadcast/shuffle
-hash joins chosen by Catalyst/AQE, the number canonicalization chain is
-pure `regexp_replace`/`replace` (no UDF).
+Precedence goes by presence: the first present side of OSM > BAL > BAN
+supplies numero/lat/lon, and the key emits nothing when that side has no
+row with a valid number (the reference's numero filters). The other
+sides only fill the street name (voie_osm priority, then voie_autre) and
+the postcode (OSM, then BAN). The source label is the reference's CASE
+chain (OSM / O+O / OD / C+O / CAD).
+
+Each side's pick is the `min` of a struct (invalid?, numero, lat, lon,
+voie_osm, voie_autre, code_postal): valid rows first, then the
+reference's ORDER BY numero, with the remaining fields breaking every
+tie, so the output does not depend on row order or partitioning.
+Everything is built-in column expressions (no UDF, no join, no window).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def canonical_num(col: Column) -> Column:
@@ -38,122 +47,53 @@ _VALID_NUM = r"^[0-9]{1,4}( ?[A-Z]?.*)?"
 _JUNK_NUM = r".[0-9 .-]{9,}"
 
 
-def conciliate(cumul: DataFrame, codes_postaux: DataFrame | None = None,
-               communes_names: DataFrame | None = None,
-               materialize: bool = True) -> DataFrame:
+def conciliate(cumul: DataFrame) -> DataFrame:
     """`cumul` is cumul_adresses-shaped: (insee_com, dept, source, fantoir,
     numero, voie_osm, voie_autre, code_postal, lon, lat). Returns the
     export rows (id, numero, voie, code_post, ville, source, lat, lon)
     ordered by id — the reference's CSV export contract
-    (export_csv_dept.sql:95-106).
+    (export_csv_dept.sql:95-106)."""
+    numero = F.upper(F.replace(F.col("numero"), F.lit(" "), F.lit("")))
+    # never null: num > '0' below implies a non-null numero
+    bad = ~(numero.rlike(_VALID_NUM) & (numero != "99999")
+            & ~numero.rlike(_JUNK_NUM))
+    nonzero = (F.col("lon") != 0) & (F.col("lat") != 0)
+    sides = {
+        "o": (F.col("source") == "OSM")
+        & F.col("lat").isNotNull() & F.col("lon").isNotNull(),
+        "od": (F.col("source") == "BAL") & nonzero,
+        "c": (F.col("source") == "BAN") & nonzero,
+    }
+    rows = cumul.filter(F.col("fantoir").isNotNull()).select(
+        "fantoir",
+        F.coalesce(canonical_num(F.col("numero")), F.lit("")).alias("num"),
+        *[cond.alias(f"is_{s}") for s, cond in sides.items()],
+        F.struct(bad.alias("bad"), numero.alias("numero"), "lat", "lon",
+                 "voie_osm", "voie_autre", "code_postal").alias("row"),
+    ).filter(F.col("num") > "0")
+    g = rows.groupBy("fantoir", "num").agg(
+        *[F.min(F.when(F.col(f"is_{s}"), F.col("row"))).alias(s) for s in sides])
 
-    ``materialize`` persists the input before the 4-way branch (the
-    distinct universe + 3 source sides all read it): without it Spark
-    recomputes the whole upstream per branch — 4x the pages scan and
-    the normalize dictionary when fed from pipelines. Faithful to the
-    reference, where cumul_adresses IS a materialized table the
-    megaquery reads. Release with bano_spark.cache.release_all()."""
-    if materialize:
-        from ..cache import keep
-        cumul = keep(cumul)
-    # non-nullable join key: stops Catalyst pushing IsNotNull below the
-    # projection and re-inlining the canon chain per join (null numero
-    # canonicalizes like '' and '' never survives the num > '0' filter)
-    num = F.coalesce(canonical_num(F.col("numero")), F.lit("")).alias("num")
-
-    u = (
-        cumul.filter(F.col("fantoir").isNotNull())
-        .select("insee_com", "fantoir", num)
-        .distinct()
-    )
-
-    def side(src: str, zero_filter: bool) -> DataFrame:
-        d = cumul.filter(F.col("source") == src)
-        if zero_filter:
-            d = d.filter((F.col("lon") != 0) & (F.col("lat") != 0))
-        return d.select(
-            F.col("fantoir").alias("s_fantoir"), num,
-            "numero", "voie_osm", "voie_autre", "code_postal", "lon", "lat",
-        )
-
-    o = side("OSM", zero_filter=False)
-    c = side("BAN", zero_filter=True)
-    od = side("BAL", zero_filter=True)
-
-    def pref(df: DataFrame, p: str) -> DataFrame:
-        return df.select([F.col(cn).alias(f"{p}_{cn}") for cn in df.columns])
-
-    o, c, od = pref(o, "o"), pref(c, "c"), pref(od, "od")
-
-    j = (
-        u.join(o, (u.num == F.col("o_num")) & (u.fantoir == F.col("o_s_fantoir")), "left")
-        .join(od, (u.num == F.col("od_num")) & (u.fantoir == F.col("od_s_fantoir")), "left")
-        .join(c, (u.num == F.col("c_num")) & (u.fantoir == F.col("c_s_fantoir")), "left")
-    )
-
-    if codes_postaux is not None:
-        lp = codes_postaux.groupBy(F.col("insee").alias("insee_com")).agg(
-            F.min("cp").alias("lp_cp"))
-        j = j.join(F.broadcast(lp), "insee_com", "left")
-    else:
-        j = j.withColumn("lp_cp", F.lit(None).cast("string"))
-
-    def unquirk(col: Column) -> Column:
-        # voie cleanup chain: ’->', "->', ', '->' ', ','->' '
-        x = F.replace(col, F.lit("’"), F.lit("'"))
-        return x
-
+    best = F.coalesce(F.col("o"), F.col("od"), F.col("c"))
     voie = F.coalesce(
-        unquirk(F.col("o_voie_osm")), unquirk(F.col("od_voie_osm")),
-        unquirk(F.col("c_voie_osm")), F.col("od_voie_autre"), F.col("c_voie_autre"))
-    voie = F.replace(voie, F.lit('"'), F.lit("'"))
-    voie = F.replace(voie, F.lit(", "), F.lit(" "))
-    voie = F.replace(voie, F.lit(","), F.lit(" "))
-
+        *[F.replace(F.col(f"{s}.voie_osm"), F.lit("’"), F.lit("'")) for s in sides],
+        F.col("od.voie_autre"), F.col("c.voie_autre"))
+    for a, b in (('"', "'"), (", ", " "), (",", " ")):
+        voie = F.replace(voie, F.lit(a), F.lit(b))
     src = (
-        F.when(F.col("num") == F.col("o_num"), "OSM")
-        .when((F.col("num") == F.col("od_num"))
-              & (F.col("od_voie_osm") != F.col("od_voie_autre"))
-              & F.col("od_voie_osm").isNotNull(), "O+O")
-        .when(F.col("num") == F.col("od_num"), "OD")
-        .when(F.col("c_voie_osm") != "", "C+O")
+        F.when(F.col("o").isNotNull(), "OSM")
+        .when(F.col("od.voie_osm") != F.col("od.voie_autre"), "O+O")
+        .when(F.col("od").isNotNull(), "OD")
+        .when(F.col("c.voie_osm") != "", "C+O")
         .otherwise("CAD")
     )
-
-    res = j.select(
+    return g.filter(~best.getField("bad")).select(
         F.concat(F.col("fantoir"), F.lit("-"), F.col("num")).alias("id"),
-        F.upper(F.replace(F.coalesce("o_numero", "od_numero", "c_numero"),
-                          F.lit(" "), F.lit(""))).alias("numero"),
+        best.getField("numero").alias("numero"),
         voie.alias("voie"),
-        F.coalesce("o_code_postal", "c_code_postal", "lp_cp").alias("code_post"),
-        F.col("insee_com"),
+        F.coalesce(F.col("o.code_postal"), F.col("c.code_postal")).alias("code_post"),
+        F.lit(None).cast("string").alias("ville"),
         src.alias("source"),
-        F.coalesce("o_lat", "od_lat", "c_lat").alias("lat"),
-        F.coalesce("o_lon", "od_lon", "c_lon").alias("lon"),
-        F.col("num"),
-    ).filter(F.col("num") > "0")
-
-    if communes_names is not None:
-        cn = communes_names.select(F.col("com").alias("insee_com"),
-                                   F.col("libelle").alias("ville"),
-                                   F.col("typecom"))
-        res = res.join(F.broadcast(cn), "insee_com").filter(F.col("typecom") != "COMD")
-    else:
-        res = res.withColumn("ville", F.lit(None).cast("string"))
-
-    res = res.filter(
-        F.col("lat").isNotNull() & F.col("lon").isNotNull()
-        & F.col("numero").rlike(_VALID_NUM)
-        & (F.col("numero") != "99999")
-        & ~F.col("numero").rlike(_JUNK_NUM)
-    )
-
-    # lat/lon tiebreak: the reference orders by numero only and inherits
-    # Postgres scan order on ties; we make the pick deterministic
-    w = Window.partitionBy("id").orderBy("numero", "lat", "lon")
-    return (
-        res.withColumn("sequence", F.row_number().over(w))
-        .filter(F.col("sequence") == 1)
-        .select("id", "numero", "voie", "code_post", "ville", "source", "lat", "lon")
-        .orderBy("id")
-    )
+        best.getField("lat").alias("lat"),
+        best.getField("lon").alias("lon"),
+    ).orderBy("id")

@@ -335,18 +335,6 @@ def _attach_attrs(out, polygons, id_col, verts_col, broadcast):
     return out
 
 
-def release_spatial_caches() -> None:
-    """Unpersist operator caches (ADVICE r1: repeated calls in a long
-    session accumulated cached blocks). Delegates to the shared
-    registry, so conciliation's materialized input releases too.
-    Explicit caller cleanup only — spatial_join_left no longer calls
-    this on entry (ADVICE r2: draining the shared registry silently
-    unpersisted conciliation's input when the operators interleave)."""
-    from ..cache import release_all
-
-    release_all()
-
-
 _prev_left_cache: list = []
 
 
@@ -367,7 +355,7 @@ def spatial_join_left(
     MEMORY_AND_DISK. Cache lifetime is bounded in long-lived sessions:
     each call releases only the cache registered by its own previous
     call (ADVICE r2 — never the shared registry, which holds other
-    operators' still-live inputs); release_spatial_caches() remains for
+    operators' still-live inputs); bano_spark.cache.release_all() is the
     explicit full cleanup once results are materialized. Unpersist is
     correctness-safe — at worst a recompute."""
     from ..cache import keep

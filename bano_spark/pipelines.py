@@ -8,11 +8,12 @@ per-commune SQL template and folding rows into an in-memory dict
     pages ──extract──> typed records (all sources at once)
           ──normalize─> canonical street keys (vectorized pandas UDF)
           ──cumul────> cumul_adresses-shaped rows
-          ──conciliate> priority-joined export rows (export_csv_dept.sql)
+          ──conciliate> export rows by source priority (export_csv_dept.sql)
           ──csv lines─> unix-dialect export (byte layout of export.py)
 
 Partition pruning on insee/dept replaces the `__com__` template
-substitution; the `Adresses` dict becomes groupBy/join aggregation.
+substitution; the `Adresses` dict becomes one groupBy over
+(fantoir, number) in operators.conciliation.
 """
 
 from __future__ import annotations
@@ -29,22 +30,18 @@ SOURCE_OF_KIND = {"ban": "BAN", "osm": "OSM", "bal": "BAL"}
 
 
 def normalize_via_dictionary(df: DataFrame, col: str = "nom_voie",
-                             out: str = "_norm",
-                             broadcast: bool = True) -> DataFrame:
-    """Run the normalization UDF over DISTINCT names only, then join the
-    tiny dictionary back — the Spark-first shape of the reference's
+                             out: str = "_norm") -> DataFrame:
+    """Run the normalization UDF over DISTINCT names only, then broadcast
+    the tiny dictionary back — the Spark-first shape of the reference's
     fantoir.Mapping dict (sources/fantoir.py:4-60). Street names repeat
     massively at corpus scale, so the pandas crossing shrinks from
-    |rows| to |vocabulary|; set broadcast=False when the vocabulary
-    itself is huge (falls back to a shuffle join)."""
+    |rows| to |vocabulary|."""
     # non-nullable join key (same IsNotNull-pushdown pathology as
     # tiles.tile_x: a nullable key computed from the text parse gets its
     # null-check pushed below the projection, re-inlining the parse)
     df = df.withColumn(col, F.coalesce(F.col(col), F.lit("")))
     mapping = df.select(col).distinct().withColumn(out, normalize_udf(F.col(col)))
-    if broadcast:
-        mapping = F.broadcast(mapping)
-    return df.join(mapping, col)
+    return df.join(F.broadcast(mapping), col)
 
 
 def pages_to_cumul(pages: DataFrame, normalize: bool = True) -> DataFrame:
