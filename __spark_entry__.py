@@ -1911,457 +1911,11 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                "precision double, recall double, f1 double")
 
 
-from bano_spark import queries_wave4 as _w4  # noqa: E402
-from bano_spark import queries_wave5 as _w5  # noqa: E402
-from bano_spark import queries_wave8 as _w8  # noqa: E402
-from bano_spark import queries_wave9 as _w9  # noqa: E402
-from bano_spark import queries_wave10 as _w10  # noqa: E402
-from bano_spark import queries_wave11 as _w11  # noqa: E402
-from bano_spark import queries_wave13 as _w13  # noqa: E402
-from bano_spark import queries_wave14 as _w14  # noqa: E402
-from bano_spark import queries_wave15 as _w15  # noqa: E402
-from bano_spark import queries_wave16 as _w16  # noqa: E402
-from bano_spark import queries_wave17 as _w17  # noqa: E402
-from bano_spark import queries_wave18 as _w18  # noqa: E402
-from bano_spark import queries_wave19 as _w19  # noqa: E402
-from bano_spark import queries_wave20 as _w20  # noqa: E402
-from bano_spark import queries_wave21 as _w21  # noqa: E402
-from bano_spark import queries_wave22 as _w22  # noqa: E402
-from bano_spark import queries_wave23 as _w23  # noqa: E402
-from bano_spark import queries_wave24 as _w24  # noqa: E402
-from bano_spark import queries_wave25 as _w25  # noqa: E402
-from bano_spark import queries_wave26 as _w26  # noqa: E402
-from bano_spark import queries_wave27 as _w27  # noqa: E402
-from bano_spark import queries_wave28 as _w28  # noqa: E402
-from bano_spark import queries_wave29 as _w29  # noqa: E402
-from bano_spark import queries_wave30 as _w30  # noqa: E402
-from bano_spark import queries_wave31 as _w31  # noqa: E402
-from bano_spark import queries_wave32 as _w32  # noqa: E402
-from bano_spark import queries_wave33 as _w33  # noqa: E402
-from bano_spark import queries_wave34 as _w34  # noqa: E402
-from bano_spark import queries_wave35 as _w35  # noqa: E402
-from bano_spark import queries_wave36 as _w36  # noqa: E402
-from bano_spark import queries_wave37 as _w37  # noqa: E402
-from bano_spark import queries_wave38 as _w38  # noqa: E402
-from bano_spark import queries_wave39 as _w39  # noqa: E402
-from bano_spark import queries_wave40 as _w40  # noqa: E402
-from bano_spark import queries_wave41 as _w41  # noqa: E402
-from bano_spark import queries_wave42 as _w42  # noqa: E402
-from bano_spark import queries_wave43 as _w43  # noqa: E402
-from bano_spark import queries_wave44 as _w44  # noqa: E402
-from bano_spark import queries_wave45 as _w45  # noqa: E402
-from bano_spark import queries_wave46 as _w46  # noqa: E402
-from bano_spark import queries_wave47 as _w47  # noqa: E402
-from bano_spark import queries_wave48 as _w48  # noqa: E402
-from bano_spark import queries_wave49 as _w49  # noqa: E402
-from bano_spark import queries_wave50 as _w50  # noqa: E402
-from bano_spark import queries_wave51 as _w51  # noqa: E402
-from bano_spark import queries_wave52 as _w52  # noqa: E402
-from bano_spark import queries_wave53 as _w53  # noqa: E402
-from bano_spark import queries_wave54 as _w54  # noqa: E402
-from bano_spark import queries_wave55 as _w55  # noqa: E402
-from bano_spark import queries_wave56 as _w56  # noqa: E402
-from bano_spark import queries_wave57 as _w57  # noqa: E402
-from bano_spark import queries_wave58 as _w58  # noqa: E402
-from bano_spark import queries_wave59 as _w59  # noqa: E402
-from bano_spark import queries_wave60 as _w60  # noqa: E402
-from bano_spark import queries_wave61 as _w61  # noqa: E402
-from bano_spark import queries_wave62 as _w62  # noqa: E402
-from bano_spark import queries_wave63 as _w63  # noqa: E402
-from bano_spark import queries_wave64 as _w64  # noqa: E402
-from bano_spark import queries_wave65 as _w65  # noqa: E402
-from bano_spark import queries_wave66 as _w66  # noqa: E402
-from bano_spark import queries_wave67 as _w67  # noqa: E402
-from bano_spark import queries_wave68 as _w68  # noqa: E402
-from bano_spark import queries_wave69 as _w69  # noqa: E402
-from bano_spark import queries_wave70 as _w70  # noqa: E402
-from bano_spark import queries_wave71 as _w71  # noqa: E402
-from bano_spark import queries_wave72 as _w72  # noqa: E402
-from bano_spark import queries_wave73 as _w73  # noqa: E402
-from bano_spark import queries_wave74 as _w74  # noqa: E402
-from bano_spark import queries_wave75 as _w75  # noqa: E402
-from bano_spark import queries_wave76 as _w76  # noqa: E402
-from bano_spark import queries_wave77 as _w77  # noqa: E402
-from bano_spark import queries_wave78 as _w78  # noqa: E402
-from bano_spark import queries_wave79 as _w79  # noqa: E402
-from bano_spark import queries_wave80 as _w80  # noqa: E402
-from bano_spark import queries_wave81 as _w81  # noqa: E402
-from bano_spark import queries_wave82 as _w82  # noqa: E402
-from bano_spark import queries_wave83 as _w83  # noqa: E402
-from bano_spark import queries_wave84 as _w84  # noqa: E402
-from bano_spark import queries_wave85 as _w85  # noqa: E402
-from bano_spark import queries_wave86 as _w86  # noqa: E402
-from bano_spark import queries_wave87 as _w87  # noqa: E402
-from bano_spark import queries_wave88 as _w88  # noqa: E402
-from bano_spark import queries_wave89 as _w89  # noqa: E402
-from bano_spark import queries_wave90 as _w90  # noqa: E402
-from bano_spark import queries_wave91 as _w91  # noqa: E402
-from bano_spark import queries_wave92 as _w92  # noqa: E402
-from bano_spark import queries_wave93 as _w93  # noqa: E402
-from bano_spark import queries_wave94 as _w94  # noqa: E402
-from bano_spark import queries_wave95 as _w95  # noqa: E402
-from bano_spark import queries_wave96 as _w96  # noqa: E402
-from bano_spark import queries_wave97 as _w97  # noqa: E402
-from bano_spark import queries_wave98 as _w98  # noqa: E402
-from bano_spark import queries_wave99 as _w99  # noqa: E402
-from bano_spark import queries_wave100 as _w100  # noqa: E402
-from bano_spark import queries_wave101 as _w101  # noqa: E402
-from bano_spark import queries_wave102 as _w102  # noqa: E402
-from bano_spark import queries_wave103 as _w103  # noqa: E402
-from bano_spark import queries_wave104 as _w104  # noqa: E402
-from bano_spark import queries_wave105 as _w105  # noqa: E402
-from bano_spark import queries_wave106 as _w106  # noqa: E402
-from bano_spark import queries_wave107 as _w107  # noqa: E402
-from bano_spark import queries_wave108 as _w108  # noqa: E402
-from bano_spark import queries_wave109 as _w109  # noqa: E402
-from bano_spark import queries_wave110 as _w110  # noqa: E402
-from bano_spark import queries_wave111 as _w111  # noqa: E402
-from bano_spark import queries_wave112 as _w112  # noqa: E402
-from bano_spark import queries_wave113 as _w113  # noqa: E402
-from bano_spark import queries_wave114 as _w114  # noqa: E402
-from bano_spark import queries_wave115 as _w115  # noqa: E402
-from bano_spark import queries_wave116 as _w116  # noqa: E402
-from bano_spark import queries_wave117 as _w117  # noqa: E402
-from bano_spark import queries_wave118 as _w118  # noqa: E402
-from bano_spark import queries_wave119 as _w119  # noqa: E402
-from bano_spark import queries_wave120 as _w120  # noqa: E402
-from bano_spark import queries_wave121 as _w121  # noqa: E402
-from bano_spark import queries_wave122 as _w122  # noqa: E402
-from bano_spark import queries_wave123 as _w123  # noqa: E402
-from bano_spark import queries_wave124 as _w124  # noqa: E402
-from bano_spark import queries_wave125 as _w125  # noqa: E402
-from bano_spark import queries_wave126 as _w126  # noqa: E402
-from bano_spark import queries_wave127 as _w127  # noqa: E402
-from bano_spark import queries_wave128 as _w128  # noqa: E402
-from bano_spark import queries_wave129 as _w129  # noqa: E402
-from bano_spark import queries_wave130 as _w130  # noqa: E402
-from bano_spark import queries_wave131 as _w131  # noqa: E402
-from bano_spark import queries_wave132 as _w132  # noqa: E402
-from bano_spark import queries_wave133 as _w133  # noqa: E402
-from bano_spark import queries_wave134 as _w134  # noqa: E402
-from bano_spark import queries_wave135 as _w135  # noqa: E402
-from bano_spark import queries_wave136 as _w136  # noqa: E402
-from bano_spark import queries_wave137 as _w137  # noqa: E402
-from bano_spark import queries_wave138 as _w138  # noqa: E402
-from bano_spark import queries_wave139 as _w139  # noqa: E402
-from bano_spark import queries_wave140 as _w140  # noqa: E402
-from bano_spark import queries_wave141 as _w141  # noqa: E402
-from bano_spark import queries_wave142 as _w142  # noqa: E402
-from bano_spark import queries_wave143 as _w143  # noqa: E402
-from bano_spark import queries_wave144 as _w144  # noqa: E402
-from bano_spark import queries_wave145 as _w145  # noqa: E402
-from bano_spark import queries_wave146 as _w146  # noqa: E402
-from bano_spark import queries_wave147 as _w147  # noqa: E402
-from bano_spark import queries_wave148 as _w148  # noqa: E402
-from bano_spark import queries_wave149 as _w149  # noqa: E402
-from bano_spark import queries_wave150 as _w150  # noqa: E402
-from bano_spark import queries_wave151 as _w151  # noqa: E402
-from bano_spark import queries_wave152 as _w152  # noqa: E402
-from bano_spark import queries_wave153 as _w153  # noqa: E402
-from bano_spark import queries_wave154 as _w154  # noqa: E402
-from bano_spark import queries_wave155 as _w155  # noqa: E402
-from bano_spark import queries_wave156 as _w156  # noqa: E402
+from bano_spark import queries_wave4, queries_wave5, queries_wave120  # noqa: E402
 
-_QUERIES.update(_w4.QUERIES)
-_ORACLES.update(_w4.ORACLES)
-_QUERIES.update(_w5.QUERIES)
-_ORACLES.update(_w5.ORACLES)
-_QUERIES.update(_w8.QUERIES)
-_ORACLES.update(_w8.ORACLES)
-_QUERIES.update(_w9.QUERIES)
-_ORACLES.update(_w9.ORACLES)
-_QUERIES.update(_w10.QUERIES)
-_ORACLES.update(_w10.ORACLES)
-_QUERIES.update(_w11.QUERIES)
-_ORACLES.update(_w11.ORACLES)
-_QUERIES.update(_w13.QUERIES)
-_ORACLES.update(_w13.ORACLES)
-_QUERIES.update(_w14.QUERIES)
-_ORACLES.update(_w14.ORACLES)
-_QUERIES.update(_w15.QUERIES)
-_ORACLES.update(_w15.ORACLES)
-_QUERIES.update(_w16.QUERIES)
-_ORACLES.update(_w16.ORACLES)
-_QUERIES.update(_w17.QUERIES)
-_ORACLES.update(_w17.ORACLES)
-_QUERIES.update(_w18.QUERIES)
-_ORACLES.update(_w18.ORACLES)
-_QUERIES.update(_w19.QUERIES)
-_ORACLES.update(_w19.ORACLES)
-_QUERIES.update(_w20.QUERIES)
-_ORACLES.update(_w20.ORACLES)
-_QUERIES.update(_w21.QUERIES)
-_ORACLES.update(_w21.ORACLES)
-_QUERIES.update(_w22.QUERIES)
-_ORACLES.update(_w22.ORACLES)
-_QUERIES.update(_w23.QUERIES)
-_ORACLES.update(_w23.ORACLES)
-_QUERIES.update(_w24.QUERIES)
-_ORACLES.update(_w24.ORACLES)
-_QUERIES.update(_w25.QUERIES)
-_ORACLES.update(_w25.ORACLES)
-_QUERIES.update(_w26.QUERIES)
-_ORACLES.update(_w26.ORACLES)
-_QUERIES.update(_w27.QUERIES)
-_ORACLES.update(_w27.ORACLES)
-_QUERIES.update(_w28.QUERIES)
-_ORACLES.update(_w28.ORACLES)
-_QUERIES.update(_w29.QUERIES)
-_ORACLES.update(_w29.ORACLES)
-_QUERIES.update(_w30.QUERIES)
-_ORACLES.update(_w30.ORACLES)
-_QUERIES.update(_w31.QUERIES)
-_ORACLES.update(_w31.ORACLES)
-_QUERIES.update(_w32.QUERIES)
-_ORACLES.update(_w32.ORACLES)
-_QUERIES.update(_w33.QUERIES)
-_ORACLES.update(_w33.ORACLES)
-_QUERIES.update(_w34.QUERIES)
-_ORACLES.update(_w34.ORACLES)
-_QUERIES.update(_w35.QUERIES)
-_ORACLES.update(_w35.ORACLES)
-_QUERIES.update(_w36.QUERIES)
-_ORACLES.update(_w36.ORACLES)
-_QUERIES.update(_w37.QUERIES)
-_ORACLES.update(_w37.ORACLES)
-_QUERIES.update(_w38.QUERIES)
-_ORACLES.update(_w38.ORACLES)
-_QUERIES.update(_w39.QUERIES)
-_ORACLES.update(_w39.ORACLES)
-_QUERIES.update(_w40.QUERIES)
-_ORACLES.update(_w40.ORACLES)
-_QUERIES.update(_w41.QUERIES)
-_ORACLES.update(_w41.ORACLES)
-_QUERIES.update(_w42.QUERIES)
-_ORACLES.update(_w42.ORACLES)
-_QUERIES.update(_w43.QUERIES)
-_ORACLES.update(_w43.ORACLES)
-_QUERIES.update(_w44.QUERIES)
-_ORACLES.update(_w44.ORACLES)
-_QUERIES.update(_w45.QUERIES)
-_ORACLES.update(_w45.ORACLES)
-_QUERIES.update(_w46.QUERIES)
-_ORACLES.update(_w46.ORACLES)
-_QUERIES.update(_w47.QUERIES)
-_ORACLES.update(_w47.ORACLES)
-_QUERIES.update(_w48.QUERIES)
-_ORACLES.update(_w48.ORACLES)
-_QUERIES.update(_w49.QUERIES)
-_ORACLES.update(_w49.ORACLES)
-_QUERIES.update(_w50.QUERIES)
-_ORACLES.update(_w50.ORACLES)
-_QUERIES.update(_w51.QUERIES)
-_ORACLES.update(_w51.ORACLES)
-_QUERIES.update(_w52.QUERIES)
-_ORACLES.update(_w52.ORACLES)
-_QUERIES.update(_w53.QUERIES)
-_ORACLES.update(_w53.ORACLES)
-_QUERIES.update(_w54.QUERIES)
-_ORACLES.update(_w54.ORACLES)
-_QUERIES.update(_w55.QUERIES)
-_ORACLES.update(_w55.ORACLES)
-_QUERIES.update(_w56.QUERIES)
-_ORACLES.update(_w56.ORACLES)
-_QUERIES.update(_w57.QUERIES)
-_ORACLES.update(_w57.ORACLES)
-_QUERIES.update(_w58.QUERIES)
-_ORACLES.update(_w58.ORACLES)
-_QUERIES.update(_w59.QUERIES)
-_ORACLES.update(_w59.ORACLES)
-_QUERIES.update(_w60.QUERIES)
-_ORACLES.update(_w60.ORACLES)
-_QUERIES.update(_w61.QUERIES)
-_ORACLES.update(_w61.ORACLES)
-_QUERIES.update(_w62.QUERIES)
-_ORACLES.update(_w62.ORACLES)
-_QUERIES.update(_w63.QUERIES)
-_ORACLES.update(_w63.ORACLES)
-_QUERIES.update(_w64.QUERIES)
-_ORACLES.update(_w64.ORACLES)
-_QUERIES.update(_w65.QUERIES)
-_ORACLES.update(_w65.ORACLES)
-_QUERIES.update(_w66.QUERIES)
-_ORACLES.update(_w66.ORACLES)
-_QUERIES.update(_w67.QUERIES)
-_ORACLES.update(_w67.ORACLES)
-_QUERIES.update(_w68.QUERIES)
-_ORACLES.update(_w68.ORACLES)
-_QUERIES.update(_w69.QUERIES)
-_ORACLES.update(_w69.ORACLES)
-_QUERIES.update(_w70.QUERIES)
-_ORACLES.update(_w70.ORACLES)
-_QUERIES.update(_w71.QUERIES)
-_ORACLES.update(_w71.ORACLES)
-_QUERIES.update(_w72.QUERIES)
-_ORACLES.update(_w72.ORACLES)
-_QUERIES.update(_w73.QUERIES)
-_ORACLES.update(_w73.ORACLES)
-_QUERIES.update(_w74.QUERIES)
-_ORACLES.update(_w74.ORACLES)
-_QUERIES.update(_w75.QUERIES)
-_ORACLES.update(_w75.ORACLES)
-_QUERIES.update(_w76.QUERIES)
-_ORACLES.update(_w76.ORACLES)
-_QUERIES.update(_w77.QUERIES)
-_ORACLES.update(_w77.ORACLES)
-_QUERIES.update(_w78.QUERIES)
-_ORACLES.update(_w78.ORACLES)
-_QUERIES.update(_w79.QUERIES)
-_ORACLES.update(_w79.ORACLES)
-_QUERIES.update(_w80.QUERIES)
-_ORACLES.update(_w80.ORACLES)
-_QUERIES.update(_w81.QUERIES)
-_ORACLES.update(_w81.ORACLES)
-_QUERIES.update(_w82.QUERIES)
-_ORACLES.update(_w82.ORACLES)
-_QUERIES.update(_w83.QUERIES)
-_ORACLES.update(_w83.ORACLES)
-_QUERIES.update(_w84.QUERIES)
-_ORACLES.update(_w84.ORACLES)
-_QUERIES.update(_w85.QUERIES)
-_ORACLES.update(_w85.ORACLES)
-_QUERIES.update(_w86.QUERIES)
-_ORACLES.update(_w86.ORACLES)
-_QUERIES.update(_w87.QUERIES)
-_ORACLES.update(_w87.ORACLES)
-_QUERIES.update(_w88.QUERIES)
-_ORACLES.update(_w88.ORACLES)
-_QUERIES.update(_w89.QUERIES)
-_ORACLES.update(_w89.ORACLES)
-_QUERIES.update(_w90.QUERIES)
-_ORACLES.update(_w90.ORACLES)
-_QUERIES.update(_w91.QUERIES)
-_ORACLES.update(_w91.ORACLES)
-_QUERIES.update(_w92.QUERIES)
-_ORACLES.update(_w92.ORACLES)
-_QUERIES.update(_w93.QUERIES)
-_ORACLES.update(_w93.ORACLES)
-_QUERIES.update(_w94.QUERIES)
-_ORACLES.update(_w94.ORACLES)
-_QUERIES.update(_w95.QUERIES)
-_ORACLES.update(_w95.ORACLES)
-_QUERIES.update(_w96.QUERIES)
-_ORACLES.update(_w96.ORACLES)
-_QUERIES.update(_w97.QUERIES)
-_ORACLES.update(_w97.ORACLES)
-_QUERIES.update(_w98.QUERIES)
-_ORACLES.update(_w98.ORACLES)
-_QUERIES.update(_w99.QUERIES)
-_ORACLES.update(_w99.ORACLES)
-_QUERIES.update(_w100.QUERIES)
-_ORACLES.update(_w100.ORACLES)
-_QUERIES.update(_w101.QUERIES)
-_ORACLES.update(_w101.ORACLES)
-_QUERIES.update(_w102.QUERIES)
-_ORACLES.update(_w102.ORACLES)
-_QUERIES.update(_w103.QUERIES)
-_ORACLES.update(_w103.ORACLES)
-_QUERIES.update(_w104.QUERIES)
-_ORACLES.update(_w104.ORACLES)
-_QUERIES.update(_w105.QUERIES)
-_ORACLES.update(_w105.ORACLES)
-_QUERIES.update(_w106.QUERIES)
-_ORACLES.update(_w106.ORACLES)
-_QUERIES.update(_w107.QUERIES)
-_ORACLES.update(_w107.ORACLES)
-_QUERIES.update(_w108.QUERIES)
-_ORACLES.update(_w108.ORACLES)
-_QUERIES.update(_w109.QUERIES)
-_ORACLES.update(_w109.ORACLES)
-_QUERIES.update(_w110.QUERIES)
-_ORACLES.update(_w110.ORACLES)
-_QUERIES.update(_w111.QUERIES)
-_ORACLES.update(_w111.ORACLES)
-_QUERIES.update(_w112.QUERIES)
-_ORACLES.update(_w112.ORACLES)
-_QUERIES.update(_w113.QUERIES)
-_ORACLES.update(_w113.ORACLES)
-_QUERIES.update(_w114.QUERIES)
-_ORACLES.update(_w114.ORACLES)
-_QUERIES.update(_w115.QUERIES)
-_ORACLES.update(_w115.ORACLES)
-_QUERIES.update(_w116.QUERIES)
-_ORACLES.update(_w116.ORACLES)
-_QUERIES.update(_w117.QUERIES)
-_ORACLES.update(_w117.ORACLES)
-_QUERIES.update(_w118.QUERIES)
-_ORACLES.update(_w118.ORACLES)
-_QUERIES.update(_w119.QUERIES)
-_ORACLES.update(_w119.ORACLES)
-_QUERIES.update(_w120.QUERIES)
-_ORACLES.update(_w120.ORACLES)
-_QUERIES.update(_w121.QUERIES)
-_ORACLES.update(_w121.ORACLES)
-_QUERIES.update(_w122.QUERIES)
-_ORACLES.update(_w122.ORACLES)
-_QUERIES.update(_w123.QUERIES)
-_ORACLES.update(_w123.ORACLES)
-_QUERIES.update(_w124.QUERIES)
-_ORACLES.update(_w124.ORACLES)
-_QUERIES.update(_w125.QUERIES)
-_ORACLES.update(_w125.ORACLES)
-_QUERIES.update(_w126.QUERIES)
-_ORACLES.update(_w126.ORACLES)
-_QUERIES.update(_w127.QUERIES)
-_ORACLES.update(_w127.ORACLES)
-_QUERIES.update(_w128.QUERIES)
-_ORACLES.update(_w128.ORACLES)
-_QUERIES.update(_w129.QUERIES)
-_ORACLES.update(_w129.ORACLES)
-_QUERIES.update(_w130.QUERIES)
-_ORACLES.update(_w130.ORACLES)
-_QUERIES.update(_w131.QUERIES)
-_ORACLES.update(_w131.ORACLES)
-_QUERIES.update(_w132.QUERIES)
-_ORACLES.update(_w132.ORACLES)
-_QUERIES.update(_w133.QUERIES)
-_ORACLES.update(_w133.ORACLES)
-_QUERIES.update(_w134.QUERIES)
-_ORACLES.update(_w134.ORACLES)
-_QUERIES.update(_w135.QUERIES)
-_ORACLES.update(_w135.ORACLES)
-_QUERIES.update(_w136.QUERIES)
-_ORACLES.update(_w136.ORACLES)
-_QUERIES.update(_w137.QUERIES)
-_ORACLES.update(_w137.ORACLES)
-_QUERIES.update(_w138.QUERIES)
-_ORACLES.update(_w138.ORACLES)
-_QUERIES.update(_w139.QUERIES)
-_ORACLES.update(_w139.ORACLES)
-_QUERIES.update(_w140.QUERIES)
-_ORACLES.update(_w140.ORACLES)
-_QUERIES.update(_w141.QUERIES)
-_ORACLES.update(_w141.ORACLES)
-_QUERIES.update(_w142.QUERIES)
-_ORACLES.update(_w142.ORACLES)
-_QUERIES.update(_w143.QUERIES)
-_ORACLES.update(_w143.ORACLES)
-_QUERIES.update(_w144.QUERIES)
-_ORACLES.update(_w144.ORACLES)
-_QUERIES.update(_w145.QUERIES)
-_ORACLES.update(_w145.ORACLES)
-_QUERIES.update(_w146.QUERIES)
-_ORACLES.update(_w146.ORACLES)
-_QUERIES.update(_w147.QUERIES)
-_ORACLES.update(_w147.ORACLES)
-_QUERIES.update(_w148.QUERIES)
-_ORACLES.update(_w148.ORACLES)
-_QUERIES.update(_w149.QUERIES)
-_ORACLES.update(_w149.ORACLES)
-_QUERIES.update(_w150.QUERIES)
-_ORACLES.update(_w150.ORACLES)
-_QUERIES.update(_w151.QUERIES)
-_ORACLES.update(_w151.ORACLES)
-_QUERIES.update(_w152.QUERIES)
-_ORACLES.update(_w152.ORACLES)
-_QUERIES.update(_w153.QUERIES)
-_ORACLES.update(_w153.ORACLES)
-_QUERIES.update(_w154.QUERIES)
-_ORACLES.update(_w154.ORACLES)
-_QUERIES.update(_w155.QUERIES)
-_ORACLES.update(_w155.ORACLES)
-_QUERIES.update(_w156.QUERIES)
-_ORACLES.update(_w156.ORACLES)
+for _wave in (queries_wave4, queries_wave5, queries_wave120):
+    _QUERIES.update(_wave.QUERIES)
+    _ORACLES.update(_wave.ORACLES)
 
 
 # ---------------------------------------------------------------------------

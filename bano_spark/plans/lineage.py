@@ -20,6 +20,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 LOG_SCHEMA = T.StructType([
@@ -39,9 +40,14 @@ class CheckpointLog:
         self.path = path
 
     def read(self) -> DataFrame:
+        """The log; empty only when nothing was ever logged. A log that
+        exists but cannot be read raises: read as empty, it would mean
+        "nothing done" and every partition would be recomputed."""
         try:
             return self.spark.read.schema(LOG_SCHEMA).parquet(self.path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], LOG_SCHEMA)
 
     def completed(self, source: str, etape: str) -> set[str]:
@@ -65,16 +71,16 @@ def resumable_partition_write(
     """Write df partitioned by key_col, skipping keys already logged as
     complete; returns the keys written this run. Idempotent per
     (source, etape, partition): dynamic partition overwrite replaces
-    exactly the partitions produced (S12 semantics)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    exactly the partitions produced (S12 semantics). The mode is a
+    per-write option: the session's own setting is left untouched."""
     done = log.completed(source, etape)
     todo = df.filter(~F.col(key_col).isin(list(done))) if done else df
     t0 = time.time()
     counts = {r[0]: r[1] for r in todo.groupBy(key_col).count().collect()}
     if not counts:
         return []
-    (todo.write.mode("overwrite").partitionBy(key_col).parquet(out_path))
+    (todo.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(key_col).parquet(out_path))
     t1 = time.time()
     run_id = uuid.uuid4().hex
     log.append([

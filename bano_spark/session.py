@@ -52,7 +52,7 @@ def get_session(
         # -Xms == -Xmx: G1 otherwise uncommits idle regions and returns
         # their pages to the OS, and on this microVM every RE-touched
         # page pays the ~80 MB/s host fault tax again (r4 root-cause
-        # study, tools/bench_firstrun_ab.py + bench.py header: first
+        # study, AB_FIRSTRUN.jsonl + bench.py header: first
         # touch is the 10-60x first-big-run anomaly; bench sessions add
         # -XX:+AlwaysPreTouch on top to pay the whole tax at startup).
         # On a real cluster the same flags belong in executor options.

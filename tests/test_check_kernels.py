@@ -1,16 +1,12 @@
 """The numpy-replay harness (tools/check_kernels.py) must actually
 DETECT formula errors — negative controls perturb a replay's output
-the way a real bug would and assert the comparator flags it, plus
-spot-checks of the replay formulas against hand values."""
+the way a real bug would and assert the comparator flags it."""
 
 from __future__ import annotations
 
-import math
 import sys
 
-import numpy as np
 import pandas as pd
-import pytest
 
 sys.path.insert(0, ".")
 
@@ -59,49 +55,3 @@ def test_comparator_slack_allows_only_declared_budget():
     assert CK._compare("x", got, exp, spec0)
     assert CK._compare("x", got, exp, spec1) == []
 
-
-def test_replay_xtd_hand_value():
-    # point on the route start: XTD must be ~0; a point due south of
-    # the anchor by 1 degree has |XTD| ~ 111 km-scale cross-track
-    phi1, phi2 = math.radians(45.0), math.radians(50.0)
-    dl12 = math.radians(30.0)
-    th12 = math.atan2(
-        math.sin(dl12) * math.cos(phi2),
-        math.cos(phi1) * math.sin(phi2)
-        - math.sin(phi1) * math.cos(phi2) * math.cos(dl12))
-    # replicate the replay's formula for a single point
-    def xtd_km(lon, lat):
-        phi3, dlam = math.radians(lat), math.radians(lon)
-        d13 = 2 * math.asin(math.sqrt(
-            math.sin((phi3 - phi1) / 2) ** 2
-            + math.cos(phi1) * math.cos(phi3)
-            * math.sin(dlam / 2) ** 2))
-        th13 = math.atan2(
-            math.sin(dlam) * math.cos(phi3),
-            math.cos(phi1) * math.sin(phi3)
-            - math.sin(phi1) * math.cos(phi3) * math.cos(dlam))
-        return math.asin(math.sin(d13)
-                         * math.sin(th13 - th12)) * CK.R_KM
-
-    assert abs(xtd_km(0.0, 45.0)) < 1e-9
-    assert abs(abs(xtd_km(0.0, 44.0)) - 111.0) < 40.0
-
-
-def test_replay_em_recovers_planted_rate():
-    # synthetic pattern counts from known (p, m, u): EM from the
-    # fixed start must recover them closely
-    p, m, u = 0.2, [0.95, 0.90, 0.95], [0.05, 0.05, 0.10]
-    n = np.zeros(8)
-    total = 1_000_000
-    for g in range(8):
-        pm = pu = 1.0
-        for k in range(3):
-            bit = (g >> k) & 1
-            pm *= m[k] if bit else 1 - m[k]
-            pu *= u[k] if bit else 1 - u[k]
-        n[g] = total * (p * pm + (1 - p) * pu)
-    lam, mm, uu, _ = CK._em_run(n, 20)
-    assert lam == pytest.approx(0.2, abs=1e-3)
-    for k in range(3):
-        assert mm[k] == pytest.approx(m[k], abs=1e-2)
-        assert uu[k] == pytest.approx(u[k], abs=1e-2)

@@ -6,10 +6,20 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bano_spark.queries_wave84 import EMIT, INIT, TRANS
 from bano_spark.operators.decoding import (perceptron_ipm,
                                            perceptron_ipm_eval,
                                            viterbi_decode)
+
+# HMM spec (integer log-scores, higher = better). Observation alphabet:
+#   0 click  1 error  2 purchase  3 signup  4 view
+# Hidden states: 0 casual  1 shopper  2 frustrated.
+INIT = [0, -5, -8]
+TRANS = [[-1, -4, -6],
+         [-4, -1, -5],
+         [-5, -5, -1]]
+EMIT = [[-1, -7, -8, -4, -1],
+        [-2, -6, -1, -5, -3],
+        [-4, -1, -9, -6, -4]]
 
 
 def py_viterbi(obs, init, trans, emit):

@@ -2,6 +2,7 @@
 
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from bano_spark import synth
@@ -28,6 +29,35 @@ def test_resumable_write_skips_done(spark, tmp_path):
     assert third == ["2", "3"]
     # output still complete
     assert spark.read.parquet(out).count() == 100
+
+
+def test_resumable_write_leaves_session_overwrite_mode(spark, tmp_path):
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        log = CheckpointLog(spark, str(tmp_path / "log"))
+        df = spark.range(8).withColumn("dept", (F.col("id") % 2).cast("string"))
+        resumable_partition_write(df, str(tmp_path / "out"), "dept", log,
+                                  "BAN", "load")
+        assert spark.conf.get(key) == "static"
+        # a later plain partitioned overwrite in the same session still
+        # replaces the whole directory: a stale partition does not survive
+        staging = str(tmp_path / "staging")
+        df.write.mode("overwrite").partitionBy("dept").parquet(staging)
+        df.filter("dept = '0'").write.mode("overwrite") \
+            .partitionBy("dept").parquet(staging)
+        assert sorted(p.name for p in Path(staging).glob("dept=*")) == ["dept=0"]
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_corrupt_log_raises(spark, tmp_path):
+    log_dir = tmp_path / "log"
+    log_dir.mkdir()
+    (log_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet|footer|read"):
+        CheckpointLog(spark, str(log_dir)).completed("BAN", "load")
 
 
 def _tile_lines(path: Path, coords):

@@ -9,10 +9,23 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+# One sentence per language; the trigram profiles separate all five.
+_LID_SENTS = {
+    "en": ("the quick brown fox jumps over the lazy dog while the "
+           "children are reading in the garden with their friends"),
+    "fr": ("le petit chat dort dans la maison et les enfants jouent "
+           "avec une belle histoire de la ville pres de la mer"),
+    "de": ("der schnelle braune fuchs springt uber den faulen hund "
+           "und die kinder lesen ein schones buch in der schule"),
+    "es": ("el perro rapido salta sobre la valla y los ninos leen un "
+           "libro en la escuela con sus amigos cerca del mar"),
+    "it": ("il gatto dorme nella casa e i bambini leggono un libro "
+           "nella scuola con gli amici vicino al mare della citta"),
+}
+
 
 def test_langid_predicts_every_language(spark):
     from bano_spark.operators.langid import langid_trigram, profiles_df
-    from bano_spark.queries_wave14 import _LID_SENTS
 
     rows = []
     for i, (lang, sent) in enumerate(_LID_SENTS.items()):

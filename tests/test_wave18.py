@@ -92,7 +92,7 @@ def test_stitch_overlaps_planted_seam(spark):
 
 def test_langid_segments_mixed(spark):
     from bano_spark.operators.langid import langid_segments, profiles_df
-    from bano_spark.queries_wave14 import _LID_SENTS
+    from tests.test_wave14 import _LID_SENTS
 
     docs = spark.createDataFrame(
         [(1, _LID_SENTS["en"] + " " + _LID_SENTS["fr"]),

@@ -1,26 +1,18 @@
-"""Independent numpy replay of the shared-(name,sql)-chain queries
-(VERDICT r4 "what's wrong" item 1 / top_next).
+"""Independent numpy replay of a query whose DuckDB oracle shares its
+formula chain with the engine.
 
-For the waves whose DuckDB oracle executes the SAME expression text
-as the engine (via a shared chain helper — crosstrack xtd_chain,
-equalearth EE_CHAIN/UTM_CHAIN, linkage_em em_exprs — or a
-hand-mirrored identical algebra: finance IRR folds, groupseq OBF
-look chains, sq8 affine codes), a green oracle row proves
-cross-engine EXECUTION IDENTITY, not formula correctness. This
-harness closes that gap: each query's expected output is recomputed
-FROM FIRST PRINCIPLES in numpy/python — textbook formulas, np.power
-instead of the engines' running-product folds, np.dot instead of
-index-order aggregate() folds, a plain-Python EM loop instead of the
-generated column chain — and diffed against the engine's Spark
-output.
+When the oracle executes the SAME expression text as the engine (the
+hex lattice's cube-rounding chain), a green oracle row proves
+cross-engine EXECUTION IDENTITY, not formula correctness. This harness
+closes that gap: the query's expected output is recomputed FROM FIRST
+PRINCIPLES in numpy/python (nearest hex center by geometry instead of
+cube rounding, ring means from the textbook hex distance) and diffed
+against the engine's Spark output.
 
-Tolerances are the round-6 / quantization contract: float columns
-must agree within 2e-6 (libm 1-ulp wobble x quantization granularity
-stays far below this; a formula error lands far above); integer,
-boolean and string columns must match exactly, except counts whose
-predicate compares a float against a threshold — there the replay
-computes a per-cell slack equal to the number of rows within 1e-9 of
-the threshold (normally 0) and allows the count to differ by that.
+Tolerances: float columns must agree within 2e-6 (libm 1-ulp wobble x
+quantization granularity stays far below this; a formula error lands
+far above); integer, boolean and string columns must match exactly,
+except counts a spec gives a per-key slack.
 
 Usage: python tools/check_kernels.py [sf_dir] [query ...]
 Writes a PASS/FAIL line per query; exit 1 on any failure.
@@ -39,7 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 M31 = 2147483648
 FTOL = 2e-6
-EDGE = 1e-9
 
 # ---------------------------------------------------------------- helpers
 
@@ -53,549 +44,13 @@ def _u(ids: np.ndarray, a: int, b: int) -> np.ndarray:
     return (ids * a + b) % M31
 
 
-def _q(x: np.ndarray, grid: float) -> np.ndarray:
-    return np.floor(x * grid) / grid
-
-
 def _r6(x):
     # final display rounding; compared under FTOL so half-even vs
     # half-up at the 6th digit is immaterial
     return np.round(np.asarray(x, dtype=np.float64), 6)
 
 
-# ---------------------------------------------------------------- wave 141
-
-R_KM = 6371.0088
-
-
-def _xtd_atd(sf_dir: str):
-    ids = _events(sf_dir)["event_id"].to_numpy(dtype=np.int64)
-    lon = (_u(ids, 2654435761, 13) % 4000) / 100.0
-    lat = 40.0 + (_u(ids, 1103515245, 12345) % 1500) / 100.0
-    # route (0E,45N) -> (30E,50N), recomputed from the endpoints (the
-    # engine embeds precomputed literals; we derive them ourselves)
-    phi1, phi2 = math.radians(45.0), math.radians(50.0)
-    dl12 = math.radians(30.0)
-    th12 = math.atan2(
-        math.sin(dl12) * math.cos(phi2),
-        math.cos(phi1) * math.sin(phi2)
-        - math.sin(phi1) * math.cos(phi2) * math.cos(dl12))
-    phi3 = np.radians(lat)
-    dlam = np.radians(lon)
-    # haversine central angle (textbook form)
-    d13 = 2.0 * np.arcsin(np.sqrt(
-        np.sin((phi3 - phi1) / 2.0) ** 2
-        + math.cos(phi1) * np.cos(phi3) * np.sin(dlam / 2.0) ** 2))
-    th13 = np.arctan2(
-        np.sin(dlam) * np.cos(phi3),
-        math.cos(phi1) * np.sin(phi3)
-        - math.sin(phi1) * np.cos(phi3) * np.cos(dlam))
-    xtd = np.arcsin(np.sin(d13) * np.sin(th13 - th12))
-    xtd_km = xtd * R_KM
-    atd_km = np.arccos(np.clip(np.cos(d13) / np.cos(xtd),
-                               -1.0, 1.0)) * R_KM
-    band = np.floor(lon / 10.0).astype(np.int64)
-    return band, xtd_km, atd_km
-
-
-def replay_cross_track_band_stats(sf_dir: str):
-    band, xtd_km, atd_km = _xtd_atd(sf_dir)
-    qax = _q(np.abs(xtd_km), 1048576.0)
-    rows = []
-    for b in np.unique(band):
-        m = band == b
-        rows.append((int(b), int(m.sum()),
-                     float(_r6(qax[m].sum() / m.sum())),
-                     float(_r6(atd_km[m].max()))))
-    df = pd.DataFrame(rows, columns=["band", "n", "mean_abs_xtd_km",
-                                     "max_atd_km"])
-    return df, {"keys": ["band"],
-                "float": {"mean_abs_xtd_km": FTOL, "max_atd_km": FTOL}}
-
-
-def replay_route_corridor_membership(sf_dir: str):
-    band, xtd_km, _ = _xtd_atd(sf_dir)
-    ax = np.abs(xtd_km)
-    rows, slack = [], {}
-    for b in np.unique(band):
-        m = band == b
-        n = m.sum()
-        for w in (25.0, 100.0, 400.0):
-            c = int((ax[m] < w).sum())
-            rows.append((int(b), w, c, float(_r6(c / n))))
-            slack[(int(b), w)] = int((np.abs(ax[m] - w) < EDGE).sum())
-    df = pd.DataFrame(rows, columns=["band", "width_km", "n_in",
-                                     "frac_in"])
-    return df, {"keys": ["band", "width_km"],
-                "float": {"width_km": 0.0, "frac_in": FTOL},
-                "slack": {"n_in": slack}}
-
-
-# ---------------------------------------------------------------- wave 135
-
-_EE_A1, _EE_A2, _EE_A3, _EE_A4 = 1.340264, -0.081106, 0.000893, 0.003796
-
-
-def _lonlat_global(sf_dir: str):
-    ids = _events(sf_dir)["event_id"].to_numpy(dtype=np.int64)
-    lon = (_u(ids, 2654435761, 13) % 36000) / 100.0 - 180.0
-    lat = (_u(ids, 1103515245, 12345) % 16000) / 100.0 - 80.0
-    return lon, lat
-
-
-def replay_equal_earth_projection_bands(sf_dir: str):
-    lon, lat = _lonlat_global(sf_dir)
-    # Savric, Patterson & Jenny 2019 forward equations, written the
-    # textbook way (polynomial in theta via np.power, not the
-    # engine's factored Horner-ish chain)
-    th = np.arcsin(math.sqrt(3.0) / 2.0 * np.sin(np.radians(lat)))
-    denom = (_EE_A1 + 3.0 * _EE_A2 * np.power(th, 2)
-             + np.power(th, 6) * (7.0 * _EE_A3
-                                  + 9.0 * _EE_A4 * np.power(th, 2)))
-    x = (2.0 / math.sqrt(3.0)) * np.radians(lon) * np.cos(th) / denom
-    y = th * (_EE_A1 + _EE_A2 * np.power(th, 2)
-              + np.power(th, 6) * (_EE_A3 + _EE_A4 * np.power(th, 2)))
-    band = np.floor(lat / 10.0).astype(np.int64)
-    qx, qy = _q(np.abs(x), 16777216.0), _q(y, 16777216.0)
-    rows = []
-    for b in np.unique(band):
-        m = band == b
-        rows.append((int(b), int(m.sum()),
-                     float(_r6(qx[m].sum() / m.sum())),
-                     float(_r6(qy[m].sum() / m.sum()))))
-    df = pd.DataFrame(rows, columns=["band", "n", "mean_abs_x",
-                                     "mean_y"])
-    return df, {"keys": ["band"],
-                "float": {"mean_abs_x": FTOL, "mean_y": FTOL}}
-
-
-def replay_utm_zone_scale_audit(sf_dir: str):
-    lon, lat = _lonlat_global(sf_dir)
-    zone = (np.floor((lon + 180.0) / 6.0)).astype(np.int64) + 1
-    lam0 = (zone * 6 - 183).astype(np.float64)
-    b = np.cos(np.radians(lat)) * np.sin(np.radians(lon - lam0))
-    k = 0.9996 / np.sqrt(1.0 - b * b)
-    qk = _q(k, 16777216.0)
-    tol = 1.0005
-    rows, slack = [], {}
-    for z in np.unique(zone):
-        m = zone == z
-        rows.append((int(z), int(m.sum()), float(_r6(k[m].max())),
-                     float(_r6(qk[m].sum() / m.sum())),
-                     int((k[m] > tol).sum())))
-        slack[(int(z),)] = int((np.abs(k[m] - tol) < EDGE).sum())
-    df = pd.DataFrame(rows, columns=["zone", "n", "max_k", "mean_k",
-                                     "n_over_tol"])
-    return df, {"keys": ["zone"],
-                "float": {"max_k": FTOL, "mean_k": FTOL},
-                "slack": {"n_over_tol": slack}}
-
-
-# ---------------------------------------------------------------- wave 131
-
-
-def _em_patterns(sf_dir: str) -> np.ndarray:
-    ids = _events(sf_dir)["event_id"].to_numpy(dtype=np.int64)
-    u0 = _u(ids, 2654435761, 13)
-    is_m = (u0 % 5 == 0)
-    ua = _u(ids, 1103515245, 12345)
-    ub = _u(ids, 69069, 7)
-    uc = _u(ids, 48271, 3)
-    g1 = np.where(is_m, ua % 20 < 19, ua % 20 < 1).astype(np.int64)
-    g2 = np.where(is_m, ub % 20 < 18, ub % 20 < 1).astype(np.int64)
-    g3 = np.where(is_m, uc % 20 < 19, uc % 20 < 2).astype(np.int64)
-    pat = g1 + 2 * g2 + 4 * g3
-    return np.bincount(pat, minlength=8).astype(np.float64)
-
-
-def _em_run(n: np.ndarray, iters: int):
-    """Plain-python Winkler EM on 2^3 pattern counts — the textbook
-    loop, no generated expressions."""
-    p, m, u = 0.5, [0.8] * 3, [0.2] * 3
-    w = [0.0] * 8
-
-    def estep():
-        for g in range(8):
-            a, b = p, 1.0 - p
-            for k in range(3):
-                bit = (g >> k) & 1
-                a *= m[k] if bit else (1.0 - m[k])
-                b *= u[k] if bit else (1.0 - u[k])
-            w[g] = a / (a + b)
-
-    nt = float(n.sum())
-    for _ in range(iters):
-        estep()
-        ws = sum(n[g] * w[g] for g in range(8))
-        p = ws / nt
-        for k in range(3):
-            on = [g for g in range(8) if (g >> k) & 1]
-            m[k] = sum(n[g] * w[g] for g in on) / ws
-            u[k] = sum(n[g] * (1.0 - w[g]) for g in on) / (nt - ws)
-    estep()  # posteriors under the final parameters
-    return p, m, u, w
-
-
-def replay_fs_em_parameters(sf_dir: str):
-    n = _em_patterns(sf_dir)
-    p, m, u, _ = _em_run(n, 3)
-    df = pd.DataFrame([(int(n.sum()), _r6(p), _r6(m[0]), _r6(m[1]),
-                        _r6(m[2]), _r6(u[0]), _r6(u[1]), _r6(u[2]))],
-                      columns=["n_pairs", "lambda_match", "m1", "m2",
-                               "m3", "u1", "u2", "u3"])
-    return df, {"keys": ["n_pairs"],
-                "float": {c: FTOL for c in
-                          ("lambda_match", "m1", "m2", "m3",
-                           "u1", "u2", "u3")}}
-
-
-def replay_fs_em_pattern_posteriors(sf_dir: str):
-    n = _em_patterns(sf_dir)
-    _, _, _, w = _em_run(n, 3)
-    rows = []
-    for g in range(8):
-        rows.append((g & 1, (g >> 1) & 1, (g >> 2) & 1, int(n[g]),
-                     float(_r6(w[g])), bool(w[g] > 0.5)))
-    df = pd.DataFrame(rows, columns=["g1", "g2", "g3", "n",
-                                     "posterior", "is_match"])
-    return df, {"keys": ["g3", "g2", "g1"],
-                "float": {"posterior": FTOL}}
-
-
-# ---------------------------------------------------------------- wave 139
-
-
-def _project_flows(sf_dir: str):
-    ev = _events(sf_dir).sort_values("event_id")
-    ids = ev["event_id"].to_numpy(dtype=np.int64)
-    uid = ev["user_id"].to_numpy(dtype=np.int64)
-    u = _u(ids, 2654435761, 13)
-    flows = {}
-    for g in range(20):
-        m = uid % 20 == g
-        cf = (50 + u[m] % 300).astype(np.float64)
-        if cf.size:
-            cf[0] = -1000.0  # first row in event_id order
-        if cf.size >= 4:
-            flows[g] = cf
-    return flows
-
-
-def _npv(cf: np.ndarray, r: float) -> float:
-    t = np.arange(cf.size, dtype=np.float64)
-    return float(np.sum(cf * np.power(1.0 + r, -t)))
-
-
-def _dnpv(cf: np.ndarray, r: float) -> float:
-    t = np.arange(cf.size, dtype=np.float64)
-    return float(np.sum(-t * cf * np.power(1.0 + r, -(t + 1.0))))
-
-
-def replay_irr_newton_per_project(sf_dir: str):
-    rows = []
-    for g, cf in sorted(_project_flows(sf_dir).items()):
-        r = 0.1
-        for _ in range(6):
-            r = r - _npv(cf, r) / _dnpv(cf, r)
-        rows.append((g, cf.size, int(cf.sum()), float(_r6(r)),
-                     float(_r6(_npv(cf, r)) + 0.0)))
-    df = pd.DataFrame(rows, columns=["g", "n_flows", "total_cf",
-                                     "irr", "npv_residual"])
-    return df, {"keys": ["g"],
-                "float": {"irr": FTOL, "npv_residual": FTOL}}
-
-
-def replay_npv_rate_sensitivity(sf_dir: str):
-    rows = []
-    for g, cf in sorted(_project_flows(sf_dir).items()):
-        for r in (0.05, 0.1, 0.15, 0.25):
-            rows.append((g, r, float(_r6(_npv(cf, r)))))
-    df = pd.DataFrame(rows, columns=["g", "rate", "npv"])
-    return df, {"keys": ["g", "rate"],
-                "float": {"rate": 0.0, "npv": FTOL}}
-
-
-# ---------------------------------------------------------------- wave 147
-
-_OBF_K4 = [4.048591, 2.862786, 2.337455, 2.024295]
-
-
-def replay_obf_sequential_looks(sf_dir: str):
-    ids = _events(sf_dir)["event_id"].to_numpy(dtype=np.int64)
-    u1 = _u(ids, 2654435761, 13)
-    u2 = _u(ids, 1103515245, 12345)
-    t = ids
-    x = (u1 % 2).astype(np.int64)
-    y = (u2 % 40 + x).astype(np.float64)
-    N = ids.size
-    rows, first = [], None
-    for look in range(1, 5):
-        m = t * 4 < N * look
-        mt_, mc_ = m & (x == 1), m & (x == 0)
-        nt, nc = int(mt_.sum()), int(mc_.sum())
-        yt, yc = y[mt_], y[mc_]
-        mt, mc = yt.mean(), yc.mean()
-        # pooled two-sample t/z, textbook: sample SS via np.var
-        vt = float(((yt - mt) ** 2).sum())
-        vc = float(((yc - mc) ** 2).sum())
-        s2p = (vt + vc) / (nt + nc - 2.0)
-        se = math.sqrt(s2p * (1.0 / nt + 1.0 / nc))
-        z = (mt - mc) / se
-        b = _OBF_K4[look - 1]
-        crossed = abs(z) > b
-        if crossed and first is None:
-            first = look
-        rows.append((look, nt + nc, nt, nc, float(_r6(mt - mc)),
-                     float(_r6(z)), b, bool(crossed)))
-    df = pd.DataFrame(rows, columns=["look", "n_so_far", "n_treat",
-                                     "n_ctrl", "mean_diff", "z_stat",
-                                     "boundary", "crossed"])
-    df["first_crossing"] = first
-    return df, {"keys": ["look"],
-                "float": {"mean_diff": FTOL, "z_stat": FTOL,
-                          "boundary": 0.0}}
-
-
-# ---------------------------------------------------------------- wave 149
-
-
-def _sq8_cosines(sf_dir: str):
-    emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet",
-                          columns=["vec_id", "embedding"])
-    emb = emb.sort_values("vec_id")
-    ids = emb["vec_id"].to_numpy(dtype=np.int64)
-    X = np.stack([np.asarray(e, dtype=np.float64)
-                  for e in emb["embedding"]])
-    mn, mx = X.min(axis=0), X.max(axis=0)
-    code = np.clip(np.floor((X - mn) * 255.0 / (mx - mn) + 0.5),
-                   0.0, 255.0)
-    D = mn + code * (mx - mn) / 255.0
-
-    def cosmat(Q, V):
-        num = Q @ V.T
-        return num / np.sqrt(
-            np.einsum("ij,ij->i", Q, Q)[:, None]
-            * np.einsum("ij,ij->i", V, V)[None, :])
-
-    qm = ids % 25 == 0
-    ce = cosmat(X[qm], X)
-    cq = cosmat(D[qm], D)
-    return ids[qm], ids, ce, cq
-
-
-def replay_sq8_cosine_distortion(sf_dir: str):
-    qids, ids, ce, cq = _sq8_cosines(sf_dir)
-    rows = []
-    for qi, q in enumerate(qids):
-        keep = ids != q
-        err = np.abs(cq[qi, keep] - ce[qi, keep])
-        qerr = _q(err, 16777216.0)
-        n = int(keep.sum())
-        rows.append((int(q), n, float(_r6(qerr.sum() / n)),
-                     float(_r6(err.max()))))
-    df = pd.DataFrame(rows, columns=["qid", "n_pairs", "mean_abs_err",
-                                     "max_abs_err"])
-    return df, {"keys": ["qid"],
-                "float": {"mean_abs_err": FTOL, "max_abs_err": FTOL}}
-
-
-def replay_sq8_topk_recall(sf_dir: str):
-    qids, ids, ce, cq = _sq8_cosines(sf_dir)
-    rows, slack = [], {}
-    k = 10
-    for qi, q in enumerate(qids):
-        keep = ids != q
-        vids = ids[keep]
-        e, qv = ce[qi, keep], cq[qi, keep]
-
-        def topk(scores):
-            order = np.lexsort((vids, -scores))
-            return set(vids[order[:k]]), scores[order[k - 1]]
-
-        te, cut_e = topk(e)
-        tq, cut_q = topk(qv)
-        nm = len(te & tq)
-        rows.append((int(q), nm, float(_r6(nm / float(k)))))
-        # rank-boundary sensitivity: candidates within EDGE of either
-        # ranking's k-th score could swap in under libm wobble
-        slack[(int(q),)] = int((np.abs(e - cut_e) < EDGE).sum()
-                               + (np.abs(qv - cut_q) < EDGE).sum())
-    df = pd.DataFrame(rows, columns=["qid", "n_matched",
-                                     "recall_at_k"])
-    # recall_at_k is n_matched/10 by definition — checked as an
-    # internal-consistency derivation so the slack on n_matched
-    # propagates instead of double-failing
-    return df, {"keys": ["qid"],
-                "slack": {"n_matched": slack},
-                "derived": {"recall_at_k":
-                            ("n_matched", lambda n: round(n / 10.0, 6))}}
-
-
-# ------------------------------------------------- wave 20 (holt, bonus)
-
-
-def replay_holt_smoothing(sf_dir: str):
-    """Plain-Python Holt double-exponential recurrence (level/trend
-    init (v2, v2-v1), a=0.5 b=0.25) — vs the engines' shared
-    list-accumulator folds."""
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet",
-                         columns=["user_id", "ts", "event_id", "value"])
-    ev = ev.sort_values(["ts", "event_id"])
-    a, b = 0.5, 0.25
-    rows = []
-    for uid, grp in ev.groupby("user_id", sort=True):
-        vs = grp["value"].to_numpy(dtype=np.float64)
-        if vs.size < 2:
-            continue
-        lv, tr = vs[1], vs[1] - vs[0]
-        for x in vs[2:]:
-            nl = a * x + (1.0 - a) * (lv + tr)
-            tr = b * (nl - lv) + (1.0 - b) * tr
-            lv = nl
-        rows.append((int(uid), int(vs.size), float(_r6(lv)),
-                     float(_r6(tr)), float(_r6(lv + tr))))
-    df = pd.DataFrame(rows, columns=["user_id", "n_rows", "level",
-                                     "trend", "forecast"])
-    return df, {"keys": ["user_id"],
-                "float": {"level": FTOL, "trend": FTOL,
-                          "forecast": FTOL}}
-
-
-# --------------------------------------------- wave 54 (vincenty, bonus)
-
-_SECTOR_UNITS = [(0, 1), (1, 1), (1, 0), (1, -1),
-                 (0, -1), (-1, -1), (-1, 0), (-1, 1)]
-
-
-def _vincenty_m(phi1, lam1, phi2, lam2, iters=3):
-    """Textbook WGS84 Vincenty inverse (Vincenty 1975), plain-Python
-    scalar implementation — independent of geodesy.vincenty_stages's
-    staged expression text."""
-    a_, f_ = 6378137.0, 1.0 / 298.257223563
-    b_ = a_ * (1.0 - f_)
-    U1, U2 = math.atan((1 - f_) * math.tan(phi1)), \
-        math.atan((1 - f_) * math.tan(phi2))
-    L = lam2 - lam1
-    lam = L
-    sU1, cU1 = math.sin(U1), math.cos(U1)
-    sU2, cU2 = math.sin(U2), math.cos(U2)
-    for _ in range(iters):
-        sl, cl = math.sin(lam), math.cos(lam)
-        s_sig = math.sqrt((cU2 * sl) ** 2
-                          + (cU1 * sU2 - sU1 * cU2 * cl) ** 2)
-        c_sig = sU1 * sU2 + cU1 * cU2 * cl
-        sig = math.atan2(s_sig, c_sig)
-        if s_sig == 0.0:
-            return 0.0
-        s_alpha = cU1 * cU2 * sl / s_sig
-        c2a = 1.0 - s_alpha ** 2
-        c2sm = (c_sig - 2.0 * sU1 * sU2 / c2a) if c2a != 0.0 else 0.0
-        C = f_ / 16.0 * c2a * (4.0 + f_ * (4.0 - 3.0 * c2a))
-        lam = L + (1.0 - C) * f_ * s_alpha * (
-            sig + C * s_sig * (c2sm + C * c_sig
-                               * (-1.0 + 2.0 * c2sm ** 2)))
-    sl, cl = math.sin(lam), math.cos(lam)
-    s_sig = math.sqrt((cU2 * sl) ** 2
-                      + (cU1 * sU2 - sU1 * cU2 * cl) ** 2)
-    c_sig = sU1 * sU2 + cU1 * cU2 * cl
-    sig = math.atan2(s_sig, c_sig)
-    s_alpha = cU1 * cU2 * sl / s_sig if s_sig else 0.0
-    c2a = 1.0 - s_alpha ** 2
-    c2sm = (c_sig - 2.0 * sU1 * sU2 / c2a) if c2a != 0.0 else 0.0
-    u2 = c2a * (a_ ** 2 - b_ ** 2) / b_ ** 2
-    A = 1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2
-                                             * (320.0 - 175.0 * u2)))
-    B = u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2
-                                     * (74.0 - 47.0 * u2)))
-    dsig = B * s_sig * (c2sm + B / 4.0 * (
-        c_sig * (-1.0 + 2.0 * c2sm ** 2)
-        - B / 6.0 * c2sm * (-3.0 + 4.0 * s_sig ** 2)
-        * (-3.0 + 4.0 * c2sm ** 2)))
-    return b_ * A * (sig - dsig)
-
-
-def _traj_endpoints(sf_dir: str):
-    """Replay synth.traj_select_sql in pandas: per-user walk from a
-    home cell — 60% dwell wobble, 40% compass jumps, window-summed."""
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet",
-                         columns=["user_id", "ts", "event_id"])
-    ev = ev.sort_values(["ts", "event_id"])
-    out = {}
-    for uid, grp in ev.groupby("user_id", sort=True):
-        ids = grp["event_id"].to_numpy(dtype=np.int64)
-        u = _u(ids, 2654435761, 11)
-        amp = np.where(u % 10 < 6, 0, 500 + (u % 7) * 100)
-        sect = ((u // 10) % 8).astype(int)
-        ux = np.array([_SECTOR_UNITS[s][0] for s in sect])
-        uy = np.array([_SECTOR_UNITS[s][1] for s in sect])
-        x = (1000003.0 + (uid % 97) * 20000
-             + np.cumsum(amp * ux) + u % 11)
-        y = (2000003.0 + ((uid * 31) % 53) * 20000
-             + np.cumsum(amp * uy) + (u // 11) % 11)
-        phi = np.radians(np.floor(y / 200) * 0.002 + 20.0)
-        lam = np.radians(np.floor(x / 200) * 0.002 - 5.0)
-        out[int(uid)] = (phi[0], lam[0], phi[-1], lam[-1])
-    return out
-
-
-def replay_vincenty_vs_haversine(sf_dir: str):
-    rows = []
-    for uid, (p1, l1, p2, l2) in sorted(_traj_endpoints(sf_dir).items()):
-        v = _vincenty_m(p1, l1, p2, l2)
-        h = 2.0 * 6371000.0 * math.asin(math.sqrt(
-            math.sin((p2 - p1) / 2) ** 2
-            + math.cos(p1) * math.cos(p2)
-            * math.sin((l2 - l1) / 2) ** 2))
-        rows.append((uid, round(v, 2), round(h, 2), round(v - h, 2)))
-    df = pd.DataFrame(rows, columns=["user_id", "vincenty_m",
-                                     "haversine_m", "delta_m"])
-    # distances are metres (up to ~100 km); 2 cm absorbs the sub-mm
-    # difference between the staged chain and the textbook series
-    return df, {"keys": ["user_id"],
-                "float": {"vincenty_m": 0.02, "haversine_m": 0.02,
-                          "delta_m": 0.04}}
-
-
-# ------------------------------------------------ wave 155 (DCT, bonus)
-
-
-def replay_dct2_spectral_compaction(sf_dir: str):
-    """Orthonormal DCT-II via an np.cos basis and np.dot — fully
-    independent of the engines' shared literal table and index-order
-    folds (different cos evaluations, different summation order)."""
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet",
-                         columns=["user_id", "ts", "event_id", "value"])
-    ev = ev.sort_values(["ts", "event_id"])
-    N, K = 32, 8
-    n_ = np.arange(N)
-    T = np.cos(np.pi * (n_[None, :] + 0.5) * n_[:, None] / N)
-    T[0] *= math.sqrt(1.0 / N)
-    T[1:] *= math.sqrt(2.0 / N)
-    rows = []
-    for uid, grp in ev.groupby("user_id", sort=True):
-        vs = grp["value"].to_numpy(dtype=np.float64)
-        if vs.size < N:
-            continue
-        x = vs[:N]
-        c = T @ x
-        et = float(x @ x)
-        rows.append((int(uid), N,
-                     *[float(_r6(c[k])) for k in range(K)],
-                     float(_r6(et)),
-                     float(_r6(float(c[:K] @ c[:K]) / et)),
-                     bool(abs(float(c @ c) - et) <= 1e-9 * et)))
-    df = pd.DataFrame(rows, columns=["user_id", "n",
-                                     *[f"c{k}" for k in range(K)],
-                                     "energy", "compaction",
-                                     "parseval_ok"])
-    ftol = {f"c{k}": FTOL for k in range(K)}
-    ftol.update({"energy": 1e-4, "compaction": FTOL})
-    # energy ~ O(1e6) for 32 values up to 490: absolute 1e-4 is
-    # ~1e-10 relative — still far below any formula error
-    return df, {"keys": ["user_id"], "float": ftol}
-
-
-# -------------------------------------------- wave-4 hex lattice (bonus)
+# ---------------------------------------------------- wave-4 hex lattice
 
 
 def replay_hex_kring_smooth(sf_dir: str):
@@ -645,77 +100,10 @@ def replay_hex_kring_smooth(sf_dir: str):
     return df, {"keys": ["hq", "hr"], "float": {"ring_mean": FTOL}}
 
 
-# ------------------------------------------- wave 156 (FWHT, bonus)
-
-
-def _fwht_butterfly(x: np.ndarray) -> np.ndarray:
-    """In-place recursive-butterfly fast Walsh-Hadamard transform —
-    O(n log n) add/sub passes, a DIFFERENT algorithm from the
-    engines' literal H-matrix product."""
-    y = x.copy()
-    h = 1
-    n = y.shape[-1]
-    while h < n:
-        y = y.reshape(-1, n)
-        for i in range(0, n, h * 2):
-            a = y[:, i:i + h].copy()
-            b = y[:, i + h:i + 2 * h].copy()
-            y[:, i:i + h] = a + b
-            y[:, i + h:i + 2 * h] = a - b
-        h *= 2
-    return y.reshape(x.shape)
-
-
-def replay_fwht_rotation_audit(sf_dir: str):
-    emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet",
-                          columns=["vec_id", "embedding"])
-    emb = emb.sort_values("vec_id")
-    ids = emb["vec_id"].to_numpy(dtype=np.int64)
-    m = ids % 25 == 0
-    X = np.stack([np.asarray(e, dtype=np.float64)
-                  for e in emb["embedding"][m]])
-    n = X.shape[1]
-    HX = _fwht_butterfly(X)
-    et = np.einsum("ij,ij->i", X, X)
-    li = np.abs(X).max(axis=1)
-    lr = np.abs(HX).max(axis=1) / n
-    ef = np.einsum("ij,ij->i", HX, HX)
-    rows = [(int(v), n, float(_r6(et[i])), float(_r6(li[i])),
-             float(_r6(lr[i])), float(_r6(li[i] / lr[i])),
-             bool(abs(ef[i] - n * et[i]) <= 1e-9 * n * et[i]))
-            for i, v in enumerate(ids[m])]
-    df = pd.DataFrame(rows, columns=["vec_id", "n", "energy",
-                                     "linf_input", "linf_rotated",
-                                     "flatten_ratio", "parseval_ok"])
-    # NOTE: the butterfly computes the SAME H x (Sylvester order maps
-    # to the natural butterfly order), just via log2(n) passes
-    return df, {"keys": ["vec_id"],
-                "float": {"energy": 1e-4, "linf_input": FTOL,
-                          "linf_rotated": FTOL, "flatten_ratio": FTOL}}
-
-
 # ---------------------------------------------------------------- harness
 
 REPLAYS = {
-    "cross_track_band_stats": replay_cross_track_band_stats,
-    "route_corridor_membership": replay_route_corridor_membership,
-    "equal_earth_projection_bands": replay_equal_earth_projection_bands,
-    "utm_zone_scale_audit": replay_utm_zone_scale_audit,
-    "fs_em_parameters": replay_fs_em_parameters,
-    "fs_em_pattern_posteriors": replay_fs_em_pattern_posteriors,
-    "irr_newton_per_project": replay_irr_newton_per_project,
-    "npv_rate_sensitivity": replay_npv_rate_sensitivity,
-    "obf_sequential_looks": replay_obf_sequential_looks,
-    "sq8_cosine_distortion": replay_sq8_cosine_distortion,
-    "sq8_topk_recall": replay_sq8_topk_recall,
-    # bonus coverage beyond the verdict's named list: the other two
-    # bit-parity chain families (list-fold recurrence, staged
-    # geodesic expressions)
-    "holt_smoothing": replay_holt_smoothing,
-    "vincenty_vs_haversine": replay_vincenty_vs_haversine,
-    "dct2_spectral_compaction": replay_dct2_spectral_compaction,
     "hex_kring_smooth": replay_hex_kring_smooth,
-    "fwht_rotation_audit": replay_fwht_rotation_audit,
 }
 
 
@@ -730,19 +118,9 @@ def _compare(name, got: pd.DataFrame, exp: pd.DataFrame, spec) -> list[str]:
     exp = exp.sort_values(keys).reset_index(drop=True)
     ftol = spec.get("float", {})
     slack = spec.get("slack", {})
-    derived = spec.get("derived", {})
     for col in got.columns:
         g, e = got[col], exp[col]
-        if col in derived:
-            src, fn = derived[col]
-            for i in range(len(got)):
-                want = fn(got[src][i])
-                if abs(float(g[i]) - float(want)) > 1e-9:
-                    errs.append(f"{col}[row {i}]: {g[i]!r} != "
-                                f"{fn.__name__ or 'derived'}({src})="
-                                f"{want!r}")
-                    break
-        elif col in ftol:
+        if col in ftol:
             d = np.abs(g.to_numpy(dtype=np.float64)
                        - e.to_numpy(dtype=np.float64))
             bad = d > max(ftol[col], 0.0) if ftol[col] > 0 else d > 0

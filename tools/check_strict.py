@@ -46,10 +46,22 @@ def _tag(v) -> str:
 
 
 def canon(rows, cols):
+    dups = sorted({c for c in cols if cols.count(c) > 1})
+    if dups:
+        # columns are paired across engines by name: a repeated name
+        # would pair them arbitrarily
+        raise ValueError(f"duplicate output column names {dups}")
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = ["|".join(_tag(r[i]) for i in order) for r in rows]
     out.sort()
     return out
+
+
+def first_diff(a, b) -> int:
+    """Index of the first differing canonical row; when one side is a
+    prefix of the other, the first row past the shorter side."""
+    return next((i for i, (x, y) in enumerate(zip(a, b)) if x != y),
+                min(len(a), len(b)))
 
 
 def main() -> None:
@@ -93,11 +105,15 @@ def main() -> None:
             print(f"FAIL {name}: columns {sorted(s_cols)} "
                   f"!= {sorted(d_cols)}")
             continue
-        a, b = canon(s_rows, s_cols), canon(d_rows, d_cols)
+        try:
+            a, b = canon(s_rows, s_cols), canon(d_rows, d_cols)
+        except ValueError as e:
+            failures.append(name)
+            print(f"ERR  {name}: {e}")
+            continue
         if a != b:
             failures.append(name)
-            bad = next((i for i, (x, y) in enumerate(zip(a, b))
-                        if x != y), min(len(a), len(b)) - 1)
+            bad = first_diff(a, b)
             print(f"FAIL {name}: {len(a)} vs {len(b)} rows; first "
                   f"diff row {bad}:")
             if bad < len(a):
