@@ -22,19 +22,11 @@ from bano_spark.geo import tiles
 from bano_spark.operators import conciliation as conc
 from bano_spark.operators import tiling
 from bano_spark.operators.pip_join import spatial_join
+from bano_spark.registry import merge, registrar
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLES[name] = oracle
-        return fn
-
-    return deco
+register = registrar(_QUERIES, _ORACLES)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -1914,8 +1906,8 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 from bano_spark import queries_wave4, queries_wave5, queries_wave120  # noqa: E402
 
 for _wave in (queries_wave4, queries_wave5, queries_wave120):
-    _QUERIES.update(_wave.QUERIES)
-    _ORACLES.update(_wave.ORACLES)
+    merge(_QUERIES, _wave.QUERIES)
+    merge(_ORACLES, _wave.ORACLES)
 
 
 # ---------------------------------------------------------------------------

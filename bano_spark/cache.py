@@ -1,9 +1,8 @@
 """Session-bounded persist registry.
 
 Operators that branch a computed input persist it so Spark does not
-recompute the upstream per branch: spatial_join_left's matched/anti
-split, the iterative graph operators (operators/graph.py), the CPM
-forward pass (operators/cpm.py) and the wave-102/121 registry queries.
+recompute the upstream per branch: the iterative graph operators
+(operators/graph.py) and the CPM forward pass (operators/cpm.py).
 The reference materializes the same intermediates as tables
 (cache_dept_*). Every persist is registered here so long-lived sessions
 can bound cached storage: release_all() unpersists everything

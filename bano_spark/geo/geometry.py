@@ -419,46 +419,6 @@ def cells_to_rings(cells: np.ndarray) -> list[np.ndarray]:
     return rings
 
 
-def compact_cover(gx: np.ndarray, gy: np.ndarray, interior: np.ndarray,
-                  z: int, min_z: int):
-    """Quadtree-compact a single-zoom cell cover: interior cells whose
-    4 siblings are all interior merge into their parent cell,
-    recursively up to ``min_z``; boundary cells stay at ``z``. Returns
-    (lvl, x, y, interior) arrays covering the same region exactly.
-
-    At a national-scale z16 cover, interior area dominates (cells ~
-    area / cell_area but boundary ~ perimeter / cell_size), so
-    compaction shrinks the cover — and therefore the broadcast bytes
-    and the cover build — by roughly the interior/boundary ratio."""
-    gx = np.asarray(gx, dtype=np.int64)
-    gy = np.asarray(gy, dtype=np.int64)
-    interior = np.asarray(interior, dtype=bool)
-    out_l, out_x, out_y, out_i = [], [], [], []
-    for x, y in zip(gx[~interior], gy[~interior]):
-        out_l.append(z); out_x.append(int(x)); out_y.append(int(y))
-        out_i.append(False)
-    cur = {(int(x), int(y)) for x, y in zip(gx[interior], gy[interior])}
-    for lvl in range(z, min_z, -1):
-        parents: dict = {}
-        for (x, y) in cur:
-            parents.setdefault((x >> 1, y >> 1), 0)
-            parents[(x >> 1, y >> 1)] += 1
-        promoted = {p for p, n in parents.items() if n == 4}
-        for (x, y) in cur:
-            if (x >> 1, y >> 1) not in promoted:
-                out_l.append(lvl); out_x.append(x); out_y.append(y)
-                out_i.append(True)
-        cur = promoted
-        if not cur:
-            break
-    else:
-        for (x, y) in cur:
-            out_l.append(min_z); out_x.append(x); out_y.append(y)
-            out_i.append(True)
-    return (np.array(out_l), np.array(out_x), np.array(out_y),
-            np.array(out_i, dtype=bool))
-
-
 def rings_intersect(va: np.ndarray, vb: np.ndarray) -> bool:
     """Exact polygon-polygon intersects test for simple rings: true iff
     the interiors/boundaries meet — (a) bbox overlap gate, (b) either

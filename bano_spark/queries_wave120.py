@@ -26,19 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from bano_spark.operators.merkle import (COMBINE, M, ROW_A, ROW_B, ROW_C,
                                          merkle_diff, merkle_leaves,
                                          merkle_tree)
+from bano_spark.registry import registrar
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+register = registrar(QUERIES, ORACLES)
 
 
 # Snapshot fixtures — identical SQL text in both dialects.

@@ -15,19 +15,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bano_spark import synth
+from bano_spark.registry import registrar
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+register = registrar(QUERIES, ORACLES)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

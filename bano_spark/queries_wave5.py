@@ -13,6 +13,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bano_spark import synth
+from bano_spark.registry import registrar
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -20,14 +21,7 @@ ORACLES: dict[str, str] = {}
 _TAN225 = "0.41421356237309503"
 
 
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+register = registrar(QUERIES, ORACLES)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

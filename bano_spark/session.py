@@ -14,7 +14,9 @@ from pyspark.sql import SparkSession
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    n = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(n) if n else len(os.sched_getaffinity(0))
 
 
 def get_session(

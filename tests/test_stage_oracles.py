@@ -3,9 +3,11 @@
 Each registry pair exercises one pipeline stage through the engine's
 own operators (PIP join and refine, tiling and tile expiry, snapshot
 diff, normalization, FANTOIR loads, source priority, suffixes, places,
-scoring, postal lookup) and is compared with the oracle SQL of
-`__spark_entry__.oracle_sql()` by tools/check_correctness.py. The
-conciliation and CSV-export pairs run in tests/test_conciliation.py.
+scoring, postal lookup, the left spatial join) and is compared with the
+oracle SQL of `__spark_entry__.oracle_sql()` by
+tools/check_correctness.py. The conciliation and CSV-export pairs run
+in tests/test_conciliation.py. The PIP refine fixture also runs through
+every `spatial_join` path against the same oracle rule.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ STAGE_QUERIES = [
     "place_match",
     "importance_commune",
     "postal_smallest_polygon",
+    "suffix_zone_left_join",
 ]
 
 
@@ -54,3 +57,25 @@ def test_registry_pair(spark, duck, name):
     line = CC.check(spark, duck, SF_DIR, name,
                     E.queries()[name], E.oracle_sql()[name])
     assert line.startswith("PASS"), line
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.001 tables")
+@pytest.mark.parametrize("split_refine", [False, True])
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_refine_fixture_every_path(spark, duck, broadcast, split_refine):
+    """The non-convex refine fixture (slope ±2 triangles, an L-shape)
+    through each prune path and refine plan, against the registry's
+    DuckDB statement of the containment rule."""
+    from bano_spark import synth
+    from bano_spark.operators.pip_join import spatial_join
+
+    want = sorted(duck.execute(
+        f"WITH pts AS ({synth.points_select_sql('duckdb')}), "
+        f"m AS ({synth.refine_membership_sql()}) "
+        "SELECT event_id, poly_id FROM m").fetchall())
+    got = spatial_join(synth.points_df(spark, SF_DIR),
+                       synth.refine_polygons_df(spark), zoom=15,
+                       broadcast=broadcast, split_refine=split_refine)
+    assert want
+    assert sorted((r.event_id, r.poly_id) for r in
+                  got.select("event_id", "poly_id").collect()) == want

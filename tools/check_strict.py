@@ -69,9 +69,10 @@ def main() -> None:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
-    from bano_spark.session import get_session
+    from bano_spark.session import cpu_count, get_session
 
-    spark = get_session("strict", cpus=8, shuffle_partitions=8)
+    n = cpu_count()
+    spark = get_session("strict", cpus=n, shuffle_partitions=n)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
