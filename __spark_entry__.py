@@ -353,7 +353,7 @@ def _canon_sql(col: str) -> str:
 _Q07_ORACLE = f"""
 WITH {_cumul_cte('VARCHAR')},
 u AS (SELECT insee_com, fantoir, {_canon_sql('numero')} AS num
-      FROM cumul WHERE fantoir IS NOT NULL GROUP BY 1, 2, 3),
+      FROM cumul WHERE fantoir <> '' GROUP BY 1, 2, 3),
 o AS (SELECT *, {_canon_sql('numero')} AS num FROM cumul WHERE source = 'OSM'),
 od AS (SELECT *, {_canon_sql('numero')} AS num FROM cumul
        WHERE source = 'BAL' AND lon != 0 AND lat != 0),

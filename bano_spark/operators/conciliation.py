@@ -49,7 +49,8 @@ _JUNK_NUM = r".[0-9 .-]{9,}"
 
 def conciliate(cumul: DataFrame) -> DataFrame:
     """`cumul` is cumul_adresses-shaped: (insee_com, dept, source, fantoir,
-    numero, voie_osm, voie_autre, code_postal, lon, lat). Returns the
+    numero, voie_osm, voie_autre, code_postal, lon, lat); rows with a
+    null or empty fantoir are left out. Returns the
     export rows (id, numero, voie, code_post, ville, source, lat, lon)
     ordered by id — the reference's CSV export contract
     (export_csv_dept.sql:95-106)."""
@@ -64,7 +65,10 @@ def conciliate(cumul: DataFrame) -> DataFrame:
         "od": (F.col("source") == "BAL") & nonzero,
         "c": (F.col("source") == "BAN") & nonzero,
     }
-    rows = cumul.filter(F.col("fantoir").isNotNull()).select(
+    # an empty code is absent, like null (pages_to_cumul writes a missing
+    # ref:FR:FANTOIR as ''): as a key it would merge every such address
+    # in France that shares a house number
+    rows = cumul.filter(F.col("fantoir") != "").select(
         "fantoir",
         F.coalesce(canonical_num(F.col("numero")), F.lit("")).alias("num"),
         *[cond.alias(f"is_{s}") for s, cond in sides.items()],

@@ -25,6 +25,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geo import geometry, tiles
+from ..session import local_frame
 
 # Optional bench/test hook: when set to a SparkContext accumulator, the
 # refine pass adds every Arrow batch's byte size — the JVM->Python
@@ -132,18 +133,22 @@ def spatial_join(
         # extra distributed job) and the refine vertex dict
         vert_map = {r[0]: _ring(r[1])
                     for r in polygons.select(id_col, verts_col).collect()}
-        rows = []
-        for pid, v in vert_map.items():
-            gx, gy, interior = geometry.cover_polygon(v, zoom)
-            rows.extend(zip([pid] * len(gx), gx.tolist(), gy.tolist(),
-                            interior.tolist()))
-        cover = spark.createDataFrame(
-            rows, T.StructType([
-                T.StructField(id_col, polygons.schema[id_col].dataType),
-                T.StructField("_tx", T.LongType()),
-                T.StructField("_ty", T.LongType()),
-                T.StructField("interior", T.BooleanType()),
-            ]))
+        cells = [geometry.cover_polygon(v, zoom) for v in vert_map.values()]
+        gx, gy, interior = (
+            np.concatenate([c[i] for c in cells] + [np.empty(0, dt)])
+            for i, dt in enumerate((np.int64, np.int64, bool)))
+        # the cover's numpy arrays ship as one JVM-local relation: its
+        # broadcast (once per refine branch) starts no Python worker
+        cover = local_frame(spark, {
+            id_col: np.repeat(np.array(list(vert_map), dtype=object),
+                              [len(c[0]) for c in cells]),
+            "_tx": gx, "_ty": gy, "interior": interior,
+        }, T.StructType([
+            T.StructField(id_col, polygons.schema[id_col].dataType),
+            T.StructField("_tx", T.LongType()),
+            T.StructField("_ty", T.LongType()),
+            T.StructField("interior", T.BooleanType()),
+        ]))
         cand = pts.join(F.broadcast(cover), ["_tx", "_ty"])
     else:
         cover = polygon_cover(polygons, zoom, id_col, verts_col)

@@ -2650,8 +2650,8 @@ def w_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = export_csv(pages).select(
         F.substring("line", 1, 2).alias("dept"), "line")
     out_dir = tempfile.mkdtemp(prefix="bano_publish_")
-    write_dept_files(lines, out_dir, "csv")
-    full = publish_full(out_dir, "csv")
+    depts = write_dept_files(lines, out_dir, "csv")
+    full = publish_full(out_dir, "csv", depts)
     return spark.read.text(full).withColumnRenamed("value", "line") \
         .orderBy("line")
 

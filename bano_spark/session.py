@@ -9,8 +9,11 @@ the core count rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def cpu_count() -> int:
@@ -65,3 +68,17 @@ def get_session(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, columns: Mapping[str, Sequence],
+                schema: T.StructType) -> DataFrame:
+    """Driver-built columns (lists or numpy arrays, keyed by the schema's
+    field names) as a JVM-local relation: the plan scans it as a
+    ``LocalTableScan``, with no Python worker. ``createDataFrame`` over a
+    list of tuples instead builds a pickled ``parallelize`` RDD, and
+    every scan of it re-serialises the rows through a Python worker
+    (0.25-0.95 s per scan on a 4-core VM, even for three rows)."""
+    table = pa.Table.from_pydict(
+        {f.name: columns[f.name] for f in schema.fields},
+        schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table)

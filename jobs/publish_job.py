@@ -53,7 +53,7 @@ def main() -> None:
     lines = export_csv(pg).select(
         dept_from_insee(F.substring("line", 1, 5)).alias("dept"), "line")
     depts = write_dept_files(lines, args.out, "csv")
-    full = publish_full(args.out, "csv")
+    full = publish_full(args.out, "csv", depts)
     dt = time.time() - t0
     print(f"publish_job: {len(depts)} depts -> {full} in {dt:.2f}s")
 

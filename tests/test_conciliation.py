@@ -9,7 +9,9 @@ Three layers of evidence:
   that shares no code with the engine;
 - the same rule on a tie fixture whose rows agree on (numero, lat, lon)
   and differ elsewhere: every row order and partitioning must give the
-  one oracle output.
+  one oracle output;
+- the same rule on records without a FANTOIR code in two communes,
+  which must not merge into one key.
 """
 
 from __future__ import annotations
@@ -56,7 +58,8 @@ def _rule_sql() -> str:
     """The conciliation rule in DuckDB over a `cumul` table: per side,
     the pick is the first row by (invalid number, numero, lat, lon,
     voie_osm, voie_autre, code_postal), nulls first; the first present
-    side of OSM > BAL > BAN supplies numero/lat/lon and must be valid."""
+    side of OSM > BAL > BAN supplies numero/lat/lon and must be valid.
+    A null or empty fantoir is no key."""
     from __spark_entry__ import _canon_sql
 
     return f"""
@@ -66,7 +69,7 @@ WITH k AS (
          CASE WHEN source = 'OSM' AND lat IS NOT NULL AND lon IS NOT NULL THEN 0
               WHEN source = 'BAL' AND lat != 0 AND lon != 0 THEN 1
               WHEN source = 'BAN' AND lat != 0 AND lon != 0 THEN 2 END AS side
-  FROM cumul WHERE fantoir IS NOT NULL
+  FROM cumul WHERE fantoir <> ''
 ),
 s AS (
   SELECT *, NOT (regexp_matches(nout, '^[0-9]{{1,4}}( ?[A-Z]?.*)?')
@@ -232,3 +235,26 @@ def test_ties_do_not_depend_on_row_order_or_partitioning(spark):
     outs = {tuple(_engine(spark, rows, parts))
             for rows in orders for parts in layouts}
     assert outs == {tuple(want)}
+
+
+def _at(insee, source, fantoir, numero, lon, lat, voie_osm):
+    return (insee, insee[:2], source, fantoir, numero, voie_osm, None, None,
+            lon, lat)
+
+
+# pages_to_cumul writes a record without ref:FR:FANTOIR as fantoir ''
+EMPTY_CODE_ROWS = [
+    _at("75101", "OSM", "", "1", 2.35, 48.86, "Rue de Rivoli"),
+    _at("13201", "OSM", "", "1", 5.37, 43.30, "La Canebière"),
+    _at("13201", "BAN", "", "1", 5.38, 43.31, "La Canebière"),
+    _at("75101", "OSM", "751011234", "1", 2.34, 48.85, "Rue du Louvre"),
+    _at("13201", "BAN", "132015678", "1", 5.36, 43.29, "Quai du Port"),
+]
+
+
+def test_empty_fantoir_is_no_key(spark):
+    """Two addresses numbered 1 in 75101 and 13201, both without a code,
+    must not become one export row with id '-1'."""
+    got = _engine(spark, EMPTY_CODE_ROWS)
+    assert got == _oracle(EMPTY_CODE_ROWS)
+    assert [r[0] for r in got] == ["132015678-1", "751011234-1"]

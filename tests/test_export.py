@@ -4,6 +4,7 @@ writer), NDJSON byte layout vs the reference f-strings, TTL quirks."""
 import csv
 import io
 import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -96,7 +97,7 @@ def test_publish_layout_and_full_bytes(spark, tmp_path):
         assert all(l.startswith(d) for l in decoded)
         per_dept += content
 
-    full = publish_full(out, "csv")
+    full = publish_full(out, "csv", depts)
     assert read_full_lines(full) == per_dept.splitlines()
 
 
@@ -114,7 +115,7 @@ def test_publish_gzip_kind_and_null_dept_guard(spark, tmp_path):
     assert depts == ["01", "02"]
     with gzip.open(f"{out}/bano-01.json.gz", "rb") as f:
         assert f.read() == b"a\n"
-    assert publish_full(out, "json").endswith("full.json.gz")
+    assert publish_full(out, "json", depts).endswith("full.json.gz")
 
     bad = spark.createDataFrame([("01", "a"), (None, "b")], ["dept", "line"])
     try:
@@ -123,6 +124,24 @@ def test_publish_gzip_kind_and_null_dept_guard(spark, tmp_path):
     except Exception as e:
         raised = "null dept key" in str(e)
     assert raised
+
+
+def test_publish_full_skips_stale_departements(spark, tmp_path):
+    """A département published by an earlier run into the same directory
+    stays on disk but does not reach this run's full file."""
+    from bano_spark.operators.publish import (publish_full, read_full_lines,
+                                              write_dept_files)
+
+    out = str(tmp_path)
+    first = spark.createDataFrame([("75", "75|a"), ("13", "13|a")],
+                                  ["dept", "line"])
+    assert write_dept_files(first, out, "csv") == ["13", "75"]
+    second = spark.createDataFrame([("75", "75|b"), ("75", "75|c")],
+                                   ["dept", "line"])
+    depts = write_dept_files(second, out, "csv")
+    assert depts == ["75"]
+    assert os.path.exists(f"{out}/bano-13.csv")
+    assert read_full_lines(publish_full(out, "csv", depts)) == [b"75|b", b"75|c"]
 
 
 def test_write_country_text_global_order(spark, tmp_path):
