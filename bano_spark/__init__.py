@@ -16,8 +16,9 @@ Design principles (see SURVEY.md):
   * Exact geometry refinement (ray-casting point-in-polygon, convex
     hull, geodesic length) is vectorized numpy inside Arrow-batched
     pandas UDFs — no per-row Python anywhere in the hot path.
-  * Skew (Paris-like hot communes) is handled by salting the shuffle
-    key; small polygon indexes are broadcast, large ones shuffle.
+  * Skew (Paris-like hot communes) is handled by AQE skew-join
+    splitting (session.get_session turns it on); small polygon indexes
+    are broadcast, large ones shuffle.
 """
 
 __version__ = "0.1.0"

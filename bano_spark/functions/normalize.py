@@ -103,29 +103,6 @@ def normalize_udf(s: pd.Series) -> pd.Series:
     return normalize_series(s)
 
 
-def append_suffixe_series(name: pd.Series, suffixe: pd.Series) -> pd.Series:
-    """C5 (bano/core.py:33-45), quirks preserved: the guard compares the
-    *normalized* name length against the *raw* suffix length, and the
-    endswith check is on raw strings. The endswith test loops over the
-    DISTINCT suffix vocabulary (hamlet names — dozens), not rows."""
-    name = name.fillna("").astype(str)
-    suffixe = suffixe.fillna("").astype(str)
-    ln = normalize_series(name).str.len()
-    ls = suffixe.str.len()
-    has = suffixe != ""
-    tail_differs = pd.Series(True, index=name.index)
-    for suf in suffixe[has].unique():
-        m = suffixe == suf
-        tail_differs[m] = ~name[m].str.endswith(suf)
-    do_append = has & (((ln > ls) & tail_differs) | (ln <= ls))
-    return name.where(~do_append, name + " " + suffixe)
-
-
-@pandas_udf(StringType())
-def append_suffixe_udf(name: pd.Series, suffixe: pd.Series) -> pd.Series:
-    return append_suffixe_series(name, suffixe)
-
-
 _TOPO_ACCENTS = {"DERRIERE": "DERRIÈRE", "EGLISE": "ÉGLISE", "ILE": "ÎLE",
                  "ILOT": "ÎLOT", "PRE": "PRÉ"}
 _TOPO_SMALL = {"Au": "au", "Aux": "aux", "D": "d'", "De": "de", "Des": "des",
@@ -159,11 +136,6 @@ def format_toponyme_series(s: pd.Series) -> pd.Series:
     filled = s.fillna("").astype(str)
     vocab = {v: _format_toponyme_one(v) for v in pd.unique(filled)}
     return filled.map(vocab)
-
-
-@pandas_udf(StringType())
-def format_toponyme_udf(s: pd.Series) -> pd.Series:
-    return format_toponyme_series(s)
 
 
 def _case_map(col, mapping: dict):

@@ -61,36 +61,11 @@ def tile_y(y_3857: Column, z: int) -> Column:
         F.lit(-1).cast("bigint"))
 
 
-def cell_id(x_3857: Column, y_3857: Column, z: int) -> Column:
-    """Single 64-bit cell key: (tx << z_bits) | ty. Cheap to shuffle on."""
-    return (tile_x(x_3857, z) * F.lit(2 ** (z + 1)) + tile_y(y_3857, z)).cast("bigint")
-
-
-def tile_bounds_cols(z: Column | int, x: Column, y: Column):
-    """(xmin, ymin, xmax, ymax) EPSG:3857 box of tile z/x/y.
-
-    Bit-identical to the reference's Tile math (models.py:309-313).
-    """
-    zc = F.lit(z) if isinstance(z, int) else z
-    size = F.lit(WORLD) / F.pow(F.lit(2.0), zc.cast("double"))
-    xmin = F.lit(ORIGIN) + size * x
-    xmax = F.lit(ORIGIN) + size * (x + F.lit(1))
-    ymin = F.lit(-ORIGIN) - size * (y + F.lit(1))
-    ymax = F.lit(-ORIGIN) - size * y
-    return xmin, ymin, xmax, ymax
-
-
 def lonlat_to_mercator(lon: Column, lat: Column):
     """EPSG:4326 -> EPSG:3857 (spherical Mercator), column arithmetic."""
     x = F.lit(_R) * F.radians(lon)
     y = F.lit(_R) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat) / F.lit(2.0)))
     return x, y
-
-
-def mercator_to_lonlat(x: Column, y: Column):
-    lon = F.degrees(x / F.lit(_R))
-    lat = F.degrees(F.lit(2.0) * F.atan(F.exp(y / F.lit(_R))) - F.lit(math.pi / 2.0))
-    return lon, lat
 
 
 def quadkey(tx: Column, ty: Column, z: int) -> Column:

@@ -88,28 +88,6 @@ def json_voie_line(df: DataFrame, with_housenumbers: bool = True) -> DataFrame:
     return df.select(F.concat(*pieces).alias("line"))
 
 
-def json_commune_line(df: DataFrame) -> DataFrame:
-    """Commune record kind (export.py:151-159): id, type, name, postcode,
-    lat, lon, city, departement, region, population, adm_weight,
-    importance — note the reference's space after "type": kept."""
-    pieces = [
-        F.lit('{"id":"'), _jstr("id"),
-        F.lit('","type":"'), _jstr("type"),
-        F.lit('", "name":"'), _jstr("name"),
-        F.lit('", "postcode":'), json_postcode("postcode"),
-        F.lit(', "lat":'), _jstr("lat"),
-        F.lit(', "lon":'), _jstr("lon"),
-        F.lit(', "city":"'), _jstr("cityname"),
-        F.lit('", "departement":"'), _jstr("departement"),
-        F.lit('", "region":"'), _jstr("region"),
-        F.lit('", "population":'), _jstr("population"),
-        F.lit(', "adm_weight":'), _jstr("adm_weight"),
-        F.lit(', "importance":'), _jstr("importance"),
-        F.lit("}"),
-    ]
-    return df.select(F.concat(*pieces).alias("line"))
-
-
 def ttl_record(df: DataFrame) -> DataFrame:
     """Turtle per address row (export.py:129-145), quirks preserved."""
     insee5 = F.substring(F.col("id"), 1, 5)
@@ -150,14 +128,6 @@ def ttl_record(df: DataFrame) -> DataFrame:
         F.lit(")\"^^gsp:wktLiteral ] ;\n."),
     )
     return df.orderBy("id").select(F.concat(head, location, tail).alias("line"))
-
-
-def write_single_text(df: DataFrame, path: str) -> None:
-    """Ordered single-file text write — per-DEPT export files only
-    (bounded by one département's rows). The full-country ordered
-    output goes through write_country_text below; never coalesce(1)
-    the whole country."""
-    df.coalesce(1).write.mode("overwrite").text(path)
 
 
 def write_country_text(df: DataFrame, path: str,

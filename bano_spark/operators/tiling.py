@@ -35,20 +35,6 @@ def parse_tile_lines(df: DataFrame, col: str = "value") -> DataFrame:
     )
 
 
-def tile_boxes(df: DataFrame) -> DataFrame:
-    """Attach the EPSG:3857 box of each z/x/y tile, with the reference's
-    int truncation of box coordinates (models.py:328 uses int(xmin);
-    our region is in the positive quadrant so floor == int)."""
-    xmin, ymin, xmax, ymax = tiles.tile_bounds_cols(F.col("z"), F.col("x"), F.col("y"))
-    return df.select(
-        "z", "x", "y",
-        F.floor(xmin).cast("double").alias("xmin"),
-        F.floor(ymin).cast("double").alias("ymin"),
-        F.floor(xmax).cast("double").alias("xmax"),
-        F.floor(ymax).cast("double").alias("ymax"),
-    )
-
-
 def eligible_communes(communes: DataFrame, insee: str = "insee_com",
                       level: str = "admin_level") -> DataFrame:
     """The reference's level-8-minus-cities ∪ level-9-arrondissements

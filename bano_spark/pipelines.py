@@ -20,10 +20,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import synth
 from .functions.codes import dept_from_insee
 from .functions.normalize import normalize_udf
+from .geo import tiles
 from .operators import conciliation as conc
 from .operators.export import export_csv_lines
+from .operators.pip_join import spatial_join
 from .sources.pages import extract_records
 
 SOURCE_OF_KIND = {"ban": "BAN", "osm": "OSM", "bal": "BAL"}
@@ -85,3 +88,27 @@ def process_all(pages: DataFrame) -> DataFrame:
 def export_csv(pages: DataFrame) -> DataFrame:
     """pages -> unix-dialect CSV lines (S13), one per address."""
     return export_csv_lines(process_all(pages))
+
+
+def pages_tile_rollup(pages: DataFrame, zoom: int = tiles.DEFAULT_ZOOM) -> DataFrame:
+    """The north-rule pages job: pages -> extract -> PIP join against the
+    level-8 commune polygons (cover cells at ``zoom``) -> per-commune
+    (poly_insee, n_addresses, n_tiles) over the z16 tiles.
+
+    split_refine keeps interior-cell candidates in the JVM; only the
+    boundary-cell rows pay the Arrow refine round trip (BENCH.md)."""
+    recs = extract_records(pages)
+    # polygons carry insee_com; rename to avoid clashing with the record column
+    polys = (synth.commune_polygons_df(pages.sparkSession)
+             .filter(F.col("admin_level") == 8)
+             .withColumnRenamed("insee_com", "poly_insee"))
+    joined = spatial_join(recs.drop("insee_com"), polys, x="x", y="y",
+                          id_col="poly_insee", verts_col="verts", zoom=zoom,
+                          broadcast=True, split_refine=True)
+    tiled = joined.select(
+        "poly_insee",
+        tiles.tile_x(F.col("x"), tiles.DEFAULT_ZOOM).alias("tx"),
+        tiles.tile_y(F.col("y"), tiles.DEFAULT_ZOOM).alias("ty"))
+    return tiled.groupBy("poly_insee").agg(
+        F.count(F.lit(1)).alias("n_addresses"),
+        F.countDistinct("tx", "ty").alias("n_tiles"))

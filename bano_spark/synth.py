@@ -353,266 +353,3 @@ FROM (SELECT o_orderkey % 500 AS seg_id,
              ((o_orderkey % 500) * 2654435761 + 37) % 2147483648 AS v
       FROM {table})
 """
-
-
-# ---------------------------------------------------------------------------
-# Wave-8 fixtures: crawl-infrastructure URLs, robots rules, and link
-# HTML. Same one-source-of-truth discipline: one emitter per fixture
-# produces both dialects; every derived value is integer/string
-# arithmetic that is bit-identical in Spark SQL and DuckDB (both
-# accept CAST(x AS STRING) and '||' concatenation).
-# ---------------------------------------------------------------------------
-
-# public-suffix sample: mixes one- and two-label suffixes so the
-# longest-suffix-match operator has real work to do (after the
-# publicsuffix.org list shape; the real list is ~9k rows and would be
-# broadcast the same way)
-URL_SUFFIXES = ["com", "org", "io", "fr", "co.uk", "gouv.fr"]
-
-
-def _host_expr(dialect: str, v: str) -> str:
-    """Host from an integer hash expression ``v``: optional 'h<k>.'
-    sub-label (4 of 5 hosts), a 'd<k>' domain label, and a suffix
-    drawn from URL_SUFFIXES (including two-label suffixes)."""
-    d = " div " if dialect == "spark" else " // "
-    suffix = ("CASE (" + v + d + "11) % 6 " + " ".join(
-        f"WHEN {i} THEN '{s}'" for i, s in enumerate(URL_SUFFIXES)) + " END")
-    sub = (f"CASE WHEN ({v}) % 5 = 0 THEN '' "
-           f"ELSE 'h' || CAST(({v}) % 7 AS STRING) || '.' END")
-    dom = f"'d' || CAST(({v}{d}5) % 50 AS STRING)"
-    return f"({sub} || {dom} || '.' || ({suffix}))"
-
-
-def urls_select_sql(dialect: str, table: str = "documents") -> str:
-    """One deterministic crawl-frontier URL per document:
-    (doc_id, url, host, path, priority)."""
-    d = " div " if dialect == "spark" else " // "
-    host = _host_expr(dialect, "u")
-    return f"""
-SELECT doc_id,
-       'https://' || {host} || '/p/' || CAST((u{d}13) % 23 AS STRING)
-           || '/page' || CAST(u % 97 AS STRING) AS url,
-       {host} AS host,
-       '/p/' || CAST((u{d}13) % 23 AS STRING)
-           || '/page' || CAST(u % 97 AS STRING) AS path,
-       CAST((u{d}3) % 100 AS BIGINT) AS priority
-FROM (SELECT doc_id, (doc_id * 2654435761 + 71) % 2147483648 AS u
-      FROM {table})
-"""
-
-
-def robots_rules_select_sql(dialect: str, table: str = "supplier") -> str:
-    """Deterministic robots.txt path rules keyed by supplier:
-    (host, prefix, allow). Hosts share the construction of
-    urls_select_sql so a useful fraction of frontier URLs has at
-    least one applicable rule; prefixes nest ('/p' vs '/p/<k>') so
-    longest-prefix-wins is exercised, and duplicated (host, prefix)
-    pairs with conflicting allow bits exercise the disallow-wins
-    dedup."""
-    d = " div " if dialect == "spark" else " // "
-    host = _host_expr(dialect, "v")
-    return f"""
-SELECT {host} AS host,
-       CASE WHEN v % 4 = 0 THEN '/p'
-            ELSE '/p/' || CAST((v{d}17) % 23 AS STRING) END AS prefix,
-       (v{d}2) % 3 > 0 AS allow
-FROM (SELECT (s_suppkey * 2654435761 + 71) % 2147483648 AS v
-      FROM {table})
-"""
-
-
-def link_html_select_sql(dialect: str, table: str = "documents") -> str:
-    """Synthetic page HTML with 1-2 anchor tags per document:
-    (doc_id, src_host, html). Target hosts reuse _host_expr under
-    fresh salts; anchor text is a small token vocabulary."""
-    d = " div " if dialect == "spark" else " // "
-    src = _host_expr(dialect, "u")
-    h1 = _host_expr(dialect, "w1")
-    h2 = _host_expr(dialect, "w2")
-    return f"""
-SELECT doc_id, {src} AS src_host,
-       '<p>intro</p><a href="https://' || {h1} || '/l/'
-         || CAST(w1 % 13 AS STRING) || '">w' || CAST(w1 % 50 AS STRING)
-         || '</a> filler text'
-         || CASE WHEN u % 3 = 0 THEN '' ELSE
-            ' <a href="https://' || {h2} || '/l/'
-            || CAST(w2 % 13 AS STRING) || '">w' || CAST(w2 % 50 AS STRING)
-            || '</a>' END AS html
-FROM (SELECT doc_id,
-             (doc_id * 2654435761 + 71) % 2147483648 AS u,
-             (doc_id * 2654435761 + 101) % 2147483648 AS w1,
-             (doc_id * 2654435761 + 131) % 2147483648 AS w2
-      FROM {table})
-"""
-
-
-# ---------------------------------------------------------------------------
-# Wave-8 fixtures (continued): document lines, clustered dense points,
-# lattice nodes, and an integer-valued drifting series. Everything is
-# integer/string arithmetic, bit-identical across engines; doubles
-# appear only as exact integer-valued casts.
-# ---------------------------------------------------------------------------
-
-
-def lines_select_sql(dialect: str, table: str = "documents",
-                     chunk: int = 8) -> str:
-    """Chunk each document's token stream into ``chunk``-token pseudo
-    lines (doc_id, line_no, line). Every third line (by a doc/line
-    hash) is replaced with one of 7 boilerplate strings so the corpus
-    carries the heavy cross-document line duplication C4-style line
-    dedup exists to remove; the remaining lines are near-unique.
-    """
-    if dialect == "spark":
-        toks = "split(text, ' ')"
-        return f"""
-SELECT doc_id, line_no,
-       CASE WHEN (doc_id * 7 + line_no) % 3 = 0
-            THEN 'boiler plate line ' || CAST((doc_id div 11 + line_no) % 7 AS STRING)
-            ELSE array_join(slice({toks}, line_no * {chunk} + 1, {chunk}), ' ')
-       END AS line
-FROM (SELECT doc_id, text FROM {table}) t
-LATERAL VIEW explode(sequence(0,
-    CAST(ceil(size({toks}) / {chunk}.0) AS INT) - 1)) e AS line_no
-"""
-    return f"""
-SELECT doc_id, line_no,
-       CASE WHEN (doc_id * 7 + line_no) % 3 = 0
-            THEN 'boiler plate line ' || CAST((doc_id // 11 + line_no) % 7 AS STRING)
-            ELSE array_to_string(
-                   toks[line_no * {chunk} + 1 : line_no * {chunk} + {chunk}], ' ')
-       END AS line
-FROM (SELECT doc_id,
-             unnest(generate_series(0,
-                 CAST(ceil(len(toks) / {chunk}.0) AS INT) - 1)) AS line_no,
-             toks
-      FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM {table}))
-"""
-
-
-def dense_points_select_sql(dialect: str, table: str = "events",
-                            modulus: int = 19) -> str:
-    """A bounded clustered point set in the 4000 x 4000 unit box:
-    ~70% of points fall within +-200 of one of 25 cluster centres,
-    30% are uniform — the clustering Ripley's K exists to detect.
-    Sampled as event_id % modulus = 3 so the oracle's O(n^2)
-    self-join stays small at gate scale. (value) is an integer-valued
-    double for the IDW fixture."""
-    d = " div " if dialect == "spark" else " // "
-    cx = f"(400 + ((u{d}7) % 5) * 700)"
-    cy = f"(400 + ((u{d}13) % 5) * 700)"
-    return f"""
-SELECT event_id,
-       CAST(CASE WHEN u % 10 < 7
-            THEN {cx} + ((u{d}10) % 401) - 200
-            ELSE (u{d}10) % 4000 END + 0.5 AS DOUBLE) AS x,
-       CAST(CASE WHEN u % 10 < 7
-            THEN {cy} + ((u{d}4010) % 401) - 200
-            ELSE (u{d}4010) % 4000 END + 0.25 AS DOUBLE) AS y,
-       CAST((u{d}31) % 100 AS DOUBLE) AS value
-FROM (SELECT event_id, (event_id * 2654435761 + 47) % 2147483648 AS u
-      FROM {table} WHERE event_id % {modulus} = 3)
-"""
-
-
-def grid_nodes_select_sql(dialect: str, table: str = "supplier") -> str:
-    """An 8 x 8 lattice of interpolation nodes over the same 4000-unit
-    box as dense_points_select_sql (node spacing 500, offset 250)."""
-    d = " div " if dialect == "spark" else " // "
-    return f"""
-SELECT DISTINCT s_suppkey % 64 AS node_id,
-       CAST(250 + ((s_suppkey % 64) % 8) * 500 AS DOUBLE) AS nx,
-       CAST(250 + ((s_suppkey % 64){d}8) * 500 AS DOUBLE) AS ny
-FROM {table}
-"""
-
-
-def series_select_sql(dialect: str, table: str = "events") -> str:
-    """Per-user integer-valued measurement series with an injected
-    +300 level shift after the 50th observation — the CUSUM drift
-    fixture. (user_id, ts, event_id, seq, v); v stays integer so
-    running sums are exact in both engines."""
-    return f"""
-SELECT user_id, ts, event_id, seq,
-       CAST((u % 400) + CASE WHEN seq > 50 THEN 300 ELSE 0 END AS DOUBLE) AS v
-FROM (SELECT user_id, ts, event_id,
-             (event_id * 2654435761 + 5) % 2147483648 AS u,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS seq
-      FROM {table})
-"""
-
-
-def captures_select_sql(dialect: str, table: str = "events") -> str:
-    """Per-page capture history for recrawl scheduling: 8 consecutive
-    event ids form one logical page's captures at the events table's
-    real timestamps; ``version`` is a small-alphabet content hash
-    whose alphabet size (2-5) varies per page, so observed change
-    rates spread across pages. Single-capture degenerate pages do not
-    occur (ids are contiguous), but the operator guards span 0
-    anyway."""
-    d = " div " if dialect == "spark" else " // "
-    return f"""
-SELECT event_id, event_id{d}8 AS page_key, ts,
-       CAST(u % ((event_id{d}8) % 4 + 2) AS BIGINT) AS version
-FROM (SELECT event_id, ts,
-             (event_id * 2654435761 + 11) % 2147483648 AS u
-      FROM {table})
-"""
-
-
-def alt_html_select_sql(dialect: str, table: str = "documents") -> str:
-    """Synthetic page HTML carrying hreflang alternate links:
-    (doc_id, page_url, page_lang, html). Each document IS one language
-    edition of a (domain, pid) page and lists the other three
-    editions as <link rel="alternate" hreflang=...> tags — except
-    that 'fr' editions of pid % 5 = 0 pages OMIT their 'en' alternate
-    (a deterministic reciprocity defect for the audit to find).
-    Editions exist only where the doc hash lands, so organic one-way
-    links appear too. Pure integer/string arithmetic, identical in
-    both dialects."""
-    # md5-derived fields, NOT linear congruences: sequential doc_ids
-    # under linear maps walk a lattice whose joint (lang, dom, pid)
-    # has period lcm(4,40,25) = 200, so editions cluster on 5% of the
-    # grid and measured reciprocity collapsed to ~2% vs the ~12%
-    # slot-occupancy expectation; md5 mixes, restoring independence
-    if dialect == "spark":
-        def h(salt: str) -> str:
-            return (f"CAST(conv(substr(md5(concat('{salt}|', "
-                    f"CAST(doc_id AS STRING))), 1, 8), 16, 10) "
-                    f"AS BIGINT)")
-    else:
-        def h(salt: str) -> str:
-            return (f"CAST(CAST(concat('0x', substr(md5('{salt}|' || "
-                    f"CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) "
-                    f"AS BIGINT)")
-    lang = (f"CASE (u % 4) WHEN 0 THEN 'en' WHEN 1 THEN 'fr' "
-            f"WHEN 2 THEN 'de' ELSE 'es' END")
-    dom = f"CAST(u2 % 40 AS STRING)"
-    pid = f"CAST(u3 % 25 AS STRING)"
-
-    def url(lg: str) -> str:
-        return (f"'https://' || {lg} || '.d' || {dom}"
-                f" || '.example/p/' || {pid}")
-
-    def tag(lg: str) -> str:
-        return (f"'<link rel=\"alternate\" hreflang=\"' || {lg}"
-                f" || '\" href=\"' || {url(lg)} || '\">'")
-
-    alts = []
-    for i, lg in enumerate(["'en'", "'fr'", "'de'", "'es'"]):
-        cond = (f"CASE WHEN lang <> {lg} AND NOT (lang = 'fr' "
-                f"AND {lg} = 'en' AND (u3 % 25) % 5 = 0) "
-                f"THEN {tag(lg)} ELSE '' END")
-        alts.append(cond)
-    body = " || ".join(alts)
-    return f"""
-SELECT doc_id, page_url, lang AS page_lang,
-       '<head>' || {body} || '</head>' AS html
-FROM (SELECT doc_id, u, u2, u3, {lang} AS lang,
-             {url('lang')} AS page_url
-      FROM (SELECT doc_id,
-                   {h('la')} AS u,
-                   {h('do')} AS u2,
-                   {h('pi')} AS u3
-            FROM {table}))
-"""

@@ -1,13 +1,10 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the north-rule
-pages pipeline (synthesize pages -> extract records -> cell-bucketed
-PIP join -> z16 tile assignment) whose throughput is the BASELINE.json
-metric. Prints ONE JSON line.
-
-Scaling evidence (N vs 4N cores) is produced by
-tools/bench_scaling.py and recorded in BENCH.md / BASELINE.md.
+Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+test data) on local[N] (N = $SPARK_GRAFT_CPUS, else the CPUs this
+process may run on), plus the north-rule pages pipeline
+(pipelines.pages_tile_rollup over synthesized pages) whose throughput
+is the BASELINE.json metric. Prints ONE JSON line.
 """
 
 from __future__ import annotations
@@ -37,47 +34,23 @@ HEADLINE = [
 
 def pages_pipeline(spark, n_pages: int) -> int:
     """The north-rule job: pages -> extract -> PIP -> tiles."""
-    from pyspark.sql import functions as F
-
-    from bano_spark import synth
-    from bano_spark.geo import tiles
-    from bano_spark.operators.pip_join import spatial_join
+    from bano_spark.pipelines import pages_tile_rollup
+    from bano_spark.session import cpu_count
     from bano_spark.sources import pages as P
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    pg = P.synth_pages_sql(spark, n_pages, partitions=cpus * 2)
-    recs = P.extract_records(pg)
-    # polygons carry insee_com; rename to avoid clashing with the record column
-    polys = (synth.commune_polygons_df(spark)
-             .filter(F.col("admin_level") == 8)
-             .withColumnRenamed("insee_com", "poly_insee"))
-    # split_refine: interior-cell candidates stay pure JVM; only the
-    # ~24% boundary-cell rows pay the Arrow round trip. Profiled at 16M
-    # pages / local[32]: 47s single-pass -> 11.5s split (the r1 bench's
-    # "unexplained fixed cost" was the all-rows Python crossing; see
-    # tools/profile_pages.py and BENCH.md)
-    joined = spatial_join(recs.drop("insee_com"), polys, x="x", y="y",
-                          id_col="poly_insee", verts_col="verts", zoom=16,
-                          broadcast=True, split_refine=True)
-    tiled = joined.select(
-        "poly_insee",
-        tiles.tile_x(F.col("x"), tiles.DEFAULT_ZOOM).alias("tx"),
-        tiles.tile_y(F.col("y"), tiles.DEFAULT_ZOOM).alias("ty"),
-    )
-    out = tiled.groupBy("poly_insee").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("tx", "ty").alias("n_tiles"))
-    return out.count()
+    pg = P.synth_pages_sql(spark, n_pages, partitions=cpu_count() * 2)
+    return pages_tile_rollup(pg).count()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "16000000"))
     load_before = round(os.getloadavg()[0], 1)
 
     import __spark_entry__ as E
-    from bano_spark.session import get_session
+    from bano_spark.session import cpu_count, get_session
+
+    cpus = cpu_count()
 
     # r4 ROOT CAUSE of the 10-60x slow first pages run (VERDICT r3 #1):
     # this sandbox is a microVM whose guest memory is host-faulted at
@@ -88,7 +61,7 @@ def main() -> None:
     # warmup and -XX:-DontCompileHugeMethods changed nothing; WITH
     # -Xms=-Xmx -XX:+AlwaysPreTouch the tax moved to session startup and
     # the first run fell to 12.2s, second 2.5s — the full A/B is
-    # committed in AB_FIRSTRUN.jsonl / tools/bench_firstrun_ab.py).
+    # committed in AB_FIRSTRUN.jsonl).
     # So: pre-touch a right-sized heap at startup (disclosed), keeping
     # the timed region on already-faulted pages — exactly what long-
     # lived executors on a real cluster see after provisioning.

@@ -19,7 +19,7 @@ from __future__ import annotations
 import argparse
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 
 def main() -> None:
@@ -36,9 +36,7 @@ def main() -> None:
     # spark-submit provides the session; builder.getOrCreate attaches to it
     spark = SparkSession.builder.appName("bano-pages-job").getOrCreate()
 
-    from bano_spark import synth
-    from bano_spark.geo import tiles
-    from bano_spark.operators.pip_join import spatial_join
+    from bano_spark.pipelines import pages_tile_rollup
     from bano_spark.sources import pages as P
 
     t0 = time.time()
@@ -47,20 +45,7 @@ def main() -> None:
     else:
         par = spark.sparkContext.defaultParallelism * 2
         pg = P.synth_pages_sql(spark, args.pages, partitions=par)
-    recs = P.extract_records(pg)
-    polys = (synth.commune_polygons_df(spark)
-             .filter(F.col("admin_level") == 8)
-             .withColumnRenamed("insee_com", "poly_insee"))
-    joined = spatial_join(recs.drop("insee_com"), polys, x="x", y="y",
-                          id_col="poly_insee", verts_col="verts",
-                          zoom=args.zoom, broadcast=True, split_refine=True)
-    tiled = joined.select(
-        "poly_insee",
-        tiles.tile_x(F.col("x"), tiles.DEFAULT_ZOOM).alias("tx"),
-        tiles.tile_y(F.col("y"), tiles.DEFAULT_ZOOM).alias("ty"))
-    out = tiled.groupBy("poly_insee").agg(
-        F.count(F.lit(1)).alias("n_addresses"),
-        F.countDistinct("tx", "ty").alias("n_tiles"))
+    out = pages_tile_rollup(pg, zoom=args.zoom)
 
     if args.checkpoint:
         from bano_spark.plans.lineage import CheckpointLog, resumable_partition_write

@@ -1,19 +1,8 @@
-"""Character-level dedup vs the word-13-gram blind spot, plus a pure
-Python replay of both char-level operators on planted fixtures.
-
-The headline assertion is the round-3 verdict item 6 "provably
-misses" criterion: a 60-char copied span, re-embedded mid-word at a
-shifted offset, yields ZERO word-13-gram duplicate spans
-(operators/webtext.dup_span_stats) while char_dup_spans recovers the
-exact span length and char_winnow_anchors flags the pair within the
-Schleimer w + k - 1 guarantee.
+"""The word-13-gram blind spot: a 60-char copied span, re-embedded
+mid-word at a shifted offset, yields ZERO word-13-gram duplicate spans
+(operators/webtext.dup_span_stats).
 """
 
-import hashlib
-
-import pytest
-
-from bano_spark.operators.chardedup import char_dup_spans, char_winnow_anchors
 from bano_spark.operators.webtext import dup_span_stats
 
 SRC = ("the quick brown fox jumps over the lazy dog while seventeen "
@@ -36,107 +25,3 @@ def test_word_13gram_misses_shifted_copy(spark):
     # (the copy doc may not even emit a row — absence == zero dups)
     assert word[1]["n_dup_grams"] == 0
     assert word.get(2, {"n_dup_grams": 0})["n_dup_grams"] == 0
-
-
-def test_char_dup_spans_recovers_exact_span(spark):
-    docs = _df(spark, [(1, SRC), (2, COPY)])
-    got = {r["doc_id"]: r.asDict()
-           for r in char_dup_spans(docs, k=16).collect()}
-    # the shared run is exactly the 60 planted chars on both sides
-    assert got[1]["longest_dup_span"] == 60
-    assert got[2]["longest_dup_span"] == 60
-    # coverage: 60 - 16 + 1 = 45 covered positions each
-    assert got[2]["n_dup_pos"] == 45
-
-
-def test_winnow_guarantee_flags_pair(spark):
-    docs = _df(spark, [(1, SRC), (2, COPY)])
-    got = {r["doc_id"]: r.asDict()
-           for r in char_winnow_anchors(docs, k=16, w=8).collect()}
-    # 60 >= w + k - 1 = 23: at least one shared anchor is guaranteed
-    assert got[1]["n_dup_anchors"] >= 1
-    assert got[2]["n_dup_anchors"] >= 1
-    # density: anchors ~ 2/(w+1) of grams, never more than gram count
-    assert 0 < got[1]["n_anchors"] <= got[1]["n_grams"]
-
-
-def _py_char_dup_spans(rows, k=16):
-    """Reference replay: stride-1 char k-grams, cross-doc coverage,
-    longest covered run + k - 1."""
-    grams = {}
-    per_doc = {}
-    for did, text in rows:
-        ps = []
-        for i in range(len(text) - k + 1):
-            g = hashlib.md5(text[i:i + k].encode()).hexdigest()
-            ps.append((i + 1, g))
-            grams.setdefault(g, set()).add(did)
-        per_doc[did] = ps
-    out = {}
-    for did, ps in per_doc.items():
-        cov = [p for p, g in ps if len(grams[g]) >= 2]
-        longest, run, prev = 0, 0, None
-        for p in cov:
-            run = run + 1 if prev is not None and p == prev + 1 else 1
-            prev = p
-            longest = max(longest, run)
-        out[did] = dict(n_pos=len(ps), n_dup_pos=len(cov),
-                        longest_dup_span=longest + k - 1 if longest else 0)
-    return out
-
-
-@pytest.mark.parametrize("seed", [3, 11])
-def test_char_dup_spans_vs_python_replay(spark, seed):
-    # deterministic pseudo-corpus with planted partial overlaps
-    def word(i):
-        return format((i * seed * 2654435761) % 2 ** 20, "05x")
-
-    texts = []
-    for d in range(8):
-        texts.append(" ".join(word(d * 100 + i) for i in range(40)))
-    # doc 8 embeds a shifted slice of doc 0; doc 9 of doc 3
-    texts.append("pp " + texts[0][25:140] + " qq")
-    texts.append(texts[3][60:200])
-    rows = [(i, t) for i, t in enumerate(texts)]
-    want = _py_char_dup_spans(rows)
-    got = {r["doc_id"]: r.asDict()
-           for r in char_dup_spans(_df(spark, rows), k=16).collect()}
-    for did, w in want.items():
-        g = got[did]
-        assert (g["n_pos"], g["n_dup_pos"], g["longest_dup_span"]) == \
-            (w["n_pos"], w["n_dup_pos"], w["longest_dup_span"]), did
-
-
-def _py_winnow_anchors(rows, k=16, w=8):
-    per_doc = {}
-    for did, text in rows:
-        hs = [hashlib.md5(text[i:i + k].encode()).hexdigest()
-              for i in range(len(text) - k + 1)]
-        keys = [h + format(i + 1, "08d") for i, h in enumerate(hs)]
-        sel = set()
-        if 0 < len(keys) < w:
-            sel.add(min(keys)[:32])
-        for q in range(len(keys) - w + 1):
-            sel.add(min(keys[q:q + w])[:32])
-        per_doc[did] = sel
-    return per_doc
-
-
-def test_winnow_anchors_vs_python_replay(spark):
-    rows = [(1, SRC), (2, COPY), (3, "short text here"),
-            (4, SRC[10:90]), (5, "abcdefghijklmnopq")]
-    want = _py_winnow_anchors(rows)
-    got = {r["doc_id"]: r.asDict()
-           for r in char_winnow_anchors(_df(spark, rows), k=16, w=8)
-           .collect()}
-    all_docs = {}
-    for did, sel in want.items():
-        for a in sel:
-            all_docs.setdefault(a, set()).add(did)
-    for did, sel in want.items():
-        if not sel:
-            assert did not in got or got[did]["n_anchors"] == 0
-            continue
-        dup = sum(1 for a in sel if len(all_docs[a]) >= 2)
-        assert got[did]["n_anchors"] == len(sel), did
-        assert got[did]["n_dup_anchors"] == dup, did

@@ -138,7 +138,6 @@ def test_chi_square_gof(spark):
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bano_spark.operators.ranking import precision_recall_at_k  # noqa: E402
 from bano_spark.operators.temporal import (  # noqa: E402
     ar1_coefficient, seasonal_strength, variance_ratio)
 
@@ -173,19 +172,3 @@ def test_variance_ratio_mean_reverting(spark):
     out = variance_ratio(df, "k", [F.asc("t")], "v", q=4).collect()[0]
     assert out["n_1"] == 7 and out["n_q"] == 4
     assert out["vr"] == 0.0
-
-
-def test_precision_recall_at_k(spark):
-    rows = [
-        (1, 10, 9.0, False), (1, 11, 8.0, True),
-        (1, 12, 7.0, True), (1, 13, 6.0, False),
-        (2, 20, 5.0, False), (2, 21, 4.0, False),
-        (3, 31, 2.0, True), (3, 32, 2.0, False),
-    ]
-    df = spark.createDataFrame(
-        rows, "q int, id int, score double, rel boolean")
-    out = {r["q"]: r for r in precision_recall_at_k(
-        df, "q", [F.desc("score"), F.asc("id")], "rel", k=2).collect()}
-    assert out[1]["precision_2"] == 0.5 and out[1]["recall_2"] == 0.5
-    assert out[2]["precision_2"] == 0.0 and out[2]["recall_2"] == 0.0
-    assert out[3]["precision_2"] == 0.5 and out[3]["recall_2"] == 1.0

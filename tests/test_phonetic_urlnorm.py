@@ -1,47 +1,13 @@
-"""Kernel tests for wave 85: Soundex vs the NARA reference examples
-(both engines), and rfc3986_normalize vs hand-derived canonical forms
-including the percent-decode / dot-segment / default-port edge cases."""
+"""Kernel tests for wave 85: rfc3986_normalize vs hand-derived
+canonical forms including the percent-decode / dot-segment /
+default-port edge cases."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from bano_spark.functions.phonetic import soundex_duckdb_sql, soundex_expr
 from bano_spark.operators.webtext import rfc3986_normalize
-
-# The canonical NARA test vectors (H/W transparency, first-letter code
-# suppression) plus degenerate shapes.
-NARA = [
-    ("Robert", "R163"), ("Rupert", "R163"), ("Ashcraft", "A261"),
-    ("Ashcroft", "A261"), ("Tymczak", "T522"), ("Pfister", "P236"),
-    ("Honeyman", "H555"), ("Washington", "W252"), ("Lee", "L000"),
-    ("Gutierrez", "G362"), ("Jackson", "J250"), ("A", "A000"),
-    ("O'Brien", "O165"), ("van Helsing", "V542"),
-]
-
-
-def test_soundex_nara_spark(spark):
-    df = spark.createDataFrame([(n,) for n, _ in NARA], "name string")
-    got = [r["c"] for r in
-           df.select(soundex_expr("name").alias("c")).collect()]
-    assert got == [c for _, c in NARA]
-
-
-def test_soundex_nara_duckdb():
-    con = duckdb.connect()
-    expr = soundex_duckdb_sql("name")
-    got = [con.execute(f"SELECT {expr} AS c FROM (VALUES (?)) t(name)",
-                       [n]).fetchone()[0] for n, _ in NARA]
-    assert got == [c for _, c in NARA]
-
-
-def test_soundex_empty_and_nonletter(spark):
-    df = spark.createDataFrame([("",), ("123",), ("!!",)], "name string")
-    got = [r["c"] for r in
-           df.select(soundex_expr("name").alias("c")).collect()]
-    assert got == ["", "", ""]
 
 
 URLS = [

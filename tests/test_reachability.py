@@ -1,0 +1,131 @@
+"""Every module under bano_spark/ must be reachable from a root.
+
+The roots are what runs the system: ``jobs/*.py``, ``perfbench/*.py``,
+``bench.py`` and ``__spark_entry__.py``. The walk follows every
+``import``/``from ... import`` statement found anywhere in a module's
+AST (function bodies included), resolves relative imports against the
+importing module's package, and counts a package's ``__init__`` as
+reached whenever one of its submodules is. No Spark is started.
+
+``KNOWN_ORPHANS`` names the operator modules that are still unreached
+and still carry their own tests; they are deleted a batch at a time,
+each with the tests of its subject. The list may only shrink: a module
+not on it must be reached, and a module on it must still exist and
+still be unreached.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = "bano_spark"
+ROOT_GLOBS = ("jobs/*.py", "perfbench/*.py", "bench.py", "__spark_entry__.py")
+KNOWN_ORPHANS = frozenset(f"bano_spark.operators.{name}" for name in (
+    "agreement", "als", "asof", "bayes_ab", "bloom_audit", "butterfly",
+    "cachesim", "calendrics", "causal", "checksums", "classing", "clipping",
+    "compaction", "cpm", "curation", "ddsketch", "decoding", "diversify",
+    "docdiff", "dq", "err_exposure", "evt", "extractive", "extsort", "finance",
+    "flowshop", "freqsketch", "gazetteer", "glm", "groupseq", "hashring",
+    "hmm", "hw", "indexcomp", "inequality", "ipnet", "katz", "lossycount",
+    "markov_attr", "offeval", "packing", "posthoc", "privacy", "queueing",
+    "recsys", "rectunion", "scheduling_fold", "slo", "spc", "spectral",
+    "spellcorrect", "sq8", "stratified2x2", "surveyest", "tscompress",
+    "vopt_hist", "wand",
+))
+
+
+def _module_name(repo: Path, path: Path) -> str:
+    parts = list(path.relative_to(repo).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imported_names(tree: ast.AST, module: str, is_package: bool) -> set[str]:
+    """Dotted names a module imports, relative imports made absolute."""
+    package = module if is_package else module.rpartition(".")[0]
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base_parts = package.split(".")
+                base_parts = base_parts[: len(base_parts) - (node.level - 1)]
+                base = ".".join(base_parts + ([node.module] if node.module else []))
+            else:
+                base = node.module or ""
+            names.add(base)
+            # `from pkg import sub` may name a submodule as well as an attribute.
+            names.update(f"{base}.{alias.name}" for alias in node.names)
+    return names
+
+
+def unreached(repo: Path, package: str, root_globs) -> list[str]:
+    """Modules of ``package`` that no import chain from the root files reaches."""
+    files = {_module_name(repo, p): p for p in (repo / package).rglob("*.py")}
+    stack = [(_module_name(repo, p), p)
+             for pattern in root_globs for p in sorted(repo.glob(pattern))]
+    seen: set[str] = set()
+    while stack:
+        module, path = stack.pop()
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for name in _imported_names(tree, module, path.name == "__init__.py"):
+            parts = name.split(".")
+            # importing a.b.c runs a/__init__, a/b/__init__ and a/b/c
+            for i in range(1, len(parts) + 1):
+                prefix = ".".join(parts[:i])
+                if prefix in files and prefix not in seen:
+                    seen.add(prefix)
+                    stack.append((prefix, files[prefix]))
+    return sorted(set(files) - seen)
+
+
+def test_every_package_module_is_reached():
+    orphans = set(unreached(REPO, PACKAGE, ROOT_GLOBS))
+    new = sorted(orphans - KNOWN_ORPHANS)
+    assert not new, f"{len(new)} modules under {PACKAGE}/ that no root imports: {new}"
+    stale = sorted(KNOWN_ORPHANS - orphans)
+    assert not stale, f"reached or deleted, take off KNOWN_ORPHANS: {stale}"
+
+
+# -- negative controls: the walk on a planted package -----------------------
+
+def _plant(tmp_path: Path, files: dict[str, str]) -> Path:
+    for rel, text in files.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    return tmp_path
+
+
+def test_planted_orphan_is_reported(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/used.py": "",
+        "pkg/orphan.py": "",
+        "main.py": "import pkg.used\n",
+    })
+    assert unreached(repo, "pkg", ("main.py",)) == ["pkg.orphan"]
+
+
+def test_function_level_import_counts(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/lazy.py": "",
+        "main.py": "def run():\n    from pkg import lazy\n    return lazy\n",
+    })
+    assert unreached(repo, "pkg", ("main.py",)) == []
+
+
+def test_relative_parent_import_counts(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/x.py": "y = 1\n",
+        "pkg/sub/__init__.py": "",
+        "pkg/sub/entry.py": "from ..x import y\n",
+        "main.py": "import pkg.sub.entry\n",
+    })
+    assert unreached(repo, "pkg", ("main.py",)) == []

@@ -184,35 +184,6 @@ def test_connected_components_property(spark):
         assert got == want, f"seed {seed}"
 
 
-def test_bucketed_join_no_exchange(spark):
-    """Two tables bucketed identically on the join key must join with
-    zero Exchange operators in the physical plan (co-located join)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from bano_spark.plans.layout import write_bucketed
-
-    left = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("a"))
-    right = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 7).alias("b"))
-    write_bucketed(left, "t_buck_l", ["k"], 8, ["k"])
-    write_bucketed(right, "t_buck_r", ["k"], 8, ["k"])
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("t_buck_l").join(spark.table("t_buck_r"), "k")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            j.explain(mode="formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert j.count() == 10000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_cumsum_tie_heavy_keys_stay_fine_grained(spark):
     """VERDICT r2 #3: a 2-distinct-quality corpus must still spread
     across buckets (composite tiebreak bucketing), not collapse to 2

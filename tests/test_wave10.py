@@ -1,7 +1,7 @@
 """Wave-10 operator unit tests: HLL register layout pinned to a
 Python reimplementation of the shared 60-bit md5 hash, merge ==
 direct, Theil-Sen robustness to a contaminating outlier, exact NN
-distances incl. a forced escalation round, and change-rate math."""
+distances incl. a forced escalation round, and Clark-Evans."""
 
 import hashlib
 
@@ -123,35 +123,3 @@ def test_clark_evans_regular_grid_is_overdispersed(spark):
     assert row["mean_nn"] == pytest.approx(10.0)
     assert row["r_index"] == pytest.approx(2.0)
     assert row["z_score"] > 0
-
-
-# ---------------------------------------------------------------------------
-# change rate
-# ---------------------------------------------------------------------------
-
-def test_change_rate_counts_and_priority(spark):
-    from bano_spark.operators.crawl import change_rate
-
-    rows = [(7, f"2024-01-0{d} 00:00:00", v)
-            for d, v in [(1, 10), (2, 10), (3, 11), (4, 11), (5, 12)]]
-    caps = spark.createDataFrame(rows, "page_key long, ts string, version long") \
-        .select("page_key", F.to_timestamp("ts").alias("ts"), "version")
-    row = change_rate(caps, "2024-01-09 00:00:00").first()
-    assert row["n_captures"] == 5
-    assert row["n_changes"] == 2
-    assert row["change_rate_per_day"] == pytest.approx(0.5)  # 2 / 4 days
-    assert row["age_days"] == pytest.approx(4.0)
-    assert row["priority"] == pytest.approx(2.0)
-
-
-def test_change_rate_single_capture_rate_zero(spark):
-    from bano_spark.operators.crawl import change_rate
-
-    caps = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 3)],
-        "page_key long, ts string, version long") \
-        .select("page_key", F.to_timestamp("ts").alias("ts"), "version")
-    row = change_rate(caps, "2024-01-02 00:00:00").first()
-    assert row["n_changes"] == 0
-    assert row["change_rate_per_day"] == 0.0
-    assert row["priority"] == 0.0

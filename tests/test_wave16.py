@@ -1,8 +1,7 @@
 """Wave-16 operator unit tests: D8 direction on a hand bowl (codes,
 ties, sinks), flow accumulation on a line and a Y-confluence,
 nearest-site exactness incl. the escalation round, variogram
-closed-form on three points, anchor rollup hand case, and token
-chunk boundaries."""
+closed-form on three points, and token chunk boundaries."""
 
 import hashlib
 import math
@@ -103,21 +102,6 @@ def test_variogram_three_points(spark):
     assert out[1]["rms_dist"] == 5.0
     assert out[2]["n_pairs"] == 1 and out[2]["gamma"] == 0.0
     assert out[2]["lag_lo"] == 8.0 and out[2]["lag_hi"] == 12.0
-
-
-def test_anchor_rollup_hand_case(spark):
-    from bano_spark.operators.crawl import anchor_text_rollup
-
-    links = spark.createDataFrame(
-        [("a.com", "t.com", "click"), ("b.com", "t.com", "click"),
-         ("a.com", "t.com", "here"), ("a.com", "u.com", "link")],
-        "src_host string, dst_host string, anchor string")
-    out = [r for r in anchor_text_rollup(links, k=2).collect()
-           if r["dst_host"] == "t.com"]
-    out.sort(key=lambda r: r["rnk"])
-    assert out[0]["n_inlinks"] == 3 and out[0]["n_src_hosts"] == 2
-    assert (out[0]["anchor"], out[0]["n_anchor"]) == ("click", 2)
-    assert (out[1]["anchor"], out[1]["n_anchor"]) == ("here", 1)
 
 
 def test_token_chunks_boundaries(spark):

@@ -1,6 +1,6 @@
 """Wave-17 operator unit tests: viewshed occlusion hand cases,
-deviational-ellipse closed forms, isochrone banding, KWIC edge
-windows, and water-filling allocations incl. the slack case."""
+deviational-ellipse closed forms, isochrone banding, and KWIC edge
+windows."""
 
 import math
 
@@ -70,27 +70,6 @@ def test_kwic_edge_windows(spark):
     assert out[7]["left_ctx"] == "the end" and out[7]["right_ctx"] == ""
 
 
-def test_waterfill_threshold_and_slack(spark):
-    from bano_spark.operators.crawl import waterfill_budget
-
-    dm = spark.createDataFrame([("a", 10), ("b", 20), ("c", 40)],
-                               "host string, demand long")
-    out = {r["host"]: r["alloc"] for r in
-           waterfill_budget(dm, 50.0).collect()}
-    assert out == {"a": 10.0, "b": 20.0, "c": 20.0}
-    assert abs(sum(out.values()) - 50.0) < 1e-9
-
-    # budget exceeds total demand: everyone gets their demand
-    slack = {r["host"]: r["alloc"] for r in
-             waterfill_budget(dm, 500.0).collect()}
-    assert slack == {"a": 10.0, "b": 20.0, "c": 40.0}
-
-    # theta below the smallest demand: equal split
-    tight = {r["host"]: r["alloc"] for r in
-             waterfill_budget(dm, 9.0).collect()}
-    assert tight == {"a": 3.0, "b": 3.0, "c": 3.0}
-
-
 def test_isochrone_bands_path(spark):
     from bano_spark.operators.graph import sssp_weighted
     from pyspark.sql import functions as F
@@ -105,21 +84,3 @@ def test_isochrone_bands_path(spark):
               .agg(F.count(F.lit(1)).alias("n")).collect())}
     # dists 0,1,2,5 -> bands 0:{0,1}, 1:{2}, 2:{5}
     assert bands == {0: 2, 1: 1, 2: 1}
-
-
-def test_waterfill_variants_agree(spark):
-    """crawl.waterfill_budget (distinct-level theta) and
-    selection.waterfill_allocation (per-host prefix sum) are two
-    scale shapes of the SAME allocation — they must agree exactly."""
-    from bano_spark.operators.crawl import waterfill_budget
-    from bano_spark.operators.selection import waterfill_allocation
-
-    rows = [(f"h{i}", 1 + (i * 7) % 23) for i in range(40)]
-    dm = spark.createDataFrame(rows, "host string, demand long")
-    for budget in (37, 150, 10_000):
-        a = {r["host"]: r["alloc"] for r in
-             waterfill_budget(dm, float(budget)).collect()}
-        b = {r["host"]: round(r["alloc"], 6) for r in
-             waterfill_allocation(
-                 dm.withColumnRenamed("demand", "n"), budget).collect()}
-        assert a == b, budget

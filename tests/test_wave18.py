@@ -1,7 +1,7 @@
 """Wave-18 operator unit tests: within-distance boundary semantics,
 cost-distance closed forms (incl. the diagonal discount and the
-cheap-detour case), region labels with isolated cells, stitching
-seams, and mixed-language segment rollups."""
+cheap-detour case), region labels with isolated cells, and stitching
+seams."""
 
 import math
 
@@ -88,17 +88,3 @@ def test_stitch_overlaps_planted_seam(spark):
     out = [(r["id_a"], r["id_b"], r["seam_gram"])
            for r in stitch_overlaps(docs, 2).collect()]
     assert out == [(1, 2, "epsilon zeta")]
-
-
-def test_langid_segments_mixed(spark):
-    from bano_spark.operators.langid import langid_segments, profiles_df
-    from tests.test_wave14 import _LID_SENTS
-
-    docs = spark.createDataFrame(
-        [(1, _LID_SENTS["en"] + " " + _LID_SENTS["fr"]),
-         (2, _LID_SENTS["de"])],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r for r in
-           langid_segments(docs, profiles_df(spark), 10).collect()}
-    assert out[1]["mixed"] and out[1]["langs"] == "en,fr"
-    assert not out[2]["mixed"] and out[2]["langs"] == "de"

@@ -1,7 +1,7 @@
 """Wave-20 operator unit tests: AMS estimator algebra on a tiny
 known frequency vector, Holt closed forms (linear series tracked
-exactly), Apriori pruning behavior, MASE on a perfectly seasonal
-series, and URL template grouping."""
+exactly), MASE on a perfectly seasonal series, and URL template
+grouping."""
 
 
 def test_ams_f2_exact_field(spark):
@@ -43,23 +43,6 @@ def test_holt_drops_singletons(spark):
 
     df = spark.createDataFrame([(1, 1, 5.0)], "k long, t int, v double")
     assert holt_last(df, "k", ["t"], "v").count() == 0
-
-
-def test_frequent_pairs_prunes_infrequent_items(spark):
-    from bano_spark.operators.itemsets import frequent_pairs
-
-    # item c appears once -> pruned at L1; (a, b) co-occur twice
-    tx = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (3, "a")],
-        "tx long, it string")
-    out = frequent_pairs(tx, "tx", "it", 2).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["item_a"], r["item_b"], r["pair_count"]) == ("a", "b", 2)
-    # supports: a in 3 tx, b in 2 tx, pair in 2, n_tx = 3
-    assert r["conf_a_to_b"] == round(2 / 3, 6)
-    assert r["conf_b_to_a"] == 1.0
-    assert r["lift"] == round(3 * 2 / (3 * 2), 6)
 
 
 def test_seasonal_mase_perfect_seasonality(spark):

@@ -1,22 +1,5 @@
-"""Wave-27 operator unit tests: STR leaf shapes, correlogram decay,
-two-hop counts, tradeoff-curve accumulation."""
-
-
-def test_str_pack_uniform_grid(spark):
-    from bano_spark.operators.spatial_partition import str_pack
-
-    # 16 points on a 4x4 lattice, nx = ny = 2 -> four leaves of 4
-    rows = [(4 * x + y, float(x), float(y))
-            for x in range(4) for y in range(4)]
-    pts = spark.createDataFrame(rows, "pid long, x double, y double")
-    out = {(r["slab"], r["leaf"]): r for r in
-           str_pack(pts, 2, 2).collect()}
-    assert len(out) == 4
-    assert all(r["n_points"] == 4 for r in out.values())
-    # slab 0 holds x in {0,1}, slab 1 x in {2,3}
-    assert out[(0, 0)]["xmax"] <= 1.0 and out[(1, 1)]["xmin"] >= 2.0
-    # leaves split y
-    assert out[(0, 0)]["ymax"] <= 1.0 and out[(0, 1)]["ymin"] >= 2.0
+"""Wave-27 operator unit tests: correlogram decay, two-hop counts,
+tradeoff-curve accumulation."""
 
 
 def test_correlogram_decays_on_hot_block(spark):

@@ -1,8 +1,7 @@
-"""Hand-computed checks for the wave-57 operators: isotonic
-calibration (minimax PAV) and Bradley-Terry strengths."""
+"""Hand-computed checks for the wave-57 operator: isotonic
+calibration (minimax PAV)."""
 
 from bano_spark.operators.quantiles import isotonic_calibration
-from bano_spark.operators.ranking import bradley_terry
 
 
 def test_isotonic_pools_violators(spark):
@@ -26,23 +25,3 @@ def test_isotonic_monotone_passthrough(spark):
     out = {r["bin"]: r["isotonic_rate"] for r in isotonic_calibration(
         df, "p", "label", n_bins=10).collect()}
     assert out[0] == 0.0 and out[1] == 0.5 and out[2] == 1.0
-
-
-def test_bradley_terry_dominant_item(spark):
-    # a beats b 9:1; b beats c 9:1 -> strengths a > b > c
-    rows = ([("a", "b")] * 9 + [("b", "a")]
-            + [("b", "c")] * 9 + [("c", "b")])
-    df = spark.createDataFrame(rows, "winner string, loser string")
-    out = {r["item"]: r for r in bradley_terry(df, iters=20).collect()}
-    assert out["a"]["strength"] > out["b"]["strength"] > out["c"]["strength"]
-    assert out["a"]["wins"] == 9 and out["c"]["wins"] == 1
-    total = sum(r["strength"] for r in out.values())
-    assert abs(total - 1.0) < 1e-5
-
-
-def test_bradley_terry_symmetric(spark):
-    rows = [("a", "b")] * 5 + [("b", "a")] * 5
-    df = spark.createDataFrame(rows, "winner string, loser string")
-    out = {r["item"]: r["strength"] for r in
-           bradley_terry(df, iters=10).collect()}
-    assert out["a"] == out["b"] == 0.5

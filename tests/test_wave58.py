@@ -1,11 +1,10 @@
-"""Hand-computed checks for the wave-58 operators: PSI drift, Markov
-next-event accuracy, rendezvous sharding."""
+"""Hand-computed checks for the wave-58 operators: PSI drift and Markov
+next-event accuracy."""
 
 import math
 
 from bano_spark.operators.eventflow import markov_next_accuracy
 from bano_spark.operators.quantiles import population_stability_index
-from bano_spark.operators.spatial_partition import rendezvous_assign
 
 
 def test_psi_identical_distributions_zero(spark):
@@ -38,17 +37,3 @@ def test_markov_deterministic_chain(spark):
     assert out["a"]["predicted_next"] == "b"
     assert out["a"]["accuracy"] == 1.0
     assert out["b"]["accuracy"] == 1.0
-
-
-def test_rendezvous_minimal_disruption(spark):
-    ids = spark.range(500).withColumnRenamed("id", "doc_id")
-    a8 = {r["doc_id"]: r["shard"]
-          for r in rendezvous_assign(ids, "doc_id", 8).collect()}
-    a7 = {r["doc_id"]: r["shard"]
-          for r in rendezvous_assign(ids, "doc_id", 7).collect()}
-    moved = [i for i in a8 if a7[i] != a8[i]]
-    # only items that lived on the dropped shard 7 move
-    assert all(a8[i] == 7 for i in moved)
-    assert all(0 <= s <= 6 for s in a7.values())
-    # every shard gets something (balance sanity)
-    assert len(set(a8.values())) == 8

@@ -1,79 +1,8 @@
-"""Wave-9 operator unit tests: the Hilbert curve pinned to the
-canonical bit-twiddling formulation, water-filling budget allocation
-closed-form checks, link reciprocity, crawl-trap depth features, and
-PageRank dangling-mass conservation."""
+"""Wave-9 operator unit tests: water-filling budget allocation
+closed-form checks and PageRank dangling-mass conservation."""
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------------------
-# Hilbert curve: equality with the canonical xy2d on the full order-4
-# grid, bijectivity, and the locality property (consecutive d are grid
-# neighbors) that justifies range-partitioning by hilbert_d.
-# ---------------------------------------------------------------------------
-
-def _xy2d(order: int, x: int, y: int) -> int:
-    """Canonical bit-twiddling Hilbert xy->d (Hamilton / Wikipedia)."""
-    rx, ry, d = 0, 0, 0
-    s = 1 << (order - 1)
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
-def test_hilbert_matches_canonical_order4_full_grid(spark):
-    from bano_spark.geo.hilbert import hilbert_index
-
-    n = 16  # 2^4
-    pts = spark.createDataFrame(
-        [(x * n + y, x, y) for x in range(n) for y in range(n)],
-        "pid long, hx long, hy long")
-    got = {r["pid"]: r["hilbert_d"]
-           for r in hilbert_index(pts, 4, "hx", "hy").collect()}
-    for x in range(n):
-        for y in range(n):
-            assert got[x * n + y] == _xy2d(4, x, y), (x, y)
-
-
-def test_hilbert_bijective_and_neighbor_locality(spark):
-    from bano_spark.geo.hilbert import hilbert_index
-
-    n = 8  # 2^3
-    pts = spark.createDataFrame(
-        [(x * n + y, x, y) for x in range(n) for y in range(n)],
-        "pid long, hx long, hy long")
-    rows = hilbert_index(pts, 3, "hx", "hy").collect()
-    by_d = {r["hilbert_d"]: (r["hx"], r["hy"]) for r in rows}
-    assert sorted(by_d) == list(range(n * n))  # bijection onto [0, 4^order)
-    for d in range(n * n - 1):
-        (x0, y0), (x1, y1) = by_d[d], by_d[d + 1]
-        assert abs(x0 - x1) + abs(y0 - y1) == 1  # always grid neighbors
-
-
-def test_hilbert_cte_sql_spark_dialect_matches_column_path(spark):
-    from bano_spark.geo.hilbert import hilbert_cte_sql, hilbert_index
-
-    n = 16
-    pts = spark.createDataFrame(
-        [(x * n + y, x, y) for x in range(n) for y in range(n)],
-        "pid long, hx long, hy long")
-    pts.createOrReplaceTempView("hilbert_pts")
-    sql = hilbert_cte_sql("SELECT pid, hx, hy FROM hilbert_pts", 4,
-                          "spark", id_cols="pid")
-    via_sql = {r["pid"]: r["hilbert_d"] for r in spark.sql(sql).collect()}
-    via_col = {r["pid"]: r["hilbert_d"]
-               for r in hilbert_index(pts, 4, "hx", "hy").collect()}
-    assert via_sql == via_col
 
 
 # ---------------------------------------------------------------------------
@@ -115,38 +44,6 @@ def test_waterfill_exact_knee(spark):
     assert out["a"] == pytest.approx(1.0)
     assert out["b"] == pytest.approx(2.0)
     assert out["c"] == pytest.approx(2.0)
-
-
-# ---------------------------------------------------------------------------
-# link reciprocity and crawl-trap depth
-# ---------------------------------------------------------------------------
-
-def test_link_reciprocity_counts_distinct_directed_edges(spark):
-    from bano_spark.operators.crawl import link_reciprocity
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("a", "b"),   # reciprocal pair, dup ignored
-         ("a", "c"),                            # one-way
-         ("c", "c")],                           # self-loop excluded
-        "src_host string, dst_host string")
-    row = link_reciprocity(edges).first()
-    assert row["n_edges"] == 3
-    assert row["n_reciprocal"] == 2
-    assert row["reciprocity"] == pytest.approx(2.0 / 3.0)
-
-
-def test_path_depth_stats(spark):
-    from bano_spark.operators.crawl import path_depth_stats
-
-    urls = spark.createDataFrame(
-        [("h", "/a"), ("h", "/a/b/c"), ("h", "/a")],
-        "host string, path string")
-    row = path_depth_stats(urls).first()
-    assert row["n_urls"] == 3
-    assert row["max_depth"] == 3
-    assert row["mean_depth"] == pytest.approx((1 + 3 + 1) / 3.0)
-    assert row["n_paths"] == 2
-    assert row["distinct_ratio"] == pytest.approx(2.0 / 3.0)
 
 
 # ---------------------------------------------------------------------------

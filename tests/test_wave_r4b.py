@@ -1,8 +1,7 @@
 """Round-4 waves 28-34 kernel tests: Jaro-Winkler pinned to known
 literature values, Ritter circle cover + near-optimality, Croston
-pinned to a hand fold, token-bucket admission against a Python
-replay, Kaplan-Meier against the textbook example, and IPF margin
-convergence."""
+pinned to a hand fold, and Kaplan-Meier against the textbook
+example."""
 
 import math
 
@@ -69,26 +68,6 @@ def test_croston_hand_fold(spark):
     assert row["rate_forecast"] == pytest.approx(z / p, abs=1e-6)
 
 
-def test_token_bucket_python_replay(spark):
-    from bano_spark.operators.crawl import token_bucket_admission
-
-    ts = [0.0, 0.0, 0.0, 0.0, 4.0, 8.0, 8.0, 100.0]
-    df = spark.createDataFrame([("h", t) for t in ts],
-                               "host string, t double")
-    row = token_bucket_admission(df, 3.0, 0.25).first()
-    tok, last, adm = 3.0 - 1, ts[0], 1
-    for t in ts[1:]:
-        tok = min(3.0, tok + (t - last) * 0.25)
-        last = t
-        if tok >= 1:
-            tok -= 1
-            adm += 1
-    assert row["n_requests"] == len(ts)
-    assert row["n_admitted"] == adm
-    assert row["n_deferred"] == len(ts) - adm
-    assert row["final_tokens"] == pytest.approx(tok, abs=1e-6)
-
-
 def test_kaplan_meier_textbook(spark):
     from bano_spark.operators.temporal import kaplan_meier
 
@@ -105,27 +84,3 @@ def test_kaplan_meier_textbook(spark):
                                                   abs=1e-6)
     assert rows[6.0]["n_risk"] == 1
     assert rows[6.0]["survival"] == pytest.approx(0.0, abs=1e-6)
-
-
-def test_ipf_hits_margins(spark):
-    from bano_spark.operators.spatial_interaction import ipf_balance
-
-    seed = spark.createDataFrame(
-        [(i, j, float(1 + (i * 3 + j) % 4))
-         for i in range(4) for j in range(3)],
-        "i int, j int, t double")
-    rows = spark.createDataFrame([(i, 30.0) for i in range(4)],
-                                 "i int, o_target double")
-    cols = spark.createDataFrame([(j, 40.0) for j in range(3)],
-                                 "j int, d_target double")
-    out = ipf_balance(seed, rows, cols, iters=8).collect()
-    col_sums = {}
-    row_sums = {}
-    for r in out:
-        row_sums[r["i"]] = row_sums.get(r["i"], 0.0) + r["t_balanced"]
-        col_sums[r["j"]] = col_sums.get(r["j"], 0.0) + r["t_balanced"]
-    # finishing on the column step: columns exact, rows near-converged
-    for s in col_sums.values():
-        assert s == pytest.approx(40.0, abs=1e-4)
-    for s in row_sums.values():
-        assert s == pytest.approx(30.0, rel=2e-3)
