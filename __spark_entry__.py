@@ -583,7 +583,7 @@ def q_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fantoir_line_sql(cast: str) -> str:
     """Raw fixed-width line built from orders (positions per
-    load_fantoir.sql; mirrors sources.fantoir.fantoir_raw_line_expr)."""
+    load_fantoir.sql)."""
     insee = "CASE " + " ".join(
         f"WHEN o_custkey % 10 = {i} THEN '{synth.COMMUNES[i][0]}'" for i in range(10)
     ) + " END"

@@ -11,16 +11,6 @@ def dept_from_insee(insee: Column) -> Column:
         F.substring(insee, 1, 2))
 
 
-def is_valid_fantoir(fantoir: Column, insee: Column) -> Column:
-    """len==10 and prefix==insee (helpers.py:179-180)."""
-    return (F.length(fantoir) == 10) & (F.substring(fantoir, 1, 5) == insee)
-
-
-def is_valid_housenumber(num: Column) -> Column:
-    """non-empty and <= 11 chars (helpers.py:89-92)."""
-    return num.isNotNull() & (num != "") & (F.length(num) <= 11)
-
-
 def pseudo_fantoir(insee: Column, i: Column) -> Column:
     """Synthetic FANTOIR code for BAN-only street names:
     f'{insee}b{str(i).ljust(4, "b")}' (sources/ban2fantoir.py:18-19)."""

@@ -178,19 +178,6 @@ def hull_longest_line_m(lons: np.ndarray, lats: np.ndarray) -> float:
     return float(d.max()) if len(d) else 0.0
 
 
-def closest_point_on_segments(px, py, x1, y1, x2, y2):
-    """ST_ClosestPoint for point-vs-segment (the reference projects the
-    commune centroid onto each street way,
-    point_par_rue_insee_nocache.sql:41). Vectorized: clamp the scalar
-    projection t to [0,1] per segment. Pure arithmetic — the SQL oracle
-    reproduces it exactly."""
-    dx, dy = x2 - x1, y2 - y1
-    d2 = dx * dx + dy * dy
-    t = np.where(d2 > 0, ((px - x1) * dx + (py - y1) * dy) / np.where(d2 > 0, d2, 1.0), 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    return x1 + t * dx, y1 + t * dy
-
-
 def _find(parent: np.ndarray, i: int) -> int:
     while parent[i] != i:
         parent[i] = parent[parent[i]]

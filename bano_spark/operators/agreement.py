@@ -1,7 +1,7 @@
 """Clustering-agreement metrics from the contingency table — mutual
 information, normalized MI, homogeneity / completeness / V-measure
 (Rosenberg & Hirschberg EMNLP'07; Vinh et al. JMLR'10 NMI) — the
-information-theoretic complement of adjusted_rand_index (wave 44).
+information-theoretic complement of the adjusted Rand index.
 
 Everything reduces to integer contingency counts n_ij and marginals:
 

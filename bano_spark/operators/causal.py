@@ -1,7 +1,7 @@
 """Instrumental-variable estimation with a binary instrument — the
 Wald estimator, its first-stage strength F, and the OLS comparison
 (Angrist & Pischke's canonical just-identified IV; completes the
-causal family next to did_estimator / cuped_adjustment).
+causal family next to difference-in-differences and CUPED).
 
     beta_IV  = (ybar_1 - ybar_0) / (xbar_1 - xbar_0)
     F_first  = (xbar_1 - xbar_0)^2 / (s2_pooled * (1/n1 + 1/n0))

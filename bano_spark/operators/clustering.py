@@ -205,181 +205,6 @@ def st_dbscan(points: DataFrame, eps_s: float, eps_t: float,
                     F.col("_cl").alias("cluster")))
 
 
-def label_centroids(embs, *, label_col: str = "label",
-                    vec_col: str = "embedding", dim: int = 64):
-    """Per-label centroid vectors as (label, dim, mean) rows: one
-    posexplode + groupBy(label, dim) — the distributed centroid pass
-    every cluster-quality metric below shares."""
-    from pyspark.sql import functions as F
-
-    ex = embs.select(F.col(label_col).alias("_l"),
-                     F.posexplode(F.col(vec_col)).alias("_d", "_v"))
-    return (ex.groupBy("_l", "_d")
-            .agg(F.avg(F.col("_v").cast("double")).alias("_m")))
-
-
-def label_centroid_cosine(embs, *, label_col: str = "label",
-                          vec_col: str = "embedding", dim: int = 64,
-                          round_to: int = 6):
-    """Pairwise cosine similarity between per-label embedding
-    centroids — the cluster-separation quick look (labels whose
-    centroids cosine near 1 are candidates for merging) before
-    anything quadratic in points runs.
-
-    Scale shape: ONE centroid pass (posexplode + groupBy — O(n*dim)
-    with map-side partials), then all pair arithmetic on the O(k*dim)
-    centroid table: a dim equi-join + groupBy(label pair). Returns
-    (label_a, label_b, cosine)."""
-    from pyspark.sql import functions as F
-
-    c = label_centroids(embs, label_col=label_col, vec_col=vec_col,
-                        dim=dim)
-    a = c.select(F.col("_l").alias("la"), "_d", F.col("_m").alias("ma"))
-    b = c.select(F.col("_l").alias("lb"), "_d", F.col("_m").alias("mb"))
-    pairs = (a.join(b, "_d")
-             .filter(F.col("la") < F.col("lb"))
-             .groupBy("la", "lb")
-             .agg(F.sum(F.col("ma") * F.col("mb")).alias("_dot"),
-                  F.sum(F.col("ma") * F.col("ma")).alias("_na"),
-                  F.sum(F.col("mb") * F.col("mb")).alias("_nb")))
-    return pairs.select(
-        F.col("la").alias("label_a"), F.col("lb").alias("label_b"),
-        F.round(F.col("_dot")
-                / (F.sqrt("_na") * F.sqrt("_nb")), round_to)
-        .alias("cosine"))
-
-
-def davies_bouldin(embs, *, label_col: str = "label",
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   dim: int = 64, round_to: int = 6):
-    """Davies-Bouldin index over the label clustering (Davies &
-    Bouldin 1979): per label the mean Euclidean scatter to its
-    centroid, DB = mean over labels of max_{j != i}
-    (s_i + s_j) / d_ij — lower is better; the centroid-only
-    cluster-quality score that avoids silhouette's O(n^2) pairs.
-
-    Scale shape: one centroid pass, one scatter pass (each point
-    joins its label's centroid rows on the dim key — O(n*dim)), then
-    all pair logic on the O(k^2) label table. Returns one row
-    (n_labels, db_index)."""
-    from pyspark.sql import functions as F
-
-    c = label_centroids(embs, label_col=label_col, vec_col=vec_col,
-                        dim=dim)
-    ex = embs.select(F.col(label_col).alias("_l"),
-                     F.col(id_col).alias("_rid"),
-                     F.posexplode(F.col(vec_col)).alias("_d", "_v"))
-    dev = (ex.join(c, ["_l", "_d"])
-           .groupBy("_l", "_rid")
-           .agg(F.sum((F.col("_v").cast("double") - F.col("_m"))
-                      * (F.col("_v").cast("double") - F.col("_m")))
-                .alias("_d2")))
-    scat = dev.groupBy("_l").agg(F.avg(F.sqrt("_d2")).alias("_s"))
-    cd = (c.select(F.col("_l").alias("li"), "_d",
-                   F.col("_m").alias("mi"))
-          .join(c.select(F.col("_l").alias("lj"), "_d",
-                         F.col("_m").alias("mj")), "_d")
-          .filter(F.col("li") != F.col("lj"))
-          .groupBy("li", "lj")
-          .agg(F.sqrt(F.sum((F.col("mi") - F.col("mj"))
-                            * (F.col("mi") - F.col("mj"))))
-               .alias("_dij")))
-    r = (cd.join(scat.select(F.col("_l").alias("li"),
-                             F.col("_s").alias("si")), "li")
-         .join(scat.select(F.col("_l").alias("lj"),
-                           F.col("_s").alias("sj")), "lj")
-         .groupBy("li")
-         .agg(F.max((F.col("si") + F.col("sj")) / F.col("_dij"))
-              .alias("_r")))
-    return r.agg(F.count(F.lit(1)).cast("bigint").alias("n_labels"),
-                 F.round(F.avg("_r"), round_to).alias("db_index"))
-
-
-def silhouette_sampled(embs, sample_pred, *, label_col: str = "label",
-                       vec_col: str = "embedding",
-                       id_col: str = "vec_id", dim: int = 64,
-                       round_to: int = 6):
-    """Mean silhouette per label over a caller-bounded SAMPLE of
-    probe points (Rousseeuw 1987): a(i) = mean distance to same-label
-    points, b(i) = min over other labels of the mean distance,
-    s = (b - a) / max(a, b) — the per-point cluster-fit score DB/ARI
-    summarize away. The probe set must be bounded by ``sample_pred``
-    (disclosed sampling — the full silhouette is O(n^2) by
-    definition; sampling is the standard scale practice).
-
-    Scale shape: probes x corpus is the only join (bounded by the
-    sample size, like the JL audit); distances fold per pair in
-    array-index order; two groupBys finish. Returns
-    (label, n_probes, mean_silhouette)."""
-    from pyspark.sql import functions as F
-
-    probes = embs.filter(sample_pred).select(
-        F.col(id_col).alias("_pid"), F.col(label_col).alias("_pl"),
-        F.col(vec_col).alias("_pv"))
-    corpus = embs.select(F.col(id_col).alias("_cid"),
-                         F.col(label_col).alias("_cl"),
-                         F.col(vec_col).alias("_cv"))
-    d = F.expr(
-        f"sqrt(aggregate(sequence(1, {int(dim)}), CAST(0 AS DOUBLE), "
-        f"(acc, i) -> acc + (CAST(_pv[i - 1] AS DOUBLE) "
-        f"- CAST(_cv[i - 1] AS DOUBLE)) "
-        f"* (CAST(_pv[i - 1] AS DOUBLE) - CAST(_cv[i - 1] AS DOUBLE))))")
-    pairs = (probes.join(corpus, F.col("_pid") != F.col("_cid"))
-             .select("_pid", "_pl", "_cl", d.alias("_d")))
-    per = (pairs.groupBy("_pid", "_pl", "_cl")
-           .agg(F.avg("_d").alias("_md")))
-    a = (per.filter(F.col("_cl") == F.col("_pl"))
-         .select("_pid", "_pl", F.col("_md").alias("_a")))
-    b = (per.filter(F.col("_cl") != F.col("_pl"))
-         .groupBy("_pid").agg(F.min("_md").alias("_b")))
-    s = (a.join(b, "_pid")
-         .select("_pl",
-                 ((F.col("_b") - F.col("_a"))
-                  / F.greatest("_a", "_b")).alias("_s")))
-    return (s.groupBy(F.col("_pl").alias(label_col))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_probes"),
-                 F.round(F.avg("_s"), round_to)
-                 .alias("mean_silhouette")))
-
-
-def adjusted_rand_index(assigned, *, a_col: str = "a", b_col: str = "b",
-                        round_to: int = 6):
-    """Adjusted Rand Index between two labelings (Hubert & Arabie
-    1985): pair-counting agreement corrected for chance from the
-    contingency table — THE external clustering-agreement metric
-    (did the cheap hash partition recover the reference labels).
-
-    Scale shape: one groupBy(a, b) contingency pass + two marginal
-    rollups OF THE CONTINGENCY TABLE; all C(n,2) arithmetic on
-    O(cells) rows. Returns one row (n, n_cells, ari)."""
-    from pyspark.sql import functions as F
-
-    ct = assigned.groupBy(F.col(a_col).alias("_a"),
-                          F.col(b_col).alias("_b")).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"))
-
-    def c2(col):
-        return col * (col - 1) / 2
-
-    idx = ct.agg(F.sum(c2(F.col("_n"))).alias("_idx"),
-                 F.sum("_n").alias("_t"),
-                 F.count(F.lit(1)).cast("bigint").alias("_cells"))
-    ra = (ct.groupBy("_a").agg(F.sum("_n").alias("_m"))
-          .agg(F.sum(c2(F.col("_m"))).alias("_ra")))
-    rb = (ct.groupBy("_b").agg(F.sum("_n").alias("_m"))
-          .agg(F.sum(c2(F.col("_m"))).alias("_rb")))
-    j = idx.crossJoin(F.broadcast(ra)).crossJoin(F.broadcast(rb))
-    total2 = c2(F.col("_t"))
-    exp = F.col("_ra") * F.col("_rb") / total2
-    maxi = (F.col("_ra") + F.col("_rb")) / 2
-    return j.select(
-        F.col("_t").cast("bigint").alias("n"),
-        F.col("_cells").alias("n_cells"),
-        F.round(F.when(maxi != exp,
-                       (F.col("_idx") - exp) / (maxi - exp)),
-                round_to).alias("ari"))
-
-
 def gmm_em_1d(df: DataFrame, value_col: str, *, iters: int = 3,
               resp_bits: int = 14, round_to: int = 6) -> DataFrame:
     """Two-component 1-D Gaussian mixture fitted by EM with a FIXED

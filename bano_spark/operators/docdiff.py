@@ -8,7 +8,7 @@ Reduction (Hunt & Szymanski, CACM 1977): list every match pair
 longest STRICTLY-INCREASING subsequence of the ib values is exactly
 the LCS length (ib-descending within one ia stops two matches of the
 same A token from chaining). The LIS itself runs as the patience-fold
-session kernel (same pile-tops invariant as temporal.lis_length —
+session kernel (the pile-tops invariant of patience sorting —
 O(r log r) work on r = match count, the Hunt–Szymanski cost model).
 
 Scale shape: one equi-join on (doc, token) builds the match list (the
@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["lcs_token_diff"]
 
-# Patience fold (pile tops; strictly increasing) — same algebra as
-# temporal.lis_length, inlined for the (ia ASC, ib DESC) ordering.
+# Patience fold (pile tops; strictly increasing) for the
+# (ia ASC, ib DESC) ordering.
 _PATIENCE_FOLD = """
     aggregate(
       vs,

@@ -202,119 +202,6 @@ def sequence_patterns(events: DataFrame, gap_s: int, min_support: int, *,
                 F.col("support") / F.lit(float(n_users)), round_to)))
 
 
-def markov_entropy_rate(events: DataFrame, *, key_col: str = "user_id",
-                        type_col: str = "event_type",
-                        order_cols: list = None,
-                        round_to: int = 6) -> DataFrame:
-    """Per-key entropy rate of the first-order Markov chain over event
-    types: H = -sum_s p(s) sum_t p(t|s) ln p(t|s) with p estimated
-    from the key's observed transitions — the predictability score
-    (low = habitual sequences) on top of the raw transition counts
-    event_transitions reports.
-
-    Scale shape: one per-key ROW lag window, one
-    groupBy(key, from, to), one groupBy(key, from), one final
-    groupBy(key) — all partitioned by the key, integer counts feeding
-    log ratios. Returns (key, n_transitions, entropy_rate)."""
-    order_cols = order_cols or ["ts", "event_id"]
-    w = Window.partitionBy(key_col).orderBy(*order_cols)
-    tr = (events.select(key_col, F.col(type_col).alias("_to"),
-                        F.lag(type_col).over(w).alias("_from"))
-          .filter(F.col("_from").isNotNull()))
-    nst = tr.groupBy(key_col, "_from", "_to").agg(
-        F.count(F.lit(1)).cast("double").alias("_nst"))
-    ns = nst.groupBy(key_col, "_from").agg(
-        F.sum("_nst").alias("_ns"))
-    tot = ns.groupBy(key_col).agg(F.sum("_ns").alias("_nt"))
-    j = nst.join(ns, [key_col, "_from"]).join(tot, key_col)
-    term = ((F.col("_ns") / F.col("_nt"))
-            * (F.col("_nst") / F.col("_ns"))
-            * F.log(F.col("_nst") / F.col("_ns")))
-    return (j.groupBy(key_col)
-            .agg(F.first("_nt").cast("bigint").alias("n_transitions"),
-                 F.round(-F.sum(term), round_to).alias("entropy_rate")))
-
-
-def mutual_information(df: DataFrame, x_col: str, y_col: str, *,
-                       round_to: int = 6) -> DataFrame:
-    """Mutual information (nats) between two categorical columns:
-    I(X;Y) = sum_xy p(xy) ln(p(xy) / (p(x) p(y))) — the dependence
-    screen (feature/leakage detection) run before any categorical
-    column feeds a model; 0 iff independent.
-
-    Scale shape: one groupBy(x, y) + two marginal rollups OF THE
-    JOINT TABLE (already aggregated — never a second data scan),
-    broadcast back; integer counts feed the log ratios. Returns one
-    row (n_rows, n_x, n_y, mi_nats)."""
-    joint = df.groupBy(F.col(x_col).alias("_x"),
-                       F.col(y_col).alias("_y")).agg(
-        F.count(F.lit(1)).cast("double").alias("_nxy"))
-    px = joint.groupBy("_x").agg(F.sum("_nxy").alias("_nx"))
-    py = joint.groupBy("_y").agg(F.sum("_nxy").alias("_ny"))
-    tot = joint.agg(F.sum("_nxy").alias("_n"),
-                    F.count(F.lit(1)).alias("_cells"))
-    j = (joint.join(F.broadcast(px), "_x")
-         .join(F.broadcast(py), "_y")
-         .crossJoin(F.broadcast(tot)))
-    term = ((F.col("_nxy") / F.col("_n"))
-            * F.log((F.col("_nxy") * F.col("_n"))
-                    / (F.col("_nx") * F.col("_ny"))))
-    return (j.agg(
-        F.first("_n").cast("bigint").alias("n_rows"),
-        F.countDistinct("_x").cast("bigint").alias("n_x"),
-        F.countDistinct("_y").cast("bigint").alias("n_y"),
-        F.round(F.sum(term), round_to).alias("mi_nats")))
-
-
-def rfm_segmentation(events: DataFrame, asof_epoch: int, *,
-                     user_col: str = "user_id", ts_col: str = "ts",
-                     value_col: str = "value",
-                     round_to: int = 6) -> DataFrame:
-    """RFM segmentation (Hughes 1994, the retention-marketing
-    standard): per user recency (days since last event at the given
-    as-of epoch), frequency (events) and monetary (summed value),
-    each scored 1-3 by EXACT global tercile thresholds (engine
-    quantile selection — no global sort), concatenated to the
-    champion/at-risk segment code.
-
-    Scale shape: one groupBy(user) for R/F/M; thresholds are six
-    O(1) driver literals from the exact-quantile scans; scoring is
-    pure arithmetic. Returns (user, recency_days, frequency,
-    monetary, r_score, f_score, m_score, rfm_code); higher = better
-    on every axis (recency inverted)."""
-    from .quantiles import exact_quantiles
-
-    rfm = events.groupBy(F.col(user_col).alias("user_id")).agg(
-        F.floor((F.lit(int(asof_epoch))
-                 - F.max(F.unix_timestamp(F.col(ts_col)))) / 86400)
-        .cast("bigint").alias("recency_days"),
-        F.count(F.lit(1)).cast("bigint").alias("frequency"),
-        F.round(F.sum(F.col(value_col).cast("double")), round_to)
-        .alias("monetary"))
-    rfm = rfm.localCheckpoint(eager=True)
-    qs = [1 / 3, 2 / 3]
-    rq = exact_quantiles(rfm, "recency_days", qs)
-    fq = exact_quantiles(rfm, "frequency", qs)
-    mq = exact_quantiles(rfm, "monetary", qs)
-
-    def score(col, bounds, invert):
-        c = F.col(col).cast("double")
-        s = F.lit(1)
-        for b in bounds:
-            s = s + F.when(c > F.lit(float(b)), 1).otherwise(0)
-        return (F.lit(4) - s) if invert else s
-
-    return rfm.select(
-        "user_id", "recency_days", "frequency", "monetary",
-        score("recency_days", rq, True).cast("int").alias("r_score"),
-        score("frequency", fq, False).cast("int").alias("f_score"),
-        score("monetary", mq, False).cast("int").alias("m_score")) \
-        .withColumn("rfm_code",
-                    F.concat(F.col("r_score").cast("string"),
-                             F.col("f_score").cast("string"),
-                             F.col("m_score").cast("string")))
-
-
 def markov_next_accuracy(events, *, user_col: str = "user_id",
                          order_cols: list | None = None,
                          state_col: str = "event_type",

@@ -1,7 +1,6 @@
 """Cash-flow analytics — per-project IRR via Newton-Raphson on the
 NPV polynomial, and the NPV rate-sensitivity table — the
-capital-budgeting layer next to the engine's risk stack
-(var_expected_shortfall, gpd_return_levels).
+capital-budgeting layer next to the engine's risk stack.
 
 Both are sequence folds under the engine-wide contract (one groupBy
 on the project key, struct accumulator over the time-sorted cashflow

@@ -585,70 +585,3 @@ def tissot_mercator_stats(pts: DataFrame, *, group_col: str = "user_id",
                  .alias("mean_areal"))
             .withColumnRenamed("_g", group_col)
             .orderBy(group_col))
-
-
-def albers_xy_sql(lon_expr: str, lat_expr: str, *,
-                  phi1: float = 30.0, phi2: float = 50.0,
-                  phi0: float = 40.0, lam0: float = 20.0,
-                  radius: float = 6371000.0) -> tuple[str, str]:
-    """Textual (x, y) expressions for the spherical Albers equal-area
-    conic projection (Snyder 1987, eq. 14-1..14-4) with standard
-    parallels ``phi1``/``phi2`` and origin (``phi0``, ``lam0``) —
-    emitted as SQL shared verbatim by the Spark plan (F.expr) and the
-    DuckDB oracle, the vincenty_stages discipline: identical textual
-    order means both engines run the same float algebra, so only
-    group reductions need rounding. The equal-area property is the
-    complement of the Mercator audit (tissot_mercator_stats):
-    Mercator preserves angles and inflates areas; Albers preserves
-    areas — the projection a pipeline uses when zonal AREA statistics
-    must be trusted."""
-    nc = (f"((sin(radians({phi1})) + sin(radians({phi2}))) / 2)")
-    cc = (f"(cos(radians({phi1})) * cos(radians({phi1}))"
-          f" + 2 * {nc} * sin(radians({phi1})))")
-    rho = (f"({radius} * sqrt({cc} - 2 * {nc} * sin(radians({lat_expr})))"
-           f" / {nc})")
-    rho0 = (f"({radius} * sqrt({cc} - 2 * {nc} * sin(radians({phi0})))"
-            f" / {nc})")
-    theta = f"({nc} * radians(({lon_expr}) - {lam0}))"
-    return (f"({rho} * sin({theta}))",
-            f"({rho0} - {rho} * cos({theta}))")
-
-
-def albers_path_stats(pts: DataFrame, *, group_col: str = "user_id",
-                      order_cols: tuple = ("ts", "event_id"),
-                      lon_col: str = "lon", lat_col: str = "lat",
-                      round_to: int = 2) -> DataFrame:
-    """Per-group path length and bounding-box area in the Albers
-    equal-area plane: project each point with `albers_xy_sql`, then
-    one lag window per group (segment lengths) and one aggregate
-    (sum, bbox extents). The equal-area plane makes the bbox area a
-    trustworthy km^2-class number — the planar-area QA counterpart of
-    the Mercator distortion audit.
-
-    Scale shape: projection is pure per-row column arithmetic at scan
-    time; the window partitions by group (no global exchange); one
-    groupBy ends the plan. Sums/areas are rounded to ``round_to``
-    (cm grain) — per-row libm noise is ~1e-9 m on 6.4e6 m
-    coordinates, eight orders below the grain. Returns
-    (group, n_points, path_len_m, bbox_area_m2)."""
-    x_sql, y_sql = albers_xy_sql(lon_col, lat_col)
-    proj = pts.select(F.col(group_col).alias("_g"), *order_cols,
-                      F.expr(x_sql).alias("_x"),
-                      F.expr(y_sql).alias("_y"))
-    w = Window.partitionBy("_g").orderBy(*[F.col(c) for c in order_cols])
-    seg = (proj
-           .withColumn("_px", F.lag("_x").over(w))
-           .withColumn("_py", F.lag("_y").over(w)))
-    d = F.when(F.col("_px").isNotNull(),
-               F.sqrt((F.col("_x") - F.col("_px"))
-                      * (F.col("_x") - F.col("_px"))
-                      + (F.col("_y") - F.col("_py"))
-                      * (F.col("_y") - F.col("_py")))).otherwise(F.lit(0.0))
-    return (seg.groupBy("_g")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_points"),
-                 F.round(F.sum(d), round_to).alias("path_len_m"),
-                 F.round((F.max("_x") - F.min("_x"))
-                         * (F.max("_y") - F.min("_y")), round_to)
-                 .alias("bbox_area_m2"))
-            .withColumnRenamed("_g", group_col)
-            .orderBy(group_col))

@@ -566,255 +566,6 @@ def two_hop_neighborhoods(edges: DataFrame, *, src: str = "src",
                     F.col("n_two_hop").cast("bigint").alias("n_two_hop")))
 
 
-def modularity_directed(edges: DataFrame, labels: DataFrame, *,
-                        src: str = "src", dst: str = "dst",
-                        w: str = "w", node: str = "node",
-                        label: str = "community",
-                        round_to: int = 6) -> DataFrame:
-    """Per-community directed modularity decomposition (Leicht &
-    Newman 2008): for each community c,
-
-        q_c = e_c / m  -  (a_out_c * a_in_c) / m^2
-
-    where e_c is the internal edge weight, a_out_c / a_in_c the total
-    out- / in-strength of c's nodes and m the total edge weight; the
-    graph's modularity Q is the sum of the returned contributions.
-    The quality functional LPA / Louvain partitions are scored by —
-    here applied to ANY labelling (domains, LPA output, components).
-
-    Scale shape: two label joins against the edge list (labels are a
-    node-keyed dim — broadcast when small, shuffle on node otherwise),
-    then one groupBy(community) each for internal / out / in strength;
-    m ships back as an O(1) one-row broadcast, never a driver collect.
-    Ref anchor: generalizes the importance rollups (bano/sql/03_*,
-    M1-M3) from per-commune scalars to partition quality."""
-    lab = labels.select(F.col(node).alias("_n"), F.col(label).alias("_c"))
-    e = (edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
-                      F.col(w).cast("double").alias("_w"))
-         .join(lab.select(F.col("_n").alias("_s"),
-                          F.col("_c").alias("_cs")), "_s")
-         .join(lab.select(F.col("_n").alias("_d"),
-                          F.col("_c").alias("_cd")), "_d"))
-    m = e.agg(F.sum("_w").alias("_m"))
-    internal = (e.filter(F.col("_cs") == F.col("_cd"))
-                .groupBy(F.col("_cs").alias("community"))
-                .agg(F.sum("_w").alias("internal_w")))
-    outw = (e.groupBy(F.col("_cs").alias("community"))
-            .agg(F.sum("_w").alias("out_w")))
-    inw = (e.groupBy(F.col("_cd").alias("community"))
-           .agg(F.sum("_w").alias("in_w")))
-    full = (outw.join(inw, "community", "full")
-            .join(internal, "community", "left")
-            .select("community",
-                    F.coalesce("internal_w", F.lit(0.0)).alias("internal_w"),
-                    F.coalesce("out_w", F.lit(0.0)).alias("out_w"),
-                    F.coalesce("in_w", F.lit(0.0)).alias("in_w")))
-    return (full.crossJoin(F.broadcast(m))
-            .select("community",
-                    F.round("internal_w", round_to).alias("internal_w"),
-                    F.round("out_w", round_to).alias("out_w"),
-                    F.round("in_w", round_to).alias("in_w"),
-                    F.round(F.col("internal_w") / F.col("_m")
-                            - (F.col("out_w") * F.col("in_w"))
-                            / (F.col("_m") * F.col("_m")),
-                            round_to).alias("q_contrib")))
-
-
-def degree_assortativity(edges: DataFrame, *, src: str = "src",
-                         dst: str = "dst",
-                         round_to: int = 6) -> DataFrame:
-    """Directed degree assortativity (Newman 2002): the Pearson
-    correlation, over the DISTINCT edge set, between the source
-    node's out-degree and the target node's in-degree — positive on
-    hub-links-hub graphs (social cores), negative on hub-and-spoke
-    webs (the typical crawl graph).
-
-    Scale shape: degrees are two groupBys over distinct edges; the
-    correlation is ONE aggregate over the edge list joined to the two
-    degree dims (node-keyed; broadcast when small). Moments use the
-    E[xy] - E[x]E[y] form — every addend is an exact integer (degree
-    products), so the sums are order-independent and the final ratio
-    is bit-stable across engines."""
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    od = e.groupBy(F.col("_s")).agg(
-        F.count(F.lit(1)).cast("double").alias("_x"))
-    idg = e.groupBy(F.col("_d")).agg(
-        F.count(F.lit(1)).cast("double").alias("_y"))
-    j = e.join(od, "_s").join(idg, "_d")
-    a = j.agg(F.count(F.lit(1)).cast("double").alias("n"),
-              F.sum("_x").alias("sx"), F.sum("_y").alias("sy"),
-              F.sum(F.col("_x") * F.col("_y")).alias("sxy"),
-              F.sum(F.col("_x") * F.col("_x")).alias("sxx"),
-              F.sum(F.col("_y") * F.col("_y")).alias("syy"))
-    cov = F.col("sxy") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
-    vx = F.col("sxx") / F.col("n") - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))
-    vy = F.col("syy") / F.col("n") - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))
-    return a.select(
-        F.col("n").cast("bigint").alias("n_edges"),
-        F.round(cov / F.sqrt(vx * vy), round_to).alias("assortativity"))
-
-
-def rich_club(edges: DataFrame, ks: list, *, src: str = "src",
-              dst: str = "dst", round_to: int = 6) -> DataFrame:
-    """Rich-club coefficient phi(k) (Zhou & Mondragon 2004) on the
-    undirected distinct edge set: among the N_k nodes of degree > k,
-    phi(k) = 2 E_k / (N_k (N_k - 1)) where E_k counts edges with BOTH
-    endpoints in the club — the hub-interconnection statistic that
-    separates core-periphery webs from flat ones.
-
-    Scale shape: degrees once (one groupBy), then per k one semi-join
-    of the edge list against the club's node set (node-keyed dim,
-    broadcast when small) — the k loop is over a HANDFUL of literal
-    thresholds, not data. Returns (k, n_club, e_club, phi); clubs
-    with < 2 members yield NULL phi."""
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .filter(F.col("a") != F.col("b"))
-           .select(F.least("a", "b").alias("a"),
-                   F.greatest("a", "b").alias("b"))
-           .distinct())
-    deg = (und.select(F.col("a").alias("n"))
-           .unionByName(und.select(F.col("b").alias("n")))
-           .groupBy("n").agg(F.count(F.lit(1)).alias("deg")))
-    deg = deg.localCheckpoint(eager=True)
-    parts = []
-    for k in ks:
-        club = deg.filter(F.col("deg") > int(k)).select("n")
-        nk = und.join(club.withColumnRenamed("n", "a"), "a", "semi") \
-                .join(club.withColumnRenamed("n", "b"), "b", "semi")
-        row = (nk.agg(F.count(F.lit(1)).cast("bigint").alias("e_club"))
-               .crossJoin(club.agg(
-                   F.count(F.lit(1)).cast("bigint").alias("n_club")))
-               .select(F.lit(int(k)).alias("k"), "n_club", "e_club",
-                       F.round(
-                           F.when(F.col("n_club") >= 2,
-                                  2.0 * F.col("e_club")
-                                  / (F.col("n_club")
-                                     * (F.col("n_club") - 1))),
-                           round_to).alias("phi")))
-        parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def global_transitivity(edges: DataFrame, *, src: str = "src",
-                        dst: str = "dst",
-                        round_to: int = 6) -> DataFrame:
-    """Global clustering coefficient (transitivity): C = 3T / W with
-    T the undirected triangle count and W = sum_n deg_n (deg_n - 1)/2
-    the wedge count — the one-number closure summary next to the
-    per-node :func:`triangle_participation`.
-
-    Scale shape: reuses the degree-oriented triangle machinery
-    (skew-bounded wedge join) for T and one degree aggregate for W —
-    both integer totals, so the final ratio is bit-stable."""
-    tri = triangle_participation(edges, src=src, dst=dst)
-    t = tri.agg((F.sum("n_triangles") / 3).cast("bigint").alias("t"))
-    und = (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                        F.greatest(F.col(src), F.col(dst)).alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct())
-    deg = (und.select(F.col("u").alias("n"))
-           .unionByName(und.select(F.col("v").alias("n")))
-           .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
-    w = deg.agg(F.sum(F.col("d") * (F.col("d") - 1) / 2)
-                .cast("bigint").alias("w"))
-    return (t.crossJoin(w)
-            .select(F.col("t").alias("n_triangles"),
-                    F.col("w").alias("n_wedges"),
-                    F.round(F.when(F.col("w") > 0,
-                                   3.0 * F.col("t") / F.col("w")),
-                            round_to).alias("transitivity")))
-
-
-def community_conductance(edges: DataFrame, labels: DataFrame, *,
-                          src: str = "src", dst: str = "dst",
-                          node: str = "node", label: str = "community",
-                          round_to: int = 6) -> DataFrame:
-    """Per-community conductance on the undirected distinct edge set:
-    phi(c) = cut(c) / min(vol(c), 2m - vol(c)) — the bottleneck
-    quality score (low = well-separated community) that complements
-    :func:`modularity_directed`'s density contrast; the spectral-
-    partitioning objective evaluated on ANY labelling.
-
-    Scale shape: two label joins on the edge list, one groupBy for
-    cut counts, degrees + one label join + groupBy for volumes; m is
-    an O(1) broadcast. Integer counts — bit-stable ratio. Returns
-    (community, vol, cut, conductance); single-community graphs get
-    NULL conductance (min side is 0)."""
-    lab = labels.select(F.col(node).alias("_n"), F.col(label).alias("_c"))
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .filter(F.col("a") != F.col("b"))
-           .select(F.least("a", "b").alias("a"),
-                   F.greatest("a", "b").alias("b"))
-           .distinct())
-    e = (und.join(lab.select(F.col("_n").alias("a"),
-                             F.col("_c").alias("_ca")), "a")
-         .join(lab.select(F.col("_n").alias("b"),
-                          F.col("_c").alias("_cb")), "b"))
-    m = und.agg(F.count(F.lit(1)).alias("_m"))
-    deg = (und.select(F.col("a").alias("_n"))
-           .unionByName(und.select(F.col("b").alias("_n")))
-           .groupBy("_n").agg(F.count(F.lit(1)).alias("_d")))
-    vol = (deg.join(lab, "_n")
-           .groupBy(F.col("_c").alias("community"))
-           .agg(F.sum("_d").cast("bigint").alias("vol")))
-    cut_a = (e.filter(F.col("_ca") != F.col("_cb"))
-             .select(F.col("_ca").alias("community")))
-    cut_b = (e.filter(F.col("_ca") != F.col("_cb"))
-             .select(F.col("_cb").alias("community")))
-    cut = (cut_a.unionByName(cut_b)
-           .groupBy("community")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("cut")))
-    minside = F.least(F.col("vol"), 2 * F.col("_m") - F.col("vol"))
-    return (vol.join(cut, "community", "left")
-            .crossJoin(F.broadcast(m))
-            .select("community", "vol",
-                    F.coalesce("cut", F.lit(0)).cast("bigint").alias("cut"),
-                    F.round(F.when(minside > 0,
-                                   F.coalesce(F.col("cut"), F.lit(0))
-                                   / minside),
-                            round_to).alias("conductance")))
-
-
-def local_clustering(edges: DataFrame, *, src: str = "src",
-                     dst: str = "dst",
-                     round_to: int = 6) -> DataFrame:
-    """Per-node local clustering coefficient and ego betweenness on
-    the undirected distinct graph: lcc(v) = T_v / C(d_v, 2) (Watts &
-    Strogatz 1998), and the Everett-Borgatti ego-network betweenness
-    proxy = C(d_v, 2) - T_v — the count of neighbor pairs whose only
-    ego-net path runs THROUGH v (assuming unique two-paths; disclosed
-    — the standard simple-ego approximation). High ego betweenness =
-    local broker; high lcc = closed community.
-
-    Scale shape: one degree aggregate + the degree-oriented
-    (skew-bounded) triangle join from triangle_participation — no new
-    join shapes; integer counts, bit-stable ratios. Degree-1 nodes
-    get NULL lcc (no pairs)."""
-    und = (edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                        F.greatest(F.col(src), F.col(dst)).alias("v"))
-           .filter(F.col("u") != F.col("v"))
-           .distinct())
-    deg = (und.select(F.col("u").alias("node"))
-           .unionByName(und.select(F.col("v").alias("node")))
-           .groupBy("node").agg(F.count(F.lit(1)).alias("degree")))
-    tri = triangle_participation(und, src="u", dst="v")
-    pairs = (F.col("degree") * (F.col("degree") - 1) / 2).cast("bigint")
-    return (deg.join(tri, "node", "left")
-            .select("node",
-                    F.col("degree").cast("bigint").alias("degree"),
-                    F.coalesce("n_triangles", F.lit(0)).cast("bigint")
-                    .alias("n_triangles"),
-                    F.round(F.when(pairs > 0,
-                                   F.coalesce("n_triangles", F.lit(0))
-                                   / pairs),
-                            round_to).alias("lcc"),
-                    (pairs - F.coalesce("n_triangles", F.lit(0)))
-                    .cast("bigint").alias("ego_betweenness")))
-
-
 def multi_source_bfs(edges: DataFrame, seeds: DataFrame, *,
                      src: str = "src", dst: str = "dst",
                      node_col: str = "node",
@@ -1118,135 +869,6 @@ def k_truss(edges: DataFrame, k: int, *, src: str = "src",
         n_cur = n_new
     raise RuntimeError(
         f"k_truss: no fixpoint within {max_rounds} rounds")
-
-
-def scc_closure(edges: DataFrame, *, src: str = "src",
-                dst: str = "dst", max_rounds: int = 12) -> DataFrame:
-    """Strongly connected components of a DIRECTED graph via
-    transitive-closure squaring: R_{t+1} = R_t UNION (R_t JOIN R_t),
-    so t rounds cover paths of length 2^t; the (unique) closure
-    fixpoint is detected structurally (pair count stable) and
-    ``max_rounds`` is a loud runaway guard like `k_core`. The SCC
-    label of v is min(u in {v} UNION {u : v->u AND u->v}) — the
-    smallest mutually-reachable node — computed from one self-join of
-    the closure on swapped endpoints.
-
-    This is the EXACTNESS BASELINE for SCC (the role brute-force
-    cosine plays for ANN): closure is O(n * reach(n)) pairs and is the
-    right tool for the bounded label alphabets it is used on here
-    (hosts, redirect targets). The 100 TB scale path is
-    forward-backward reach trimming / coloring (Blelloch et al. 2016,
-    public algorithm): pick a pivot, one multi-source forward BFS +
-    one backward BFS (both available as `bfs_distances` shapes), the
-    intersection is an SCC, recurse on the three remainders — never
-    materialising the closure. Returns (scc_id, n_nodes, n_edges_in)
-    per component, where n_edges_in counts intra-SCC directed edges.
-
-    No reference counterpart (the reference has no graph operator);
-    SCC itself is the public Tarjan/Kosaraju semantics re-expressed
-    as data-parallel joins.
-    """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint(eager=False))
-    reach = e
-    n_cur = reach.count()
-    for _ in range(max_rounds):
-        hop2 = (reach.alias("a")
-                .join(reach.alias("b"), F.col("a.v") == F.col("b.u"))
-                .select(F.col("a.u").alias("u"), F.col("b.v").alias("v")))
-        nxt = (reach.unionByName(hop2)
-               .filter(F.col("u") != F.col("v"))
-               .distinct()
-               .localCheckpoint(eager=False))
-        n_new = nxt.count()
-        if n_new == n_cur:
-            reach = nxt
-            break
-        reach, n_cur = nxt, n_new
-    else:
-        raise RuntimeError(
-            f"scc_closure: no closure fixpoint within {max_rounds} "
-            "squaring rounds (2^rounds path length exceeded)")
-    nodes = (e.select(F.col("u").alias("node"))
-             .unionByName(e.select(F.col("v").alias("node")))
-             .distinct())
-    mutual = (reach.alias("f")
-              .join(reach.alias("r"),
-                    (F.col("f.u") == F.col("r.v"))
-                    & (F.col("f.v") == F.col("r.u")))
-              .select(F.col("f.u").alias("node"),
-                      F.col("f.v").alias("mate")))
-    lab = (nodes.join(mutual, "node", "left")
-           .groupBy("node")
-           .agg(F.least(F.min("mate"), F.first("node"))
-                .alias("_m"))
-           .select("node",
-                   F.coalesce(F.least(F.col("_m"), F.col("node")),
-                              F.col("node")).alias("scc_id")))
-    intra = (e.join(lab.withColumnRenamed("node", "u")
-                    .withColumnRenamed("scc_id", "_su"), "u")
-             .join(lab.withColumnRenamed("node", "v")
-                   .withColumnRenamed("scc_id", "_sv"), "v")
-             .filter(F.col("_su") == F.col("_sv"))
-             .groupBy(F.col("_su").alias("scc_id"))
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n_edges_in")))
-    return (lab.groupBy("scc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-            .join(intra, "scc_id", "left")
-            .select("scc_id", "n_nodes",
-                    F.coalesce("n_edges_in", F.lit(0).cast("bigint"))
-                    .alias("n_edges_in"))
-            .orderBy("scc_id"))
-
-
-def dag_longest_path(edges: DataFrame, *, src: str = "src",
-                     dst: str = "dst", max_rounds: int = 40) -> DataFrame:
-    """Longest-path depth of every node in a DAG (critical-path /
-    dependency-depth layering): depth(v) = 0 for sources, else
-    1 + max(depth(u)) over in-edges — the scheduling-depth number for
-    redirect cascades, dependency graphs, and crawl frontier tiers.
-    Iterative max-relaxation to the (unique) fixpoint; the integer
-    depth sum is an EXACT structural convergence test (no float-sum
-    ambiguity — the sssp_weighted lesson), and ``max_rounds`` is a
-    loud runaway guard that doubles as CYCLE DETECTION: in a DAG the
-    fixpoint arrives within diameter rounds, so exhausting the guard
-    raises (a cycle makes the longest path unbounded — failing loudly
-    beats wrong depths).
-
-    Scale shape per round: one equi-join of the O(nodes) depth vector
-    onto the edge table (edges hash-partitioned on src and reused),
-    one groupBy(dst) max, localCheckpoint to keep lineage one round
-    deep. Returns (node, depth)."""
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct()
-         .localCheckpoint(eager=False))
-    depth = (e.select(F.col("u").alias("node"))
-             .unionByName(e.select(F.col("v").alias("node")))
-             .distinct()
-             .select("node", F.lit(0).cast("bigint").alias("depth"))
-             .localCheckpoint(eager=False))
-    cur = depth.agg(F.sum("depth")).collect()[0][0] or 0
-    for _ in range(max_rounds):
-        cand = (e.join(depth.withColumnRenamed("node", "u"), "u")
-                .groupBy(F.col("v").alias("node"))
-                .agg((F.max("depth") + 1).alias("_nd")))
-        depth = (depth.join(cand, "node", "left")
-                 .select("node",
-                         F.greatest(F.col("depth"),
-                                    F.coalesce("_nd", F.lit(0)))
-                         .alias("depth"))
-                 .localCheckpoint(eager=False))
-        new = depth.agg(F.sum("depth")).collect()[0][0] or 0
-        if new == cur:
-            return depth.orderBy("node")
-        cur = new
-    raise RuntimeError(
-        f"dag_longest_path: no fixpoint within {max_rounds} rounds — "
-        "the graph almost certainly contains a cycle (longest path "
-        "undefined); break cycles upstream (scc_closure finds them)")
 
 
 def boruvka_mst(edges: DataFrame, *, src: str = "src", dst: str = "dst",

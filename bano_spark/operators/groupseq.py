@@ -1,8 +1,7 @@
 """Group-sequential A/B monitoring — O'Brien-Fleming boundaries at K
 interim looks — the peeking-safe experiment monitor completing
-welch_ttest (fixed-horizon) and sprt_user_decisions (fully
-sequential): the industry-standard "look 4 times, spend alpha like
-OBF" design.
+the fixed-horizon t test and the SPRT (fully sequential): the
+industry-standard "look 4 times, spend alpha like OBF" design.
 
 Each look l covers the time-prefix event_id * K < N * l (N from one
 scalar count, broadcast back — exact integer prefix membership, no

@@ -12,33 +12,16 @@ Boulevard/Place/Esplanade=4, Avenue=3, Rue=2, else 1.
 
 Spark shape: per-street collect_list of (lon, lat) -> Arrow-batched
 grouped aggregation computing the convex hull + geodesic longest line
-in numpy — then the pure-column log10 formula."""
+in numpy (``hull_metrics``); the ``street_importance_hull`` query
+applies the pure-column log10 formula with the type weights."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..geo.geometry import hull_longest_line_m
-
-TYPE_WEIGHTS = [
-    ("Boulevard", 4.0), ("Place", 4.0), ("Espl", 4.0), ("Av", 3.0), ("Rue", 2.0)]
-
-
-def street_type_weight(name: Column) -> Column:
-    w = F.lit(1.0)
-    # CASE evaluated in the reference's order — first match wins
-    expr = (
-        F.when(name.startswith("Boulevard"), 4.0)
-        .when(name.startswith("Place"), 4.0)
-        .when(name.startswith("Espl"), 4.0)
-        .when(name.startswith("Av"), 3.0)
-        .when(name.startswith("Rue"), 2.0)
-        .otherwise(w)
-    )
-    return expr
-
 
 def hull_metrics(points: DataFrame, group_cols: list[str], lon: str = "lon",
                  lat: str = "lat") -> DataFrame:
@@ -58,23 +41,3 @@ def hull_metrics(points: DataFrame, group_cols: list[str], lon: str = "lon",
                             columns=[*group_cols, "nb_points", "hull_longest_m"])
 
     return points.groupBy(*group_cols).applyInPandas(agg, out_schema)
-
-
-def street_importance(
-    streets: DataFrame,
-    adm_weight: str = "adm_weight",
-    population: str = "population",
-    nb: str = "nb_points",
-    hull_m: str = "hull_longest_m",
-    name: str = "name",
-) -> Column:
-    a = F.col(adm_weight).cast("double")
-    p = F.col(population).cast("double")
-    n = F.col(nb).cast("double")
-    h = F.col(hull_m).cast("double")
-    w = street_type_weight(F.col(name))
-    return F.round(
-        F.log10(a + F.log10(p + 1) / 3)
-        * F.log10(1 + F.log10(n + 1) + F.log10(h + 1) + F.log10(w)),
-        4,
-    )

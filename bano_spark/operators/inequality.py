@@ -1,7 +1,6 @@
 """Inequality indices — Atkinson (epsilon = 1), Hoover (Robin Hood),
 and the Palma ratio — completing the distributional-equity family
-(gini_by_group, theil_t_index, lorenz_curve, host_gini,
-concentration_ratio).
+(Gini, Theil T, the Lorenz curve, concentration ratios).
 
 Exactness choices, one per index, in the engine's usual ladder:
 - Hoover is computed EXACTLY: sum |y - mu| with mu = S/n expands to

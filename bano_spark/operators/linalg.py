@@ -128,63 +128,6 @@ def pca_project(embs: DataFrame, components: np.ndarray, *,
     return embs.select(id_col, vec_col).mapInPandas(project, out_schema)
 
 
-def random_projection_distortion(vecs: DataFrame, dim: int, m: int,
-                                 *, id_col: str = "vec_id",
-                                 emb_col: str = "embedding",
-                                 round_to: int = 6) -> DataFrame:
-    """Johnson-Lindenstrauss empirical distortion audit: project each
-    vector to ``m`` dims with a deterministic +-1 sign matrix (integer
-    hash of (j, d) — the Achlioptas 2003 database-friendly scheme),
-    then for every input pair report how well projected squared
-    distances / m preserve the original squared L2 distances: the
-    per-pair distortion ratio plus corpus-level mean/min/max and the
-    fraction inside [1/2, 2]. The go/no-go check before swapping full
-    embeddings for a cheap projection in the ANN/SemDeDup family.
-
-    Scale shape: the projection is a per-row array fold (O(m*dim)
-    column arithmetic, no shuffle, no Python); the audit pair join is
-    the caller's responsibility to bound (pass a SAMPLE — the
-    operator cross-joins what it is given, by design, like the ADC
-    scan). Every sum folds in array-index order on both engines, so
-    results are bit-stable. Returns one row:
-    (n_pairs, mean_distortion, min_distortion, max_distortion,
-    frac_within_2x)."""
-    sign = ("CASE WHEN ((j * 2654435761 + d * 40503) % 97) % 2 = 0 "
-            "THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END")
-    proj = F.expr(
-        f"transform(sequence(0, {int(m) - 1}), j -> "
-        f"aggregate(sequence(1, {int(dim)}), CAST(0 AS DOUBLE), "
-        f"(acc, d) -> acc + CAST({emb_col}[d - 1] AS DOUBLE) * {sign}))")
-    v = vecs.select(F.col(id_col).alias("_id"), F.col(emb_col),
-                    proj.alias("_p"))
-    a = v.select(F.col("_id").alias("ida"),
-                 F.col(emb_col).alias("ea"), F.col("_p").alias("pa"))
-    b = v.select(F.col("_id").alias("idb"),
-                 F.col(emb_col).alias("eb"), F.col("_p").alias("pb"))
-    pairs = a.join(b, F.col("ida") < F.col("idb"))
-    od2 = F.expr(
-        f"aggregate(sequence(1, {int(dim)}), CAST(0 AS DOUBLE), "
-        f"(acc, d) -> acc + (CAST(ea[d - 1] AS DOUBLE) "
-        f"- CAST(eb[d - 1] AS DOUBLE)) "
-        f"* (CAST(ea[d - 1] AS DOUBLE) - CAST(eb[d - 1] AS DOUBLE)))")
-    pd2 = F.expr(
-        f"aggregate(sequence(1, {int(m)}), CAST(0 AS DOUBLE), "
-        f"(acc, d) -> acc + (pa[d - 1] - pb[d - 1]) "
-        f"* (pa[d - 1] - pb[d - 1]))")
-    rat = (pairs.select(od2.alias("_od2"), pd2.alias("_pd2"))
-           .filter(F.col("_od2") != 0)
-           .select(((F.col("_pd2") / F.lit(float(m))) / F.col("_od2"))
-                   .alias("_r")))
-    return rat.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.round(F.avg("_r"), round_to).alias("mean_distortion"),
-        F.round(F.min("_r"), round_to).alias("min_distortion"),
-        F.round(F.max("_r"), round_to).alias("max_distortion"),
-        F.round(F.avg(F.when((F.col("_r") >= 0.5) & (F.col("_r") <= 2.0),
-                             1.0).otherwise(0.0)), round_to)
-        .alias("frac_within_2x"))
-
-
 def mahalanobis_diag_scores(emb: DataFrame, id_col: str = "vec_id",
                             vec_col: str = "embedding", *,
                             round_to: int = 6) -> DataFrame:
@@ -221,57 +164,3 @@ def mahalanobis_diag_scores(emb: DataFrame, id_col: str = "vec_id",
             .agg(F.count(F.lit(1)).cast("bigint").alias("dims"),
                  F.round(F.sum(term), round_to).alias("maha_score"))
             .withColumnRenamed("_id", id_col))
-
-
-def power_iteration_pc1(embs: DataFrame, *, vec_col: str = "embedding",
-                        iters: int = 4, round_to: int = 6) -> DataFrame:
-    """First principal axis of the vector column by ``iters`` rounds
-    of distributed power iteration on the sample covariance — the
-    ORACLE-CHECKABLE counterpart of `pca_components` (which solves the
-    d x d eigenproblem driver-side with LAPACK): every step here is
-    DataFrame algebra, so a SQL engine can replay the identical
-    trajectory. The estimate is the iters-step iterate from the
-    uniform start vector 1/sqrt(d); convergence to PC1 is geometric in
-    the eigengap ratio (Golub & Van Loan), and callers needing the
-    converged axis use pca_components — this operator exists for the
-    pipelines that want the dominant-direction ESTIMATE fully
-    distributed (e.g. SemDeDup-style centering at 10^12 rows, where
-    collecting the covariance is fine but pinning cross-engine parity
-    matters).
-
-    Parity discipline: the covariance is rounded to 12 decimals BEFORE
-    iterating (pinning the matrix across engines), each iterate is
-    normalized then rounded to 12 (the pagerank discipline), and the
-    returned loadings are sign-pinned (the largest-|loading| component
-    is made positive, ties to the smallest index). Scale shape: the
-    d x d matrix and d-vector are tiny; per round one broadcast join +
-    one groupBy(i) — the corpus is touched ONCE (covariance pass).
-    Returns d rows (i, loading, eigenvalue) where eigenvalue is the
-    final pre-normalization norm (the |lambda_1| estimate)."""
-    cov = embedding_covariance(embs, vec_col=vec_col, round_to=12)
-    full = (cov.select("i", "j", "cov")
-            .unionByName(cov.filter(F.col("i") != F.col("j"))
-                         .select(F.col("j").alias("i"),
-                                 F.col("i").alias("j"),
-                                 "cov"))
-            .localCheckpoint(eager=False))
-    d = full.agg(F.max("j")).collect()[0][0] + 1
-    v = full.select(F.col("j").alias("_j")).distinct().select(
-        "_j", F.lit(round(1.0 / d ** 0.5, 12)).alias("_v"))
-    lam = None
-    for _ in range(iters):
-        w = (full.join(v, full.j == v._j)
-             .groupBy("i")
-             .agg(F.sum(F.col("cov") * F.col("_v")).alias("_w")))
-        lam = w.agg(F.sqrt(F.sum(F.col("_w") * F.col("_w")))).collect()[0][0]
-        v = (w.select(F.col("i").alias("_j"),
-                      F.round(F.col("_w") / F.lit(lam), 12).alias("_v"))
-             .localCheckpoint(eager=False))
-    sign_row = (v.orderBy(F.abs(F.col("_v")).desc(), F.col("_j"))
-                .limit(1).collect()[0])
-    sgn = 1.0 if sign_row._v >= 0 else -1.0
-    return (v.select(F.col("_j").alias("i"),
-                     (F.round(F.col("_v") * F.lit(sgn), round_to)
-                      + F.lit(0.0)).alias("loading"),
-                     F.round(F.lit(lam), round_to).alias("eigenvalue"))
-            .orderBy("i"))

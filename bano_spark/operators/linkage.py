@@ -23,10 +23,7 @@ are correct by construction because ranks are GLOBAL."""
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType
 
 from .selection import distributed_cumsum
 
@@ -77,37 +74,6 @@ def _jaro_winkler_one(a: str, b: str) -> float:
     return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
-@F.pandas_udf(DoubleType())
-def _jw_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    jw = _jaro_winkler_one
-    return pd.Series(
-        [jw(x, y) if x is not None and y is not None else None
-         for x, y in zip(a, b)],
-        dtype="float64")
-
-
-def jaro_winkler_pairs(left: DataFrame, right: DataFrame, block_col: str,
-                       left_name: str = "name_a", right_name: str = "name_b",
-                       threshold: float = 0.8) -> DataFrame:
-    """Blocked Jaro-Winkler linkage: equi-join ``left`` × ``right`` on
-    ``block_col`` (never a cross product), score each candidate pair
-    with the Arrow-batched JW kernel, keep pairs at or above
-    ``threshold``.
-
-    Scale shape — the expensive O(len²) comparison runs only inside
-    blocks, so cost is Σ|L_b|·|R_b|, the same discipline as the engine's
-    LSH band joins; the left side is broadcast when small (Catalyst
-    decides from stats), otherwise both sides shuffle on the block key.
-    The kernel crosses into Python once per Arrow batch, not per row.
-    Ref: BANO matches OSM↔FANTOIR names by exact normalized equality
-    (`bano/models.py` rapprochement); JW is the standard fuzzy
-    generalization for the typo'd residue those dicts drop."""
-    pairs = left.join(right, block_col)
-    scored = pairs.withColumn(
-        "jw", _jw_udf(F.col(left_name), F.col(right_name)))
-    return scored.filter(F.col("jw") >= F.lit(threshold))
-
-
 def global_rank(df: DataFrame, key_col: str, id_col: str,
                 out_col: str = "rank") -> DataFrame:
     """Global 1-based dense position in the (key, id) total order,
@@ -138,61 +104,3 @@ def sorted_neighborhood_pairs(df: DataFrame, key_col: str, id_col: str,
         F.col("_id").alias("id_b"), F.col("_key").alias("key_b"),
         F.col("rank").alias("_r2"))
     return left.join(right, "_r2").select("id_a", "id_b", "key_a", "key_b")
-
-
-def fellegi_sunter_scores(left: DataFrame, right: DataFrame,
-                          block_col: str, fields: list, m_probs: list, *,
-                          left_id: str = "id_a", right_id: str = "id_b",
-                          round_to: int = 6) -> DataFrame:
-    """Fellegi-Sunter probabilistic record linkage (Fellegi & Sunter
-    1969): score blocked candidate pairs by the sum of per-field
-    log-likelihood weights,
-
-        agree:    ln(m_f / u_f)
-        disagree: ln((1 - m_f) / (1 - u_f))
-
-    with m_f supplied (the match-model reliability per field) and the
-    chance-agreement probability u_f ESTIMATED from the left table's
-    value distribution: u_f = sum_v (n_v / N)^2 — the standard
-    frequency-based u (two random records agree when they draw the
-    same value). The decision-theoretic upgrade of the wave-28
-    Jaro-Winkler threshold.
-
-    Scale shape: u_f needs one groupBy per field over the LEFT table,
-    reduced to an O(1) scalar each (driver literals, like the kmeans
-    centroids); candidate pairs come from the block equi-join (never
-    a cross product); scoring is pure column arithmetic. Returns
-    (id_a, id_b, agree_<field>..., fs_weight)."""
-    if len(fields) != len(m_probs):
-        raise ValueError("fellegi_sunter_scores: fields/m_probs mismatch")
-    n = left.count()
-    us = []
-    for f in fields:
-        agg = (left.groupBy(f).agg(F.count(F.lit(1)).alias("_c"))
-               .agg(F.sum(F.col("_c") * F.col("_c")).alias("_ss"))
-               .first())
-        us.append(float(agg["_ss"]) / (float(n) * float(n)))
-    lt = left.select(F.col(left_id), F.col(block_col),
-                     *[F.col(f).alias(f"_l_{f}") for f in fields])
-    rt = right.select(F.col(right_id), F.col(block_col),
-                      *[F.col(f).alias(f"_r_{f}") for f in fields])
-    pairs = lt.join(rt, block_col)
-    weight = F.lit(0.0)
-    cols = [F.col(left_id), F.col(right_id)]
-    for f, m, u in zip(fields, m_probs, us):
-        agree = (F.col(f"_l_{f}") == F.col(f"_r_{f}"))
-        cols.append(agree.alias(f"agree_{f}"))
-        weight = weight + F.when(
-            agree, F.lit(float(np_log(m / u)))).otherwise(
-            F.lit(float(np_log((1.0 - m) / (1.0 - u)))))
-    return pairs.select(*cols,
-                        F.round(weight, round_to).alias("fs_weight"))
-
-
-def np_log(x: float) -> float:
-    """Driver-side natural log for literal weights (math.log; the
-    weights become Spark literals so both engines see identical
-    doubles)."""
-    import math
-
-    return math.log(x)

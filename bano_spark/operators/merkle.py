@@ -1,6 +1,6 @@
 """Merkle range-tree digests for snapshot integrity and O(diff)
-change localization — the keyspace-structured sync primitive next to
-operators/reconcile.py's IBLT (IBLT answers WHICH KEYS changed from a
+change localization — the keyspace-structured sync primitive (an
+invertible Bloom lookup table answers WHICH KEYS changed from a
 constant-size digest exchange; a Merkle range tree answers WHERE in
 keyspace from a log-depth digest exchange — the anti-entropy pattern
 in Dynamo-style stores and manifest-level table diffing).

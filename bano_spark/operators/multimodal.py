@@ -6,11 +6,10 @@ columns with typed metadata structs; decode / feature-extract / resize
 so each batch amortizes the python crossing and codecs can release the
 GIL.
 
-Codec resolution mirrors plans/iceberg.py's `iceberg_available`
-optional-dependency pattern (VERDICT r3 item 4): each decode family
-probes its library at plan-build time — Pillow for images, soundfile
-for audio, PyAV (or OpenCV via a tempfile shim) for video. When the
-library is present the REAL decoder runs inside the Arrow batches.
+Codecs are optional dependencies: each decode family probes its
+library at plan-build time — Pillow for images, soundfile for audio,
+PyAV (or OpenCV via a tempfile shim) for video. When the library is
+present the REAL decoder runs inside the Arrow batches.
 
 Stdlib real tier (VERDICT r4 item 4): images and audio additionally
 carry an always-available REAL decoder built on the Python stdlib —

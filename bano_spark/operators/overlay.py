@@ -31,7 +31,7 @@ rings small, which bounds the term.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..geo import geometry
 from .pip_join import polygon_cover
@@ -186,82 +186,3 @@ def areal_interpolate_rect(
                      / F.col("_area")))
     return (w.groupBy("cx", "cy")
             .agg(F.round(F.sum("_c"), round_to).alias("value")))
-
-
-def grid_label_point(polys: DataFrame, pitch: float, *,
-                     id_col: str = "poly_id", verts_col: str = "verts",
-                     round_to: int = 6) -> DataFrame:
-    """Grid-based pole of inaccessibility per polygon: lay a lattice
-    of cell CENTERS (offset pitch/2 — centers never land on fixture
-    edges) over the polygon bbox, keep interior centers by the
-    even-odd crossing rule, score each by its distance to the nearest
-    boundary segment, and return the argmax — the label-point
-    placement problem (the polylabel algorithm's fixed-grid
-    predecessor; resolution = pitch, disclosed).
-
-    Scale shape: edges explode O(verts) per polygon and broadcast
-    (boundary tables are dim-sized); the lattice explodes
-    O(area / pitch^2) cells per polygon — the caller picks pitch to
-    bound it, exactly like the raster family's cell budgets; PIP
-    parity and min-distance are one groupBy(poly, cell); the argmax
-    is a per-polygon window. Every distance is computed by identical
-    IEEE ops on exact lattice coordinates — rank order is
-    engine-independent."""
-    v = polys.select(F.col(id_col).alias("_pid"),
-                     F.col(verts_col).alias("_v"))
-    edges = v.select("_pid", F.explode(F.expr(
-        "transform(sequence(1, size(_v) - 1), i -> named_struct("
-        "  'x1', _v[i - 1][0], 'y1', _v[i - 1][1],"
-        "  'x2', _v[i][0], 'y2', _v[i][1]))")).alias("e")) \
-        .select("_pid", "e.x1", "e.y1", "e.x2", "e.y2")
-    p = float(pitch)
-    bbox = v.select("_pid", F.expr(
-        "aggregate(_v, named_struct("
-        "  'x0', _v[0][0], 'y0', _v[0][1],"
-        "  'x1', _v[0][0], 'y1', _v[0][1]),"
-        "(s, q) -> named_struct("
-        "  'x0', least(s.x0, q[0]), 'y0', least(s.y0, q[1]),"
-        "  'x1', greatest(s.x1, q[0]), 'y1', greatest(s.y1, q[1])))")
-        .alias("b"))
-    cells = (bbox.select(
-        "_pid", "b",
-        F.explode(F.sequence(
-            F.lit(0),
-            F.floor((F.col("b.x1") - F.col("b.x0")) / p).cast("int") - 1))
-        .alias("_i"))
-        .select("_pid", "b", "_i", F.explode(F.sequence(
-            F.lit(0),
-            F.floor((F.col("b.y1") - F.col("b.y0")) / p).cast("int") - 1))
-            .alias("_j"))
-        .select("_pid",
-                (F.col("b.x0") + F.col("_i") * p + p / 2).alias("_cx"),
-                (F.col("b.y0") + F.col("_j") * p + p / 2).alias("_cy")))
-    j = cells.join(F.broadcast(edges), "_pid")
-    crosses = (((F.col("y1") > F.col("_cy"))
-                != (F.col("y2") > F.col("_cy")))
-               & (F.col("_cx")
-                  < F.col("x1") + (F.col("_cy") - F.col("y1"))
-                  * (F.col("x2") - F.col("x1"))
-                  / (F.col("y2") - F.col("y1"))))
-    ex = F.col("x2") - F.col("x1")
-    ey = F.col("y2") - F.col("y1")
-    t = ((F.col("_cx") - F.col("x1")) * ex
-         + (F.col("_cy") - F.col("y1")) * ey) / (ex * ex + ey * ey)
-    tc = F.least(F.greatest(t, F.lit(0.0)), F.lit(1.0))
-    qx = F.col("x1") + tc * ex
-    qy = F.col("y1") + tc * ey
-    d2 = ((F.col("_cx") - qx) * (F.col("_cx") - qx)
-          + (F.col("_cy") - qy) * (F.col("_cy") - qy))
-    scored = (j.groupBy("_pid", "_cx", "_cy")
-              .agg(F.sum(F.when(crosses, 1).otherwise(0)).alias("_nc"),
-                   F.min(d2).alias("_d2"))
-              .filter(F.col("_nc") % 2 == 1))
-    w = Window.partitionBy("_pid").orderBy(
-        F.desc("_d2"), F.asc("_cx"), F.asc("_cy"))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(F.col("_pid").alias(id_col),
-                    F.round("_cx", round_to).alias("label_x"),
-                    F.round("_cy", round_to).alias("label_y"),
-                    F.round(F.sqrt("_d2"), round_to)
-                    .alias("clearance")))

@@ -161,715 +161,6 @@ def exact_quantiles_df(df: DataFrame, col: str, qs: list[float], *,
         [(float(q), float(v)) for q, v in zip(qs, vals)], ["q", "value"])
 
 
-def benford_digit_test(df, col: str, *, round_to: int = 6):
-    """First-digit Benford's-law conformity test: observed leading-
-    digit counts of |value| >= 1 against the Benford expectation
-    p_d = log10(1 + 1/d), with each digit's chi-square contribution
-    (obs - n p_d)^2 / (n p_d) — the classic large-ledger anomaly
-    screen (Nigrini 1996) run as a data-quality gate before amounts
-    feed any model.
-
-    Scale shape: leading digit is pure string codegen (no log10 per
-    row), ONE groupBy(digit) + the O(9) expectation literals computed
-    driver-side (both engines see identical doubles). Returns one row
-    per digit 1..9: (digit, n_obs, expected, chi2_term)."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    probs = [(d, math.log10(1 + 1 / d)) for d in range(1, 10)]
-    exp_df = F.broadcast(spark.createDataFrame(
-        probs, "digit int, p double"))
-    lead = F.substring(
-        F.floor(F.abs(F.col(col))).cast("bigint").cast("string"),
-        1, 1).cast("int")
-    obs = (df.filter(F.abs(F.col(col)) >= 1)
-           .select(lead.alias("digit"))
-           .groupBy("digit")
-           .agg(F.count(F.lit(1)).cast("double").alias("_o")))
-    tot = obs.agg(F.sum("_o").alias("_n"))
-    return (exp_df.join(obs, "digit", "left")
-            .crossJoin(F.broadcast(tot))
-            .select("digit",
-                    F.coalesce("_o", F.lit(0.0)).cast("bigint")
-                    .alias("n_obs"),
-                    F.round(F.col("_n") * F.col("p"), round_to)
-                    .alias("expected"),
-                    F.round(
-                        (F.coalesce("_o", F.lit(0.0))
-                         - F.col("_n") * F.col("p"))
-                        * (F.coalesce("_o", F.lit(0.0))
-                           - F.col("_n") * F.col("p"))
-                        / (F.col("_n") * F.col("p")),
-                        round_to).alias("chi2_term")))
-
-
-def jackknife_ratio_variance(areas, *, y_col: str = "y", n_col: str = "n",
-                             round_to: int = 6):
-    """Delete-one jackknife variance of the combined ratio estimator
-    R = sum(y) / sum(n) (Quenouille/Tukey; the survey-sampling
-    standard for nonlinear estimators): each leave-one-out replicate
-    is R_(i) = (Sy - y_i) / (Sn - n_i), and
-
-        var_jk = (k - 1) / k * sum_i (R_(i) - Rbar_jk)^2
-
-    — the honest standard error a per-commune rate ships with.
-
-    Scale shape: the replicates need only the GLOBAL totals (O(1)
-    broadcast) — one pass for totals, one pass for the replicate
-    moments; never a k x k recompute. Returns one row
-    (k, ratio, jk_variance, jk_se)."""
-    from pyspark.sql import functions as F
-
-    a = areas.select(F.col(y_col).cast("double").alias("_y"),
-                     F.col(n_col).cast("double").alias("_n"))
-    tot = a.agg(F.count(F.lit(1)).cast("double").alias("_k"),
-                F.sum("_y").alias("_sy"),
-                F.sum("_n").alias("_sn")).collect()[0]
-    k, sy, sn = float(tot["_k"]), float(tot["_sy"]), float(tot["_sn"])
-    ri = (F.lit(sy) - F.col("_y")) / (F.lit(sn) - F.col("_n"))
-    m = a.agg(F.sum(ri).alias("_sr"),
-              F.sum(ri * ri).alias("_srr"))
-    var = (F.lit((k - 1) / k)
-           * (F.col("_srr") - F.col("_sr") * F.col("_sr") / F.lit(k)))
-    return m.select(
-        F.lit(int(k)).cast("bigint").alias("k"),
-        F.lit(sy / sn).alias("ratio"),
-        F.round(var, round_to).alias("jk_variance"),
-        F.round(F.sqrt(F.greatest(var, F.lit(0.0))), round_to)
-        .alias("jk_se")).select(
-        "k", F.round("ratio", round_to).alias("ratio"),
-        "jk_variance", "jk_se")
-
-
-def welch_ttest(df, group_col: str, value_col: str, *,
-                round_to: int = 6):
-    """Welch's unequal-variance two-sample t statistic with the
-    Welch-Satterthwaite degrees of freedom — the default A/B
-    difference-of-means test (never pooled variance). ``group_col``
-    must be boolean-like: true = treatment.
-
-    Scale shape: ONE aggregation pass computes both groups' count /
-    sum / sum-of-squares via conditional aggregates (map-side
-    partials); the statistic is O(1) arithmetic on the single
-    aggregate row. Integer-valued fixtures make the moment sums exact
-    and the ratios bit-stable. Returns one row
-    (n1, n2, mean_diff, t_stat, df)."""
-    from pyspark.sql import functions as F
-
-    g = F.col(group_col).cast("boolean")
-    v = F.col(value_col).cast("double")
-    a = df.agg(
-        F.sum(F.when(g, 1).otherwise(0)).cast("double").alias("n1"),
-        F.sum(F.when(g, v).otherwise(0.0)).alias("s1"),
-        F.sum(F.when(g, v * v).otherwise(0.0)).alias("ss1"),
-        F.sum(F.when(~g, 1).otherwise(0)).cast("double").alias("n2"),
-        F.sum(F.when(~g, v).otherwise(0.0)).alias("s2"),
-        F.sum(F.when(~g, v * v).otherwise(0.0)).alias("ss2"))
-    m1 = F.col("s1") / F.col("n1")
-    m2 = F.col("s2") / F.col("n2")
-    v1 = (F.col("ss1") - F.col("n1") * m1 * m1) / (F.col("n1") - 1)
-    v2 = (F.col("ss2") - F.col("n2") * m2 * m2) / (F.col("n2") - 1)
-    se2 = v1 / F.col("n1") + v2 / F.col("n2")
-    dof = (se2 * se2) / (
-        (v1 / F.col("n1")) * (v1 / F.col("n1")) / (F.col("n1") - 1)
-        + (v2 / F.col("n2")) * (v2 / F.col("n2")) / (F.col("n2") - 1))
-    return a.select(
-        F.col("n1").cast("bigint").alias("n1"),
-        F.col("n2").cast("bigint").alias("n2"),
-        F.round(m1 - m2, round_to).alias("mean_diff"),
-        F.round((m1 - m2) / F.sqrt(se2), round_to).alias("t_stat"),
-        F.round(dof, round_to).alias("df"))
-
-
-def trimmed_mean(df, group_col: str, value_col: str, *,
-                 trim_frac: float = 0.1, order_tiebreak: str = None,
-                 round_to: int = 6):
-    """Per-group symmetric trimmed mean: drop the lowest and highest
-    floor(n * trim_frac) observations by (value, tiebreak) rank and
-    average the rest — the robust center that survives the heavy
-    tails a plain mean drowns in (and the cheap sibling of
-    weighted_median_depth).
-
-    Scale shape: one per-group rank window (partitioned — never
-    global) + one conditional aggregate; the trim boundaries derive
-    from the per-group count inside the same window pass. Returns
-    (group, n, n_trimmed_each_side, trimmed_mean)."""
-    from pyspark.sql import Window, functions as F
-
-    tb = [F.col(order_tiebreak)] if order_tiebreak else []
-    w = Window.partitionBy(group_col).orderBy(F.col(value_col), *tb)
-    wc = Window.partitionBy(group_col)
-    d = (df.withColumn("_rn", F.row_number().over(w))
-         .withColumn("_n", F.count(F.lit(1)).over(wc))
-         .withColumn("_t", F.floor(F.col("_n") * F.lit(float(trim_frac)))
-                     .cast("bigint")))
-    kept = F.when((F.col("_rn") > F.col("_t"))
-                  & (F.col("_rn") <= F.col("_n") - F.col("_t")),
-                  F.col(value_col).cast("double"))
-    return (d.groupBy(group_col)
-            .agg(F.first("_n").cast("bigint").alias("n"),
-                 F.first("_t").cast("bigint").alias("n_trimmed_each_side"),
-                 F.round(F.avg(kept), round_to).alias("trimmed_mean")))
-
-
-def spearman_by_group(df, group_col: str, x_col: str, y_col: str, *,
-                      tiebreak: str, round_to: int = 6):
-    """Spearman rank correlation per group: Pearson correlation of the
-    within-group ranks of x and y (ranks by (value, tiebreak) — a
-    total order, so no average-rank ties and the statistic is exactly
-    reproducible). The monotone-association screen that survives the
-    outliers wrecking plain Pearson.
-
-    Scale shape: two rank windows PARTITIONED by the group (never a
-    global order — the distributed_cumsum lesson) + one moment
-    aggregate per group; ranks are exact integers, so every sum is
-    exact and the final ratio bit-stable."""
-    from pyspark.sql import Window, functions as F
-
-    wx = Window.partitionBy(group_col).orderBy(F.col(x_col),
-                                               F.col(tiebreak))
-    wy = Window.partitionBy(group_col).orderBy(F.col(y_col),
-                                               F.col(tiebreak))
-    d = (df.withColumn("_rx", F.row_number().over(wx).cast("double"))
-         .withColumn("_ry", F.row_number().over(wy).cast("double")))
-    a = d.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("_rx").alias("sx"), F.sum("_ry").alias("sy"),
-        F.sum(F.col("_rx") * F.col("_ry")).alias("sxy"),
-        F.sum(F.col("_rx") * F.col("_rx")).alias("sxx"),
-        F.sum(F.col("_ry") * F.col("_ry")).alias("syy"))
-    cov = F.col("sxy") / F.col("n") \
-        - (F.col("sx") / F.col("n")) * (F.col("sy") / F.col("n"))
-    vx = F.col("sxx") / F.col("n") \
-        - (F.col("sx") / F.col("n")) * (F.col("sx") / F.col("n"))
-    vy = F.col("syy") / F.col("n") \
-        - (F.col("sy") / F.col("n")) * (F.col("sy") / F.col("n"))
-    return a.select(group_col,
-                    F.col("n").cast("bigint").alias("n"),
-                    F.round(cov / F.sqrt(vx * vy), round_to)
-                    .alias("spearman_rho"))
-
-
-def cuped_adjustment(df, treat_col: str, y_col: str, x_col: str, *,
-                     round_to: int = 6):
-    """CUPED variance reduction for A/B deltas (Deng et al. 2013):
-    theta = cov(y, x) / var(x) over ALL units (pre-experiment
-    covariate x), adjusted metric y' = y - theta (x - xbar); reports
-    the raw and adjusted treatment-control mean differences and the
-    variance-reduction factor 1 - corr(y, x)^2. The
-    experimentation-platform standard for tightening Welch's t.
-
-    Scale shape: TWO aggregation passes (global moments as O(1)
-    literals, then per-arm conditional aggregates) — no joins, no
-    per-unit adjustment materialized."""
-    from pyspark.sql import functions as F
-
-    y = F.col(y_col).cast("double")
-    x = F.col(x_col).cast("double")
-    g = df.agg(F.count(F.lit(1)).cast("double").alias("n"),
-               F.sum(x).alias("sx"), F.sum(y).alias("sy"),
-               F.sum(x * y).alias("sxy"), F.sum(x * x).alias("sxx"),
-               F.sum(y * y).alias("syy")).collect()[0]
-    n, sx, sy = float(g["n"]), float(g["sx"]), float(g["sy"])
-    cxy = float(g["sxy"]) / n - (sx / n) * (sy / n)
-    vx = float(g["sxx"]) / n - (sx / n) * (sx / n)
-    vy = float(g["syy"]) / n - (sy / n) * (sy / n)
-    theta = cxy / vx
-    xbar = sx / n
-    adj = y - F.lit(theta) * (x - F.lit(xbar))
-    t = F.col(treat_col).cast("boolean")
-    a = df.agg(
-        F.sum(F.when(t, 1).otherwise(0)).cast("bigint").alias("n_treat"),
-        F.sum(F.when(~t, 1).otherwise(0)).cast("bigint").alias("n_ctrl"),
-        (F.sum(F.when(t, y).otherwise(0.0))
-         / F.sum(F.when(t, 1).otherwise(0))).alias("_mt"),
-        (F.sum(F.when(~t, y).otherwise(0.0))
-         / F.sum(F.when(~t, 1).otherwise(0))).alias("_mc"),
-        (F.sum(F.when(t, adj).otherwise(0.0))
-         / F.sum(F.when(t, 1).otherwise(0))).alias("_at"),
-        (F.sum(F.when(~t, adj).otherwise(0.0))
-         / F.sum(F.when(~t, 1).otherwise(0))).alias("_ac"))
-    return a.select(
-        "n_treat", "n_ctrl",
-        F.round(F.col("_mt") - F.col("_mc"), round_to).alias("raw_diff"),
-        F.round(F.col("_at") - F.col("_ac"), round_to)
-        .alias("cuped_diff"),
-        F.round(F.lit(theta), round_to).alias("theta"),
-        F.round(F.lit(1.0 - cxy * cxy / (vx * vy)), round_to)
-        .alias("var_reduction_factor"))
-
-
-def calibration_bins(scored, score_col: str, label_col: str, *,
-                     n_bins: int = 10, lo: float = -1.0,
-                     hi: float = 1.0, round_to: int = 6):
-    """Reliability diagram table for a score against a boolean label:
-    equal-width score bins over [lo, hi) with mean score, positive
-    rate, and count per bin — read next to threshold_sweep when
-    turning a corpus-quality score into a keep probability.
-
-    Scale shape: one clamped-bin groupBy with map-side partials;
-    O(n_bins) output."""
-    from pyspark.sql import functions as F
-
-    w = (float(hi) - float(lo)) / int(n_bins)
-    b = F.least(F.greatest(
-        F.floor((F.col(score_col) - F.lit(float(lo))) / F.lit(w)),
-        F.lit(0)), F.lit(int(n_bins) - 1)).cast("int")
-    return (scored.groupBy(b.alias("bin"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.round(F.avg(F.col(score_col)), round_to)
-                 .alias("mean_score"),
-                 F.round(F.avg(F.col(label_col).cast("double")),
-                         round_to).alias("positive_rate")))
-
-
-def gini_stump_split(scored, score_col: str, label_col: str,
-                     thresholds: list, *, round_to: int = 6):
-    """Decision-stump split search: for each candidate threshold t,
-    the weighted Gini impurity of the (score >= t) partition against
-    the boolean label — the CART split criterion evaluated as a
-    sweep, picking where a one-feature filter separates best (the
-    quality-classifier cutoff with an impurity justification, next to
-    threshold_sweep's PR view).
-
-    Scale shape: ONE pass — crossJoin against the O(thresholds)
-    literal frame, one groupBy(threshold) of four integer counts,
-    O(1) impurity arithmetic. Returns one row per threshold with
-    (n_left, n_right, pos_left, pos_right, weighted_gini)."""
-    from pyspark.sql import functions as F
-
-    spark = scored.sparkSession
-    tdf = spark.createDataFrame([(float(t),) for t in thresholds],
-                                "threshold double")
-    j = scored.select(F.col(score_col).alias("_s"),
-                      F.col(label_col).cast("boolean").alias("_l")) \
-        .crossJoin(F.broadcast(tdf))
-    right = F.col("_s") >= F.col("threshold")
-    agg = j.groupBy("threshold").agg(
-        F.sum(F.when(right, 1).otherwise(0)).cast("double").alias("nr"),
-        F.sum(F.when(right & F.col("_l"), 1).otherwise(0))
-        .cast("double").alias("pr"),
-        F.sum(F.when(~right, 1).otherwise(0)).cast("double").alias("nl"),
-        F.sum(F.when(~right & F.col("_l"), 1).otherwise(0))
-        .cast("double").alias("pl"))
-    def gini(p, n):
-        frac = p / n
-        return 2 * frac * (1 - frac)
-    n = F.col("nl") + F.col("nr")
-    wg = (F.when(F.col("nl") > 0,
-                 (F.col("nl") / n) * gini(F.col("pl"), F.col("nl")))
-          .otherwise(0.0)
-          + F.when(F.col("nr") > 0,
-                   (F.col("nr") / n) * gini(F.col("pr"), F.col("nr")))
-          .otherwise(0.0))
-    return agg.select(
-        "threshold",
-        F.col("nl").cast("bigint").alias("n_left"),
-        F.col("nr").cast("bigint").alias("n_right"),
-        F.col("pl").cast("bigint").alias("pos_left"),
-        F.col("pr").cast("bigint").alias("pos_right"),
-        F.round(wg, round_to).alias("weighted_gini"))
-
-
-def odds_ratio_2x2(df, exposure_col: str, outcome_col: str, *,
-                   round_to: int = 6):
-    """2x2 odds ratio with the Woolf logit 95% CI: OR = ad / bc,
-    ln OR +- 1.96 sqrt(1/a + 1/b + 1/c + 1/d) — the epidemiology /
-    feature-association staple (exposure x outcome), one conditional
-    aggregate over the table.
-
-    Returns one row (a, b, c, d, odds_ratio, ci_low, ci_high);
-    degenerate cells (any zero) yield NULL OR/CI rather than
-    exploding."""
-    from pyspark.sql import functions as F
-
-    e = F.col(exposure_col).cast("boolean")
-    o = F.col(outcome_col).cast("boolean")
-    agg = df.agg(
-        F.sum(F.when(e & o, 1).otherwise(0)).cast("double").alias("a"),
-        F.sum(F.when(e & ~o, 1).otherwise(0)).cast("double").alias("b"),
-        F.sum(F.when(~e & o, 1).otherwise(0)).cast("double").alias("c"),
-        F.sum(F.when(~e & ~o, 1).otherwise(0)).cast("double").alias("d"))
-    ok = (F.col("a") > 0) & (F.col("b") > 0) & (F.col("c") > 0) \
-        & (F.col("d") > 0)
-    orr = (F.col("a") * F.col("d")) / (F.col("b") * F.col("c"))
-    se = F.sqrt(1 / F.col("a") + 1 / F.col("b")
-                + 1 / F.col("c") + 1 / F.col("d"))
-    return agg.select(
-        F.col("a").cast("bigint").alias("a"),
-        F.col("b").cast("bigint").alias("b"),
-        F.col("c").cast("bigint").alias("c"),
-        F.col("d").cast("bigint").alias("d"),
-        F.round(F.when(ok, orr), round_to).alias("odds_ratio"),
-        F.round(F.when(ok, F.exp(F.log(orr) - 1.96 * se)), round_to)
-        .alias("ci_low"),
-        F.round(F.when(ok, F.exp(F.log(orr) + 1.96 * se)), round_to)
-        .alias("ci_high"))
-
-
-def cohens_kappa(df, rater_a: str, rater_b: str, *,
-                 round_to: int = 6):
-    """Cohen's kappa for two boolean raters: chance-corrected
-    agreement (po - pe) / (1 - pe) — the label-quality gate before
-    trusting any weak-supervision pair (two heuristic quality
-    classifiers agreeing by chance is not agreement).
-
-    One conditional-aggregate pass; integer counts, bit-stable
-    arithmetic. Returns one row (n, po, pe, kappa)."""
-    from pyspark.sql import functions as F
-
-    a = F.col(rater_a).cast("boolean")
-    b = F.col(rater_b).cast("boolean")
-    agg = df.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.when(a & b, 1).otherwise(0)).cast("double").alias("tt"),
-        F.sum(F.when(a & ~b, 1).otherwise(0)).cast("double").alias("tf"),
-        F.sum(F.when(~a & b, 1).otherwise(0)).cast("double").alias("ft"),
-        F.sum(F.when(~a & ~b, 1).otherwise(0)).cast("double").alias("ff"))
-    po = (F.col("tt") + F.col("ff")) / F.col("n")
-    pa = (F.col("tt") + F.col("tf")) / F.col("n")
-    pb = (F.col("tt") + F.col("ft")) / F.col("n")
-    pe = pa * pb + (1 - pa) * (1 - pb)
-    return agg.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.round(po, round_to).alias("po"),
-        F.round(pe, round_to).alias("pe"),
-        F.round(F.when(pe != 1.0, (po - pe) / (1 - pe)), round_to)
-        .alias("kappa"))
-
-
-def runs_test(df, key_col: str, flag_col: str, order_cols: list, *,
-              round_to: int = 6):
-    """Wald-Wolfowitz runs test per key: with n1 trues, n2 falses and
-    R observed runs in the ordered binary sequence,
-    z = (R - E[R]) / sqrt(V[R]), E[R] = 1 + 2 n1 n2 / n — the
-    cheapest randomness screen (|z| >> 0 = clustering or strict
-    alternation) for per-host outcome streams.
-
-    Scale shape: one per-key ROW lag window to count run boundaries +
-    one groupBy(key); integer counts, closed-form z. Keys with a
-    constant sequence yield NULL z (V = 0)."""
-    from pyspark.sql import Window, functions as F
-
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
-    b = F.col(flag_col).cast("boolean")
-    d = df.select(F.col(key_col), b.alias("_b"),
-                  (b != F.lag(b).over(w)).alias("_chg"))
-    g = d.groupBy(key_col).agg(
-        F.sum(F.when(F.col("_b"), 1).otherwise(0)).cast("double")
-        .alias("n1"),
-        F.sum(F.when(~F.col("_b"), 1).otherwise(0)).cast("double")
-        .alias("n2"),
-        (F.sum(F.when(F.col("_chg"), 1).otherwise(0)) + 1)
-        .cast("double").alias("runs"))
-    n = F.col("n1") + F.col("n2")
-    er = 1 + 2 * F.col("n1") * F.col("n2") / n
-    vr = (2 * F.col("n1") * F.col("n2")
-          * (2 * F.col("n1") * F.col("n2") - n)) / (n * n * (n - 1))
-    return g.select(
-        key_col,
-        F.col("n1").cast("bigint").alias("n_true"),
-        F.col("n2").cast("bigint").alias("n_false"),
-        F.col("runs").cast("bigint").alias("n_runs"),
-        F.round(er, round_to).alias("expected_runs"),
-        F.round(F.when(vr > 0, (F.col("runs") - er) / F.sqrt(vr)),
-                round_to).alias("z"))
-
-
-def mcnemar_test(df, rater_a: str, rater_b: str, *,
-                 round_to: int = 6):
-    """McNemar's test for paired raters (McNemar 1947, plain form):
-    chi2 = (b - c)^2 / (b + c) over the discordant cells — did
-    swapping classifier A for B actually CHANGE outcomes, the paired
-    companion of cohens_kappa (which measures agreement, not
-    direction). One conditional aggregate; b + c = 0 yields NULL."""
-    from pyspark.sql import functions as F
-
-    a = F.col(rater_a).cast("boolean")
-    bb = F.col(rater_b).cast("boolean")
-    agg = df.agg(
-        F.sum(F.when(a & ~bb, 1).otherwise(0)).cast("double").alias("b"),
-        F.sum(F.when(~a & bb, 1).otherwise(0)).cast("double").alias("c"))
-    return agg.select(
-        F.col("b").cast("bigint").alias("b"),
-        F.col("c").cast("bigint").alias("c"),
-        F.round(F.when(F.col("b") + F.col("c") > 0,
-                       (F.col("b") - F.col("c"))
-                       * (F.col("b") - F.col("c"))
-                       / (F.col("b") + F.col("c"))), round_to)
-        .alias("chi2"))
-
-
-def gain_curve_bins(scored, score_col: str, label_col: str, *,
-                    n_bins: int = 20, lo: float = -1.0, hi: float = 1.0,
-                    round_to: int = 6):
-    """Cumulative gains table on fixed-width score bins, best-first:
-    per bin (descending score) the cumulative share of documents
-    inspected and of positives captured — the lift chart read before
-    committing a classifier cutoff to a keep-budget (the
-    selection_tradeoff idiom applied to classifier evaluation).
-
-    Scale shape: one clamped-bin groupBy, then the cumulation folds
-    over the O(n_bins) band array descending — no global window."""
-    from pyspark.sql import functions as F
-
-    w = (float(hi) - float(lo)) / int(n_bins)
-    b = F.least(F.greatest(
-        F.floor((F.col(score_col) - F.lit(float(lo))) / F.lit(w)),
-        F.lit(0)), F.lit(int(n_bins) - 1)).cast("int")
-    bands = (scored.select(b.alias("bin"),
-                           F.col(label_col).cast("int").alias("_l"))
-             .groupBy("bin")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                  F.sum("_l").cast("bigint").alias("pos")))
-    row = F.struct(F.col("bin"), F.col("n"), F.col("pos"))
-    folded = bands.agg(
-        F.reverse(F.array_sort(F.collect_list(row))).alias("a"))
-    rows = folded.select(F.expr(
-        "transform(a, (r, i) -> named_struct("
-        "  'bin', r.bin, 'n', r.n, 'pos', r.pos,"
-        "  'cn', aggregate(slice(a, 1, i + 1), CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.n),"
-        "  'cp', aggregate(slice(a, 1, i + 1), CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.pos),"
-        "  'tn', aggregate(a, CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.n),"
-        "  'tp', aggregate(a, CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.pos)))").alias("rows"))
-    return (rows.select(F.explode("rows").alias("r"))
-            .select(F.col("r.bin").alias("bin"),
-                    F.col("r.n").alias("n"),
-                    F.col("r.pos").alias("pos"),
-                    F.round(F.col("r.cn") / F.col("r.tn"), round_to)
-                    .alias("cum_inspected_share"),
-                    F.round(F.when(F.col("r.tp") > 0,
-                                   F.col("r.cp") / F.col("r.tp")),
-                            round_to).alias("cum_positive_capture")))
-
-
-def brier_score(scored, prob_col: str, label_col: str, *,
-                round_to: int = 6):
-    """Brier score: mean squared error of predicted probabilities
-    against boolean outcomes, with the Murphy decomposition's
-    reference term (label base rate variance) for context — the
-    strictly proper scoring rule behind calibration_bins. One
-    aggregate pass. Returns (n, base_rate, brier, brier_ref)."""
-    from pyspark.sql import functions as F
-
-    p = F.col(prob_col).cast("double")
-    y = F.col(label_col).cast("double")
-    agg = scored.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg(y).alias("base"),
-        F.avg((p - y) * (p - y)).alias("brier"))
-    return agg.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.round("base", round_to).alias("base_rate"),
-        F.round("brier", round_to).alias("brier"),
-        F.round(F.col("base") * (1 - F.col("base")), round_to)
-        .alias("brier_ref"))
-
-
-def theil_t_index(df, key_col: str, value_col: str, *,
-                  round_to: int = 6):
-    """Theil T inequality index per group:
-    T = (1/n) sum (x_i / mu) ln(x_i / mu) — 0 under perfect equality,
-    ln(n) under total concentration; the decomposable companion of
-    the Gini family (host_gini). Zero/negative values drop
-    (ln-undefined — the standard convention, disclosed). Two
-    aggregation passes per group (mean, then the T rollup), all
-    map-side partials."""
-    from pyspark.sql import functions as F
-
-    x = F.col(value_col).cast("double")
-    base = df.select(F.col(key_col).alias("_k"), x.alias("_x")) \
-        .filter(F.col("_x") > 0)
-    mu = base.groupBy("_k").agg(F.avg("_x").alias("_mu"),
-                                F.count(F.lit(1)).alias("_n"))
-    j = base.join(mu, "_k")
-    return (j.groupBy("_k")
-            .agg(F.first("_n").cast("bigint").alias("n"),
-                 F.round(F.first("_mu"), round_to).alias("mean_value"),
-                 F.round(F.avg((F.col("_x") / F.col("_mu"))
-                               * F.log(F.col("_x") / F.col("_mu"))),
-                         round_to).alias("theil_t"))
-            .withColumnRenamed("_k", key_col))
-
-
-def expected_calibration_error(scored, prob_col: str, label_col: str, *,
-                               n_bins: int = 10, round_to: int = 6):
-    """Expected Calibration Error: bin predicted probabilities into
-    equal-width [0,1) bins, ECE = sum (n_b / N) |acc_b - conf_b| —
-    the one-number summary of the calibration_bins table (Naeini et
-    al. 2015). One clamped-bin groupBy + one O(bins) rollup. Returns
-    (n, n_bins_used, ece)."""
-    from pyspark.sql import functions as F
-
-    p = F.col(prob_col).cast("double")
-    y = F.col(label_col).cast("double")
-    w = 1.0 / int(n_bins)
-    b = F.least(F.greatest(F.floor(p / F.lit(w)), F.lit(0)),
-                F.lit(int(n_bins) - 1)).cast("int")
-    bins = (scored.select(b.alias("_b"), p.alias("_p"), y.alias("_y"))
-            .groupBy("_b")
-            .agg(F.count(F.lit(1)).cast("double").alias("_n"),
-                 F.avg("_p").alias("_conf"), F.avg("_y").alias("_acc")))
-    tot = bins.agg(F.sum("_n").alias("_t"))
-    return (bins.crossJoin(F.broadcast(tot))
-            .agg(F.sum("_n").cast("bigint").alias("n"),
-                 F.count(F.lit(1)).cast("bigint").alias("n_bins_used"),
-                 F.round(F.sum((F.col("_n") / F.col("_t"))
-                               * F.abs(F.col("_acc") - F.col("_conf"))),
-                         round_to).alias("ece")))
-
-
-def var_expected_shortfall(df, key_col: str, value_col: str,
-                           q: float, *, tiebreak: str,
-                           round_to: int = 6):
-    """Per-key Value-at-Risk and Expected Shortfall at level q: VaR =
-    the value at rank ceil(q * n) in the key's ascending order (the
-    empirical upper-q quantile under a total order via ``tiebreak``),
-    ES = the mean of values at or beyond that rank — the tail-risk
-    pair (p99 latency + beyond-p99 mass) for per-host budgets.
-
-    Scale shape: one PARTITIONED rank window + one conditional
-    aggregate per key — never a global order."""
-    from pyspark.sql import Window, functions as F
-
-    w = Window.partitionBy(key_col).orderBy(F.col(value_col),
-                                            F.col(tiebreak))
-    wc = Window.partitionBy(key_col)
-    d = (df.withColumn("_rn", F.row_number().over(w))
-         .withColumn("_n", F.count(F.lit(1)).over(wc))
-         .withColumn("_k", F.ceil(F.lit(float(q)) * F.col("_n"))
-                     .cast("bigint")))
-    tail = F.col("_rn") >= F.col("_k")
-    return (d.groupBy(key_col)
-            .agg(F.first("_n").cast("bigint").alias("n"),
-                 F.round(F.max(F.when(F.col("_rn") == F.col("_k"),
-                                      F.col(value_col).cast("double"))),
-                         round_to).alias("var_q"),
-                 F.round(F.avg(F.when(tail,
-                                      F.col(value_col).cast("double"))),
-                         round_to).alias("expected_shortfall")))
-
-
-def fleiss_kappa_binary(rated, rater_cols: list, *,
-                        round_to: int = 6):
-    """Fleiss' kappa for m boolean raters on n items (Fleiss 1971):
-    per-item agreement P_i = (pos_i(pos_i-1) + neg_i(neg_i-1)) /
-    (m(m-1)), Pbar vs chance Pe from the pooled category shares —
-    the multi-rater generalization of cohens_kappa for
-    weak-supervision label stacks.
-
-    One pass: per-row positive count is codegen arithmetic; two
-    scalar aggregates. Returns (n_items, n_raters, p_bar, p_e,
-    kappa)."""
-    from pyspark.sql import functions as F
-
-    m = len(rater_cols)
-    pos = sum(F.col(c).cast("int") for c in rater_cols)
-    d = rated.select(pos.cast("double").alias("_p"))
-    agg = d.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg((F.col("_p") * (F.col("_p") - 1)
-               + (m - F.col("_p")) * (m - F.col("_p") - 1))
-              / F.lit(float(m * (m - 1)))).alias("pbar"),
-        (F.sum("_p") / (F.count(F.lit(1)) * m)).alias("q"))
-    pe = F.col("q") * F.col("q") + (1 - F.col("q")) * (1 - F.col("q"))
-    return agg.select(
-        F.col("n").cast("bigint").alias("n_items"),
-        F.lit(m).cast("int").alias("n_raters"),
-        F.round("pbar", round_to).alias("p_bar"),
-        F.round(pe, round_to).alias("p_e"),
-        F.round(F.when(pe != 1.0,
-                       (F.col("pbar") - pe) / (1 - pe)), round_to)
-        .alias("kappa"))
-
-
-def fano_factor(events, key_col: str, bucket_col: str, *,
-                round_to: int = 6):
-    """Fano factor (index of dispersion) of bucketed event counts per
-    key: variance / mean of counts over the key's observed buckets —
-    1 under Poisson arrivals, > 1 bursty, < 1 regular; the temporal
-    twin of quadrat_dispersion's spatial VMR (and the count-domain
-    sibling of interarrival_burstiness).
-
-    Scale shape: one groupBy(key, bucket) + one moment rollup per
-    key; integer counts, exact sums. Keys with < 2 buckets yield
-    NULL fano."""
-    from pyspark.sql import functions as F
-
-    c = (events.groupBy(F.col(key_col).alias("_k"),
-                        F.col(bucket_col).alias("_b"))
-         .agg(F.count(F.lit(1)).cast("double").alias("_c")))
-    g = c.groupBy("_k").agg(
-        F.count(F.lit(1)).cast("double").alias("nb"),
-        F.sum("_c").alias("s"),
-        F.sum(F.col("_c") * F.col("_c")).alias("ss"))
-    mean = F.col("s") / F.col("nb")
-    var = F.when(F.col("nb") > 1,
-                 (F.col("ss") - F.col("nb") * mean * mean)
-                 / (F.col("nb") - 1))
-    return g.select(
-        F.col("_k").alias(key_col),
-        F.col("nb").cast("bigint").alias("n_buckets"),
-        F.col("s").cast("bigint").alias("n_events"),
-        F.round(mean, round_to).alias("mean_count"),
-        F.round(var / mean, round_to).alias("fano"))
-
-
-def gini_by_group(df, key_col: str, value_col: str, *,
-                  tiebreak: str, round_to: int = 6):
-    """Exact Gini coefficient per group via the rank identity
-    G = 2 sum(i * x_(i)) / (n * sum x) - (n + 1) / n over the
-    ascending within-group order (total via ``tiebreak``) — the
-    per-segment refinement of the global host_gini, one PARTITIONED
-    rank window + one aggregate (never a global sort). Non-negative
-    values assumed (disclosed); n < 2 yields NULL."""
-    from pyspark.sql import Window, functions as F
-
-    w = Window.partitionBy(key_col).orderBy(F.col(value_col),
-                                            F.col(tiebreak))
-    d = df.select(F.col(key_col),
-                  F.col(value_col).cast("double").alias("_x"),
-                  F.row_number().over(w).cast("double").alias("_i"))
-    g = d.groupBy(key_col).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("_x").alias("s"),
-        F.sum(F.col("_i") * F.col("_x")).alias("ix"))
-    return g.select(
-        key_col, F.col("n").cast("bigint").alias("n"),
-        F.round(F.when((F.col("n") >= 2) & (F.col("s") > 0),
-                       2 * F.col("ix") / (F.col("n") * F.col("s"))
-                       - (F.col("n") + 1) / F.col("n")), round_to)
-        .alias("gini"))
-
-
-def concentration_ratio(df, key_col: str, value_col: str, k: int, *,
-                        round_to: int = 6):
-    """CR-k concentration ratio: the share of the total carried by
-    the top-k keys by summed value (CR4/CR8 of industrial
-    organization, here for host/source dominance) — one groupBy +
-    TakeOrdered top-k + one scalar total; never a global sort.
-    Returns one row (k, total, top_k_sum, cr_k)."""
-    from pyspark.sql import functions as F
-
-    per = df.groupBy(F.col(key_col).alias("_k")).agg(
-        F.sum(F.col(value_col).cast("double")).alias("_v"))
-    top = (per.orderBy(F.desc("_v"), F.asc("_k")).limit(int(k))
-           .agg(F.sum("_v").alias("_top")))
-    tot = per.agg(F.sum("_v").alias("_tot"))
-    return (top.crossJoin(F.broadcast(tot))
-            .select(F.lit(int(k)).alias("k"),
-                    F.round("_tot", round_to).alias("total"),
-                    F.round("_top", round_to).alias("top_k_sum"),
-                    F.round(F.col("_top") / F.col("_tot"), round_to)
-                    .alias("cr_k")))
-
-
 def ks_two_sample(df, group_col: str, value_col: str, *,
                   round_to: int = 6):
     """Two-sample Kolmogorov-Smirnov statistic: the maximum absolute
@@ -1001,7 +292,7 @@ def anova_f_oneway(df, group_col: str, value_col: str, *,
     """One-way ANOVA F statistic across the groups of ``group_col``:
     F = (SSB/(k-1)) / (SSW/(n-k)), computed from per-group
     (count, sum, sum-of-squares) moments — the k-group generalization
-    of `welch_ttest`'s one-pass moment shape (pooled variance here, as
+    of a two-sample t test's one-pass moment shape (pooled variance here, as
     classical ANOVA defines it).
 
     Scale shape: one groupBy with map-side partial moments, then O(k)
@@ -1189,7 +480,7 @@ def chi_square_gof(df, cat_col: str, *, round_to: int = 6):
 def log_loss(scored, prob_col: str, label_col: str, *,
              eps: float = 1e-6, round_to: int = 6):
     """Cross-entropy (log loss) of predicted probabilities against
-    boolean outcomes, the likelihood-based companion of brier_score:
+    boolean outcomes, the likelihood-based companion of the Brier score:
 
         LL = -mean( y ln p' + (1-y) ln(1-p') )
 
@@ -1315,308 +606,6 @@ def population_stability_index(df, value_col: str, expected_col: str, *,
                     "psi"))
 
 
-def brown_forsythe(df, group_col: str, value_col: str, *,
-                   round_to: int = 6):
-    """Brown-Forsythe test (Levene's test with MEDIAN centers) for
-    homogeneity of variances across the groups of ``group_col``: the
-    one-way ANOVA F statistic applied to the absolute deviations
-    z = |x - median(group)|. The median-centered variant is the
-    robust recommendation of Brown & Forsythe (1974) — the companion
-    diagnostic to `anova_f_oneway`, whose pooled-variance assumption
-    this test checks.
-
-    Scale shape: one groupBy for the exact per-group medians
-    (`median` — interpolated percentile; at 100 TB swap in
-    percentile_approx or `exact_quantiles`' distributed selection,
-    same contract), a BROADCAST join of the k-row median table back
-    onto the rows, then the `anova_f_oneway` moment shape on z. Only
-    ratio statistics are returned (F, eta-squared) — raw sums of
-    squares sit at magnitudes where summation-order ulps would poison
-    a 6-dp cross-engine compare; medians and |x - med| are exact.
-    Returns one row (k, n, bf_stat, eta_sq)."""
-    from pyspark.sql import functions as F
-
-    v = F.col(value_col).cast("double")
-    med = df.groupBy(F.col(group_col).alias("_g")).agg(
-        F.median(v).alias("_med"))
-    z = (df.join(F.broadcast(med),
-                 F.col(group_col) == F.col("_g"))
-         .select(F.col("_g"),
-                 F.abs(v - F.col("_med")).alias("_z")))
-    out = anova_f_oneway(z, "_g", "_z", round_to=round_to)
-    return out.withColumnRenamed("f_stat", "bf_stat")
-
-
-def platt_scaling(df, score_col: str, label_col: str, *,
-                  iters: int = 3, round_to: int = 6):
-    """Platt scaling (Platt 1999): fit p = sigmoid(a*score + b) to the
-    binary labels by ``iters`` Newton-Raphson steps from (a, b) =
-    (1, 0) — the parametric companion to `isotonic_calibration` (and
-    the standard calibrator when the reliability curve is sigmoidal
-    rather than merely monotone). Each step solves the exact 2x2
-    Newton system from six sufficient statistics:
-      g = [sum((p-y)*s), sum(p-y)],  H = [[sum(w*s*s), sum(w*s)],
-                                          [sum(w*s),   sum(w)]],
-    w = p*(1-p), and updates (a, b) -= H^-1 g via the closed-form
-    2x2 inverse.
-
-    Scale shape: one map-side-combinable aggregate per iteration over
-    (score, label) — no join, no window; state is two driver scalars
-    per iteration (the kmeans/GMM collect pattern, O(1)). (a, b) are
-    rounded to 12 decimals per iteration so the Newton trajectory is
-    bit-reproducible across engines and partitionings (the pagerank
-    discipline). Returns one row (n, a, b, log_loss) with the final
-    coefficients and the calibrated log loss, rounded to
-    ``round_to``."""
-    from pyspark.sql import functions as F
-
-    s = F.col("_s")
-    y = F.col("_y")
-    base = df.select(
-        F.col(score_col).cast("double").alias("_s"),
-        F.col(label_col).cast("double").alias("_y"))
-    a, b = 1.0, 0.0
-    for _ in range(iters):
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.lit(a) * s + F.lit(b))))
-        w = p * (F.lit(1.0) - p)
-        row = base.agg(
-            F.sum((p - y) * s).alias("ga"),
-            F.sum(p - y).alias("gb"),
-            F.sum(w * s * s).alias("waa"),
-            F.sum(w * s).alias("wab"),
-            F.sum(w).alias("wbb")).collect()[0]
-        det = row.waa * row.wbb - row.wab * row.wab
-        a = round(a - (row.wbb * row.ga - row.wab * row.gb) / det, 12)
-        b = round(b - (row.waa * row.gb - row.wab * row.ga) / det, 12)
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.lit(a) * s + F.lit(b))))
-    return base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.lit(a), round_to).alias("a"),
-        F.round(F.lit(b), round_to).alias("b"),
-        F.round(-F.avg(y * F.log(p)
-                       + (F.lit(1.0) - y) * F.log(F.lit(1.0) - p)),
-                round_to).alias("log_loss"))
-
-
-def huber_fit_per_group(df, group_col: str, x_col, y_col, *,
-                        k: float = 40.0, iters: int = 3,
-                        round_to: int = 6):
-    """Huber-loss robust simple regression per group (Huber 1964) via
-    IRLS: start from the OLS fit, then ``iters`` reweighted passes
-    with w = 1 inside the |residual| <= k band and k/|residual|
-    outside — the outlier-resistant companion to the OLS
-    `linear_fit_per_group` query and the regression-shaped sibling of
-    `theil_sen` (which pays a pairwise blowup for full 29% breakdown;
-    Huber keeps one-pass moments per iteration). The tuning constant
-    ``k`` is in RESPONSE units by contract (no per-iteration scale
-    re-estimation — the deterministic fixed-k variant, documented so
-    the oracle replays it exactly).
-
-    Scale shape per iteration: broadcast the O(groups) coefficient
-    table back onto the rows, one groupBy with map-side-combinable
-    weighted moments, closed-form 2x2 solve — the corpus is scanned
-    iters+2 times and nothing else shuffles. The weight expression
-    divides ONLY in the |r| > k branch (no divide-by-zero under ANSI,
-    the wave-36 lesson). Coefficients are rounded to 12 decimals per
-    iteration (the pagerank discipline). Returns one row per group
-    (group, n, slope, intercept, n_downweighted)."""
-    from pyspark.sql import functions as F
-
-    x = F.col(x_col).cast("double") if isinstance(x_col, str) else x_col
-    y = F.col(y_col).cast("double") if isinstance(y_col, str) else y_col
-    base = df.select(F.col(group_col).alias("_g"), x.alias("_x"),
-                     y.alias("_y"))
-    kk = F.lit(float(k))
-
-    def _fit(weighted):
-        agg = weighted.groupBy("_g").agg(
-            F.sum("_w").alias("sw"),
-            F.sum(F.col("_w") * F.col("_x")).alias("swx"),
-            F.sum(F.col("_w") * F.col("_y")).alias("swy"),
-            F.sum(F.col("_w") * F.col("_x") * F.col("_x")).alias("swxx"),
-            F.sum(F.col("_w") * F.col("_x") * F.col("_y")).alias("swxy"))
-        b1 = ((F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy"))
-              / (F.col("sw") * F.col("swxx")
-                 - F.col("swx") * F.col("swx")))
-        b0 = (F.col("swy") - b1 * F.col("swx")) / F.col("sw")
-        return (agg.select("_g", F.round(b1, 12).alias("_b1"),
-                           F.round(b0, 12).alias("_b0"))
-                .localCheckpoint(eager=False))
-
-    def _resid():
-        return F.abs(F.col("_y") - F.col("_b0")
-                     - F.col("_b1") * F.col("_x"))
-
-    coef = _fit(base.withColumn("_w", F.lit(1.0)))
-    for _ in range(iters):
-        joined = base.join(F.broadcast(coef), "_g")
-        w = F.when(_resid() <= kk, F.lit(1.0)).otherwise(kk / _resid())
-        coef = _fit(joined.select("_g", "_x", "_y", w.alias("_w")))
-    fin = base.join(F.broadcast(coef), "_g")
-    return (fin.groupBy("_g")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.first("_b1").alias("_s"), F.first("_b0").alias("_i"),
-                 F.sum(F.when(_resid() > kk, 1).otherwise(0))
-                 .cast("bigint").alias("n_downweighted"))
-            .select(F.col("_g").alias(group_col), "n",
-                    F.round("_s", round_to).alias("slope"),
-                    F.round("_i", round_to).alias("intercept"),
-                    "n_downweighted")
-            .orderBy(group_col))
-
-
-def cochran_armitage(df, score_col: str, success_col: str, *,
-                     round_to: int = 6):
-    """Cochran-Armitage trend test (Cochran 1954, Armitage 1955) for
-    a monotone trend in binomial proportions across ORDERED groups
-    with integer scores t_j: T = sum_j t_j (r_j - n_j R/N),
-    Var(T) = (R/N)(1 - R/N) (sum n_j t_j^2 - (sum n_j t_j)^2 / N),
-    z = T / sqrt(Var) — the dose-response member of the contingency
-    family (chi_square_independence detects ANY association; this is
-    the 1-df test aimed at ordered exposure).
-
-    Scale shape: one groupBy(score) with map-side partial counts,
-    then O(levels) scalar algebra — integer sufficient statistics,
-    so only the final ratios round. Returns one row
-    (n, n_success, k_levels, t_stat, z)."""
-    from pyspark.sql import functions as F
-
-    g = (df.select(F.col(score_col).cast("double").alias("_t"),
-                   F.col(success_col).cast("double").alias("_y"))
-         .groupBy("_t")
-         .agg(F.count(F.lit(1)).cast("double").alias("_n"),
-              F.sum("_y").alias("_r")))
-    agg = g.agg(F.sum("_n").alias("N"), F.sum("_r").alias("R"),
-                F.count(F.lit(1)).alias("k"),
-                F.sum(F.col("_t") * F.col("_r")).alias("tr"),
-                F.sum(F.col("_t") * F.col("_n")).alias("tn"),
-                F.sum(F.col("_t") * F.col("_t") * F.col("_n"))
-                .alias("ttn"))
-    p = F.col("R") / F.col("N")
-    t = F.col("tr") - p * F.col("tn")
-    var = (p * (1 - p)
-           * (F.col("ttn") - F.col("tn") * F.col("tn") / F.col("N")))
-    return agg.select(
-        F.col("N").cast("bigint").alias("n"),
-        F.col("R").cast("bigint").alias("n_success"),
-        F.col("k").cast("bigint").alias("k_levels"),
-        F.round(t, round_to).alias("t_stat"),
-        F.round(t / F.sqrt(var), round_to).alias("z"))
-
-
-def cronbach_alpha(items, subject_col: str, item_col: str,
-                   value_col: str, *, round_to: int = 6):
-    """Cronbach's alpha internal-consistency coefficient (Cronbach
-    1951) over a long-form (subject, item, value) table:
-    alpha = k/(k-1) * (1 - sum_i var(item_i) / var(total per
-    subject)) — the reliability gate for any composite score a
-    pipeline builds by SUMMING signals (quality subscores, rater
-    panels, multi-probe metrics). Sample variances on both terms.
-
-    Scale shape: one groupBy(subject) pivot-free pass for the totals
-    (sum per subject), one groupBy(item) for per-item variances —
-    two shuffles over the long table, no wide pivot. The caller
-    supplies a DENSE long-form table (gap-fill zeros upstream —
-    the timeseries_gap_fill discipline) so per-item variances see
-    every subject. Returns one row (k_items, n_subjects, alpha)."""
-    from pyspark.sql import functions as F
-
-    v = F.col(value_col).cast("double")
-    per_item = (items.groupBy(item_col)
-                .agg(F.var_samp(v).alias("_vi")))
-    iv = per_item.agg(F.count(F.lit(1)).alias("k"),
-                      F.sum("_vi").alias("svi"))
-    totals = (items.groupBy(subject_col).agg(F.sum(v).alias("_tot")))
-    tv = totals.agg(F.count(F.lit(1)).alias("n"),
-                    F.var_samp("_tot").alias("vt"))
-    return (iv.crossJoin(tv)
-            .select(F.col("k").cast("bigint").alias("k_items"),
-                    F.col("n").cast("bigint").alias("n_subjects"),
-                    F.round((F.col("k") / (F.col("k") - 1))
-                            * (1 - F.col("svi") / F.col("vt")),
-                            round_to).alias("alpha")))
-
-
-def did_estimator(df, treat_col: str, post_col: str, y_col: str, *,
-                  round_to: int = 6):
-    """Two-by-two difference-in-differences estimator:
-    DiD = (mean_T,post - mean_T,pre) - (mean_C,post - mean_C,pre),
-    with the standard unpooled SE sqrt(sum_cells s^2/n) — the
-    quasi-experimental effect estimate for rollouts where treatment
-    isn't randomized but trends are parallel (the observational
-    companion to cuped_adjustment's variance reduction).
-
-    Scale shape: ONE groupBy over the (treat, post) cells with
-    map-side moments; everything after is O(1) scalar algebra on the
-    4-row cell table. Returns one row with the four cell means, the
-    DiD estimate, and its SE."""
-    from pyspark.sql import functions as F
-
-    y = F.col(y_col).cast("double")
-    cells = (df.groupBy(F.col(treat_col).cast("int").alias("_t"),
-                        F.col(post_col).cast("int").alias("_p"))
-             .agg(F.count(F.lit(1)).cast("double").alias("_n"),
-                  F.avg(y).alias("_m"),
-                  F.var_samp(y).alias("_v")))
-
-    def cell(t, p, col):
-        return F.max(F.when((F.col("_t") == t) & (F.col("_p") == p),
-                            F.col(col)))
-
-    agg = cells.agg(
-        cell(1, 0, "_m").alias("m_t_pre"), cell(1, 1, "_m").alias("m_t_post"),
-        cell(0, 0, "_m").alias("m_c_pre"), cell(0, 1, "_m").alias("m_c_post"),
-        (cell(1, 0, "_v") / cell(1, 0, "_n")
-         + cell(1, 1, "_v") / cell(1, 1, "_n")
-         + cell(0, 0, "_v") / cell(0, 0, "_n")
-         + cell(0, 1, "_v") / cell(0, 1, "_n")).alias("_se2"),
-        F.sum("_n").alias("n"))
-    did = ((F.col("m_t_post") - F.col("m_t_pre"))
-           - (F.col("m_c_post") - F.col("m_c_pre")))
-    return agg.select(
-        F.col("n").cast("bigint").alias("n"),
-        F.round("m_t_pre", round_to).alias("mean_treat_pre"),
-        F.round("m_t_post", round_to).alias("mean_treat_post"),
-        F.round("m_c_pre", round_to).alias("mean_ctrl_pre"),
-        F.round("m_c_post", round_to).alias("mean_ctrl_post"),
-        F.round(did, round_to).alias("did"),
-        F.round(F.sqrt(F.col("_se2")), round_to).alias("se"))
-
-
-def negative_binomial_fit(df, group_col: str, count_col: str, *,
-                          round_to: int = 6):
-    """Negative-binomial method-of-moments fit per group for
-    overdispersed count columns: r = m^2 / (v - m), p = m / v (so the
-    NB mean m = r(1-p)/p and variance v = m/p are matched exactly) —
-    the dispersion-aware upgrade of a Poisson rate (fano_factor_counts
-    DETECTS overdispersion; this fits the two-parameter model that
-    absorbs it, the standard prior for per-host page counts and crawl
-    burst sizes). The caller guarantees v > m per contract (fit the
-    fano factor first); groups violating it surface as negative r
-    rather than being silently dropped.
-
-    Scale shape: one groupBy with map-side count/sum/sum-of-squares
-    moments, scalar epilogue — integer sufficient statistics, ratios
-    rounded. Returns (group, n, mean, variance, r, p)."""
-    from pyspark.sql import functions as F
-
-    x = F.col(count_col).cast("double")
-    g = df.groupBy(F.col(group_col).alias("_g")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).alias("s"), F.sum(x * x).alias("ss"))
-    m = F.col("s") / F.col("n")
-    v = (F.col("ss") - F.col("s") * F.col("s") / F.col("n")) \
-        / (F.col("n") - 1)
-    return (g.select(
-        F.col("_g").alias(group_col),
-        F.col("n").cast("bigint").alias("n"),
-        F.round(m, round_to).alias("mean"),
-        F.round(v, round_to).alias("variance"),
-        F.round(m * m / (v - m), round_to).alias("r"),
-        F.round(m / v, round_to).alias("p"))
-        .orderBy(group_col))
-
-
 def anderson_darling_uniform(df: DataFrame, group_col: str,
                              value_col: str, *,
                              round_to: int = 6) -> DataFrame:
@@ -1663,51 +652,6 @@ def anderson_darling_uniform(df: DataFrame, group_col: str,
     return out.orderBy(group_col)
 
 
-def benford_first_digit(df: DataFrame, group_col: str,
-                        value_col: str, *,
-                        round_to: int = 6) -> DataFrame:
-    """Benford first-significant-digit conformity per group: observed
-    first-digit counts of positive integer values vs the Benford null
-    p_d = log10(1 + 1/d), summarized as the chi-square statistic and
-    the mean-absolute-deviation of proportions (Nigrini's MAD, the
-    forensic-accounting screen). First digit comes from the decimal
-    string cast — identical in Spark and DuckDB for BIGINT — so no
-    float log extraction can disagree.
-
-    Scale shape: one groupBy(group, digit) count (map-side
-    combinable), then a 9-row-per-group fold — second aggregate runs
-    on O(groups x 9) rows, never the data."""
-    v = F.col(value_col).cast("bigint")
-    dig = F.substring(v.cast("string"), 1, 1).cast("int")
-    counts = (df.filter(v > 0)
-              .select(F.col(group_col).alias("g"), dig.alias("d"))
-              .groupBy("g", "d").agg(F.count(F.lit(1)).alias("c")))
-    p = (F.log10(F.lit(1.0) + F.lit(1.0) / F.col("dd")))
-    # dense 9-digit frame per group so missing digits count as 0
-    digits = (counts.select("g").distinct()
-              .crossJoin(counts.sparkSession.range(1, 10)
-                         .select(F.col("id").cast("int").alias("dd"))))
-    full = (digits.join(counts,
-                        (digits.g == counts.g) & (digits.dd == counts.d),
-                        "left")
-            .select(digits.g.alias("g"), "dd",
-                    F.coalesce("c", F.lit(0)).cast("double").alias("c")))
-    tot = full.groupBy("g").agg(F.sum("c").alias("n"))
-    out = (full.join(tot, "g")
-           .withColumn("exp", F.col("n") * p)
-           .groupBy("g").agg(
-               F.first("n").alias("n"),
-               F.sum((F.col("c") - F.col("exp"))
-                     * (F.col("c") - F.col("exp")) / F.col("exp"))
-               .alias("chi2"),
-               F.avg(F.abs(F.col("c") / F.col("n") - p)).alias("mad"))
-           .select(F.col("g").alias(group_col),
-                   F.col("n").cast("bigint").alias("n"),
-                   F.round("chi2", round_to).alias("chi2"),
-                   F.round("mad", round_to).alias("mad")))
-    return out.orderBy(group_col)
-
-
 def grubbs_statistic(df: DataFrame, group_col: str, value_col: str,
                      id_col: str, *, round_to: int = 6) -> DataFrame:
     """Grubbs' outlier statistic per group: G = max|x - mean| / sd
@@ -1744,125 +688,6 @@ def grubbs_statistic(df: DataFrame, group_col: str, value_col: str,
                 F.round(F.col("mad_") / F.col("sd"), round_to)
                 .alias("g_stat"),
                 F.col("outlier_id")))
-    return out.orderBy(group_col)
-
-
-def permutation_test_mean(df: DataFrame, group_col: str,
-                          value_col: str, id_col: str, side_col: str,
-                          *, n_perm: int = 64,
-                          round_to: int = 6) -> DataFrame:
-    """Two-sample permutation test of the mean difference per group,
-    with DETERMINISTIC hash resampling (Fisher 1935, the exact-test
-    idea; Monte-Carlo variant with hash-derived label flips instead
-    of an RNG so both engines replay the identical permutations):
-    statistic T = mean(side=0) - mean(side=1); permutation b
-    reassigns each row to side h(id, b) % 2; the reported p-value is
-    (1 + #{|T_b| >= |T|}) / (n_perm + 1) — the add-one Monte-Carlo
-    estimator, never exactly 0.
-
-    Float parity: integer values make every side sum exact, so T and
-    each T_b are identical double divisions across engines and the
-    |T_b| >= |T| comparisons cannot flip.
-
-    Scale shape: rows explode x n_perm into ONE map-side-combinable
-    (g, b, side) groupBy — two shuffle-free partial-agg passes and
-    O(groups x n_perm) final algebra; nothing is collected."""
-    g = F.col(group_col).alias("g")
-    base = df.select(g, F.col(value_col).cast("double").alias("v"),
-                     F.col(id_col).cast("bigint").alias("rid"),
-                     F.col(side_col).cast("int").alias("side"))
-    obs = (base.groupBy("g").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col("side") == 0, F.col("v"))).alias("s0"),
-        F.sum(F.when(F.col("side") == 0, 1).otherwise(0))
-        .cast("double").alias("n0"),
-        F.sum(F.when(F.col("side") == 1, F.col("v"))).alias("s1"),
-        F.sum(F.when(F.col("side") == 1, 1).otherwise(0))
-        .cast("double").alias("n1"))
-        .withColumn("t_obs", F.col("s0") / F.col("n0")
-                    - F.col("s1") / F.col("n1"))
-        .select("g", "n", "t_obs"))
-    perm = (base.withColumn("b", F.explode(F.array(
-        *[F.lit(i) for i in range(1, int(n_perm) + 1)])))
-        .withColumn("ps", F.expr(
-            # bit 20 of the multiplicative hash, NOT bit 0: the low
-            # bit of a linear map is parity(rid) XOR parity(b) — all
-            # 64 "permutations" would collapse to one split and its
-            # complement (measured: every null p-value came out 1/65)
-            "CAST((rid * 2654435761 + b * 7919) % 2147483648"
-            " div 1048576 % 2 AS INT)"))
-        .groupBy("g", "b").agg(
-            F.sum(F.when(F.col("ps") == 0, F.col("v"))).alias("s0"),
-            F.sum(F.when(F.col("ps") == 0, 1).otherwise(0))
-            .cast("double").alias("n0"),
-            F.sum(F.when(F.col("ps") == 1, F.col("v"))).alias("s1"),
-            F.sum(F.when(F.col("ps") == 1, 1).otherwise(0))
-            .cast("double").alias("n1"))
-        .withColumn("t_b", F.col("s0") / F.col("n0")
-                    - F.col("s1") / F.col("n1"))
-        .select("g", "b", "t_b"))
-    out = (perm.join(obs, "g")
-           .groupBy("g").agg(
-               F.first("n").alias("n"),
-               F.first("t_obs").alias("t_obs"),
-               F.sum(F.when(F.abs("t_b") >= F.abs("t_obs"), 1)
-                     .otherwise(0)).alias("n_ge"))
-           .select(F.col("g").alias(group_col), "n",
-                   F.round("t_obs", round_to).alias("t_obs"),
-                   F.round((F.col("n_ge") + 1)
-                           / F.lit(float(n_perm + 1)), round_to)
-                   .alias("p_value")))
-    return out.orderBy(group_col)
-
-
-def bootstrap_median_ci(df: DataFrame, group_col: str, value_col: str,
-                        id_col: str, *, n_boot: int = 64) -> DataFrame:
-    """Bootstrap confidence interval for the per-group median with
-    DETERMINISTIC hash resampling: replicate b gives row i the weight
-    drawn from a 16-slot discretized Poisson(1) (6/16 -> 0, 6/16 -> 1,
-    3/16 -> 2, 1/16 -> 3) keyed by md5-free integer hash of (id, b) —
-    the Poisson bootstrap (Chamandy et al. 2012), the only bootstrap
-    that works on a stream you cannot index, with the RNG replaced by
-    arithmetic so both engines replay identical replicates. Each
-    replicate's weighted median (the floor(W/2)+1-th weighted order
-    statistic — upper median on even totals) comes from one
-    cumulative-weight
-    window; the CI is the 5th/60th order statistic of the 64 replicate
-    medians (~90%). All integer — exact parity.
-
-    Scale shape: rows explode x n_boot into (g, b)-keyed windows and
-    groupBys (the same key family throughout); the final order
-    statistics fold over n_boot rows per group."""
-    from pyspark.sql import Window
-
-    g = F.col(group_col).alias("g")
-    base = df.select(g, F.col(value_col).cast("bigint").alias("x"),
-                     F.col(id_col).cast("bigint").alias("rid"))
-    rep = (base.withColumn("b", F.explode(F.array(
-        *[F.lit(i) for i in range(1, int(n_boot) + 1)])))
-        .withColumn("h", F.expr(
-            "(rid * 2654435761 + b * 7919) % 2147483648"
-            " div 1048576 % 16"))
-        .withColumn("w", F.when(F.col("h") < 6, 0)
-                    .when(F.col("h") < 12, 1)
-                    .when(F.col("h") < 15, 2).otherwise(3))
-        .filter(F.col("w") > 0))
-    wt = Window.partitionBy("g", "b").orderBy("x", "rid") \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tot = rep.groupBy("g", "b").agg(F.sum("w").alias("tw"))
-    med = (rep.withColumn("cw", F.sum("w").over(wt))
-           .join(tot, ["g", "b"])
-           .filter(F.col("cw") * 2 >= F.col("tw") + 1)
-           .groupBy("g", "b").agg(F.min("x").alias("m")))
-    out = (med.groupBy("g").agg(
-        F.array_sort(F.collect_list("m")).alias("ms"))
-        .select(F.col("g").alias(group_col),
-                F.size("ms").cast("bigint").alias("n_replicates"),
-                F.expr("ms[4]").cast("bigint").alias("ci_lo"),
-                F.expr("element_at(ms, 60)").cast("bigint")
-                .alias("ci_hi"),
-                F.expr("element_at(ms, 32)").cast("bigint")
-                .alias("median_mid")))
     return out.orderBy(group_col)
 
 

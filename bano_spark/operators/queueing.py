@@ -40,8 +40,7 @@ exact BIGINT arithmetic.
 Ref parity: the reference serializes per-department download/build
 steps in its cron pipeline (bano/cron_*.sh) — a FIFO queue per
 resource; this operator gives the same per-key FIFO semantics as scan
-algebra, the queueing twin of frontier politeness spacing
-(operators/crawl.py).
+algebra.
 """
 
 from __future__ import annotations

@@ -391,7 +391,7 @@ def cost_distance(cells: DataFrame, sx: int, sy: int, *,
     the operator IS the composition.
 
     Cell keys compose as (gx+off)*mult+(gy+off); callers at planetary
-    extents swap in the Hilbert key (geo.hilbert) — the lattice here
+    extents need a space-filling-curve key instead — the lattice here
     is fixture-bounded. Integer costs make every half-sum exact in
     halves and every path cost a deterministic double.
 
@@ -547,14 +547,6 @@ MS_SEGMENTS: dict[int, list[tuple[int, int]]] = {
     8: [(2, 3)], 9: [(0, 2)], 10: [(0, 1), (2, 3)],
     11: [(1, 2)], 12: [(1, 3)], 13: [(0, 1)], 14: [(3, 0)],
 }
-
-
-def ms_segments_values_sql() -> str:
-    """The MS_SEGMENTS topology as a SQL VALUES list (case_id, e1, e2)
-    — one source of truth for engine and oracle."""
-    rows = [f"({c}, {a}, {b})"
-            for c, segs in sorted(MS_SEGMENTS.items()) for a, b in segs]
-    return ", ".join(rows)
 
 
 def ms_edge_x_sql(e: str) -> str:
@@ -958,32 +950,3 @@ def strahler_order(dem: DataFrame, *, gx: str = "gx", gy: str = "gy",
             return order.select(gx, gy, F.col("_o").alias("strahler"))
     raise RuntimeError("strahler_order: no fixpoint after "
                        f"{max_rounds} rounds")
-
-
-def label_adjacency_pairs(cells: DataFrame, *, qx: str = "qx",
-                          qy: str = "qy",
-                          label: str = "label") -> DataFrame:
-    """Rook-adjacency contact counts between labelled raster regions:
-    for every unordered label pair (a < b), the number of shared cell
-    edges — applied to a discrete Voronoi assignment this yields the
-    Voronoi NEIGHBOR graph with boundary lengths (in cell-edge units),
-    the adjacency structure Delaunay triangulations encode, extracted
-    raster-side (the engine's raster->vector discipline,
-    cf. tiles_vectorize).
-
-    Scale shape: undirected adjacencies are generated exactly once via
-    the +x / +y shift equi-joins (fan-out 2, no self cross product —
-    the join_count_statistics pattern), then one groupBy on the label
-    pair. Returns (label_a, label_b, n_edges) for a != b only."""
-    base = cells.select(F.col(qx).alias("_x"), F.col(qy).alias("_y"),
-                        F.col(label).alias("_l"))
-    rhs = base.select("_x", "_y", F.col("_l").alias("_lr"))
-    shifted = (base.select((F.col("_x") + 1).alias("_x"), "_y", "_l")
-               .unionByName(
-                   base.select("_x", (F.col("_y") + 1).alias("_y"), "_l")))
-    touch = (shifted.join(rhs, ["_x", "_y"])
-             .filter(F.col("_l") != F.col("_lr")))
-    return (touch.select(F.least("_l", "_lr").alias("label_a"),
-                         F.greatest("_l", "_lr").alias("label_b"))
-            .groupBy("label_a", "label_b")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_edges")))

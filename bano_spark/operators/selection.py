@@ -438,161 +438,6 @@ def selection_tradeoff_curve(docs: DataFrame, score_col: str,
                             round_to).alias("cum_token_share")))
 
 
-def threshold_sweep(scored: DataFrame, thresholds: list, *,
-                    score_col: str = "score", label_col: str = "label",
-                    round_to: int = 6) -> DataFrame:
-    """Operating-point sweep for a binary scorer: at each threshold t,
-    confusion counts (predict positive when score >= t) against the
-    boolean ``label_col`` plus precision / recall / F1 — how a corpus
-    quality filter is tuned before committing a kept-fraction.
-
-    Scale shape: ONE pass over the scored frame — the thresholds are
-    a handful of literals, so the sweep is a crossJoin against an
-    O(|thresholds|) broadcast frame and one groupBy(threshold) with
-    map-side partials. Counts are integers; the PR arithmetic is
-    bit-stable."""
-    spark = scored.sparkSession
-    tdf = spark.createDataFrame([(float(t),) for t in thresholds],
-                                "threshold double")
-    j = scored.select(F.col(score_col).alias("_s"),
-                      F.col(label_col).cast("boolean").alias("_l")) \
-        .crossJoin(F.broadcast(tdf))
-    pred = F.col("_s") >= F.col("threshold")
-    agg = j.groupBy("threshold").agg(
-        F.sum(F.when(pred & F.col("_l"), 1).otherwise(0))
-        .cast("bigint").alias("tp"),
-        F.sum(F.when(pred & ~F.col("_l"), 1).otherwise(0))
-        .cast("bigint").alias("fp"),
-        F.sum(F.when(~pred & F.col("_l"), 1).otherwise(0))
-        .cast("bigint").alias("fn"))
-    prec = F.when(F.col("tp") + F.col("fp") > 0,
-                  F.col("tp") / (F.col("tp") + F.col("fp")))
-    rec = F.when(F.col("tp") + F.col("fn") > 0,
-                 F.col("tp") / (F.col("tp") + F.col("fn")))
-    return agg.select(
-        "threshold", "tp", "fp", "fn",
-        F.round(prec, round_to).alias("precision"),
-        F.round(rec, round_to).alias("recall"),
-        F.round(F.when((F.col("tp") + F.col("fp") > 0)
-                       & (F.col("tp") + F.col("fn") > 0)
-                       & (prec + rec > 0),
-                       2 * prec * rec / (prec + rec)),
-                round_to).alias("f1"))
-
-
-def neyman_allocation(df: DataFrame, stratum_col: str, value_col: str,
-                      n_total: int, *, round_to: int = 6) -> DataFrame:
-    """Neyman optimal allocation of a sample budget across strata:
-    n_h = n_total * N_h S_h / sum(N_h S_h) (Neyman 1934) — big or
-    high-variance strata get more of the budget, the
-    minimum-variance design for a fixed total. The principled sibling
-    of proportional stratified_sample.
-
-    Scale shape: one groupBy(stratum) for (N_h, S_h) with map-side
-    partials, one O(strata) total broadcast back; the allocation is
-    O(1) arithmetic per stratum. Returns
-    (stratum, n_h_pop, s_h, allocation_frac, n_h_alloc)."""
-    g = df.groupBy(F.col(stratum_col).alias("stratum")).agg(
-        F.count(F.lit(1)).cast("double").alias("_nh"),
-        F.stddev_samp(F.col(value_col).cast("double")).alias("_sh"))
-    g = g.withColumn("_w", F.col("_nh") * F.coalesce("_sh", F.lit(0.0)))
-    tot = g.agg(F.sum("_w").alias("_tw"))
-    return (g.crossJoin(F.broadcast(tot))
-            .select("stratum",
-                    F.col("_nh").cast("bigint").alias("n_h_pop"),
-                    F.round("_sh", round_to).alias("s_h"),
-                    F.round(F.col("_w") / F.col("_tw"), round_to)
-                    .alias("allocation_frac"),
-                    F.round(F.lit(float(n_total)) * F.col("_w")
-                            / F.col("_tw"), round_to).alias("n_h_alloc")))
-
-
-# truncated-Poisson(1) pmf thresholds for the hash-bootstrap: P(0),
-# P(<=1), P(<=2), P(<=3) — mass above 4 folds into multiplicity 4
-_POISSON1_CDF = (0.36787944117144233, 0.7357588823428847,
-                 0.9196986029286058, 0.9810118431238462)
-
-
-def poisson_bootstrap_se(df: DataFrame, value_col: str, id_col: str, *,
-                         b: int = 20, round_to: int = 6) -> DataFrame:
-    """Poisson-bootstrap standard error of the mean (the
-    streaming/sharded bootstrap: Chamandy et al. 2012): replicate r
-    gives each row multiplicity m ~ Poisson(1) (truncated at 4) from
-    a DETERMINISTIC md5 hash of (replicate, id) — so the replicate
-    set is reproducible and embarrassingly parallel, no resampling
-    pass over the data. SE = sample std of the B replicate means.
-
-    Scale shape: ONE scan exploding B small integers per row (the
-    multiplicities are codegen CASE on a hash — no Python, no
-    shuffle until the O(B) replicate rollup); the replicate table is
-    B rows. Returns one row (b, est_mean, boot_se)."""
-    c0, c1, c2, c3 = _POISSON1_CDF
-    reps = F.explode(F.array(*[F.lit(i) for i in range(int(b))])).alias("_r")
-    d = df.select(F.col(value_col).cast("double").alias("_v"),
-                  F.col(id_col).cast("string").alias("_id"), reps)
-    u = (F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.col("_r").cast("string"), F.col("_id"))), 1, 8), 16, 10)
-        .cast("double") / F.lit(4294967296.0))
-    m = (F.when(u < c0, 0).when(u < c1, 1).when(u < c2, 2)
-         .when(u < c3, 3).otherwise(4)).cast("double")
-    rep = (d.select("_r", "_v", m.alias("_m"))
-           .groupBy("_r")
-           .agg((F.sum(F.col("_m") * F.col("_v"))
-                 / F.sum("_m")).alias("_mean")))
-    est = df.agg(F.avg(F.col(value_col).cast("double")).alias("_est"))
-    return (rep.agg(F.count(F.lit(1)).cast("bigint").alias("b"),
-                    F.stddev_samp("_mean").alias("_se"))
-            .crossJoin(F.broadcast(est))
-            .select("b", F.round("_est", round_to).alias("est_mean"),
-                    F.round("_se", round_to).alias("boot_se")))
-
-
-def lorenz_curve(df: DataFrame, value_col: str, n_bands: int = 10, *,
-                 round_to: int = 6) -> DataFrame:
-    """Lorenz curve at ``n_bands`` population quantiles: cumulative
-    population share vs cumulative value share, poorest-first — the
-    picture behind host_gini's single number (who holds how much of
-    the corpus / traffic / budget).
-
-    Scale shape: band boundaries come from the engine's EXACT
-    distributed quantile selection (O(log) scans, no global sort);
-    banding + cumulation is one groupBy over O(n_bands) rows folded
-    ascending (the selection_tradeoff discipline — no global
-    window)."""
-    from .quantiles import exact_quantiles
-
-    qs = [i / n_bands for i in range(1, n_bands)]
-    bounds = exact_quantiles(df, value_col, qs)
-    v = F.col(value_col).cast("double")
-    band = F.lit(0)
-    for b in bounds:
-        band = band + F.when(v > F.lit(float(b)), 1).otherwise(0)
-    bands = (df.select(band.alias("band"), v.alias("_v"))
-             .groupBy("band")
-             .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                  F.sum("_v").alias("_s")))
-    row = F.struct(F.col("band"), F.col("n"), F.col("_s"))
-    folded = bands.agg(F.array_sort(F.collect_list(row)).alias("a"))
-    rows = folded.select(F.expr(
-        "transform(a, (r, i) -> named_struct("
-        "  'band', r.band, 'n', r.n, 's', r._s,"
-        "  'cn', aggregate(slice(a, 1, i + 1), CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.n),"
-        "  'cs', aggregate(slice(a, 1, i + 1), CAST(0 AS DOUBLE),"
-        "        (acc, q) -> acc + q._s),"
-        "  'tn', aggregate(a, CAST(0 AS BIGINT),"
-        "        (acc, q) -> acc + q.n),"
-        "  'ts', aggregate(a, CAST(0 AS DOUBLE),"
-        "        (acc, q) -> acc + q._s)))").alias("rows"))
-    return (rows.select(F.explode("rows").alias("r"))
-            .select(F.col("r.band").cast("int").alias("band"),
-                    F.col("r.n").alias("n"),
-                    F.round(F.col("r.cn") / F.col("r.tn"), round_to)
-                    .alias("cum_pop_share"),
-                    F.round(F.col("r.cs") / F.col("r.ts"), round_to)
-                    .alias("cum_value_share")))
-
-
 def skyline_2d(df, group_col: str, x_col: str, y_col: str,
                id_col: str):
     """2-D skyline (maximal-vector / Pareto frontier, Borzsonyi et al.

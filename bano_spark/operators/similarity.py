@@ -251,46 +251,3 @@ def semdedup_prune(vecs: DataFrame, threshold: float = 0.95,
                .distinct())
     return (v.join(dropped, [id_col], "left_anti")
             .select(F.col(id_col), F.col("cell")))
-
-
-def pq_reconstruction_error(vecs: DataFrame, *, vec_col: str = "embedding",
-                            m: int = 8, dsub: int = 8, k: int = 4,
-                            round_to: int = 6) -> DataFrame:
-    """Per-subspace product-quantization reconstruction error audit:
-    with the engine's deterministic axis-unit codebook (pq_encode),
-    reconstructing subvector x as e_j (j = the assigned code) costs
-    ||x - e_j||^2 = ||x||^2 - 2 x_j + 1 — reported as the mean over
-    vectors per subspace plus the mean subvector norm. The
-    distortion-vs-compression dial read before committing a PQ index
-    (the JL audit's quantization sibling); swap in k-means centroids
-    and the audit shape is unchanged.
-
-    Scale shape: ONE scan — per row an O(m*dsub) codegen fold per
-    subspace (index order — bit-stable), 2m+1 global aggregates with
-    map-side partials, then an O(m) stack unpivot of the single
-    aggregate row; output is O(m) rows."""
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_vectors")]
-    stack_terms = []
-    for mi in range(int(m)):
-        comps = [F.element_at(F.col(vec_col), mi * dsub + j + 1)
-                 .cast("double") for j in range(int(k))]
-        best = F.greatest(*comps)
-        xj = F.when(comps[0] == best, comps[0])
-        for j in range(1, int(k)):
-            xj = xj.when(comps[j] == best, comps[j])
-        norm2 = F.expr(
-            f"aggregate(sequence({mi * dsub + 1}, {(mi + 1) * dsub}), "
-            f"CAST(0 AS DOUBLE), (acc, d) -> "
-            f"acc + CAST({vec_col}[d - 1] AS DOUBLE) "
-            f"* CAST({vec_col}[d - 1] AS DOUBLE))")
-        err = norm2 - 2 * xj + F.lit(1.0)
-        aggs.append(F.round(F.avg(norm2), round_to).alias(f"_nrm{mi}"))
-        aggs.append(F.round(F.avg(err), round_to).alias(f"_err{mi}"))
-        stack_terms.append(f"{mi}, _nrm{mi}, _err{mi}")
-    one = vecs.agg(*aggs)
-    return one.select(
-        "n_vectors",
-        F.expr(f"stack({int(m)}, {', '.join(stack_terms)}) "
-               f"AS (subspace, mean_norm2, mean_sq_error)")) \
-        .select(F.col("subspace").cast("int").alias("subspace"),
-                "n_vectors", "mean_norm2", "mean_sq_error")

@@ -210,54 +210,6 @@ def hll_estimate_col(reg_col: str, p: int) -> Column:
             .otherwise(raw))
 
 
-def hll_oracle_cte(source_select: str, group_expr: str, value_expr: str,
-                   p: int = 6) -> str:
-    """The DuckDB replay of hll_sketch + hll_estimate_col as a WITH
-    body: yields columns (grp, hll_z, hll_v, hll_estimate_raw) — one
-    generator, so the engine and the oracle share the bit layout and
-    the correction constants by construction."""
-    m = 1 << p
-    wbits = _HLL_BITS - p
-    alpha = _hll_alpha(m)
-    return f"""
-hll_src AS ({source_select}),
-hll_h AS (
-  SELECT {group_expr} AS grp,
-         CAST(concat('0x', substr(md5(CAST({value_expr} AS VARCHAR)),
-                                  1, 15)) AS UBIGINT) AS hv
-  FROM hll_src
-),
-hll_r AS (
-  SELECT grp, hv & {m - 1} AS idx,
-         CASE WHEN (hv >> {p}) = 0 THEN {wbits + 1}
-              ELSE {wbits + 1} - length(bin(hv >> {p})) END AS rnk
-  FROM hll_h
-),
-hll_mx AS (SELECT grp, idx, max(rnk) AS mx FROM hll_r GROUP BY grp, idx),
-hll_grid AS (
-  SELECT g.grp, i.idx
-  FROM (SELECT DISTINCT grp FROM hll_mx) g
-  CROSS JOIN (SELECT unnest(generate_series(0, {m - 1})) AS idx) i
-),
-hll_reg AS (
-  SELECT hll_grid.grp, hll_grid.idx, coalesce(hll_mx.mx, 0) AS m
-  FROM hll_grid LEFT JOIN hll_mx
-    ON hll_mx.grp = hll_grid.grp AND hll_mx.idx = hll_grid.idx
-),
-hll_est AS (
-  SELECT grp, sum(power(2.0, -m)) AS hll_z,
-         CAST(sum(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS DOUBLE) AS hll_v
-  FROM hll_reg GROUP BY grp
-),
-hll_out AS (
-  SELECT grp, hll_z, hll_v,
-         CASE WHEN ({alpha} * {m * m} / hll_z) <= {2.5 * m} AND hll_v > 0
-              THEN {float(m)} * ln({float(m)} / hll_v)
-              ELSE {alpha} * {m * m} / hll_z END AS hll_estimate
-  FROM hll_est
-)"""
-
-
 def ams_f2(df: DataFrame, key_col: str, *, t: int = 17,
            round_to: int = 6) -> DataFrame:
     """AMS second-frequency-moment sketch (Alon-Matias-Szegedy 1996):

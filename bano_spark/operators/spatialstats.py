@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # the 6 axial ring-1 neighbors of a pointy-top hex cell
 HEX_NEIGHBORS = [(1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1)]
@@ -916,234 +916,6 @@ def moran_correlogram(cells: DataFrame, ks: list, *, cx: str = "cx",
                             round_to).alias("moran_i")))
 
 
-def join_count_statistics(cells: DataFrame, *, cx: str = "cx",
-                          cy: str = "cy", black_col: str = "black",
-                          round_to: int = 6) -> DataFrame:
-    """Join-count statistics for a binary (black/white) cell lattice
-    under rook adjacency (Cliff & Ord 1981): observed BB / BW / WW
-    join counts plus the z-score of BB against the free-sampling null
-
-        E[BB]   = J p^2
-        Var[BB] = J p^2 + 2 K p^3 - (J + 2K) p^4
-
-    with J the undirected join count, K = sum_i k_i (k_i - 1) / 2 over
-    cell degrees k_i, and p the black fraction. The categorical sibling
-    of Moran's I — the first screen a crawl-coverage or landcover grid
-    gets before interval-scale statistics apply.
-
-    Scale shape: undirected joins are generated exactly once via the
-    +x / +y shift equi-joins (fan-out 2, no cross product); degrees via
-    the bounded 4-offset explode + equi-join, the same pattern as
-    `local_moran`; every scalar is a single aggregate with map-side
-    partials and ships back as an O(1) driver literal."""
-    base = cells.select(F.col(cx).alias("_x"), F.col(cy).alias("_y"),
-                        F.col(black_col).cast("int").alias("_b"))
-    rhs = base.select("_x", "_y", F.col("_b").alias("_br"))
-    east = base.select((F.col("_x") + 1).alias("_x"), "_y",
-                       F.col("_b").alias("_ba"))
-    north = base.select("_x", (F.col("_y") + 1).alias("_y"),
-                        F.col("_b").alias("_ba"))
-    joins = east.unionByName(north).join(rhs, ["_x", "_y"])
-    offs = [(1, 0), (-1, 0), (0, 1), (0, -1)]
-    arr = F.array(*[F.struct(F.lit(a).alias("dx"), F.lit(b).alias("dy"))
-                    for a, b in offs])
-    cand = (base.select("_x", "_y", F.explode(arr).alias("o"))
-            .select("_x", "_y",
-                    (F.col("_x") + F.col("o.dx")).alias("_nx"),
-                    (F.col("_y") + F.col("o.dy")).alias("_ny")))
-    degrees = (cand.join(base.select(F.col("_x").alias("_nx"),
-                                     F.col("_y").alias("_ny")),
-                         ["_nx", "_ny"])
-               .groupBy("_x", "_y").agg(F.count(F.lit(1)).alias("k")))
-    kk = float(degrees.agg(
-        F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("kk"))
-        .collect()[0]["kk"])
-    tot = base.agg(F.count(F.lit(1)).alias("n"),
-                   F.sum("_b").alias("nb")).collect()[0]
-    n, nb = int(tot["n"]), int(tot["nb"])
-    p = nb / n
-    jc = joins.agg(
-        F.count(F.lit(1)).cast("bigint").alias("j"),
-        F.sum(F.col("_ba") * F.col("_br")).cast("bigint").alias("bb"),
-        F.sum((1 - F.col("_ba")) * (1 - F.col("_br")))
-        .cast("bigint").alias("ww"))
-    return jc.select(
-        F.lit(n).cast("bigint").alias("n_cells"),
-        F.lit(nb).cast("bigint").alias("n_black"),
-        F.col("j").alias("n_joins"),
-        "bb",
-        (F.col("j") - F.col("bb") - F.col("ww")).cast("bigint").alias("bw"),
-        "ww",
-        F.round(F.col("j") * F.lit(p * p), round_to).alias("e_bb"),
-        F.round(
-            (F.col("bb") - F.col("j") * F.lit(p * p))
-            / F.sqrt(F.col("j") * F.lit(p * p) + F.lit(2.0 * kk * p ** 3)
-                     - (F.col("j") + F.lit(2.0 * kk)) * F.lit(p ** 4)),
-            round_to).alias("z_bb"))
-
-
-def quadrat_dispersion(points: DataFrame, cell: float, nx: int, ny: int, *,
-                       x: str = "x", y: str = "y",
-                       round_to: int = 6) -> DataFrame:
-    """Quadrat-count dispersion test (Greig-Smith 1952): partition the
-    [0, nx*cell) x [0, ny*cell) window into nx*ny quadrats, count
-    points per quadrat INCLUDING empty ones, and report the
-    variance/mean ratio (VMR: 1 under CSR, >1 clustered, <1 regular)
-    plus the chi-square index of dispersion (n_q - 1) * VMR — the
-    cheap screen run before Ripley's K / Clark-Evans.
-
-    Scale shape: one groupBy on the quadrat key over points (map-side
-    partials), a right join against the generated full lattice (tiny,
-    O(nx*ny), broadcast by stats) to restore empty quadrats, one
-    final scalar aggregate. Counts are integers, so every moment sum
-    is exact and the VMR division is bit-stable across engines."""
-    spark = points.sparkSession
-    occ = (points.filter((F.col(x) >= 0) & (F.col(x) < cell * nx)
-                         & (F.col(y) >= 0) & (F.col(y) < cell * ny))
-           .select(F.floor(F.col(x) / cell).cast("bigint").alias("_qx"),
-                   F.floor(F.col(y) / cell).cast("bigint").alias("_qy"))
-           .groupBy("_qx", "_qy").agg(F.count(F.lit(1)).alias("_c")))
-    grid = (spark.range(int(nx) * int(ny))
-            .select((F.col("id") % nx).alias("_qx"),
-                    (F.col("id") / nx).cast("bigint").alias("_qy")))
-    counts = (grid.join(occ, ["_qx", "_qy"], "left")
-              .select(F.coalesce("_c", F.lit(0)).cast("double").alias("c")))
-    a = counts.agg(F.count(F.lit(1)).cast("double").alias("nq"),
-                   F.sum("c").alias("s"),
-                   F.sum(F.col("c") * F.col("c")).alias("ss"))
-    mean = F.col("s") / F.col("nq")
-    # sample variance: (ss - n*mean^2) / (n - 1)
-    var = (F.col("ss") - F.col("nq") * mean * mean) / (F.col("nq") - 1)
-    return a.select(
-        F.col("nq").cast("bigint").alias("n_quadrats"),
-        F.col("s").cast("bigint").alias("n_points"),
-        F.round(mean, round_to).alias("mean_count"),
-        F.round(var, round_to).alias("var_count"),
-        F.round(var / mean, round_to).alias("vmr"),
-        F.round((F.col("nq") - 1) * var / mean, round_to).alias("chi2"))
-
-
-def trend_surface_plane(points: DataFrame, group_cols: list, *,
-                        x: str = "x", y: str = "y", z: str = "z",
-                        round_to: int = 6) -> DataFrame:
-    """First-order trend surface per group: the least-squares plane
-    z = a + b*x + c*y solved in closed form from centered second
-    moments (the 2x2 normal equations by Cramer's rule), plus the
-    surface R^2 — the classic drift estimate detrending kriging /
-    IDW residuals (Davis, Statistics and Data Analysis in Geology).
-
-    Scale shape: ONE groupBy computing the 9 raw power sums (map-side
-    partials); the solve is O(1) column arithmetic on the aggregate
-    row — no driver collect, no iteration. With integer-lattice
-    fixtures every power sum is exact in double, so the closed-form
-    divisions are order-independent and bit-stable across engines.
-    Degenerate groups (collinear x,y: det = 0) return NULL
-    coefficients rather than exploding."""
-    g = points.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).alias("sx"), F.sum(y).alias("sy"), F.sum(z).alias("sz"),
-        F.sum(F.col(x) * F.col(x)).alias("sxx"),
-        F.sum(F.col(y) * F.col(y)).alias("syy"),
-        F.sum(F.col(x) * F.col(y)).alias("sxy"),
-        F.sum(F.col(x) * F.col(z)).alias("sxz"),
-        F.sum(F.col(y) * F.col(z)).alias("syz"),
-        F.sum(F.col(z) * F.col(z)).alias("szz"))
-    cxx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
-    cyy = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
-    cxy = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
-    cxz = F.col("sxz") - F.col("sx") * F.col("sz") / F.col("n")
-    cyz = F.col("syz") - F.col("sy") * F.col("sz") / F.col("n")
-    czz = F.col("szz") - F.col("sz") * F.col("sz") / F.col("n")
-    det = cxx * cyy - cxy * cxy
-    b = F.when(det != 0, (cyy * cxz - cxy * cyz) / det)
-    c = F.when(det != 0, (cxx * cyz - cxy * cxz) / det)
-    a = F.col("sz") / F.col("n") - b * F.col("sx") / F.col("n") \
-        - c * F.col("sy") / F.col("n")
-    r2 = F.when(czz != 0, (b * cxz + c * cyz) / czz)
-    return g.select(
-        *group_cols,
-        F.col("n").cast("bigint").alias("n_points"),
-        F.round(a, round_to).alias("a"),
-        F.round(b, round_to).alias("b"),
-        F.round(c, round_to).alias("c"),
-        F.round(r2, round_to).alias("r2"))
-
-
-def g_function(points: DataFrame, cell: float, radii: list, *,
-               id_col: str = "event_id", x_col: str = "x",
-               y_col: str = "y", round_to: int = 6) -> DataFrame:
-    """Nearest-neighbor distance CDF (the G function, Diggle 2003):
-    G(r) = fraction of points whose EXACT nearest-neighbor distance is
-    <= r, evaluated at the given radii — the distributional refinement
-    of Clark-Evans (which reduces the same distances to one mean).
-    No edge correction (documented; matches the raw-G convention).
-
-    Scale shape: the exact NN distances come from
-    :func:`nn_distances` (doubling k-ring, O(n x local density)); the
-    CDF is one crossJoin against the O(|radii|) literal frame and a
-    groupBy(r) — the radii fan-out is a handful, never data-sized.
-    Returns (r, n_le, g)."""
-    spark = points.sparkSession
-    nnd = nn_distances(points, cell, id_col=id_col,
-                       x_col=x_col, y_col=y_col)
-    n = points.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    rdf = spark.createDataFrame([(float(r),) for r in radii], "r double")
-    return (nnd.crossJoin(F.broadcast(rdf))
-            .groupBy("r")
-            .agg(F.sum(F.when(F.col("nn_dist") <= F.col("r"), 1)
-                       .otherwise(0)).cast("bigint").alias("n_le"))
-            .crossJoin(F.broadcast(n))
-            .select("r", "n_le",
-                    F.round(F.col("n_le") / F.col("_n"), round_to)
-                    .alias("g")))
-
-
-def bivariate_moran(cells: DataFrame, *, x_col: str = "xval",
-                    y_col: str = "yval", cx: str = "cx", cy: str = "cy",
-                    round_to: int = 6) -> DataFrame:
-    """Global bivariate Moran's I (Wartenberg 1985) on a square
-    lattice under rook adjacency: spatial cross-correlation of x at a
-    cell with y at its neighbors,
-
-        I_xy = (n / W) * sum_ij w_ij (x_i - xbar)(y_j - ybar)
-             / sqrt(sum (x - xbar)^2 * sum (y - ybar)^2)
-
-    — the lead-lag screen (does crawl density at a cell predict spam
-    rate NEXT DOOR) that the univariate moran family can't ask.
-
-    Scale shape identical to local_moran: deviations need one global
-    mean pair (O(1) driver literals), neighbor pairs come from the
-    bounded 4-offset explode + equi-join, and everything else is one
-    aggregate with map-side partials."""
-    stats = cells.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum(x_col) / F.count(F.lit(1))).alias("mx"),
-        (F.sum(y_col) / F.count(F.lit(1))).alias("my")).collect()[0]
-    n, mx, my = int(stats["n"]), float(stats["mx"]), float(stats["my"])
-    dev = cells.select(
-        cx, cy,
-        (F.col(x_col) - F.lit(mx)).alias("_dx"),
-        (F.col(y_col) - F.lit(my)).alias("_dy"))
-    offs = [(1, 0), (-1, 0), (0, 1), (0, -1)]
-    arr = F.array(*[F.struct(F.lit(a).alias("dx"), F.lit(b).alias("dy"))
-                    for a, b in offs])
-    shifted = (dev.select(F.explode(arr).alias("o"), cx, cy, "_dy")
-               .select((F.col(cx) + F.col("o.dx")).alias(cx),
-                       (F.col(cy) + F.col("o.dy")).alias(cy),
-                       F.col("_dy").alias("_dyn")))
-    pairs = dev.join(shifted, [cx, cy])
-    num = pairs.agg(F.count(F.lit(1)).alias("w_pairs"),
-                    F.sum(F.col("_dx") * F.col("_dyn")).alias("_cross"))
-    den = dev.agg(F.sum(F.col("_dx") * F.col("_dx")).alias("sxx"),
-                  F.sum(F.col("_dy") * F.col("_dy")).alias("syy"))
-    return (num.crossJoin(den).select(
-        F.lit(n).cast("bigint").alias("n_cells"),
-        F.col("w_pairs").cast("bigint").alias("w_pairs"),
-        F.round((F.lit(float(n)) / F.col("w_pairs")) * F.col("_cross")
-                / F.sqrt(F.col("sxx") * F.col("syy")),
-                round_to).alias("moran_ixy")))
-
-
 def ritter_bounding_circle(points: DataFrame, group_cols: list, *,
                            id_col: str = "event_id", x: str = "x",
                            y: str = "y", round_to: int = 6) -> DataFrame:
@@ -1211,428 +983,3 @@ def ritter_bounding_circle(points: DataFrame, group_cols: list, *,
         F.round(F.col("_c.cx"), round_to).alias("center_x"),
         F.round(F.col("_c.cy"), round_to).alias("center_y"),
         F.round(F.col("_c.r"), round_to).alias("radius"))
-
-
-def location_quotient(cells: DataFrame, *, cat_col: str = "category",
-                      cell_cols: list = None,
-                      round_to: int = 6) -> DataFrame:
-    """Location quotient per (cell, category): the share of category c
-    in the cell over its global share,
-
-        LQ = (n_cc / n_c) / (N_cat / N)
-
-    > 1 where the category concentrates — the first-look spatial
-    concentration measure planners run before any clustering test.
-
-    Scale shape: two groupBys over the cell frame (cell x category and
-    cell totals) plus one O(categories) aggregate broadcast back;
-    counts are integers so the double ratios are bit-stable."""
-    cell_cols = cell_cols or ["cx", "cy"]
-    cc = (cells.groupBy(*cell_cols, cat_col)
-          .agg(F.count(F.lit(1)).alias("n_cc")))
-    ct = (cells.groupBy(*cell_cols)
-          .agg(F.count(F.lit(1)).alias("n_cell")))
-    gt = (cells.groupBy(cat_col)
-          .agg(F.count(F.lit(1)).alias("n_cat")))
-    tot = cells.agg(F.count(F.lit(1)).alias("n_total"))
-    return (cc.join(ct, cell_cols)
-            .join(F.broadcast(gt), cat_col)
-            .crossJoin(F.broadcast(tot))
-            .select(*cell_cols, cat_col,
-                    F.col("n_cc").cast("bigint").alias("n_cc"),
-                    F.col("n_cell").cast("bigint").alias("n_cell"),
-                    F.round((F.col("n_cc") / F.col("n_cell"))
-                            / (F.col("n_cat") / F.col("n_total")),
-                            round_to).alias("lq")))
-
-
-def segregation_entropy(cells: DataFrame, *, cat_col: str = "category",
-                        cell_cols: list = None,
-                        round_to: int = 6) -> DataFrame:
-    """Theil's multigroup segregation index H (Theil 1972; Reardon &
-    Firebaugh 2002): with E the global entropy of the group mix and
-    E_i each cell's entropy,
-
-        H = sum_i t_i (E - E_i) / (T E)
-
-    in [0, 1]: 0 = every cell mirrors the global mix, 1 = total
-    separation. The diversity-partition complement of the location
-    quotient's per-cell ratios.
-
-    Scale shape: one groupBy(cell, group), one groupBy(cell), one
-    O(groups) global aggregate; the entropy sums fold integer-ratio
-    logs with map-side partials. Returns ONE row
-    (n_cells, n_groups, global_entropy, h_index)."""
-    cell_cols = cell_cols or ["cx", "cy"]
-    cc = (cells.groupBy(*cell_cols, cat_col)
-          .agg(F.count(F.lit(1)).cast("double").alias("_n")))
-    ct = (cells.groupBy(*cell_cols)
-          .agg(F.count(F.lit(1)).cast("double").alias("_t")))
-    tot = cells.agg(F.count(F.lit(1)).cast("double").alias("_tt"))
-    gl = (cells.groupBy(cat_col)
-          .agg(F.count(F.lit(1)).cast("double").alias("_g"))
-          .crossJoin(F.broadcast(tot))
-          .agg(F.count(F.lit(1)).cast("bigint").alias("n_groups"),
-               (-F.sum((F.col("_g") / F.col("_tt"))
-                       * F.log(F.col("_g") / F.col("_tt"))))
-               .alias("_e")))
-    ei = (cc.join(ct, cell_cols)
-          .groupBy(*cell_cols)
-          .agg(F.first("_t").alias("_t"),
-               (-F.sum((F.col("_n") / F.col("_t"))
-                       * F.log(F.col("_n") / F.col("_t")))).alias("_ei")))
-    num = (ei.crossJoin(F.broadcast(gl))
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-                F.first("n_groups").alias("n_groups"),
-                F.first("_e").alias("_e"),
-                F.sum(F.col("_t") * (F.col("_e") - F.col("_ei")))
-                .alias("_num")))
-    return (num.crossJoin(F.broadcast(tot))
-            .select("n_cells", "n_groups",
-                    F.round("_e", round_to).alias("global_entropy"),
-                    F.round(F.col("_num") / (F.col("_tt") * F.col("_e")),
-                            round_to).alias("h_index")))
-
-
-def empirical_bayes_rates(areas: DataFrame, *, area_col: str = "area_id",
-                          events_col: str = "y", pop_col: str = "n",
-                          round_to: int = 6) -> DataFrame:
-    """Global empirical-Bayes rate smoothing (Marshall 1991), the
-    standard small-area shrinkage for disease / incident mapping:
-    raw rates r_i = y_i / n_i shrink toward the global rate m with
-    weight w_i = s2 / (s2 + m / n_i), where the between-area variance
-    s2 comes from the method of moments
-
-        s2 = sum n_i (r_i - m)^2 / sum n_i  -  m / nbar   (floored at 0)
-
-    — small areas (noisy rates) shrink hard, large areas keep their
-    signal. The stabilizer run before rates feed hotspot scans
-    (kulldorff_scan) or choropleths.
-
-    Scale shape: TWO aggregation passes (global scalars as O(1)
-    literals, then per-area arithmetic) — no joins beyond the scalar
-    broadcast, map-side partials throughout."""
-    a = areas.select(F.col(area_col).alias("area_id"),
-                     F.col(events_col).cast("double").alias("_y"),
-                     F.col(pop_col).cast("double").alias("_n"))
-    g = a.agg(F.count(F.lit(1)).alias("_k"),
-              F.sum("_y").alias("_sy"), F.sum("_n").alias("_sn")).collect()[0]
-    k, sy, sn = int(g["_k"]), float(g["_sy"]), float(g["_sn"])
-    m = sy / sn
-    nbar = sn / k
-    v = a.agg(F.sum(F.col("_n")
-                    * (F.col("_y") / F.col("_n") - F.lit(m))
-                    * (F.col("_y") / F.col("_n") - F.lit(m)))
-              .alias("_v")).collect()[0]
-    s2 = max(float(v["_v"]) / sn - m / nbar, 0.0)
-    w = F.lit(s2) / (F.lit(s2) + F.lit(m) / F.col("_n"))
-    raw = F.col("_y") / F.col("_n")
-    return a.select(
-        "area_id",
-        F.col("_y").cast("bigint").alias("y"),
-        F.col("_n").cast("bigint").alias("n"),
-        F.round(raw, round_to).alias("raw_rate"),
-        F.round(w, round_to).alias("shrink_weight"),
-        F.round(F.lit(m) + w * (raw - F.lit(m)), round_to)
-        .alias("eb_rate"))
-
-
-def colocation_quotient(points: DataFrame, cell: float, *,
-                        id_col: str = "event_id", type_col: str = "ptype",
-                        x_col: str = "x", y_col: str = "y",
-                        max_rounds: int = 6,
-                        round_to: int = 6) -> DataFrame:
-    """Colocation quotient (Leslie & Kronenfeld 2011): for every
-    ordered type pair (A, B),
-
-        CLQ_{A->B} = (N_{A->B} / N_A) / (N_B / (N - 1))
-
-    with N_{A->B} the number of A points whose EXACT nearest neighbor
-    (any type, self excluded, ties by lowest id) has type B — the
-    directional attraction screen between point categories that
-    cross_k integrates over all radii.
-
-    Scale shape: the 1-NN search is the nn_distances doubling k-ring
-    carrying a min-struct of (d2, id, type) — O(n x local density)
-    per round with the loud guard, never O(n^2); the quotient is two
-    groupBys over the resolved NN table plus O(types) literals."""
-    pts = points.select(F.col(id_col).alias("_id"),
-                        F.col(type_col).alias("_ty"),
-                        F.col(x_col).cast("double").alias("_x"),
-                        F.col(y_col).cast("double").alias("_y"))
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    unresolved = pts
-    resolved = []
-    for rnd in range(max_rounds):
-        c = float(cell) * (2 ** rnd)
-        left = (unresolved
-                .withColumn("_cx", F.floor(F.col("_x") / c))
-                .withColumn("_cy", F.floor(F.col("_y") / c)))
-        right = (pts.select(F.col("_id").alias("_id2"),
-                            F.col("_ty").alias("_ty2"),
-                            F.col("_x").alias("_x2"),
-                            F.col("_y").alias("_y2"))
-                 .withColumn("_o", F.explode(offs))
-                 .select("_id2", "_ty2", "_x2", "_y2",
-                         (F.floor(F.col("_x2") / c)
-                          + F.col("_o.dx")).alias("_cx"),
-                         (F.floor(F.col("_y2") / c)
-                          + F.col("_o.dy")).alias("_cy")))
-        d2 = ((F.col("_x") - F.col("_x2")) * (F.col("_x") - F.col("_x2"))
-              + (F.col("_y") - F.col("_y2")) * (F.col("_y") - F.col("_y2")))
-        best = (left.join(right, ["_cx", "_cy"])
-                .filter(F.col("_id") != F.col("_id2"))
-                .groupBy("_id")
-                .agg(F.first("_ty").alias("_ty"),
-                     F.min(F.struct(d2.alias("d2"),
-                                    F.col("_id2").alias("nid"),
-                                    F.col("_ty2").alias("nty")))
-                     .alias("b")))
-        ok = (best.filter(F.col("b.d2") <= F.lit(c * c))
-              .select("_id", "_ty", F.col("b.nty").alias("_nty"))
-              .localCheckpoint(eager=True))
-        resolved.append(ok)
-        unresolved = unresolved.join(ok.select("_id"), "_id",
-                                     "left_anti").localCheckpoint(eager=True)
-        if unresolved.limit(1).count() == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"colocation_quotient: unresolved after {max_rounds} doublings")
-    nn = resolved[0]
-    for part in resolved[1:]:
-        nn = nn.unionByName(part)
-    n_total = pts.count()
-    tcounts = pts.groupBy(F.col("_ty").alias("_nty")).agg(
-        F.count(F.lit(1)).alias("_nb"))
-    acounts = pts.groupBy("_ty").agg(F.count(F.lit(1)).alias("_na"))
-    pair = nn.groupBy("_ty", "_nty").agg(
-        F.count(F.lit(1)).alias("_nab"))
-    return (pair.join(F.broadcast(acounts), "_ty")
-            .join(F.broadcast(tcounts), "_nty")
-            .select(F.col("_ty").alias("type_a"),
-                    F.col("_nty").alias("type_b"),
-                    F.col("_nab").cast("bigint").alias("n_a_to_b"),
-                    F.round((F.col("_nab") / F.col("_na"))
-                            / (F.col("_nb") / F.lit(float(n_total - 1))),
-                            round_to).alias("clq")))
-
-
-def knn_exact(points: DataFrame, k: int, cell: float, *,
-              id_col: str = "event_id", x_col: str = "x",
-              y_col: str = "y", max_rounds: int = 6) -> DataFrame:
-    """EXACT k-nearest-neighbor edges per point via the doubling
-    k-ring: at cell size c every point within distance c shares the
-    3x3 ring, so when the ring holds >= k candidates AND the k-th
-    candidate distance is <= c, those k are PROVABLY the global k-NN;
-    unresolved points escalate to 2c (geometric shrink, loud guard —
-    the nn_distances discipline generalized from 1 to k). Ties break
-    by (d2, id). Returns (id, nid, d2, rank) with rank 1..k.
-
-    Scale shape per round: one ring equi-join (O(n x local density)),
-    one per-point rank window (partitions are single points — the
-    candidate set, never the table). Hot cells salt like hot tiles."""
-    pts = points.select(F.col(id_col).alias("_id"),
-                        F.col(x_col).cast("double").alias("_x"),
-                        F.col(y_col).cast("double").alias("_y"))
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    unresolved = pts
-    resolved = []
-    for rnd in range(max_rounds):
-        c = float(cell) * (2 ** rnd)
-        left = (unresolved
-                .withColumn("_cx", F.floor(F.col("_x") / c))
-                .withColumn("_cy", F.floor(F.col("_y") / c)))
-        right = (pts.select(F.col("_id").alias("_nid"),
-                            F.col("_x").alias("_x2"),
-                            F.col("_y").alias("_y2"))
-                 .withColumn("_o", F.explode(offs))
-                 .select("_nid", "_x2", "_y2",
-                         (F.floor(F.col("_x2") / c)
-                          + F.col("_o.dx")).alias("_cx"),
-                         (F.floor(F.col("_y2") / c)
-                          + F.col("_o.dy")).alias("_cy")))
-        d2 = ((F.col("_x") - F.col("_x2")) * (F.col("_x") - F.col("_x2"))
-              + (F.col("_y") - F.col("_y2")) * (F.col("_y") - F.col("_y2")))
-        cand = (left.join(right, ["_cx", "_cy"])
-                .filter(F.col("_id") != F.col("_nid"))
-                .select("_id", "_nid", d2.alias("_d2")))
-        w = Window.partitionBy("_id").orderBy("_d2", "_nid")
-        topk = (cand.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= int(k)))
-        kth = (topk.groupBy("_id")
-               .agg(F.max("_d2").alias("_dk"),
-                    F.count(F.lit(1)).alias("_nk")))
-        ok_ids = kth.filter((F.col("_nk") == int(k))
-                            & (F.col("_dk") <= F.lit(c * c))) \
-            .select("_id")
-        ok = topk.join(ok_ids, "_id").localCheckpoint(eager=True)
-        resolved.append(ok)
-        unresolved = unresolved.join(ok_ids, "_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if unresolved.limit(1).count() == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"knn_exact: points unresolved after {max_rounds} doublings "
-            f"from cell {cell} — raise max_rounds or cell")
-    out = resolved[0]
-    for part in resolved[1:]:
-        out = out.unionByName(part)
-    return out.select(F.col("_id").alias(id_col),
-                      F.col("_nid").alias("nid"),
-                      F.col("_d2").alias("d2"),
-                      F.col("_rk").cast("int").alias("rank"))
-
-
-def local_outlier_factor(points: DataFrame, k: int, cell: float, *,
-                         id_col: str = "event_id", x_col: str = "x",
-                         y_col: str = "y",
-                         round_to: int = 6) -> DataFrame:
-    """Local Outlier Factor (Breunig et al. 2000) on EXACT k-NN:
-    reach-dist_k(a,b) = max(kdist(b), d(a,b)), local reachability
-    density lrd(a) = k / sum_b reach-dist_k(a,b), and
-    LOF(a) = mean_b lrd(b) / lrd(a) — >> 1 flags density outliers
-    the global z-score family (mad_outliers) cannot see.
-
-    Scale shape: the expensive part is knn_exact (doubling ring —
-    O(n x local density), never O(n^2)); the LOF algebra is three
-    joins on the O(n*k) edge list keyed by point id. Distances use
-    sqrt on exact dyadic d2 — IEEE-identical across engines."""
-    edges = knn_exact(points, k, cell, id_col=id_col,
-                      x_col=x_col, y_col=y_col)
-    e = edges.select(F.col(id_col).alias("_a"), F.col("nid").alias("_b"),
-                     F.sqrt("d2").alias("_d"))
-    kdist = (e.groupBy("_a").agg(F.max("_d").alias("_kd"))
-             .select(F.col("_a").alias("_b"), F.col("_kd")))
-    reach = (e.join(kdist, "_b")
-             .select("_a", "_b",
-                     F.greatest(F.col("_kd"), F.col("_d")).alias("_rd")))
-    lrd = (reach.groupBy("_a")
-           .agg((F.lit(float(k)) / F.sum("_rd")).alias("_lrd")))
-    lof = (e.select("_a", "_b")
-           .join(lrd.select(F.col("_a").alias("_b"),
-                            F.col("_lrd").alias("_lrdb")), "_b")
-           .groupBy("_a").agg(F.avg("_lrdb").alias("_mlrdb"))
-           .join(lrd, "_a")
-           .select(F.col("_a").alias(id_col),
-                   F.round("_lrd", round_to).alias("lrd"),
-                   F.round(F.col("_mlrdb") / F.col("_lrd"), round_to)
-                   .alias("lof")))
-    return lof
-
-
-def hill_numbers(cells: DataFrame, *, cat_col: str = "category",
-                 cell_cols: list = None,
-                 round_to: int = 6) -> DataFrame:
-    """Hill diversity profile per cell (Hill 1973): the effective
-    species numbers q0 = richness, q1 = exp(Shannon) and
-    q2 = 1 / Simpson — the three standard diversity orders on one
-    scale (all equal iff perfectly even), the per-cell refinement of
-    the global segregation_entropy.
-
-    Scale shape: one groupBy(cell, category) + one groupBy(cell)
-    rollup of the category counts — integer ratios into exp/ln only
-    at the final O(cells) rows."""
-    cell_cols = cell_cols or ["cx", "cy"]
-    cc = (cells.groupBy(*cell_cols, cat_col)
-          .agg(F.count(F.lit(1)).cast("double").alias("_n")))
-    ct = (cc.groupBy(*cell_cols)
-          .agg(F.sum("_n").alias("_t"),
-               F.count(F.lit(1)).cast("bigint").alias("q0"),
-               F.sum((F.col("_n")) * F.log("_n")).alias("_nln"),
-               F.sum(F.col("_n") * F.col("_n")).alias("_nn")))
-    shannon = F.log(F.col("_t")) - F.col("_nln") / F.col("_t")
-    return ct.select(
-        *cell_cols,
-        F.col("_t").cast("bigint").alias("n_obs"),
-        "q0",
-        F.round(F.exp(shannon), round_to).alias("q1"),
-        F.round(F.col("_t") * F.col("_t") / F.col("_nn"), round_to)
-        .alias("q2"))
-
-
-def mean_center_drift(points: DataFrame, *, period_col: str = "period",
-                      x_col: str = "x", y_col: str = "y",
-                      w_col: str = None,
-                      round_to: int = 6) -> DataFrame:
-    """Weighted mean center per time period plus the drift vector
-    from the previous period (displacement distance and bearing via
-    the engine's trig discipline: ONE atan2 per period on the exact
-    displacement) — the center-of-gravity migration summary (how a
-    crawl frontier, epidemic, or settlement pattern moves) beside
-    std_dev_ellipse's static dispersion.
-
-    Scale shape: one groupBy(period) with exact moment sums; the lag
-    runs over the O(periods) center table (bounded — a window over
-    aggregates, not data)."""
-    w = F.col(w_col).cast("double") if w_col else F.lit(1.0)
-    g = points.groupBy(F.col(period_col).alias("period")).agg(
-        F.sum(w).alias("_w"),
-        F.sum(w * F.col(x_col)).alias("_sx"),
-        F.sum(w * F.col(y_col)).alias("_sy"))
-    c = g.select("period",
-                 F.col("_w").cast("bigint").alias("n_weight"),
-                 (F.col("_sx") / F.col("_w")).alias("_cx"),
-                 (F.col("_sy") / F.col("_w")).alias("_cy"))
-    # drift runs over the O(periods) AGGREGATE table — fold instead of
-    # a global window to keep the plan exchange-free
-    row = F.struct(F.col("period"), F.col("n_weight"),
-                   F.col("_cx"), F.col("_cy"))
-    folded = c.agg(F.array_sort(F.collect_list(row)).alias("a"))
-    rows = folded.select(F.expr(
-        "transform(a, (r, i) -> named_struct("
-        "  'period', r.period, 'n_weight', r.n_weight,"
-        "  'cx', r._cx, 'cy', r._cy,"
-        "  'dx', IF(i = 0, CAST(NULL AS DOUBLE), r._cx - a[i - 1]._cx),"
-        "  'dy', IF(i = 0, CAST(NULL AS DOUBLE), r._cy - a[i - 1]._cy)))")
-        .alias("rows"))
-    return (rows.select(F.explode("rows").alias("r"))
-            .select(F.col("r.period").alias("period"),
-                    F.col("r.n_weight").alias("n_weight"),
-                    F.round(F.col("r.cx"), round_to).alias("center_x"),
-                    F.round(F.col("r.cy"), round_to).alias("center_y"),
-                    F.round(F.sqrt(F.col("r.dx") * F.col("r.dx")
-                                   + F.col("r.dy") * F.col("r.dy")),
-                            round_to).alias("drift_dist"),
-                    F.round(F.atan2(F.col("r.dy"), F.col("r.dx")),
-                            round_to).alias("drift_bearing")))
-
-
-def knn_spanning_forest(points: DataFrame, k: int, cell: float, *,
-                        id_col: str = "event_id", x_col: str = "x",
-                        y_col: str = "y") -> DataFrame:
-    """Minimum spanning forest of the EXACT k-NN graph — the
-    single-linkage clustering backbone (cut the longest edges to get
-    the cluster tree): kNN edges via the doubling-ring ``knn_exact``,
-    then Boruvka contraction via ``graph.boruvka_mst``. Semantics are
-    the MST of the k-NN GRAPH, not the full Euclidean MST — the
-    standard scalable approximation (documented, not hidden), exact
-    when every EMST edge is a k-NN edge (true for all but adversarial
-    point sets at k >= 4).
-
-    Weight = d2 * 2^32 + first-32-md5-bits of "u|v": integer squared
-    distance first (so the forest IS distance-minimal), md5 tiebreak
-    making all weights distinct so the MST is unique and byte-
-    comparable against a sequential-Kruskal oracle. Returns
-    (u, v, d2, w) ordered by w."""
-    from bano_spark.operators.graph import boruvka_mst
-
-    knn = knn_exact(points, k, cell, id_col=id_col,
-                    x_col=x_col, y_col=y_col)
-    ew = (knn.select(F.least(F.col(id_col), F.col("nid")).alias("u"),
-                     F.greatest(F.col(id_col), F.col("nid")).alias("v"),
-                     F.col("d2").cast("bigint").alias("d2"))
-          .distinct()
-          .withColumn("w", F.col("d2") * F.lit(4294967296).cast("bigint")
-                      + F.expr(
-                          "CAST(conv(substr(md5(concat(CAST(u AS STRING),"
-                          " '|', CAST(v AS STRING))), 1, 8), 16, 10)"
-                          " AS BIGINT) % 4294967296"))
-          )
-    mst = boruvka_mst(ew.select("u", "v", "w"), src="u", dst="v",
-                      weight="w")
-    return (mst.withColumn("d2", F.expr("w div 4294967296"))
-            .select("u", "v", "d2", "w").orderBy("w"))

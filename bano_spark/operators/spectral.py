@@ -2,9 +2,8 @@
 energy-compaction audit a time-series feature pipeline runs before
 storing spectral embeddings ("how much of each series' energy do the
 first K cosine coefficients carry?"), completing the temporal family
-next to lag1_autocorrelation / fundamental_period (autocorrelation
-finds THE period; the DCT measures how concentrated the whole
-spectrum is).
+next to lag-1 autocorrelation (autocorrelation finds THE period;
+the DCT measures how concentrated the whole spectrum is).
 
 Mechanics: each key's first N values (deterministic (order, tiebreak)
 prefix) form x in R^N; the orthonormal DCT-II is X_k = w_k * sum_n

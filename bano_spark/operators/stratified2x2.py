@@ -1,8 +1,8 @@
 """Stratified 2x2 association — Simpson's-paradox audit (rollup of
 exposure-outcome rates with EXACT cross-multiplied direction flags)
 and the Mantel-Haenszel pooled odds ratio vs the crude OR — the
-confounding layer completing odds_ratio_2x2 /
-cochran_armitage_trend / propensity_stratified_ate.
+confounding layer completing the 2x2 odds ratio, the
+Cochran-Armitage trend test and the propensity-stratified ATE.
 
 Exactness: the paradox audit never divides to DECIDE — "exposure
 helps" is the integer comparison a*d > c*b per rollup cell, so the

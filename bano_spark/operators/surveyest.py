@@ -1,8 +1,8 @@
 """Design-based estimation — the Horvitz-Thompson / Hajek estimators
 under known unequal inclusion probabilities, and Lincoln-Petersen /
 Chapman capture-recapture population sizing — the survey-sampling
-layer completing stratified_sample / neyman_allocation /
-weighted_sample / jackknife_ratio_variance (which assume the sample
+layer completing stratified, Neyman-allocated and weighted
+sampling and the jackknife ratio variance (which assume the sample
 is given; these ESTIMATE from it and audit against the full frame,
 which a warehouse — unlike a field survey — actually has).
 

@@ -12,8 +12,6 @@ events at scale.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -655,200 +653,6 @@ def kaplan_meier(durations: DataFrame, *, dur_col: str = "duration",
     return out.filter(F.col("n_events") > 0)
 
 
-def classical_decomposition(df: DataFrame, key_col: str, seq_col: str,
-                            val_col: str, period: int, *,
-                            round_to: int = 6) -> DataFrame:
-    """Classical additive seasonal decomposition (the moving-average
-    method, Macaulay 1931 — still the reference baseline under STL):
-    per key, trend = centered moving average over one full (odd)
-    period (NULL where the window is truncated), seasonal = the
-    phase-mean of the detrended series re-centered to sum to zero,
-    remainder = value - trend - seasonal.
-
-    Scale shape: one per-key ROWS window for the MA (partitioned,
-    never global), two groupBys for the phase means and their
-    centering, and broadcast joins back — no self-join, no global
-    exchange. Returns (key, seq, value, trend, seasonal, remainder)."""
-    if period % 2 != 1 or period < 3:
-        raise ValueError("classical_decomposition: period must be odd >= 3")
-    h = period // 2
-    d = df.select(F.col(key_col).alias("_k"),
-                  F.col(seq_col).cast("bigint").alias("_s"),
-                  F.col(val_col).cast("double").alias("_v"))
-    w = Window.partitionBy("_k").orderBy("_s").rowsBetween(-h, h)
-    d = d.withColumn(
-        "_trend",
-        F.when(F.count(F.lit(1)).over(w) == period, F.avg("_v").over(w)))
-    d = d.withColumn("_phase", F.pmod(F.col("_s"), F.lit(period)))
-    d = d.withColumn("_det", F.col("_v") - F.col("_trend"))
-    ph = (d.groupBy("_k", "_phase")
-          .agg(F.avg("_det").alias("_sp")))
-    ctr = ph.groupBy("_k").agg(F.avg("_sp").alias("_spm"))
-    ph = (ph.join(ctr, "_k")
-          .select("_k", "_phase",
-                  (F.col("_sp") - F.col("_spm")).alias("_seasonal")))
-    out = d.join(ph, ["_k", "_phase"])
-    return out.select(
-        F.col("_k").alias(key_col), F.col("_s").alias(seq_col),
-        F.round("_v", round_to).alias("value"),
-        F.round("_trend", round_to).alias("trend"),
-        F.round("_seasonal", round_to).alias("seasonal"),
-        F.round(F.col("_v") - F.col("_trend") - F.col("_seasonal"),
-                round_to).alias("remainder"))
-
-
-# method-of-moments Gumbel constants, inlined as literals so both
-# engines fold identical doubles
-_EULER_GAMMA = 0.5772156649015329
-_PI = 3.141592653589793
-
-
-def gumbel_block_maxima(df: DataFrame, key_col: str, block_col: str,
-                        val_col: str, *,
-                        round_to: int = 6) -> DataFrame:
-    """Extreme-value analysis per key: block maxima + a Gumbel fit by
-    the method of moments (beta = s * sqrt(6) / pi, mu = mean -
-    gamma * beta; Gumbel 1958) and the implied 100-block return
-    level mu - beta ln(-ln(1 - 1/100)) — the peak-load / flood-design
-    summary (how bad is the 1-in-100 burst) for per-host traffic or
-    per-cell rainfall alike.
-
-    Scale shape: one groupBy(key, block) max + one groupBy(key)
-    moment pass — map-side partials end to end; the constants are
-    inlined literals so the closed forms are bit-stable. Keys need
-    >= 2 blocks (variance), others drop."""
-    bm = (df.groupBy(F.col(key_col).alias("_k"),
-                     F.col(block_col).alias("_b"))
-          .agg(F.max(F.col(val_col).cast("double")).alias("_m")))
-    g = (bm.groupBy("_k")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("n_blocks"),
-              F.avg("_m").alias("_mean"),
-              F.stddev_samp("_m").alias("_sd"))
-         .filter(F.col("n_blocks") >= 2))
-    beta = F.col("_sd") * F.lit(math.sqrt(6.0)) / F.lit(_PI)
-    mu = F.col("_mean") - F.lit(_EULER_GAMMA) * beta
-    rl = mu - beta * F.log(-F.log(F.lit(1.0 - 1.0 / 100.0)))
-    return g.select(
-        F.col("_k").alias(key_col), "n_blocks",
-        F.round(mu, round_to).alias("gumbel_mu"),
-        F.round(beta, round_to).alias("gumbel_beta"),
-        F.round(rl, round_to).alias("return_level_100"))
-
-
-def nelson_aalen_hazard(durations: DataFrame, *,
-                        dur_col: str = "duration",
-                        observed_col: str = "observed",
-                        round_to: int = 6) -> DataFrame:
-    """Nelson-Aalen cumulative hazard (Nelson 1972; Aalen 1978):
-    H(t) = sum_{t_i <= t} d_i / n_i over the same right-censored risk
-    table as :func:`kaplan_meier` — the hazard-scale companion
-    (exp(-H) is the Fleming-Harrington survival variant), preferred
-    when hazards are the modeling target (recrawl intensity).
-
-    Scale shape identical to kaplan_meier: one groupBy(duration),
-    then the at-risk cumsum AND hazard cumsum inside a single
-    O(distinct-times) array fold — no global window. Returns event
-    times only: (duration, n_risk, n_events, cum_hazard)."""
-    d = durations.select(
-        F.col(dur_col).cast("double").alias("_t"),
-        F.col(observed_col).cast("boolean").alias("_o"))
-    total = d.agg(F.count(F.lit(1)).alias("_n"))
-    rt = d.groupBy("_t").agg(
-        F.sum(F.when(F.col("_o"), 1).otherwise(0)).alias("_d"),
-        F.sum(F.when(~F.col("_o"), 1).otherwise(0)).alias("_c"))
-    row = F.struct(F.col("_t"), F.col("_d"), F.col("_c"))
-    folded = (rt.agg(F.array_sort(F.collect_list(row)).alias("a"))
-              .crossJoin(F.broadcast(total))
-              .select(F.expr(
-                  "transform(a, (r, i) -> named_struct("
-                  "  't', r._t, 'd', r._d,"
-                  "  'nrisk', _n - aggregate(slice(a, 1, i), "
-                  "       CAST(0 AS BIGINT), "
-                  "       (acc, q) -> acc + q._d + q._c),"
-                  "  'h', aggregate(slice(a, 1, i + 1), "
-                  "       CAST(0 AS DOUBLE), "
-                  "       (acc, q) -> acc + CAST(q._d AS DOUBLE) "
-                  "         / (_n - aggregate(slice(a, 1, "
-                  "              array_position(transform(a, z -> z._t), "
-                  "                             q._t) - 1), "
-                  "              CAST(0 AS BIGINT), "
-                  "              (a2, q2) -> a2 + q2._d + q2._c)))))")
-                  .alias("rows")))
-    return (folded.select(F.explode("rows").alias("r"))
-            .select(F.col("r.t").alias("duration"),
-                    F.col("r.nrisk").cast("bigint").alias("n_risk"),
-                    F.col("r.d").cast("bigint").alias("n_events"),
-                    F.round(F.col("r.h"), round_to).alias("cum_hazard"))
-            .filter(F.col("n_events") > 0))
-
-
-def log_rank_test(durations: DataFrame, *, dur_col: str = "duration",
-                  observed_col: str = "observed",
-                  group_col: str = "grp",
-                  round_to: int = 6) -> DataFrame:
-    """Two-sample log-rank test (Mantel 1966; Peto & Peto 1972) on
-    right-censored spells: at each event time, observed group-1
-    events vs the hypergeometric expectation d * n1 / n, summed with
-    the matching variance into the chi-square statistic
-    (O1 - E1)^2 / V — do the two recrawl policies really differ, the
-    inferential arm of the KM / Nelson-Aalen estimators.
-
-    Scale shape: ONE groupBy(duration) risk table with per-group
-    conditional counts; the at-risk prefixes and per-time terms come
-    from a single O(distinct-times) array transform (the kaplan_meier
-    fold idiom — no global window), then one scalar aggregate.
-    Returns one row (n1, n2, o1, e1, chi2)."""
-    d = durations.select(
-        F.col(dur_col).cast("double").alias("_t"),
-        F.col(observed_col).cast("boolean").alias("_o"),
-        F.col(group_col).cast("boolean").alias("_g"))
-    tot = d.agg(
-        F.sum(F.when(F.col("_g"), 1).otherwise(0)).alias("_n1"),
-        F.sum(F.when(~F.col("_g"), 1).otherwise(0)).alias("_n2"))
-    rt = d.groupBy("_t").agg(
-        F.sum(F.when(F.col("_g") & F.col("_o"), 1).otherwise(0))
-        .alias("_d1"),
-        F.sum(F.when(F.col("_g") & ~F.col("_o"), 1).otherwise(0))
-        .alias("_c1"),
-        F.sum(F.when(~F.col("_g") & F.col("_o"), 1).otherwise(0))
-        .alias("_d2"),
-        F.sum(F.when(~F.col("_g") & ~F.col("_o"), 1).otherwise(0))
-        .alias("_c2"))
-    row = F.struct(F.col("_t"), F.col("_d1"), F.col("_c1"),
-                   F.col("_d2"), F.col("_c2"))
-    terms = (rt.agg(F.array_sort(F.collect_list(row)).alias("a"))
-             .crossJoin(F.broadcast(tot))
-             .select(F.expr(
-                 "transform(a, (r, i) -> named_struct("
-                 "  'd1', CAST(r._d1 AS DOUBLE),"
-                 "  'n1', CAST(_n1 - aggregate(slice(a, 1, i),"
-                 "        CAST(0 AS BIGINT),"
-                 "        (acc, q) -> acc + q._d1 + q._c1) AS DOUBLE),"
-                 "  'n2', CAST(_n2 - aggregate(slice(a, 1, i),"
-                 "        CAST(0 AS BIGINT),"
-                 "        (acc, q) -> acc + q._d2 + q._c2) AS DOUBLE),"
-                 "  'd', CAST(r._d1 + r._d2 AS DOUBLE)))").alias("rows")))
-    t = terms.select(F.explode("rows").alias("r")).select(
-        F.col("r.d1").alias("d1"), F.col("r.n1").alias("n1"),
-        F.col("r.n2").alias("n2"), F.col("r.d").alias("d"))
-    n = F.col("n1") + F.col("n2")
-    e1 = F.col("d") * F.col("n1") / n
-    v = F.when(n > 1,
-               F.col("d") * (F.col("n1") / n) * (F.col("n2") / n)
-               * (n - F.col("d")) / (n - 1)).otherwise(0.0)
-    agg = t.filter(F.col("d") > 0).agg(
-        F.sum("d1").alias("_o1"), F.sum(e1).alias("_e1"),
-        F.sum(v).alias("_v"))
-    return (agg.crossJoin(F.broadcast(tot))
-            .select(F.col("_n1").cast("bigint").alias("n1"),
-                    F.col("_n2").cast("bigint").alias("n2"),
-                    F.col("_o1").cast("bigint").alias("o1"),
-                    F.round("_e1", round_to).alias("e1"),
-                    F.round((F.col("_o1") - F.col("_e1"))
-                            * (F.col("_o1") - F.col("_e1"))
-                            / F.col("_v"), round_to).alias("chi2")))
-
-
 def seasonal_strength(df: DataFrame, key_col: str, ts_col: str,
                       value_col: str, *, round_to: int = 6) -> DataFrame:
     """Per-key seasonal strength on the hour-of-day cycle:
@@ -996,395 +800,6 @@ def changepoint_split(df: DataFrame, key_col: str, t_col: str,
             .orderBy(key_col))
 
 
-def granger_f(series: DataFrame, *, t_col: str = "t", y_col: str = "y",
-              x_col: str = "x", round_to: int = 6) -> DataFrame:
-    """Granger-causality F test at lag 1 (Granger 1969): does the
-    lagged predictor x_{t-1} improve the AR(1) forecast of y_t?
-    Restricted model  y_t = c + phi*y_{t-1}; unrestricted adds
-    beta*x_{t-1}. Both are solved in closed form from one pass of
-    sufficient statistics (the normal equations of the 2-predictor
-    OLS via the exact 2x2 inverse on centered cross-moments — no
-    iterative fit), and F = (RSS_r - RSS_u) / (RSS_u / (n - 3)) with
-    1 numerator df.
-
-    Scale shape: the input is an already-aggregated O(time-buckets)
-    series, so the lag alignment runs as ONE bounded global aggregate
-    (array_sort(collect_list) + transform/zip_with folds — the
-    changepoint_split idiom, no single-partition window exchange);
-    the corpus-sized table never reappears after the upstream
-    bucketing groupBy. With integer count series the nine
-    cross-moments are EXACT (integer sums), and only ratio statistics
-    are returned (F, R-squared of both models) — raw RSS magnitudes
-    are summation-order sensitive at the ulp level while the ratios
-    cancel it. Returns one row
-    (n, f_stat, r2_restricted, r2_unrestricted)."""
-    from pyspark.sql import functions as F
-
-    a = series.agg(F.array_sort(F.collect_list(F.struct(
-        F.col(t_col).alias("t"),
-        F.col(y_col).cast("double").alias("y"),
-        F.col(x_col).cast("double").alias("x")))).alias("a"))
-
-    cur = "slice(a, 2, size(a) - 1)"
-    prev = "slice(a, 1, size(a) - 1)"
-
-    def _s(vec: str, name: str) -> str:
-        return f"aggregate({vec}, 0D, (acc, v) -> acc + v) AS {name}"
-
-    m = a.selectExpr(
-        "CAST(size(a) - 1 AS DOUBLE) AS n",
-        _s(f"transform({cur}, s -> s.y)", "sy"),
-        _s(f"transform({prev}, s -> s.y)", "sl"),
-        _s(f"transform({prev}, s -> s.x)", "sx"),
-        _s(f"transform({cur}, s -> s.y * s.y)", "syy"),
-        _s(f"transform({prev}, s -> s.y * s.y)", "sll"),
-        _s(f"transform({prev}, s -> s.x * s.x)", "sxx"),
-        _s(f"zip_with({cur}, {prev}, (c, p) -> c.y * p.y)", "syl"),
-        _s(f"zip_with({cur}, {prev}, (c, p) -> c.y * p.x)", "syx"),
-        _s(f"transform({prev}, s -> s.y * s.x)", "slx"))
-    n = F.col("n")
-    cyy = F.col("syy") - F.col("sy") * F.col("sy") / n
-    cll = F.col("sll") - F.col("sl") * F.col("sl") / n
-    cxx = F.col("sxx") - F.col("sx") * F.col("sx") / n
-    cyl = F.col("syl") - F.col("sy") * F.col("sl") / n
-    cyx = F.col("syx") - F.col("sy") * F.col("sx") / n
-    clx = F.col("slx") - F.col("sl") * F.col("sx") / n
-    rss_r = cyy - cyl * cyl / cll
-    det = cll * cxx - clx * clx
-    b1 = (cxx * cyl - clx * cyx) / det
-    b2 = (cll * cyx - clx * cyl) / det
-    rss_u = cyy - b1 * cyl - b2 * cyx
-    f = (rss_r - rss_u) / (rss_u / (n - 3))
-    return m.select(
-        n.cast("bigint").alias("n"),
-        F.round(f, round_to).alias("f_stat"),
-        F.round(1 - rss_r / cyy, round_to).alias("r2_restricted"),
-        F.round(1 - rss_u / cyy, round_to).alias("r2_unrestricted"))
-
-
-def cox_ph_quantized(durations: DataFrame, *, dur_col: str = "duration",
-                     observed_col: str = "observed", x_col: str = "x",
-                     iters: int = 3, round_to: int = 6) -> DataFrame:
-    """Cox proportional-hazards regression (Cox 1972) with ONE
-    quantized covariate, Breslow tie handling — the effect-size
-    member of the survival family (kaplan_meier / nelson_aalen_hazard
-    estimate curves; log_rank_test detects a difference; Cox measures
-    it as a hazard ratio). Newton-Raphson on the partial
-    log-likelihood: per step, U(b) = sum_events(x) - sum_t d_t S1/S0
-    and I(b) = sum_t d_t (S2/S0 - (S1/S0)^2) with
-    S_k(t) = sum_{t_j >= t} x_j^k exp(b x_j); b += U/I.
-
-    Scale shape — the quantized-covariate contract is the whole
-    trick: the corpus is touched ONCE (one groupBy on (duration,
-    x-level) with map-side combine), and every Newton step runs on
-    that bounded table: per-time S_k terms are one groupBy(t), the
-    risk-set suffix sums fold over the collected O(distinct times)
-    array (the kaplan_meier discipline — no global window), and U/I
-    are two scalars. b is rounded to 12 decimals per step (the
-    pagerank discipline). Continuous covariates quantize upstream
-    (the GMM/isotonic binning contract). Returns one row
-    (n, n_events, beta, hazard_ratio, se) — se = 1/sqrt(I) at the
-    final beta, ratios rounded to ``round_to``."""
-    from pyspark.sql import functions as F
-
-    ct = (durations.select(
-            F.col(dur_col).cast("double").alias("_t"),
-            F.col(x_col).cast("double").alias("_x"),
-            F.col(observed_col).cast("boolean").alias("_o"))
-          .groupBy("_t", "_x")
-          .agg(F.count(F.lit(1)).cast("double").alias("_n"),
-               F.sum(F.when(F.col("_o"), 1).otherwise(0))
-               .cast("double").alias("_d"))
-          .localCheckpoint(eager=False))
-
-    def _ui(beta: float):
-        ex = F.exp(F.lit(beta) * F.col("_x"))
-        rt = ct.groupBy("_t").agg(
-            F.sum(F.col("_n") * ex).alias("a0"),
-            F.sum(F.col("_n") * F.col("_x") * ex).alias("a1"),
-            F.sum(F.col("_n") * F.col("_x") * F.col("_x") * ex)
-            .alias("a2"),
-            F.sum("_d").alias("d"),
-            F.sum(F.col("_d") * F.col("_x")).alias("sx"))
-        row = F.struct(F.col("_t"), F.col("d"), F.col("sx"),
-                       F.col("a0"), F.col("a1"), F.col("a2"))
-        folded = rt.agg(F.array_sort(F.collect_list(row)).alias("a")) \
-            .select(F.expr(
-                "transform(a, (r, i) -> named_struct("
-                "  'd', r.d, 'sx', r.sx,"
-                "  's0', aggregate(slice(a, i + 1, size(a) - i),"
-                "        CAST(0 AS DOUBLE), (acc, q) -> acc + q.a0),"
-                "  's1', aggregate(slice(a, i + 1, size(a) - i),"
-                "        CAST(0 AS DOUBLE), (acc, q) -> acc + q.a1),"
-                "  's2', aggregate(slice(a, i + 1, size(a) - i),"
-                "        CAST(0 AS DOUBLE), (acc, q) -> acc + q.a2)))")
-                .alias("rows"))
-        ev = (folded.select(F.explode("rows").alias("r"))
-              .filter(F.col("r.d") > 0))
-        agg = ev.agg(
-            F.sum(F.col("r.sx")
-                  - F.col("r.d") * F.col("r.s1") / F.col("r.s0"))
-            .alias("u"),
-            F.sum(F.col("r.d")
-                  * (F.col("r.s2") / F.col("r.s0")
-                     - (F.col("r.s1") / F.col("r.s0"))
-                     * (F.col("r.s1") / F.col("r.s0"))))
-            .alias("i")).collect()[0]
-        return agg.u, agg.i
-
-    beta = 0.0
-    for _ in range(iters):
-        u, i = _ui(beta)
-        beta = round(beta + u / i, 12)
-    _, i_fin = _ui(beta)
-    tot = durations.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.when(F.col(observed_col).cast("boolean"), 1)
-              .otherwise(0)).cast("bigint").alias("n_events"))
-    return tot.select(
-        "n", "n_events",
-        F.round(F.lit(beta), round_to).alias("beta"),
-        F.round(F.exp(F.lit(beta)), round_to).alias("hazard_ratio"),
-        F.round(F.lit(1.0) / F.sqrt(F.lit(i_fin)), round_to).alias("se"))
-
-
-def kalman_level_last(df: DataFrame, key_col: str, order_cols: list[str],
-                      val_col: str, q: float = 4.0, r: float = 25.0,
-                      round_to: int = 6) -> DataFrame:
-    """Final 1-D Kalman filter state per key for the local-level model
-    (random-walk state x_t = x_{t-1} + w, w ~ N(0, q); observation
-    z_t = x_t + v, v ~ N(0, r)) — the optimal-gain upgrade of the
-    fixed-gain smoothers (`ewma_last` uses a constant alpha;
-    `holt_last` a constant alpha/beta): here the gain
-    K = P'/(P' + r) ADAPTS as the error variance P converges to its
-    steady state, which is exactly the Riccati fixed point a
-    monitoring pipeline wants for change-alarm thresholds.
-
-        P' = P + q;  K = P'/(P' + r)
-        x <- x + K*(z - x);  P <- (1 - K)*P'
-
-    initialized x_1 = z_1, P_1 = r (the diffuse-ish standard start).
-    Execution discipline: ONE groupBy shuffle, then one aggregate()
-    fold per key over its sorted value array with a STRUCT
-    accumulator (the holt_last shape; the DuckDB twin replays it with
-    a LIST accumulator — the list_reduce struct-field trap). The fold
-    is pure rational arithmetic in identical order on both engines —
-    no libm — so the trajectory is bit-stable before the final
-    rounding. Returns (key, n_rows, x_hat, p_var, gain, mae_innov):
-    the filtered level, its error variance, the converged gain, and
-    the mean absolute one-step innovation (the residual-scale number
-    alarms are calibrated on)."""
-    qq = repr(float(q))
-    rr = repr(float(r))
-    order_struct = F.struct(*[F.col(c) for c in order_cols],
-                            F.col(val_col).alias("_v"))
-    agged = (df.groupBy(key_col)
-             .agg(F.array_sort(F.collect_list(order_struct)).alias("os"))
-             .withColumn("vs", F.expr(
-                 "transform(os, o -> CAST(o._v AS DOUBLE))"))
-             .filter(F.size("vs") >= 2))
-    kgain = f"((s.p + CAST({qq} AS DOUBLE)) " \
-            f"/ (s.p + CAST({qq} AS DOUBLE) + CAST({rr} AS DOUBLE)))"
-    fold = (f"aggregate(slice(vs, 2, size(vs) - 1), "
-            f"named_struct('x', CAST(vs[0] AS DOUBLE), "
-            f"              'p', CAST({rr} AS DOUBLE), "
-            f"              'acc', CAST(0 AS DOUBLE)), "
-            f"(s, v) -> named_struct("
-            f"  'x', s.x + {kgain} * (v - s.x), "
-            f"  'p', (1 - {kgain}) * (s.p + CAST({qq} AS DOUBLE)), "
-            f"  'acc', s.acc + abs(v - s.x)))")
-    st = F.expr(fold)
-    return (agged.select(
-        key_col, F.size("vs").cast("bigint").alias("n_rows"),
-        st.alias("_st"))
-        .select(key_col, "n_rows",
-                F.round(F.col("_st.x"), round_to).alias("x_hat"),
-                F.round(F.col("_st.p"), round_to).alias("p_var"),
-                F.round((F.col("_st.p") + F.lit(float(q)))
-                        / (F.col("_st.p") + F.lit(float(q))
-                           + F.lit(float(r))), round_to)
-                .alias("gain"),
-                F.round(F.col("_st.acc")
-                        / (F.col("n_rows") - 1), round_to)
-                .alias("mae_innov"))
-        .orderBy(key_col))
-
-
-def sprt_decision(df: DataFrame, key_col: str, order_cols: list[str],
-                  flag_col: str, *, p0: float = 0.15, p1: float = 0.25,
-                  alpha: float = 0.05, beta: float = 0.05,
-                  round_to: int = 6) -> DataFrame:
-    """Wald's sequential probability ratio test (Wald 1945) per key
-    over an ordered Bernoulli stream: accumulate the log-likelihood
-    ratio llr += x ln(p1/p0) + (1-x) ln((1-p1)/(1-p0)) and stop the
-    FIRST time it exits [ln(beta/(1-alpha)), ln((1-beta)/alpha)] —
-    the early-stopping monitor for per-entity rate shifts (host error
-    rates, user click rates) that fixed-n tests (welch_ttest,
-    mcnemar) must wait out. decision: +1 accepts H1 (p = p1), -1
-    accepts H0, 0 = still sampling at stream end; decided_at is the
-    1-based stopping step (0 if undecided).
-
-    Execution discipline: the holt_last shape — ONE groupBy shuffle,
-    one aggregate() fold per key over the sorted flag array with a
-    STRUCT accumulator that FREEZES once a boundary is crossed (the
-    sequential-stopping semantics, replayed by the DuckDB twin with a
-    LIST accumulator). The llr lattice is a two-generator integer
-    combination of the ln constants, so a cross-engine 1-ulp ln
-    difference moves llr by ~1e-14 — decisions flip only on exact
-    boundary coincidences, and the reported llr rounds at 6 dp.
-    Returns (key, n_events, decision, decided_at, llr)."""
-    # shared textual constants — both engines parse the same literals
-    inc = (f"(v * ln(CAST({p1!r} AS DOUBLE) / CAST({p0!r} AS DOUBLE)) "
-           f"+ (1 - v) * ln(CAST({1 - p1!r} AS DOUBLE) "
-           f"/ CAST({1 - p0!r} AS DOUBLE)))")
-    up = (f"ln(CAST({1 - beta!r} AS DOUBLE) / CAST({alpha!r} AS DOUBLE))")
-    lo = (f"ln(CAST({beta!r} AS DOUBLE) / CAST({1 - alpha!r} AS DOUBLE))")
-    order_struct = F.struct(*[F.col(c) for c in order_cols],
-                            F.col(flag_col).cast("double").alias("_v"))
-    agged = (df.groupBy(key_col)
-             .agg(F.array_sort(F.collect_list(order_struct)).alias("os"))
-             .withColumn("vs", F.expr(
-                 "transform(os, o -> CAST(o._v AS DOUBLE))")))
-    nxt = f"(s.llr + {inc})"
-    fold = (f"aggregate(vs, "
-            f"named_struct('llr', CAST(0 AS DOUBLE), "
-            f"              'dec', CAST(0 AS DOUBLE), "
-            f"              'stp', CAST(0 AS DOUBLE), "
-            f"              'at', CAST(0 AS DOUBLE)), "
-            f"(s, v) -> named_struct("
-            f"  'llr', CASE WHEN s.dec <> 0 THEN s.llr ELSE {nxt} END, "
-            f"  'dec', CASE WHEN s.dec <> 0 THEN s.dec "
-            f"              WHEN {nxt} >= {up} THEN CAST(1 AS DOUBLE) "
-            f"              WHEN {nxt} <= {lo} THEN CAST(-1 AS DOUBLE) "
-            f"              ELSE CAST(0 AS DOUBLE) END, "
-            f"  'stp', s.stp + 1, "
-            f"  'at', CASE WHEN s.dec <> 0 THEN s.at "
-            f"             WHEN {nxt} >= {up} OR {nxt} <= {lo} "
-            f"             THEN s.stp + 1 "
-            f"             ELSE CAST(0 AS DOUBLE) END))")
-    st = F.expr(fold)
-    return (agged.select(
-        key_col, F.size("vs").cast("bigint").alias("n_events"),
-        st.alias("_st"))
-        .select(key_col, "n_events",
-                F.col("_st.dec").cast("bigint").alias("decision"),
-                F.col("_st.at").cast("bigint").alias("decided_at"),
-                F.round(F.col("_st.llr"), round_to).alias("llr"))
-        .orderBy(key_col))
-
-
-def durbin_watson(df: DataFrame, group_col: str, order_cols: list[str],
-                  x_col: str, y_col: str, *,
-                  round_to: int = 6) -> DataFrame:
-    """Durbin-Watson residual-autocorrelation statistic per group
-    (Durbin & Watson 1950): fit OLS y ~ a + b*x from exact moment
-    sums, then DW = sum_t (e_t - e_{t-1})^2 / sum_t e_t^2 over the
-    ``order_cols``-ordered residuals. DW ~ 2 means no lag-1
-    autocorrelation, -> 0 positive (the un-modeled level shift in the
-    series fixture), -> 4 negative.
-
-    Float parity: with integer-valued x and y the moment sums are
-    EXACT, so slope/intercept are identical double divisions in both
-    engines; residual terms then evaluate bit-identically and only
-    the final sums' addition order differs (absorbed by round_to).
-
-    Scale shape: one map-side-combinable moment groupBy, a join of the
-    per-group (a, b) back onto the rows (left to AQE: broadcast while
-    the group table is small, shuffle-on-g — the same key the lag
-    window repartitions by anyway — when group cardinality outgrows
-    the threshold), one per-group lag window, one final groupBy; no
-    global exchange."""
-    g = F.col(group_col).alias("g")
-    x = F.col(x_col).cast("double")
-    y = F.col(y_col).cast("double")
-    base = df.select(g, x.alias("x"), y.alias("y"),
-                     *[F.col(c) for c in order_cols])
-    m = (base.groupBy("g").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"))
-        .withColumn("b", (F.col("n") * F.col("sxy")
-                          - F.col("sx") * F.col("sy"))
-                    / (F.col("n") * F.col("sxx")
-                       - F.col("sx") * F.col("sx")))
-        .withColumn("a", (F.col("sy") - F.col("b") * F.col("sx"))
-                    / F.col("n"))
-        .select("g", "n", "a", "b"))
-    res = (base.join(m, "g")
-           .withColumn("e", F.col("y") - F.col("a")
-                       - F.col("b") * F.col("x")))
-    w = Window.partitionBy("g").orderBy(*order_cols)
-    lagged = res.withColumn("ep", F.lag("e").over(w))
-    out = (lagged.groupBy("g").agg(
-        F.first("n").alias("n"),
-        F.sum(F.col("e") * F.col("e")).alias("sse"),
-        F.sum(F.when(F.col("ep").isNotNull(),
-                     (F.col("e") - F.col("ep"))
-                     * (F.col("e") - F.col("ep")))).alias("sdd"))
-        .select(F.col("g").alias(group_col),
-                F.col("n").cast("bigint").alias("n"),
-                F.round(F.col("sdd") / F.col("sse"), round_to)
-                .alias("dw")))
-    return out.orderBy(group_col)
-
-
-def sax_words(df: DataFrame, group_col: str, order_cols: list[str],
-              value_col: str, *, n_segments: int = 8) -> DataFrame:
-    """SAX-style symbolic series encoding per group (Lin et al. 2003,
-    restated for cross-engine exactness): split the ordered series
-    into ``n_segments`` PAA segments (index i -> segment
-    (i-1)*w div n), take each segment's mean, and letter it against
-    the group's own mean +- 0.5 sd bands: a < m-s/2 <= b < m <= c <
-    m+s/2 <= d. Classic SAX z-normalizes each point then letters
-    against N(0,1) quantiles; lettering the raw-integer segment means
-    against m + k*s is the SAME partition of the value axis (affine
-    invariance) but keeps every compared quantity a deterministic
-    function of EXACT integer sums — segment mean and band edges are
-    bit-identical across engines, so letters can never flip on
-    accumulation order.
-
-    Scale shape: one groupBy for global moments, one (group, segment)
-    groupBy for PAA sums, one ordered string_agg fold over
-    O(n_segments) rows per group — all map-side combinable, no
-    windows."""
-    g = F.col(group_col).alias("g")
-    v = F.col(value_col).cast("double")
-    w = Window.partitionBy("g").orderBy(*order_cols)
-    base = (df.select(g, v.alias("v"), *[F.col(c) for c in order_cols])
-            .withColumn("i", F.row_number().over(w)))
-    mom = (base.groupBy("g").agg(
-        F.count(F.lit(1)).alias("nl"),
-        F.sum("v").alias("s"),
-        F.sum(F.col("v") * F.col("v")).alias("ss"))
-        .withColumn("n", F.col("nl").cast("double"))
-        .withColumn("m", F.col("s") / F.col("n"))
-        .withColumn("sd", F.sqrt((F.col("ss")
-                                  - F.col("s") * F.col("s") / F.col("n"))
-                                 / (F.col("n") - 1))))
-    # integer segment index: (i-1)*w div n — never a float cast, whose
-    # int conversion ROUNDS in DuckDB but truncates in Spark
-    seg = (base.join(mom.select("g", "nl", "m", "sd"), "g")
-           .withColumn("seg", F.expr(
-               f"CAST(((i - 1) * {int(n_segments)}) div nl AS INT)"))
-           .groupBy("g", "seg").agg(
-               F.first("m").alias("m"), F.first("sd").alias("sd"),
-               (F.sum("v") / F.count(F.lit(1))).alias("pm")))
-    letter = (F.when(F.col("pm") < F.col("m") - F.col("sd") / 2, "a")
-              .when(F.col("pm") < F.col("m"), "b")
-              .when(F.col("pm") < F.col("m") + F.col("sd") / 2, "c")
-              .otherwise("d"))
-    out = (seg.withColumn("L", letter)
-           .groupBy("g").agg(
-               F.concat_ws("", F.array_sort(
-                   F.collect_list(F.struct("seg", "L"))).getField("L"))
-               .alias("sax_word"),
-               F.count(F.lit(1)).cast("bigint").alias("n_segments")))
-    return (out.select(F.col("g").alias(group_col), "n_segments",
-                       "sax_word")
-            .orderBy(group_col))
-
-
 def hurst_rs(df: DataFrame, group_col: str, order_cols: list[str],
              value_col: str, *, sizes: tuple = (8, 16, 32),
              round_to: int = 6) -> DataFrame:
@@ -1500,99 +915,6 @@ def permutation_entropy(df: DataFrame, group_col: str,
                    "n_patterns",
                    F.round("pe", round_to).alias("perm_entropy")))
     return out.orderBy(group_col)
-
-
-def lis_length(df: DataFrame, group_col: str, order_cols: list[str],
-               value_col: str) -> DataFrame:
-    """Longest strictly-increasing subsequence length per group via
-    patience sorting (the O(n log n) pile-tops invariant, run as an
-    ordered fold): for each value replace the first pile top >= x
-    (keeping tops sorted) or start a new pile; the pile count IS the
-    LIS length. Pure integer algebra — exact parity; the oracle
-    replays the identical fold in a DuckDB list accumulator.
-
-    Scale shape: the session-fold contract — one collect_list bounded
-    by per-key stream length, one JVM-side aggregate(); the linear
-    scan for the insertion point is over the pile-tops array
-    (<= LIS length), never the stream."""
-    row = F.struct(*[F.col(c) for c in order_cols],
-                   F.col(value_col).cast("bigint").alias("val"))
-    per = (df.groupBy(F.col(group_col).alias("k"))
-           .agg(F.array_sort(F.collect_list(row)).alias("rows"))
-           .withColumn("vs", F.col("rows").getField("val"))
-           .drop("rows"))
-    fold = F.expr("""
-        aggregate(
-          vs,
-          CAST(array() AS ARRAY<BIGINT>),
-          (acc, x) -> CASE
-            WHEN size(filter(acc, t -> t < x)) = size(acc)
-            THEN concat(acc, array(x))
-            ELSE concat(
-              slice(acc, 1, size(filter(acc, t -> t < x))),
-              array(x),
-              slice(acc, size(filter(acc, t -> t < x)) + 2,
-                    size(acc) - size(filter(acc, t -> t < x)) - 1))
-          END,
-          acc -> size(acc))
-    """)
-    return (per.select(F.col("k").alias(group_col),
-                       F.size("vs").cast("bigint").alias("n_events"),
-                       fold.cast("bigint").alias("lis_len"))
-            .orderBy(group_col))
-
-
-def haar_energy(df: DataFrame, group_col: str, order_cols: list[str],
-                value_col: str, *, length: int = 32) -> DataFrame:
-    """Haar wavelet energy decomposition of each group's first
-    ``length`` (a power of two) ordered values: recursively split
-    into pairwise averages (a) and differences (d), both halved —
-    energy at level L = sum of squared detail coefficients there,
-    plus the final approximation coefficient. The multi-resolution
-    screen: a level-shift series concentrates energy in the coarse
-    levels, white noise spreads it flat.
-
-    Float parity is EXACT, not rounded: integer inputs make every
-    coefficient a dyadic rational with denominator <= 2^levels, so
-    sums of squares are exact multiples of 4^-levels and no
-    accumulation order can perturb them.
-
-    Scale shape: one bounded collect_list per group (session-fold
-    contract), then a fully unrolled JVM expression cascade — zero
-    joins, zero windows, zero Python."""
-    levels = 0
-    n = length
-    while n > 1:
-        assert n % 2 == 0, "length must be a power of two"
-        n //= 2
-        levels += 1
-    row = F.struct(*[F.col(c) for c in order_cols],
-                   F.col(value_col).cast("double").alias("val"))
-    per = (df.groupBy(F.col(group_col).alias("k"))
-           .agg(F.array_sort(F.collect_list(row)).alias("rows"))
-           .withColumn("a0", F.expr(
-               f"slice(transform(rows, r -> r.val), 1, {length})"))
-           .filter(F.size("a0") == length)
-           .drop("rows"))
-    cur = "a0"
-    out_cols = []
-    for lv in range(1, levels + 1):
-        half = length >> lv
-        per = per.withColumn(f"d{lv}", F.expr(
-            f"transform(sequence(1, {half}), i ->"
-            f" ({cur}[2*i - 2] - {cur}[2*i - 1]) / 2)"))
-        per = per.withColumn(f"a{lv}", F.expr(
-            f"transform(sequence(1, {half}), i ->"
-            f" ({cur}[2*i - 2] + {cur}[2*i - 1]) / 2)"))
-        per = per.withColumn(f"e{lv}", F.expr(
-            f"aggregate(d{lv}, CAST(0.0 AS DOUBLE),"
-            f" (s, x) -> s + x * x)"))
-        out_cols.append(f"e{lv}")
-        cur = f"a{lv}"
-    return (per.select(F.col("k").alias(group_col),
-                       *[F.col(c).alias(c) for c in out_cols],
-                       F.expr(f"{cur}[0]").alias("approx"))
-            .orderBy(group_col))
 
 
 def huffman_cost(df: DataFrame, group_col: str,

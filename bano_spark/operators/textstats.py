@@ -7,8 +7,6 @@ a 10^12-document pass never leaves the JVM.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .dedup import tokens
@@ -19,9 +17,6 @@ STOPWORDS = {
     "en": ["the", "of", "and", "to", "in", "is", "it", "that", "for", "was", "with"],
     "es": ["el", "la", "los", "de", "que", "y", "en", "un", "es", "por", "con"],
 }
-
-PUNCT_RE = r"[^.,;:!?]"
-
 
 def token_count(col: Column) -> Column:
     t = F.split(F.trim(col), r"\s+")
@@ -311,41 +306,6 @@ def zipf_slope(docs: DataFrame, text_col: str = "text",
             - F.sum("lx") * F.sum("lx") / F.count(F.lit(1))))
         .alias("zipf_slope"),
         F.count(F.lit(1)).cast("bigint").alias("n_vocab"))
-
-
-def source_kl_divergence(docs: DataFrame, text_col: str = "text",
-                         source_col: str = "source") -> DataFrame:
-    """Per-source KL divergence of the add-one-smoothed unigram
-    distribution from the corpus distribution:
-    KL(P_s || Q) = sum over the CORPUS vocabulary of P_s(t) *
-    ln(P_s(t)/Q(t)), P_s(t) = (c_st + 1)/(n_s + V), Q likewise over
-    the whole corpus — the drift detector for a new crawl source
-    (high KL = the source's language diverges from the mix).
-
-    The vocabulary x sources frame is a broadcast nested-loop of
-    O(sources) rows against the vocab (the source_mixing discipline:
-    bounded by the tiny side, not a data cross product); zero counts
-    per source are materialized by that join, which is what makes the
-    smoothed sum correct.
-    """
-    toks = docs.select(F.col(source_col).alias("src"),
-                       F.explode(tokens(F.col(text_col))).alias("t"))
-    vocab = toks.groupBy("t").agg(F.count(F.lit(1)).alias("ct"))
-    per_src = toks.groupBy("src", "t").agg(F.count(F.lit(1)).alias("cst"))
-    n_src = toks.groupBy("src").agg(F.count(F.lit(1)).alias("ns"))
-    totals = vocab.agg(F.sum("ct").alias("nq"),
-                       F.count(F.lit(1)).alias("v")).first()
-    nq, v = totals["nq"], totals["v"]
-    full = (vocab.crossJoin(F.broadcast(n_src))
-            .join(per_src, ["src", "t"], "left")
-            .select("src", "ns", "ct",
-                    F.coalesce(F.col("cst"), F.lit(0)).alias("cst")))
-    p = (F.col("cst") + 1) / (F.col("ns") + F.lit(v))
-    q = (F.col("ct") + 1) / F.lit(float(nq + v))
-    return (full.groupBy("src")
-            .agg(F.sum(p * F.log(p / q)).alias("kl"),
-                 F.count(F.lit(1)).cast("bigint").alias("n_vocab"))
-            .withColumnRenamed("src", source_col))
 
 
 def heaps_law(docs: DataFrame, text_col: str = "text",
@@ -843,283 +803,6 @@ def stylometric_delta(docs: DataFrame, group_col: str, *,
                          round_to).alias("delta")))
 
 
-def hashed_ngram_score(docs: DataFrame, weights: DataFrame,
-                       n_buckets: int, *, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       round_to: int = 6) -> DataFrame:
-    """fastText-style hashed linear classifier (Joulin et al. 2017):
-    features are the document's unigrams plus adjacent bigrams, hashed
-    into ``n_buckets`` via the engine's md5-prefix hash; the score is
-    the MEAN of the bucket weights (the bag-of-features dot product
-    with 1/n_feats normalization) and the label its sign. ``weights``
-    is a (bucket:int, weight:double) table — in production the trained
-    classifier, here any deterministic stand-in.
-
-    This is the quality-classifier shape used to filter pretraining
-    corpora (CCNet / fastText lang+quality filters): linear over
-    hashed n-grams so scoring is embarrassingly parallel.
-
-    Scale shape: explode to features (fan-out ~2x token count), one
-    broadcast join against the weight table (n_buckets rows), one
-    groupBy(doc). Everything JVM-side: split/slice/md5/conv are
-    codegen expressions; no Python crossing."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    d = (docs.select(F.col(id_col), toks.alias("_t"))
-         .filter(F.size("_t") > 0))
-    uni = d.select(id_col, F.explode("_t").alias("_f"))
-    bi = (d.filter(F.size("_t") >= 2)
-          .select(id_col, F.explode(F.expr(
-              "transform(sequence(1, size(_t) - 1),"
-              " i -> concat_ws(' ', slice(_t, i, 2)))")).alias("_f")))
-    feats = uni.unionByName(bi)
-    bucket = (F.conv(F.substring(F.md5(F.col("_f")), 1, 8), 16, 10)
-              .cast("bigint") % int(n_buckets)).alias("bucket")
-    wtab = F.broadcast(weights.select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        F.col("weight").cast("double").alias("_w")))
-    scored = feats.select(id_col, bucket).join(wtab, "bucket")
-    return (scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_feats"),
-        F.round(F.avg("_w"), round_to).alias("score"),
-        (F.avg("_w") >= 0).alias("keep")))
-
-
-def kneser_ney_bigrams(docs: DataFrame, *, text_col: str = "text",
-                       discount: float = 0.75, top_k: int = 30,
-                       round_to: int = 6) -> DataFrame:
-    """Interpolated Kneser-Ney bigram probabilities (Kneser & Ney
-    1995; Chen & Goodman 1998), the LM smoothing that beats the
-    engine's additive (bigram_lm_score) and backoff (stupid backoff,
-    Good-Turing) family by modeling CONTINUATION counts:
-
-        P_KN(w2|w1) = max(c12 - d, 0) / c1
-                      + (d * N1+(w1 .) / c1) * N1+(. w2) / N1+(. .)
-
-    Returns the ``top_k`` bigrams by count with their components and
-    P_KN — the inspection table a corpus LM ships with.
-
-    Scale shape: everything is groupBys over exploded bigrams (exact
-    integer counts, map-side partials): c12, c1 as the sum over the
-    context, the three continuation counts as COUNT(DISTINCT ...)
-    rollups; the final arithmetic is O(1) per bigram and bit-stable.
-    Top-k is a TakeOrdered, never a global sort."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    d = docs.select(toks.alias("_t")).filter(F.size("_t") >= 2)
-    bi = d.select(F.explode(F.expr(
-        "transform(sequence(1, size(_t) - 1), "
-        "i -> struct(_t[i - 1] AS w1, _t[i] AS w2))")).alias("b")) \
-        .select("b.w1", "b.w2")
-    c12 = bi.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("double").alias("c12"))
-    c1 = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.count(F.lit(1)).cast("double").alias("n1p_fwd"))
-    cont = c12.groupBy("w2").agg(
-        F.count(F.lit(1)).cast("double").alias("n1p_bwd"))
-    types = c12.agg(F.count(F.lit(1)).cast("double").alias("n1p_all"))
-    dd = float(discount)
-    scored = (c12.join(c1, "w1").join(cont, "w2")
-              .crossJoin(F.broadcast(types))
-              .select(
-                  "w1", "w2",
-                  F.col("c12").cast("bigint").alias("count"),
-                  F.col("c1").cast("bigint").alias("context_count"),
-                  F.col("n1p_fwd").cast("bigint").alias("n_follow_types"),
-                  F.col("n1p_bwd").cast("bigint").alias("n_precede_types"),
-                  F.round(
-                      F.greatest(F.col("c12") - F.lit(dd), F.lit(0.0))
-                      / F.col("c1")
-                      + (F.lit(dd) * F.col("n1p_fwd") / F.col("c1"))
-                      * (F.col("n1p_bwd") / F.col("n1p_all")),
-                      round_to).alias("p_kn")))
-    return (scored.orderBy(F.desc("count"), F.asc("w1"), F.asc("w2"))
-            .limit(int(top_k)))
-
-
-def chao1_richness(docs: DataFrame, *, text_col: str = "text",
-                   round_to: int = 6) -> DataFrame:
-    """Chao1 species-richness estimate of the vocabulary (Chao 1984):
-    S_chao1 = D + f1^2 / (2 f2) with D the observed distinct tokens
-    and f1/f2 the singleton/doubleton counts — the how-much-vocabulary
-    -is-still-unseen estimator that complements Good-Turing's unseen
-    MASS and Heaps' growth exponent (corpus-coverage triage before
-    committing a tokenizer or dedup threshold). Uses the
-    bias-corrected form f1(f1-1)/(2(f2+1)) when f2 = 0.
-
-    Scale shape: token explode -> one count groupBy -> one O(1)
-    rollup over the frequency spectrum (already aggregated). Returns
-    one row (n_tokens, n_vocab, f1, f2, chao1)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    t = (docs.select(F.explode(toks).alias("_w"))
-         .filter(F.col("_w") != ""))
-    counts = t.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
-    agg = counts.agg(
-        F.sum("_c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_vocab"),
-        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0))
-        .cast("double").alias("_f1"),
-        F.sum(F.when(F.col("_c") == 2, 1).otherwise(0))
-        .cast("double").alias("_f2"))
-    chao = F.when(
-        F.col("_f2") > 0,
-        F.col("n_vocab") + F.col("_f1") * F.col("_f1")
-        / (2 * F.col("_f2"))).otherwise(
-        F.col("n_vocab") + F.col("_f1") * (F.col("_f1") - 1)
-        / (2 * (F.col("_f2") + 1)))
-    return agg.select(
-        "n_tokens", "n_vocab",
-        F.col("_f1").cast("bigint").alias("f1"),
-        F.col("_f2").cast("bigint").alias("f2"),
-        F.round(chao, round_to).alias("chao1"))
-
-
-def juilland_dispersion(docs: DataFrame, n_parts: int, *,
-                        text_col: str = "text", id_col: str = "doc_id",
-                        top_k: int = 30,
-                        round_to: int = 6) -> DataFrame:
-    """Juilland's dispersion D per term (Juilland & Chang-Rodriguez
-    1964): split the corpus into ``n_parts`` equal document parts,
-    D = 1 - CV / sqrt(parts - 1) where CV is the coefficient of
-    variation of the term's per-part frequencies — 1 = evenly spread,
-    0 = concentrated in one part. The corpus-linguistics screen that
-    separates genuinely common words from single-document spam
-    (raw counts can't tell them apart; cf. host_mirrors).
-
-    Scale shape: explode -> one groupBy(term, part) -> one
-    groupBy(term) moment rollup; the part key is id arithmetic (no
-    shuffle beyond the counts). Returns the top_k terms by corpus
-    count with (count, d) — ties by term."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    part = F.pmod(F.col(id_col), F.lit(int(n_parts)))
-    t = (docs.select(part.alias("_p"), F.explode(toks).alias("_w"))
-         .filter(F.col("_w") != ""))
-    pc = t.groupBy("_w", "_p").agg(
-        F.count(F.lit(1)).cast("double").alias("_c"))
-    # zero-fill missing parts via the moment identity over n_parts
-    # (sum/sumsq unchanged; mean uses the FIXED part count)
-    n = float(n_parts)
-    g = pc.groupBy("_w").agg(
-        F.sum("_c").alias("_s"),
-        F.sum(F.col("_c") * F.col("_c")).alias("_ss"))
-    mean = F.col("_s") / F.lit(n)
-    var = F.col("_ss") / F.lit(n) - mean * mean
-    cv = F.sqrt(F.greatest(var, F.lit(0.0))) / mean
-    d = 1 - cv / F.lit(math.sqrt(n - 1))
-    out = g.select(F.col("_w").alias("term"),
-                   F.col("_s").cast("bigint").alias("count"),
-                   F.round(d, round_to).alias("juilland_d"))
-    return (out.orderBy(F.desc("count"), F.asc("term"))
-            .limit(int(top_k)))
-
-
-def source_vocab_overlap(docs: DataFrame, *, source_col: str = "source",
-                         text_col: str = "text",
-                         round_to: int = 6) -> DataFrame:
-    """Vocabulary Jaccard overlap between source pairs: per unordered
-    pair, |V_a intersect V_b| / |V_a union V_b| over distinct token
-    sets — the domain-shift screen read before mixing sources
-    (cf. source_kl_divergence, which compares distributions; this
-    compares supports).
-
-    Scale shape: the inverted discipline — pairs generate from SHARED
-    tokens only (the per-token source list is bounded by the source
-    count, never the corpus); per-source vocab sizes are one distinct
-    groupBy. Returns (source_a, source_b, v_a, v_b, shared,
-    jaccard)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    tv = (docs.select(F.col(source_col).alias("_s"),
-                      F.explode(toks).alias("_w"))
-          .filter(F.col("_w") != "")
-          .distinct())
-    sizes = tv.groupBy("_s").agg(F.count(F.lit(1)).alias("_v"))
-    pairs = (tv.alias("a")
-             .join(tv.alias("b"),
-                   (F.col("a._w") == F.col("b._w"))
-                   & (F.col("a._s") < F.col("b._s")))
-             .groupBy(F.col("a._s").alias("source_a"),
-                      F.col("b._s").alias("source_b"))
-             .agg(F.count(F.lit(1)).cast("bigint").alias("shared")))
-    return (pairs
-            .join(F.broadcast(sizes.withColumnRenamed("_s", "source_a")
-                              .withColumnRenamed("_v", "_va")), "source_a")
-            .join(F.broadcast(sizes.withColumnRenamed("_s", "source_b")
-                              .withColumnRenamed("_v", "_vb")), "source_b")
-            .select("source_a", "source_b",
-                    F.col("_va").cast("bigint").alias("v_a"),
-                    F.col("_vb").cast("bigint").alias("v_b"),
-                    "shared",
-                    F.round(F.col("shared")
-                            / (F.col("_va") + F.col("_vb")
-                               - F.col("shared")), round_to)
-                    .alias("jaccard")))
-
-
-def hellinger_source_distance(docs: DataFrame, *,
-                              source_col: str = "source",
-                              text_col: str = "text",
-                              round_to: int = 6) -> DataFrame:
-    """Hellinger distance between source unigram distributions:
-    H = sqrt(1 - BC) with the Bhattacharyya coefficient
-    BC = sum_w sqrt(p(w|a) q(w|b)) — the bounded [0,1] metric
-    companion of source_kl_divergence (KL is asymmetric and blows up
-    on disjoint support; Hellinger does neither), read when picking
-    mixing weights across scraped domains.
-
-    Scale shape: per-source distributions are one groupBy; pair terms
-    generate from SHARED tokens only (the inverted join — absent
-    tokens contribute 0 to BC by definition, so completeness is
-    free); one rollup per source pair."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    t = (docs.select(F.col(source_col).alias("_s"),
-                     F.explode(toks).alias("_w"))
-         .filter(F.col("_w") != ""))
-    cnt = t.groupBy("_s", "_w").agg(
-        F.count(F.lit(1)).cast("double").alias("_c"))
-    tot = cnt.groupBy("_s").agg(F.sum("_c").alias("_n"))
-    p = (cnt.join(F.broadcast(tot), "_s")
-         .select("_s", "_w", (F.col("_c") / F.col("_n")).alias("_p")))
-    pairs = (p.alias("a")
-             .join(p.alias("b"),
-                   (F.col("a._w") == F.col("b._w"))
-                   & (F.col("a._s") < F.col("b._s")))
-             .groupBy(F.col("a._s").alias("source_a"),
-                      F.col("b._s").alias("source_b"))
-             .agg(F.sum(F.sqrt(F.col("a._p") * F.col("b._p")))
-                  .alias("_bc")))
-    return pairs.select(
-        "source_a", "source_b",
-        F.round("_bc", round_to).alias("bhattacharyya"),
-        F.round(F.sqrt(F.greatest(1 - F.col("_bc"), F.lit(0.0))),
-                round_to).alias("hellinger"))
-
-
-def oov_rate(docs: DataFrame, vocab_k: int, *, text_col: str = "text",
-             id_col: str = "doc_id", round_to: int = 6) -> DataFrame:
-    """Out-of-vocabulary rate per document against the corpus's own
-    top-``vocab_k`` token vocabulary (ties by token) — the tokenizer-
-    coverage triage (high OOV = domain shift or noise) run before
-    committing a vocab budget.
-
-    Scale shape: vocabulary = one count groupBy + TakeOrdered
-    (O(vocab_k) broadcast back); per-doc OOV = explode + broadcast
-    anti-membership + one groupBy(doc). Returns
-    (doc_id, n_tokens, n_oov, oov_rate)."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    t = (docs.select(F.col(id_col), F.explode(toks).alias("_w"))
-         .filter(F.col("_w") != ""))
-    vocab = (t.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
-             .orderBy(F.desc("_c"), F.asc("_w")).limit(int(vocab_k))
-             .select("_w", F.lit(True).alias("_in")))
-    j = t.join(F.broadcast(vocab), "_w", "left")
-    return (j.groupBy(id_col)
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-                 F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0))
-                 .cast("bigint").alias("n_oov"))
-            .withColumn("oov_rate",
-                        F.round(F.col("n_oov") / F.col("n_tokens"),
-                                round_to)))
-
-
 def js_divergence_sources(docs: DataFrame, source_a: str, source_b: str,
                           *, source_col: str = "source",
                           text_col: str = "text",
@@ -1127,10 +810,11 @@ def js_divergence_sources(docs: DataFrame, source_a: str, source_b: str,
     """Jensen-Shannon divergence (base-2, in [0, 1]) between the
     unigram distributions of two sources: JS = 0.5 KL(P||M) +
     0.5 KL(Q||M) with M = (P+Q)/2 — the symmetric, always-finite
-    companion to `source_kl_divergence` (KL explodes when Q misses a
-    token P has; JS's mixture denominator never vanishes where p or q
-    is positive, so disjoint vocabularies are handled exactly, scoring
-    the theoretical maximum 1).
+    companion to the KL divergence of the ``source_kl_divergence``
+    query (KL explodes when Q misses a token P has; JS's mixture
+    denominator never vanishes where p or q is positive, so disjoint
+    vocabularies are handled exactly, scoring the theoretical
+    maximum 1).
 
     Scale shape: two token-count aggregations + one FULL OUTER join on
     token (vocabulary-sized, not corpus-sized) + one scalar agg.
@@ -1166,10 +850,10 @@ def source_tfidf_cosine(docs, source_col: str = "source",
                         bigrams: bool = False,
                         round_to: int = 6):
     """Pairwise cosine similarity of source-level tf-idf vectors —
-    the vector-space companion of the divergence family
-    (source_kl_divergence / hellinger / js): each source becomes one
-    tf-idf vector over the shared vocabulary (idf = ln(S / df_t) at
-    source granularity, so universal terms vanish) and every
+    the vector-space companion of the divergence family (the KL of
+    the ``source_kl_divergence`` query, and js): each source becomes
+    one tf-idf vector over the shared vocabulary (idf = ln(S / df_t)
+    at source granularity, so universal terms vanish) and every
     unordered source pair gets dot/(|a||b|). ``bigrams=True`` uses
     word-bigram features — the right choice when the unigram
     vocabulary is small enough to saturate every source (idf would
@@ -1225,146 +909,3 @@ def source_tfidf_cosine(docs, source_col: str = "source",
                                        F.lit(0.0)), round_to)
                     .alias("cosine"))
             .orderBy("src_a", "src_b"))
-
-
-def bpe_learn_merges(docs: DataFrame, *, text_col: str = "text",
-                     rounds: int = 3) -> DataFrame:
-    """Learn the first ``rounds`` byte-pair-encoding merges (Sennrich
-    et al. 2016 — the tokenizer-training algorithm behind GPT/BPE
-    vocabularies) over the corpus: collapse to the word-frequency
-    table, explode each word into (position, symbol) rows, and per
-    round (a) count adjacent symbol pairs weighted by word frequency,
-    (b) pick the most frequent pair (ties to the lexicographically
-    smallest), (c) apply the merge with the reference algorithm's
-    LEFTMOST-GREEDY non-overlap rule — for runs of the same
-    overlapping pair ("aaa" under merge a+a) only every other match
-    fires, expressed as gaps-and-islands parity (run id = position -
-    row_number over matches, then odd row_number within the run)
-    rather than a sequential scan.
-
-    Scale shape: the corpus is touched ONCE (word-frequency groupBy
-    with map-side combine — the classic BPE trick: 10^12 tokens
-    collapse to 10^6-ish distinct words); every round then runs on
-    the exploded symbol table partitioned BY WORD (bounded partitions
-    — a word's symbol row count shrinks every merge), with one tiny
-    groupBy(pair) + TakeOrdered(1) for the argmax and a
-    localCheckpoint to keep lineage one round deep. All quantities
-    are integers — exact cross-engine parity, nothing to round.
-    Returns one row per round
-    (merge_round, lhs, rhs, pair_count, n_tokens_after)."""
-    words = (docs.select(F.explode(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c")))
-    syms = (words
-            .select("w", "c",
-                    F.explode(F.sequence(F.lit(1), F.length("w")))
-                    .alias("p"))
-            .select("w", "c", F.col("p").cast("bigint").alias("p"),
-                    F.expr("substring(w, CAST(p AS INT), 1)").alias("s"))
-            .localCheckpoint(eager=False))
-    wlead = Window.partitionBy("w").orderBy("p")
-    out = []
-    for k in range(1, rounds + 1):
-        pr = syms.withColumn("t", F.lead("s").over(wlead))
-        pc = (pr.filter(F.col("t").isNotNull())
-              .groupBy("s", "t").agg(F.sum("c").alias("cnt")))
-        best = pc.orderBy(F.col("cnt").desc(), "s", "t").limit(1) \
-            .collect()[0]
-        mt = pr.withColumn(
-            "m", F.coalesce((F.col("s") == F.lit(best.s))
-                            & (F.col("t") == F.lit(best.t)),
-                            F.lit(False)))
-        isl = mt.withColumn(
-            "grp", F.col("p") - F.row_number().over(
-                Window.partitionBy("w", "m").orderBy("p")))
-        el = isl.withColumn(
-            "e", F.col("m") & (F.row_number().over(
-                Window.partitionBy("w", "m", "grp").orderBy("p"))
-                % 2 == 1))
-        cons = el.withColumn(
-            "consumed", F.coalesce(F.lag("e").over(wlead), F.lit(False)))
-        syms = (cons.filter(~F.col("consumed"))
-                .select("w", "c",
-                        F.row_number().over(wlead).cast("bigint")
-                        .alias("p"),
-                        F.when(F.col("e"),
-                               F.concat(F.col("s"), F.col("t")))
-                        .otherwise(F.col("s")).alias("s"))
-                .localCheckpoint(eager=False))
-        n_after = syms.agg(F.sum("c")).collect()[0][0]
-        out.append((k, best.s, best.t, int(best.cnt), int(n_after)))
-    return docs.sparkSession.createDataFrame(
-        out, "merge_round bigint, lhs string, rhs string, "
-             "pair_count bigint, n_tokens_after bigint").orderBy(
-        "merge_round")
-
-
-def fundamental_period(df, group_col: str, order_cols: list[str],
-                       symbol_col: str):
-    """Smallest period p of each group's ordered symbol stream —
-    min p such that s[i] = s[i+p] for every i <= n-p (the classic
-    string-periodicity definition, partial final period allowed;
-    p = n when nothing repeats). The repetitive-content screen at the
-    sequence level: session loops, bot click cycles, boilerplate
-    rotations. Pure integer/string equality — exact parity.
-
-    Scale shape: session-fold contract, then ONE JVM filter() over
-    candidate shifts comparing array slices (O(n^2) comparisons on a
-    bounded per-key stream, never the table)."""
-    from pyspark.sql import functions as F
-
-    row = F.struct(*[F.col(c) for c in order_cols],
-                   F.col(symbol_col).cast("string").alias("sym"))
-    per = (df.groupBy(F.col(group_col).alias("k"))
-           .agg(F.array_sort(F.collect_list(row)).alias("rows"))
-           .withColumn("a", F.col("rows").getField("sym"))
-           .drop("rows"))
-    period = F.expr("""
-        filter(sequence(1, size(a)), p ->
-          p = size(a) OR slice(a, 1, size(a) - p)
-                         = slice(a, p + 1, size(a) - p))[0]
-    """)
-    return (per.select(F.col("k").alias(group_col),
-                       F.size("a").cast("bigint").alias("n_events"),
-                       period.cast("bigint").alias("period"))
-            .orderBy(group_col))
-
-
-def bwt_runs(df, group_col: str, order_cols: list[str],
-             symbol_col: str):
-    """Burrows-Wheeler transform run count of each group's symbol
-    stream (single-character symbols + '$' terminator): sort all
-    rotations of s||'$', take the last column, count equal-adjacent
-    runs — the BWT clusters repeated context so periodic streams
-    compress to few runs while high-entropy streams stay near n.
-    Deterministic (the terminator makes rotations distinct), pure
-    string algebra — exact parity.
-
-    Scale shape: session-fold contract; rotations are built with one
-    transform over substr of the doubled string and sorted JVM-side —
-    O(n^2 log n) character work on a bounded per-key stream."""
-    from pyspark.sql import functions as F
-
-    row = F.struct(*[F.col(c) for c in order_cols],
-                   F.col(symbol_col).cast("string").alias("sym"))
-    per = (df.groupBy(F.col(group_col).alias("k"))
-           .agg(F.array_sort(F.collect_list(row)).alias("rows"))
-           .withColumn("s", F.concat_ws("", F.col("rows.sym")))
-           .drop("rows"))
-    expr = F.expr("""
-        aggregate(
-          array_sort(transform(sequence(0, length(s)),
-            k2 -> substr(concat(s, '$', s, '$'),
-                         k2 + 1, length(s) + 1))),
-          named_struct('prev', '', 'runs', CAST(0 AS BIGINT)),
-          (acc, rot) -> named_struct(
-            'prev', substr(rot, length(rot), 1),
-            'runs', acc.runs + IF(substr(rot, length(rot), 1)
-                                  = acc.prev, 0, 1)),
-          acc -> acc.runs)
-    """)
-    return (per.select(F.col("k").alias(group_col),
-                       F.length("s").cast("bigint").alias("n_events"),
-                       expr.alias("bwt_runs"))
-            .orderBy(group_col))

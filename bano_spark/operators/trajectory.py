@@ -38,9 +38,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 # tan(pi/8): sector half-angle boundary for the 8-way compass split
 _TAN225 = 0.41421356237309503
 
-SECTORS = ["N", "NE", "E", "SE", "S", "SW", "W", "NW"]
-
-
 def _steps(traj: DataFrame, track_col: str, order_cols: list[str],
            x: str, y: str) -> DataFrame:
     w = Window.partitionBy(track_col).orderBy(*[F.asc(c) for c in order_cols])
@@ -526,41 +523,6 @@ aggregate(
             .select(id_a, id_b, F.expr(scan).alias("frechet")))
 
 
-def frechet_recursive_sql(cost_cte: str, r: int,
-                          id_cols: str = "id_a, id_b") -> str:
-    """The discrete-Frechet DP as a DuckDB RECURSIVE CTE walking the
-    r x r matrix cell by cell (row-major), carrying the computed
-    prefix as a DOUBLE[] — a deliberately DIFFERENT evaluation shape
-    from the engine's nested fold, so a hash match checks the
-    recurrence, not the code. ``cost_cte`` must name a relation with
-    ({id_cols}, i, j, c) — the full matrix per pair. Emits a WITH-body
-    fragment ending in CTE ``fr_out`` holding ({id_cols}, frechet)."""
-    on = " AND ".join(f"f.{c.strip()} = c.{c.strip()}"
-                      for c in id_cols.split(","))
-    fid = ", ".join(f"f.{c.strip()}" for c in id_cols.split(","))
-    inf = "CAST('infinity' AS DOUBLE)"
-    return f"""
-fr AS (
-  SELECT {id_cols}, 0 AS s, CAST([] AS DOUBLE[]) AS dl
-  FROM (SELECT DISTINCT {id_cols} FROM {cost_cte})
-  UNION ALL
-  SELECT {fid}, f.s + 1, list_append(f.dl, greatest(c.c, least(
-    CASE WHEN c.i > 1 THEN f.dl[(c.i - 2) * {r} + c.j] ELSE {inf} END,
-    CASE WHEN c.j > 1 THEN f.dl[(c.i - 1) * {r} + c.j - 1] ELSE {inf} END,
-    CASE WHEN c.i > 1 AND c.j > 1 THEN f.dl[(c.i - 2) * {r} + c.j - 1]
-         WHEN c.i = 1 AND c.j = 1 THEN -{inf}
-         ELSE {inf} END)))
-  FROM fr f JOIN {cost_cte} c
-    ON {on}
-   AND c.i = f.s // {r} + 1 AND c.j = f.s % {r} + 1
-  WHERE f.s < {r} * {r}
-),
-fr_out AS (
-  SELECT {id_cols}, dl[{r} * {r}] AS frechet
-  FROM fr WHERE s = {r} * {r}
-)"""
-
-
 def lcss_pairs(traj: DataFrame, pairs: DataFrame, r: int, eps: float, *,
                track_col: str = "user_id", order_col: str = "seq",
                x_col: str = "x", y_col: str = "y",
@@ -581,8 +543,7 @@ def lcss_pairs(traj: DataFrame, pairs: DataFrame, r: int, eps: float, *,
 
     Scale shape: identical to dtw_pairs — r driver rounds over a
     frame keyed by pair, two partitioned windows per round,
-    O(pairs x r) rows per round, no per-row Python. ``lcss_cte_sql``
-    renders the same step table for a SQL oracle."""
+    O(pairs x r) rows per round, no per-row Python."""
     pts = (traj.select(F.col(track_col).alias("_t"),
                        F.col(order_col).alias("_s"),
                        F.col(x_col).cast("double").alias("_x"),
@@ -624,108 +585,6 @@ def lcss_pairs(traj: DataFrame, pairs: DataFrame, r: int, eps: float, *,
     return (d.filter(F.col("_j") == r)
             .select(id_a, id_b, F.col("_d").alias("lcss_len"),
                     (F.col("_d") / F.lit(float(r))).alias("lcss_sim")))
-
-
-def lcss_cte_sql(match_select: str, r: int,
-                 id_cols: str = "id_a, id_b") -> str:
-    """The lcss_pairs step table as chained CTEs over ``match_select``
-    (columns ``{id_cols}, i, j, m`` — the full r x r 0/1 match matrix
-    per pair); ends in CTE ``lcss_d{r}`` holding (id_cols, j, d)."""
-    on = " AND ".join(f"d.{c.strip()} = p.{c.strip()}"
-                      for c in id_cols.split(","))
-    part = id_cols
-    parts = [f"""
-lcss_m AS (SELECT {id_cols}, i, j, m FROM ({match_select})),
-lcss_d1 AS (
-  SELECT {id_cols}, j,
-         max(m) OVER (PARTITION BY {part} ORDER BY j
-                      ROWS UNBOUNDED PRECEDING) AS d
-  FROM lcss_m WHERE i = 1)"""]
-    for i in range(2, r + 1):
-        parts.append(f""",
-lcss_e{i} AS (
-  SELECT p.*, greatest(d.d, coalesce(
-             lag(d.d) OVER (PARTITION BY {_pfx(part, 'p')}
-                            ORDER BY p.j), 0) + p.m) AS cand
-  FROM lcss_m p JOIN lcss_d{i - 1} d ON {on} AND d.j = p.j
-  WHERE p.i = {i}
-),
-lcss_d{i} AS (
-  SELECT {id_cols}, j,
-         max(cand) OVER (PARTITION BY {part} ORDER BY j
-                         ROWS UNBOUNDED PRECEDING) AS d
-  FROM lcss_e{i}
-)""")
-    return "".join(parts)
-
-
-def circular_bearing_stats(traj: DataFrame, *, track_col: str = "user_id",
-                           order_cols: list[str] | None = None,
-                           x: str = "x", y: str = "y",
-                           round_to: int = 6) -> DataFrame:
-    """Per-track circular statistics of movement bearings (Mardia &
-    Jupp 2000): mean direction, mean resultant length R and the
-    Rayleigh uniformity statistic z = n R². Stationary pings (zero
-    displacement) carry no direction and are excluded.
-
-    Trig discipline: unit vectors come from dx / hypot and dy / hypot
-    — no per-leg sin/cos — so the only transcendental is ONE atan2 per
-    track on the aggregated resultant, keeping the arithmetic
-    bit-stable across engines (the oracle mirrors the same identity).
-    Scale shape: a per-track window lag (partitioned, never global)
-    then one groupBy(track) with map-side partials."""
-    order_cols = order_cols or ["ts", "event_id"]
-    w = Window.partitionBy(track_col).orderBy(*order_cols)
-    legs = (traj.select(track_col,
-                        (F.col(x) - F.lag(x).over(w)).alias("_dx"),
-                        (F.col(y) - F.lag(y).over(w)).alias("_dy"))
-            .filter((F.col("_dx").isNotNull())
-                    & ((F.col("_dx") != 0) | (F.col("_dy") != 0))))
-    hyp = F.sqrt(F.col("_dx") * F.col("_dx") + F.col("_dy") * F.col("_dy"))
-    unit = legs.select(track_col,
-                       (F.col("_dx") / hyp).alias("_c"),
-                       (F.col("_dy") / hyp).alias("_s"))
-    agg = unit.groupBy(track_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_legs"),
-        F.sum("_c").alias("_sc"), F.sum("_s").alias("_ss"))
-    r = F.sqrt(F.col("_sc") * F.col("_sc") + F.col("_ss") * F.col("_ss")) \
-        / F.col("n_legs")
-    return agg.select(
-        track_col, "n_legs",
-        F.round(F.atan2(F.col("_ss"), F.col("_sc")), round_to)
-        .alias("mean_dir_rad"),
-        F.round(r, round_to).alias("resultant_r"),
-        F.round(F.col("n_legs") * r * r, round_to).alias("rayleigh_z"))
-
-
-def radius_of_gyration(traj: DataFrame, *, key_col: str = "user_id",
-                       x: str = "x", y: str = "y",
-                       round_to: int = 6) -> DataFrame:
-    """Radius of gyration per track (Gonzalez, Hidalgo & Barabasi
-    2008): rg = sqrt(mean squared distance of the track's points to
-    its own centroid) — THE characteristic-travel-scale statistic of
-    human-mobility analysis, computed via the moment identity
-    rg^2 = (E[x^2] - E[x]^2) + (E[y^2] - E[y]^2) so one aggregation
-    pass suffices (no centroid join, no second scan).
-
-    Scale shape: ONE groupBy(track) with map-side partials; with
-    lattice-valued fixtures every power sum is exact, making the
-    identity bit-stable. Returns (key, n_points, cx, cy, rg)."""
-    g = traj.groupBy(key_col).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(x).alias("_sx"), F.sum(y).alias("_sy"),
-        F.sum(F.col(x) * F.col(x)).alias("_sxx"),
-        F.sum(F.col(y) * F.col(y)).alias("_syy"))
-    ex = F.col("_sx") / F.col("_n")
-    ey = F.col("_sy") / F.col("_n")
-    rg2 = (F.col("_sxx") / F.col("_n") - ex * ex
-           + F.col("_syy") / F.col("_n") - ey * ey)
-    return g.select(
-        key_col, F.col("_n").cast("bigint").alias("n_points"),
-        F.round(ex, round_to).alias("cx"),
-        F.round(ey, round_to).alias("cy"),
-        F.round(F.sqrt(F.greatest(rg2, F.lit(0.0))), round_to)
-        .alias("rg"))
 
 
 def geometric_median(pts: DataFrame, *, group_col: str = "user_id",

@@ -427,18 +427,6 @@ def mojibake_stats(docs: DataFrame, text_col: str = "text",
         (per_k > per_kchar_flag).alias("mojibake_flag"))
 
 
-def mojibake_count_sql(text_expr: str) -> str:
-    """The n_bad counting algebra as SQL text over ``text_expr`` —
-    one source of truth for engine tests and the DuckDB oracle."""
-    parts = []
-    for m in MOJIBAKE_MARKERS:
-        esc = m.replace("'", "''")
-        parts.append(
-            f"CAST((length({text_expr}) - length(replace({text_expr}, "
-            f"'{esc}', ''))) / {len(m)} AS BIGINT)")
-    return " + ".join(parts)
-
-
 def stitch_overlaps(docs: DataFrame, k: int, *, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Document stitching candidates: directed pairs (a, b) where the
@@ -652,43 +640,6 @@ def cross_host_quotations(docs: DataFrame, host_col: str, n: int = 8, *,
                     F.round(F.col("_i") / (F.col("_sa") + F.col("_sb")
                                            - F.col("_i")),
                             round_to).alias("jaccard")))
-
-
-def kanonymity_audit(docs: DataFrame, quasi_cols: list[str], k: int, *,
-                     report_col: str | None = None) -> DataFrame:
-    """k-anonymity audit over the quasi-identifier columns: every row
-    whose equivalence class (the exact combination of quasi-identifier
-    values) has fewer than ``k`` members is re-identifiable under the
-    classic Sweeney (2002) model and must be suppressed or
-    generalized before release. The audit reports, per ``report_col``
-    (default: the first quasi column), the class count, row count,
-    rows falling below k, the suppression rate, and the achieved
-    k-anonymity (the minimum class size) — the release-gate numbers a
-    training-data pipeline checks before publishing a corpus slice.
-    Companion to `redact_pii` (content-level) — this is the
-    row-level-metadata half of the privacy screen.
-
-    Scale shape: ONE groupBy over the quasi columns with map-side
-    partial counts (the class table is tiny relative to the corpus),
-    then one groupBy over the report key — no joins back to the raw
-    rows, so the audit never reshuffles the corpus itself. At 100 TB
-    the class table for realistic quasi alphabets (lang x source x
-    length-band) is thousands of rows; the plan is two hash
-    aggregations end to end."""
-    rep = report_col or quasi_cols[0]
-    cls = (docs.groupBy(*[F.col(c) for c in quasi_cols])
-           .agg(F.count(F.lit(1)).cast("bigint").alias("_n")))
-    return (cls.groupBy(F.col(rep))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_classes"),
-                 F.sum("_n").cast("bigint").alias("n_rows"),
-                 F.sum(F.when(F.col("_n") < k, F.col("_n"))
-                       .otherwise(F.lit(0)))
-                 .cast("bigint").alias("suppressed_rows"),
-                 F.min("_n").cast("bigint").alias("k_anonymity"))
-            .withColumn("suppression_rate",
-                        F.round(F.col("suppressed_rows")
-                                / F.col("n_rows"), 6))
-            .orderBy(rep))
 
 
 def rfc3986_normalize(col_name: str) -> Column:

@@ -1427,8 +1427,7 @@ def w_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # w31 — ST_ClosestPoint on street segments (point_par_rue_insee_
 # nocache.sql:41): clamped scalar projection, column arithmetic both
-# sides (JVM expressions here; geometry.closest_point_on_segments is
-# the numpy twin for Arrow-UDF pipelines)
+# sides
 # ---------------------------------------------------------------------------
 
 _W31_ORACLE = """
@@ -6329,9 +6328,6 @@ def _w133_sql(dialect: str) -> str:
             + hex_cells_cte("pts", 700.0, keep="event_id")
             + "\nSELECT hq, hr, CAST(count(*) AS BIGINT) AS n_points\n"
               "FROM hexed_out GROUP BY hq, hr ORDER BY hq, hr")
-
-
-_W133_ORACLE = None  # built lazily below (needs the generator)
 
 
 @register("hex_bin_counts", _w133_sql("duckdb"))

@@ -95,35 +95,3 @@ def mapping_load(parsed: DataFrame) -> DataFrame:
         .select("code_insee", "fantoir10",
                 F.substring("fantoir10", 1, 9).alias("fantoir9"), "label")
     )
-
-
-def fantoir_raw_line_expr(insee: Column, id_voie: Column, cle: Column, nature: Column,
-                          libelle: Column, type_voie: Column, annul: Column,
-                          ld_bati: Column) -> Column:
-    """Build a reference-layout raw line (used by fixtures/tests)."""
-    return F.concat(
-        F.substring(insee, 1, 2),  # 1-2 dept
-        F.lit("0"),  # 3 code_dir
-        F.substring(insee, 3, 3),  # 4-6 commune
-        F.rpad(id_voie, 4, "0"),  # 7-10
-        cle,  # 11
-        F.rpad(nature, 4, " "),  # 12-15
-        F.rpad(libelle, 26, " "),  # 16-41
-        F.rpad(F.lit(""), 7, " "),  # 42-48
-        F.lit("N"),  # 49 type_commune
-        F.lit(" "),  # 50
-        F.lit("0"),  # 51
-        F.lit(" "),  # 52
-        F.rpad(F.lit(""), 7, " "),  # 53-59
-        F.lpad(F.lit("0"), 7, "0"),  # 60-66 pop_a_part
-        F.lpad(F.lit("0"), 7, "0"),  # 67-73 pop_fictive
-        annul,  # 74
-        F.rpad(F.lit(""), 7, "0"),  # 75-81 date_annul
-        F.rpad(F.lit("1987001"), 7, "0"),  # 82-88
-        F.rpad(F.lit(""), 15, " "),  # 89-103
-        F.rpad(F.lit("A1B2C"), 5, " "),  # 104-108 code_majic
-        type_voie,  # 109
-        ld_bati,  # 110
-        F.lit("  "),  # 111-112
-        F.rpad(F.lit("MOT"), 8, " "),  # 113-120
-    )

@@ -200,20 +200,6 @@ def extract_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", _extract(F.col("html")))
 
 
-RECORD_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("insee_com", T.StringType()),
-    T.StructField("numero", T.StringType()),
-    T.StructField("rep", T.StringType()),
-    T.StructField("nom_voie", T.StringType()),
-    T.StructField("code_postal", T.StringType()),
-    T.StructField("fantoir", T.StringType()),
-    T.StructField("x", T.DoubleType()),
-    T.StructField("y", T.DoubleType()),
-])
-
-
 def extract_records(pages: DataFrame) -> DataFrame:
     """Parse the embedded BAN-CSV line of each page into typed address
     rows (S3 semantics).

@@ -386,118 +386,3 @@ def streaming_reservoir(grouped, n: int, *, key_name: str = "source",
     return grouped.applyInPandasWithState(
         fn, output_schema, state_schema, "update",
         GroupStateTimeout.NoTimeout)
-
-
-def streaming_topk(grouped, k: int = 5, *, shard_name: str = "shard",
-                   id_col: str = "item_id"):
-    """Stateful streaming heavy hitters: per SHARD (a hash of the
-    item id — the state-bounding key), exact per-item counts fold
-    across micro-batches and each batch upserts the shard's current
-    top-``k`` (count desc, item asc). The global top-k is a
-    downstream merge of shard top-ks — EXACT whenever shard-k >=
-    global-k (every global heavy hitter is a heavy hitter of its own
-    shard), so the streaming result converges to the batch top-k
-    query: the convergence oracle, like streaming_exact_dedup.
-
-    State per shard: the shard's item->count map as parallel arrays
-    (bounded by the shard's distinct items; shard count is the
-    knob — the same state-vs-exactness contract as streaming_hll,
-    traded the other way)."""
-    from pyspark.sql.types import ArrayType
-
-    state_schema = StructType([
-        StructField("ids", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-        StructField("n_seen", LongType()),
-    ])
-    output_schema = StructType([
-        StructField(shard_name, LongType()),
-        StructField(id_col, LongType()),
-        StructField("cnt", LongType()),
-        StructField("n_seen", LongType()),
-    ])
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            ids, counts, n = state.get
-            tally = dict(zip(ids, counts))
-        else:
-            tally, n = {}, 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n += len(pdf)
-            for item, c in pdf.groupby(id_col).size().items():
-                tally[int(item)] = tally.get(int(item), 0) + int(c)
-        ids = sorted(tally)
-        state.update((ids, [tally[i] for i in ids], n))
-        top = sorted(tally.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        yield pd.DataFrame({shard_name: [key[0]] * len(top),
-                            id_col: [t[0] for t in top],
-                            "cnt": [t[1] for t in top],
-                            "n_seen": [n] * len(top)})
-
-    return grouped.applyInPandasWithState(
-        fn, output_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout)
-
-
-def streaming_token_bucket(grouped, capacity: float, refill_per_sec: float,
-                           *, key_name: str = "host",
-                           key_type=None, t_col: str = "t"):
-    """Stateful streaming token-bucket politeness admission: per host
-    the state is THREE numbers (tokens, last fetch time, admitted
-    count) plus the request counter — constant memory per key, the
-    streaming twin of crawl.token_bucket_admission (identical
-    sequential recursion, so the final batch row converges to the
-    batch fold exactly when micro-batches arrive in time order per
-    key — rows WITHIN a batch are sorted here, the streaming_cusum
-    contract).
-
-    Emits the updated per-host admission summary each batch — the
-    live politeness dashboard / shed-load feed."""
-    key_type = key_type or StringType()
-    state_schema = StructType([
-        StructField("tok", DoubleType()),
-        StructField("lt", DoubleType()),
-        StructField("adm", LongType()),
-        StructField("n", LongType()),
-    ])
-    output_schema = StructType([
-        StructField(key_name, key_type),
-        StructField("n_requests", LongType()),
-        StructField("n_admitted", LongType()),
-        StructField("n_deferred", LongType()),
-        StructField("final_tokens", DoubleType()),
-    ])
-    cap = float(capacity)
-    r = float(refill_per_sec)
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            tok, lt, adm, n = state.get
-        else:
-            tok, lt, adm, n = None, None, 0, 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(t_col)
-            ts = pdf[t_col].to_numpy(dtype="float64")
-            for t in ts:
-                n += 1
-                if tok is None:
-                    tok, lt, adm = cap - 1, float(t), 1
-                    continue
-                tok = min(cap, tok + (float(t) - lt) * r)
-                lt = float(t)
-                if tok >= 1:
-                    tok -= 1
-                    adm += 1
-        state.update((tok, lt, adm, n))
-        yield pd.DataFrame({
-            key_name: [key[0]], "n_requests": [n], "n_admitted": [adm],
-            "n_deferred": [n - adm], "final_tokens": [tok]})
-
-    return grouped.applyInPandasWithState(
-        fn, output_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout)

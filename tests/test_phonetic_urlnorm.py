@@ -4,9 +4,6 @@ default-port edge cases."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from bano_spark.operators.webtext import rfc3986_normalize
 
 

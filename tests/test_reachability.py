@@ -1,17 +1,31 @@
-"""Every module under bano_spark/ must be reachable from a root.
+"""Every module, and every top-level function, under bano_spark/ must be used.
 
-The roots are what runs the system: ``jobs/*.py``, ``perfbench/*.py``,
-``bench.py`` and ``__spark_entry__.py``. The walk follows every
-``import``/``from ... import`` statement found anywhere in a module's
-AST (function bodies included), resolves relative imports against the
-importing module's package, and counts a package's ``__init__`` as
-reached whenever one of its submodules is. No Spark is started.
+Modules: the roots are what runs the system: ``jobs/*.py``,
+``perfbench/*.py``, ``bench.py`` and ``__spark_entry__.py``. The walk
+follows every ``import``/``from ... import`` statement found anywhere in
+a module's AST (function bodies included), resolves relative imports
+against the importing module's package, and counts a package's
+``__init__`` as reached whenever one of its submodules is. No Spark is
+started.
 
 ``KNOWN_ORPHANS`` names the operator modules that are still unreached
 and still carry their own tests; they are deleted a batch at a time,
 each with the tests of its subject. The list may only shrink: a module
 not on it must be reached, and a module on it must still exist and
 still be unreached.
+
+Functions: every top-level ``def``/``class`` of a module not on
+``KNOWN_ORPHANS`` must be named by some caller. The callers are the
+roots above plus ``perfbench/tests/*.py``, ``tools/*.py`` and
+``tests/*.py``, the package's module-level statements, the bodies of
+``@register`` queries, the orphan modules, and the bodies of functions
+that are themselves used, to a fixed point. Matching is by name: any
+identifier, attribute or imported name equal to a function's name keeps
+it (and every function of that name) alive, which errs on the side of
+keeping code. The package's own import statements are bindings, not
+uses. Each glob is listed explicitly rather than searched for
+recursively, so copies of the repo under ``.perfbench_work/`` cannot
+make a name look used.
 """
 
 from __future__ import annotations
@@ -22,6 +36,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "bano_spark"
 ROOT_GLOBS = ("jobs/*.py", "perfbench/*.py", "bench.py", "__spark_entry__.py")
+CALLER_GLOBS = ROOT_GLOBS + ("perfbench/tests/*.py", "tools/*.py", "tests/*.py")
 KNOWN_ORPHANS = frozenset(f"bano_spark.operators.{name}" for name in (
     "agreement", "als", "asof", "bayes_ab", "bloom_audit", "butterfly",
     "cachesim", "calendrics", "causal", "checksums", "classing", "clipping",
@@ -91,6 +106,59 @@ def test_every_package_module_is_reached():
     assert not stale, f"reached or deleted, take off KNOWN_ORPHANS: {stale}"
 
 
+def _names(node: ast.AST, imports: bool) -> set[str]:
+    """Identifiers and attribute names under ``node``, plus imported names
+    when ``imports`` is set."""
+    names: set[str] = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            names.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            names.add(sub.attr)
+        elif imports and isinstance(sub, ast.alias):
+            names.update(sub.name.split("."))
+    return names
+
+
+def _is_register(decorator: ast.expr) -> bool:
+    target = decorator.func if isinstance(decorator, ast.Call) else decorator
+    return isinstance(target, ast.Name) and target.id == "register"
+
+
+def uncalled(repo: Path, package: str, caller_globs, orphans=frozenset()) -> list[str]:
+    """``module.name`` of every top-level def/class of ``package`` that no
+    caller names, where a def named only by uncalled defs is uncalled."""
+    used: set[str] = set()
+    for pattern in caller_globs:
+        for path in sorted(repo.glob(pattern)):
+            used |= _names(ast.parse(path.read_text(), filename=str(path)), imports=True)
+    defs = []
+    for path in sorted((repo / package).rglob("*.py")):
+        module = _module_name(repo, path)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        if module in orphans:
+            used |= _names(tree, imports=True)
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if (isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                    and not any(map(_is_register, stmt.decorator_list))):
+                defs.append((module, stmt))
+            else:
+                used |= _names(stmt, imports=False)
+    while live := [d for d in defs if d[1].name in used]:
+        defs = [d for d in defs if d[1].name not in used]
+        for _, stmt in live:
+            used |= _names(stmt, imports=False)
+    return sorted(f"{module}.{stmt.name}" for module, stmt in defs)
+
+
+def test_every_package_function_is_named():
+    dead = uncalled(REPO, PACKAGE, CALLER_GLOBS, KNOWN_ORPHANS)
+    assert not dead, f"{len(dead)} top-level defs under {PACKAGE}/ that nothing names: {dead}"
+
+
 # -- negative controls: the walk on a planted package -----------------------
 
 def _plant(tmp_path: Path, files: dict[str, str]) -> Path:
@@ -129,3 +197,42 @@ def test_relative_parent_import_counts(tmp_path):
         "main.py": "import pkg.sub.entry\n",
     })
     assert unreached(repo, "pkg", ("main.py",)) == []
+
+
+def test_planted_uncalled_function_is_reported(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/mod.py": "def used():\n    pass\n\n\ndef dead():\n    pass\n",
+        "main.py": "from pkg.mod import used\n",
+    })
+    assert uncalled(repo, "pkg", ("main.py",)) == ["pkg.mod.dead"]
+
+
+def test_function_named_only_by_uncalled_function_is_reported(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/mod.py": "def helper():\n    pass\n\n\ndef dead():\n    return helper()\n",
+        "main.py": "import pkg.mod\n",
+    })
+    assert uncalled(repo, "pkg", ("main.py",)) == ["pkg.mod.dead", "pkg.mod.helper"]
+
+
+def test_function_named_only_by_a_test_is_used(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/mod.py": "def tested():\n    pass\n",
+        "bench.py": "import pkg.mod\n",
+        "tests/test_mod.py": "from pkg import mod\n\n\ndef test_it():\n    mod.tested()\n",
+    })
+    assert uncalled(repo, "pkg", CALLER_GLOBS) == []
+
+
+def test_registered_query_is_used(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "",
+        "pkg/queries.py": ("def kernel():\n    pass\n\n\n"
+                           "@register(\"q\", \"SELECT 1\")\n"
+                           "def query(spark, sf_dir):\n    return kernel()\n"),
+        "main.py": "import pkg.queries\n",
+    })
+    assert uncalled(repo, "pkg", ("main.py",)) == []

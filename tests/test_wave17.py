@@ -2,8 +2,6 @@
 deviational-ellipse closed forms, isochrone banding, and KWIC edge
 windows."""
 
-import math
-
 
 def test_viewshed_wall_blocks(spark):
     from bano_spark.operators.raster import viewshed

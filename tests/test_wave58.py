@@ -1,8 +1,6 @@
 """Hand-computed checks for the wave-58 operators: PSI drift and Markov
 next-event accuracy."""
 
-import math
-
 from bano_spark.operators.eventflow import markov_next_accuracy
 from bano_spark.operators.quantiles import population_stability_index
 

@@ -6,7 +6,6 @@ example."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_jaro_winkler_known_values():
