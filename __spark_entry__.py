@@ -964,383 +964,6 @@ def q_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q19-q23 — deduplication suite over `documents` (exact, minhash-LSH,
-# simhash, jaccard verify): training-data pipeline first-class ops
-# ---------------------------------------------------------------------------
-
-_TOKS = "string_split_regex(trim(lower(text)), '\\s+')"
-_SHINGLES = (f"CASE WHEN len({_TOKS}) >= 3 THEN "
-             f"list_transform(generate_series(0, len({_TOKS}) - 3), "
-             f"i -> array_to_string(list_slice({_TOKS}, i + 1, i + 3), ' ')) "
-             f"ELSE [array_to_string({_TOKS}, ' ')] END")
-
-_Q19_ORACLE = """
-SELECT md5(text) AS text_hash, min(doc_id) AS keeper, count(*) AS n_dups
-FROM documents GROUP BY 1
-"""
-
-
-@register("dedup_exact", _Q19_ORACLE)
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_read(spark, sf_dir, "documents"))
-
-
-def _sig_cte(table: str = "documents") -> str:
-    """Banded-md5 minwise sketch (one md5 -> four 32-bit hash values as
-    disjoint hex substrings), mirroring operators.dedup.minhash_signature."""
-    mins = ",\n         ".join(
-        f"list_min(list_transform(m{i // 4}, x -> substr(x, {8 * (i % 4) + 1}, 8))) AS h{i}"
-        for i in range(8))
-    blocks = ",\n               ".join(
-        f"list_transform(sh, s -> md5('b{b}|' || s)) AS m{b}" for b in range(2))
-    return (f"sig AS (SELECT doc_id,\n         {mins}\n"
-            f"  FROM (SELECT doc_id,\n               {blocks}\n"
-            f"        FROM (SELECT doc_id, {_SHINGLES} AS sh FROM {table})))")
-
-
-_Q20_ORACLE = f"""
-WITH {_sig_cte()}
-SELECT * FROM sig ORDER BY doc_id
-"""
-
-
-@register("minhash_signature", _Q20_ORACLE)
-def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import minhash_signature
-
-    return minhash_signature(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-_Q21_ORACLE = f"""
-WITH {_sig_cte()},
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                          AND a.doc_id < b.doc_id
-ORDER BY 1, 2
-"""
-
-
-@register("minhash_lsh_pairs", _Q21_ORACLE)
-def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import minhash_dedup_pairs
-
-    return minhash_dedup_pairs(_read(spark, sf_dir, "documents")).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# q21b/q21c — hardened LSH over a mega-cluster fixture (VERDICT r1
-# item 8): 1/3 of rows are ONE identical boilerplate text (the exact
-# mega-cluster — collapsed to a single representative before banding),
-# 1/3 are whitespace variants of one text (distinct md5, identical
-# token stream => identical signatures: the bucket the cap must drop),
-# 1/3 are small near-dup families (the pairs that must survive).
-# ---------------------------------------------------------------------------
-
-def _mega_docs_sql(cast: str) -> str:
-    return f"""
-mdocs AS (
-  SELECT o_orderkey AS doc_id,
-         CASE WHEN o_orderkey % 3 = 0
-              THEN 'terms and conditions apply to every page of this site'
-              WHEN o_orderkey % 3 = 1
-              THEN 'mega family boilerplate body content'
-                   || repeat(' ', 1 + o_orderkey % 50) || 'tail marker end'
-              ELSE 'family ' || CAST(o_orderkey % 40 AS {cast})
-                   || ' body text word' || CAST(o_orderkey % 40 AS {cast})
-                   || ' extra tail '
-                   || CASE WHEN o_orderkey % 7 = 0 THEN 'variant' ELSE 'common' END
-         END AS text
-  FROM orders
-)"""
-
-
-_MEGA_REPS = """
-reps AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text, min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
-    FROM mdocs) WHERE doc_id = keeper
-)"""
-
-_MEGA_BANDS = """
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-),
-sizes AS (SELECT band, key, count(*) AS n FROM bands GROUP BY 1, 2)"""
-
-
-_Q21B_ORACLE = f"""
-WITH {_mega_docs_sql('VARCHAR')},
-{_MEGA_REPS},
-{_sig_cte('reps')},
-{_MEGA_BANDS},
-kept AS (
-  SELECT b.doc_id, b.band, b.key FROM bands b
-  JOIN sizes s ON b.band = s.band AND b.key = s.key AND s.n <= 16
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM kept a JOIN kept b ON a.band = b.band AND a.key = b.key
-                        AND a.doc_id < b.doc_id
-ORDER BY 1, 2
-"""
-
-
-@register("minhash_lsh_safe_pairs", _Q21B_ORACLE)
-def q_minhash_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import minhash_dedup_pairs_safe
-
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    mdocs = spark.sql("WITH " + _mega_docs_sql("STRING") + " SELECT * FROM mdocs")
-    return minhash_dedup_pairs_safe(mdocs, max_bucket=16).orderBy("id_a", "id_b")
-
-
-_Q21C_ORACLE = f"""
-WITH {_mega_docs_sql('VARCHAR')},
-{_MEGA_REPS},
-{_sig_cte('reps')},
-{_MEGA_BANDS}
-SELECT band, count(*) AS n_buckets_dropped,
-       CAST(sum(n) AS BIGINT) AS n_rows_dropped
-FROM sizes WHERE n > 16 GROUP BY band ORDER BY band
-"""
-
-
-@register("lsh_dropped_bucket_stats", _Q21C_ORACLE)
-def q_lsh_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import (exact_representatives,
-                                            lsh_dropped_buckets,
-                                            minhash_signature)
-
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    mdocs = spark.sql("WITH " + _mega_docs_sql("STRING") + " SELECT * FROM mdocs")
-    sig = minhash_signature(exact_representatives(mdocs))
-    return lsh_dropped_buckets(sig, max_bucket=16).orderBy("band")
-
-
-def _q22_oracle() -> str:
-    from bano_spark.operators.dedup import simhash_bits
-
-    votes = ",\n         ".join(
-        f"sum({e}) AS v{j}" for j, e in enumerate(simhash_bits(16, " // ")))
-    bits = " + ".join(f"(CASE WHEN v{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(16))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_TOKS})) AS tok FROM documents
-),
-votes AS (SELECT doc_id,
-         {votes}
-  FROM toks GROUP BY doc_id)
-SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM votes ORDER BY doc_id
-"""
-
-
-@register("simhash", _q22_oracle())
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import simhash
-
-    return simhash(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-_Q23_ORACLE = f"""
-WITH {_sig_cte()},
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                            AND a.doc_id < b.doc_id
-),
-toksets AS (SELECT doc_id, list_distinct({_TOKS}) AS t FROM documents)
-SELECT p.id_a, p.id_b,
-       round(len(list_intersect(ta.t, tb.t)) * 1.0
-             / len(list_distinct(ta.t || tb.t)), 6) AS jaccard
-FROM pairs p
-JOIN toksets ta ON ta.doc_id = p.id_a
-JOIN toksets tb ON tb.doc_id = p.id_b
-ORDER BY 1, 2
-"""
-
-
-@register("ngram_jaccard_pairs", _Q23_ORACLE)
-def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import jaccard_pairs, minhash_dedup_pairs
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(docs)
-    return jaccard_pairs(docs, pairs).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# q24-q25 — similarity search over embeddings (brute-force top-k + sign-LSH
-# near-dup): the ANN baseline + scale path
-# ---------------------------------------------------------------------------
-
-_DIM = 64
-_DOT = ("list_sum(list_transform(generate_series(1, 64), "
-        "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.q_vec[i] AS DOUBLE)))")
-_NORM_A = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))")
-_NORM_B = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(b.q_vec[i] AS DOUBLE) * CAST(b.q_vec[i] AS DOUBLE))))")
-
-_Q24_ORACLE = f"""
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT b.q_id, a.vec_id,
-         round({_DOT} / ({_NORM_A} * {_NORM_B}), 4) AS cos_sim
-  FROM embeddings a JOIN q b ON a.vec_id != b.q_id
-)
-SELECT q_id, vec_id, cos_sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, vec_id) AS rnk
-  FROM scored
-) WHERE rnk <= 5
-ORDER BY q_id, rnk
-"""
-
-
-@register("ann_cosine_topk", _Q24_ORACLE)
-def q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import brute_force_topk
-
-    vecs = _read(spark, sf_dir, "embeddings")
-    queries_df = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return brute_force_topk(vecs.select("vec_id", "embedding"), queries_df, k=5).orderBy(
-        "q_id", "rnk")
-
-
-def _bucket_sql(tbl: str) -> str:
-    terms = []
-    for j in range(8):
-        s = (f"(CAST({tbl}.embedding[{4 * j + 1}] AS DOUBLE)"
-             f" + CAST({tbl}.embedding[{4 * j + 2}] AS DOUBLE)"
-             f" - CAST({tbl}.embedding[{4 * j + 3}] AS DOUBLE)"
-             f" - CAST({tbl}.embedding[{4 * j + 4}] AS DOUBLE))")
-        terms.append(f"(CASE WHEN {s} > 0 THEN {2**j} ELSE 0 END)")
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-_Q25_ORACLE = f"""
-WITH b AS (SELECT vec_id, embedding, {_bucket_sql('embeddings')} AS bucket FROM embeddings)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(
-         list_sum(list_transform(generate_series(1, 64),
-           i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(generate_series(1, 64),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-          * sqrt(list_sum(list_transform(generate_series(1, 64),
-              i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-       , 4) AS cos_sim
-FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE round(
-         list_sum(list_transform(generate_series(1, 64),
-           i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(generate_series(1, 64),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))
-          * sqrt(list_sum(list_transform(generate_series(1, 64),
-              i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))
-       , 4) >= 0.3
-ORDER BY 1, 2
-"""
-
-
-@register("lsh_near_dup_pairs", _Q25_ORACLE)
-def q_lsh_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import lsh_near_dup_pairs
-
-    vecs = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return lsh_near_dup_pairs(vecs, threshold=0.3, n_bits=8).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# q26 — text-analysis profile: token count, lang-ID heuristic, quality
-# score, fingerprint (training-data pipeline ops)
-# ---------------------------------------------------------------------------
-
-def _q26_oracle() -> str:
-    from bano_spark.operators.textstats import STOPWORDS
-
-    def hits(lang: str) -> str:
-        lst = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-        return (f"len(list_intersect(list_distinct({_TOKS}), [{lst}]))")
-
-    ntok = (f"CASE WHEN trim(text) = '' THEN 0 "
-            f"ELSE len(string_split_regex(trim(text), '\\s+')) END")
-    return f"""
-WITH s AS (
-  SELECT doc_id, text,
-         CAST({ntok} AS BIGINT) AS n_tokens,
-         {hits('fr')} AS fr, {hits('en')} AS en, {hits('es')} AS es,
-         CAST(length(text) AS DOUBLE) AS n_chars,
-         CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
-              AS DOUBLE) AS n_punct
-  FROM documents
-)
-SELECT doc_id, n_tokens,
-       CASE WHEN greatest(fr, en, es) = 0 THEN 'und'
-            WHEN fr = greatest(fr, en, es) THEN 'fr'
-            WHEN en = greatest(fr, en, es) THEN 'en'
-            ELSE 'es' END AS pred_lang,
-       round((
-         (CASE WHEN n_chars >= 50 AND n_chars <= 10000 THEN 1.0 ELSE 0.0 END)
-       + (CASE WHEN n_chars > 0 THEN
-              (CASE WHEN n_punct / n_chars <= 0.1 THEN 1.0 ELSE 0.0 END)
-          ELSE 0.0 END)
-       + (CASE WHEN n_tokens > 0
-               AND n_chars / n_tokens >= 3.0 AND n_chars / n_tokens <= 12.0
-               THEN 1.0 ELSE 0.0 END)
-       ) / 3.0, 6) AS quality,
-       md5(array_to_string(list_sort(list_distinct({_TOKS})), ' ')) AS fingerprint
-FROM s ORDER BY doc_id
-"""
-
-
-@register("text_profile", _q26_oracle())
-def q_textprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.textstats import document_profile
-
-    return document_profile(_read(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# q27 — hourly windowed event counts (streaming-equivalent batch agg;
-# the same plan runs under Structured Streaming with a watermark)
-# ---------------------------------------------------------------------------
-
-_Q27_ORACLE = """
-SELECT date_trunc('hour', ts) AS window_start, event_type, count(*) AS n,
-       round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-@register("windowed_event_counts", _Q27_ORACLE)
-def q_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "sum_value")
-        .orderBy("window_start", "event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q28 — street importance with convex-hull geodesic metrics (A4/M2).
 # Points per street are collinear (same lat), so the oracle can compute
 # the hull longest-line with the same haversine formula in SQL.
@@ -1808,101 +1431,6 @@ def q_name_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cumul.subtract(fant).intersect(ban).orderBy("name")
 
 
-# ---------------------------------------------------------------------------
-# wave-4 queries (remaining SURVEY §2 ops + training-pipeline extras)
-# ---------------------------------------------------------------------------
-
-
-# ---------------------------------------------------------------------------
-# q26e — LSH quality evaluation: precision/recall/F1 of the minhash
-# banding against EXACT shingle-set Jaccard ground truth at t = 0.5.
-# Truth pairs generate from the inverted shared-shingle join —
-# complete for any positive Jaccard (j >= t implies a shared
-# shingle), never a cross product; evaluation is the measurement
-# discipline the dedup family's knobs (bands, rows, caps) are tuned
-# by. Single-row output via three O(1) driver counts (the knox_test
-# pattern).
-# ---------------------------------------------------------------------------
-
-_LQE_T = 0.5
-
-_Q26E_ORACLE = f"""
-WITH {{sig}},
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                            AND a.doc_id < b.doc_id
-),
-shsets AS (SELECT doc_id, list_distinct({{sh}}) AS s FROM documents),
-inv AS (SELECT doc_id, unnest(list_distinct({{sh}})) AS sh
-        FROM documents),
-cpairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM inv a JOIN inv b ON b.sh = a.sh AND a.doc_id < b.doc_id
-),
-jacc AS (
-  SELECT p.id_a, p.id_b,
-         len(list_intersect(sa.s, sb.s)) * 1.0
-           / len(list_distinct(sa.s || sb.s)) AS j
-  FROM cpairs p
-  JOIN shsets sa ON sa.doc_id = p.id_a
-  JOIN shsets sb ON sb.doc_id = p.id_b
-),
-truth AS (SELECT id_a, id_b FROM jacc WHERE j >= {{t}}),
-m AS (SELECT (SELECT count(*) FROM cand) AS nc,
-             (SELECT count(*) FROM truth) AS nt,
-             (SELECT count(*) FROM cand JOIN truth USING (id_a, id_b))
-               AS tp)
-SELECT CAST(nc AS BIGINT) AS n_candidates, CAST(nt AS BIGINT) AS n_truth,
-       CAST(tp AS BIGINT) AS tp,
-       round(tp / CAST(nc AS DOUBLE), 6) AS precision,
-       round(tp / CAST(nt AS DOUBLE), 6) AS recall,
-       round(2.0 * tp / CAST(nc + nt AS DOUBLE), 6) AS f1
-FROM m
-""".format(sig=_sig_cte(), sh=_SHINGLES, t=_LQE_T)
-
-
-@register("lsh_quality_eval", _Q26E_ORACLE)
-def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import minhash_dedup_pairs, shingles_expr
-
-    docs = _read(spark, sf_dir, "documents")
-    cand = minhash_dedup_pairs(docs)
-    shsets = docs.select(
-        "doc_id", F.array_distinct(shingles_expr("text")).alias("s"))
-    inv = shsets.select("doc_id", F.explode("s").alias("sh"))
-    cpairs = (inv.alias("a").join(
-        inv.alias("b"),
-        (F.col("a.sh") == F.col("b.sh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b")).distinct())
-    j = (cpairs
-         .join(shsets.select(F.col("doc_id").alias("id_a"),
-                             F.col("s").alias("sa")), "id_a")
-         .join(shsets.select(F.col("doc_id").alias("id_b"),
-                             F.col("s").alias("sb")), "id_b")
-         .withColumn("j", F.size(F.array_intersect("sa", "sb"))
-                     / F.size(F.array_union("sa", "sb")).cast("double")))
-    truth = j.filter(F.col("j") >= _LQE_T).select("id_a", "id_b")
-    nc = cand.count()
-    nt = truth.count()
-    tp = cand.join(truth, ["id_a", "id_b"]).count()
-    row = (nc, nt, tp,
-           round(tp / nc, 6) if nc else 0.0,
-           round(tp / nt, 6) if nt else 0.0,
-           round(2.0 * tp / (nc + nt), 6) if nc + nt else 0.0)
-    return spark.createDataFrame(
-        [row], "n_candidates long, n_truth long, tp long, "
-               "precision double, recall double, f1 double")
-
-
 from bano_spark import queries_wave4, queries_wave5, queries_wave120  # noqa: E402
 
 for _wave in (queries_wave4, queries_wave5, queries_wave120):
@@ -1926,43 +1454,3 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return dict(_ORACLES)
-
-
-# ---------------------------------------------------------------------------
-# q21d — sketch-based Jaccard estimation on LSH candidates: fraction of
-# agreeing minhash components (E[est] = J), exact n/8 rationals — the
-# O(pairs) verify that never re-reads document text.
-# ---------------------------------------------------------------------------
-
-_Q21D_ORACLE = f"""
-WITH {_sig_cte()},
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                            AND a.doc_id < b.doc_id
-)
-SELECT p.id_a, p.id_b,
-       CAST({' + '.join(f'CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END'
-                        for i in range(8))} AS DOUBLE) / 8.0 AS est_jaccard
-FROM pairs p
-JOIN sig sa ON sa.doc_id = p.id_a
-JOIN sig sb ON sb.doc_id = p.id_b
-ORDER BY 1, 2
-"""
-
-
-@register("minhash_jaccard_estimate", _Q21D_ORACLE)
-def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import (lsh_candidate_pairs,
-                                            minhash_jaccard_estimate,
-                                            minhash_signature)
-
-    sig = minhash_signature(_read(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(sig)
-    return minhash_jaccard_estimate(sig, pairs).orderBy("id_a", "id_b")

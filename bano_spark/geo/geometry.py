@@ -293,36 +293,6 @@ def polygon_area_centroid(verts: np.ndarray):
     return abs(a2) / 2.0, float(cx), float(cy)
 
 
-def polygon_area_centroid_batch(rings):
-    """Vectorized shoelace over a batch of rings, grouped by vertex
-    count so each group is one (n, k, 2) einsum — no per-row Python.
-    ``rings`` is a sequence of (k_i, 2) arrays; returns (area, cx, cy)
-    float arrays aligned with the input order."""
-    n = len(rings)
-    area = np.empty(n)
-    cx = np.empty(n)
-    cy = np.empty(n)
-    by_len: dict[int, list[int]] = {}
-    for i, r in enumerate(rings):
-        k = len(r) - 1 if len(r) and (r[0] == r[-1]).all() else len(r)
-        by_len.setdefault(k, []).append(i)
-    for k, idxs in by_len.items():
-        v = np.stack([np.asarray(rings[i], dtype=np.float64)[:k] for i in idxs])
-        x, y = v[:, :, 0], v[:, :, 1]
-        x2, y2 = np.roll(x, -1, axis=1), np.roll(y, -1, axis=1)
-        cross = x * y2 - x2 * y
-        a2 = cross.sum(axis=1)
-        safe = np.where(a2 == 0, 1.0, a2)
-        gx = ((x + x2) * cross).sum(axis=1) / (3.0 * safe)
-        gy = ((y + y2) * cross).sum(axis=1) / (3.0 * safe)
-        gx = np.where(a2 == 0, x.mean(axis=1), gx)
-        gy = np.where(a2 == 0, y.mean(axis=1), gy)
-        area[idxs] = np.abs(a2) / 2.0
-        cx[idxs] = gx
-        cy[idxs] = gy
-    return area, cx, cy
-
-
 def cells_to_rings(cells: np.ndarray) -> list[np.ndarray]:
     """Raster -> vector: boundary rings of a set of unit grid cells
     (the inverse of cover_polygon's vector -> raster; together they

@@ -138,17 +138,6 @@ def zorder_key(tx: Column, ty: Column, bits: int = 16) -> Column:
     return out.cast("bigint")
 
 
-def zorder_sql(tx: str, ty: str, bits: int = 16) -> str:
-    """The identical interleave as a SQL expression (DuckDB/Spark SQL
-    shared syntax: >>, <<, & on integers) — the oracle twin of
-    :func:`zorder_key`."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"((({tx} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({ty} >> {i}) & 1) << {2 * i + 1})")
-    return "(" + " + ".join(terms) + ")"
-
-
 def rect_cover_sequence(xmin, ymin, xmax, ymax, z: int):
     """(tx_seq, ty_seq) column pair: the slippy-cell index ranges a
     bbox covers at zoom ``z`` — explode both for the full cover. The

@@ -1,7 +1,6 @@
-"""Bloom filter build + empirical FPR audit — the measured companion
-of bloom_pruned_join (which ASSUMES a filter's error rate; this
-builds one distributedly and measures it against the theoretical
-(1 - e^(-kn/m))^k).
+"""Bloom filter build + empirical FPR audit: builds one filter
+distributedly and measures its false-positive rate against the
+theoretical (1 - e^(-kn/m))^k.
 
 Build shape: each inserted key explodes to k bit positions
 (independent multiplicative hashes mod m); positions become
@@ -19,8 +18,6 @@ broadcast-sized by construction.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, functions as F
 

@@ -28,7 +28,7 @@ with fewer than 3 open vertices collapse to empty arrays.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["halfplane_pass_sql", "clip_to_tiles", "ring_2area_sql",
            "tile_cover"]

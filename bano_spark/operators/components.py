@@ -57,12 +57,3 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if changed == 0:
             break
     return labels
-
-
-def dedup_keepers(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per component: the keeper (min id) and cluster size — the
-    'collapse near-dup cluster to one document' decision table."""
-    comp = connected_components(edges, src, dst)
-    return (comp.groupBy("comp")
-            .agg(F.count(F.lit(1)).alias("cluster_size"))
-            .select(F.col("comp").alias("keeper"), "cluster_size"))

@@ -4,9 +4,8 @@ engine's curation primitives into ONE auditable table: language
 gate -> quality gate (length + lexical diversity) -> prefix-cluster
 dedup (keep the smallest doc_id per 5-word prefix) -> per-source
 token budget (PREFIX CUTOFF by length, see below) — with the FIRST
-failing stage recorded as the drop reason (the lineage a curation run must emit;
-cf. gopher_quality_flags / dedup_exact / token_budget_selection /
-source_mixing for the single-stage versions).
+failing stage recorded as the drop reason (the lineage a curation run
+must emit).
 
 Exactness: every gate is integer/string logic — the diversity ratio
 is the cross-multiplied compare distinct*10 >= words*3 (no

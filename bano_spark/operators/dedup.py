@@ -6,11 +6,11 @@ expressions (md5 / array ops inside whole-stage codegen) so they scale
 and — deliberately — reproduce bit-for-bit in any engine with md5:
 the DuckDB oracle verifies them.
 
-  exact:    md5(text) group-by, keep lowest id
-  minhash:  word-shingle -> per-seed min(md5(seed||shingle)) signature,
-            banded LSH; candidate pairs = equal band key
-  simhash:  per-bit majority vote of md5(token) bits
-  jaccard:  exact word-set jaccard on LSH candidate pairs
+  minhash:   word-shingle -> per-seed min(md5(seed||shingle)) signature,
+             banded LSH; candidate pairs = equal band key; Jaccard and
+             containment estimates from the signatures
+  simhash:   pairs of precomputed simhashes within a Hamming distance
+  winnowing: k-gram fingerprints, the minimum hash of each window
 """
 
 from __future__ import annotations
@@ -33,15 +33,6 @@ def shingles_expr(text_col: str, n: int = 3) -> Column:
         f"transform(sequence(0, size({toks}) - {n}), "
         f"i -> concat_ws(' ', slice({toks}, i + 1, {n}))) "
         f"ELSE array(concat_ws(' ', {toks})) END"
-    )
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One row per distinct text: keeper id (min), duplicate count."""
-    return (
-        docs.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col))
-        .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keeper"), F.count(F.lit(1)).alias("n_dups"))
     )
 
 
@@ -109,8 +100,7 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 
     dropped before the self-join, bounding the output at
     O(buckets * max_bucket^2) — without it one bucket of n whitespace-
     variant boilerplate docs emits n^2/2 pairs (VERDICT r1 item 8).
-    Dropped buckets are observable via lsh_dropped_buckets; callers
-    owning a log stream should report them."""
+    Callers owning a log stream should report the dropped buckets."""
     exploded = band_keys(sig, id_col, n_hashes, band_size)
     if max_bucket is not None:
         sizes = exploded.groupBy("band", "key").agg(
@@ -127,100 +117,6 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 
     )
 
 
-def lsh_dropped_buckets(sig: DataFrame, id_col: str = "doc_id",
-                        n_hashes: int = 8, band_size: int = 2,
-                        max_bucket: int = 64) -> DataFrame:
-    """The cap's disclosure side: per band, how many buckets exceeded
-    ``max_bucket`` and how many member rows they held — what a capped
-    run silently skipped, made loud."""
-    sizes = band_keys(sig, id_col, n_hashes, band_size) \
-        .groupBy("band", "key").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        sizes.filter(F.col("n") > max_bucket)
-        .groupBy("band")
-        .agg(F.count(F.lit(1)).alias("n_buckets_dropped"),
-             F.sum("n").cast("bigint").alias("n_rows_dropped"))
-    )
-
-
-def exact_representatives(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Collapse exact-duplicate texts to their min-id keeper row —
-    the pre-pass that stops identical-boilerplate mega-clusters from
-    ever reaching the LSH banding."""
-    hashed = docs.select(F.col(id_col), F.col(text_col),
-                         F.md5(F.col(text_col)).alias("_th"))
-    keep = hashed.groupBy("_th").agg(F.min(id_col).alias(id_col))
-    return hashed.join(keep, ["_th", id_col]).drop("_th")
-
-
-def minhash_dedup_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        n_hashes: int = 8, band_size: int = 2, shingle_n: int = 3) -> DataFrame:
-    return lsh_candidate_pairs(
-        minhash_signature(docs, text_col, id_col, n_hashes, shingle_n),
-        id_col, n_hashes, band_size)
-
-
-def minhash_dedup_pairs_safe(docs: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id", n_hashes: int = 8,
-                             band_size: int = 2, shingle_n: int = 3,
-                             max_bucket: int = 64) -> DataFrame:
-    """The 100 TB-shaped near-dup pipeline: exact duplicates collapse to
-    one representative BEFORE banding (their cluster is already reported
-    by exact_dedup), then band buckets are capped at ``max_bucket`` so
-    no single degenerate key can go quadratic. Candidate pairs are
-    between representatives only."""
-    reps = exact_representatives(docs, text_col, id_col)
-    sig = minhash_signature(reps, text_col, id_col, n_hashes, shingle_n)
-    return lsh_candidate_pairs(sig, id_col, n_hashes, band_size,
-                               max_bucket=max_bucket)
-
-
-def jaccard_pairs(docs: DataFrame, pairs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Exact distinct-word jaccard for candidate pairs."""
-    toksets = docs.select(
-        F.col(id_col), F.array_distinct(tokens(F.col(text_col))).alias("toks"))
-    j = (
-        pairs.join(toksets.withColumnRenamed(id_col, "id_a").withColumnRenamed("toks", "ta"), "id_a")
-        .join(toksets.withColumnRenamed(id_col, "id_b").withColumnRenamed("toks", "tb"), "id_b")
-    )
-    inter = F.size(F.array_intersect("ta", "tb")).cast("double")
-    union = F.size(F.array_union("ta", "tb")).cast("double")
-    return j.select("id_a", "id_b", F.round(inter / union, 6).alias("jaccard"))
-
-
-def simhash_bits(n_bits: int = 16, intdiv: str = " div "):
-    """SQL text exprs for an n-bit simhash vote over a ``tok`` column.
-
-    Bit j of token t = bit j of the first 4 hex digits of md5(t);
-    document bit j = majority vote over tokens. Pure SQL in both
-    engines (dialect only differs in the integer-division operator:
-    ' div ' for Spark, ' // ' for DuckDB)."""
-    assert n_bits <= 16
-    exprs = []
-    for j in range(n_bits):
-        digit = j // 4 + 1
-        bit = j % 4
-        v = f"(instr('0123456789abcdef', substr(md5(tok), {digit}, 1)) - 1)"
-        exprs.append(f"CASE WHEN ({v}{intdiv}{2 ** bit}) % 2 = 1 THEN 1 ELSE -1 END")
-    return exprs
-
-
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            n_bits: int = 16) -> DataFrame:
-    """(id, simhash bigint). Majority-vote bits from token md5s."""
-    toks = docs.select(
-        F.col(id_col), F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"))
-    votes = [F.sum(F.expr(e)).alias(f"v{j}") for j, e in enumerate(simhash_bits(n_bits))]
-    agg = toks.groupBy(id_col).agg(*votes)
-    sim = None
-    for j in range(n_bits):
-        term = F.when(F.col(f"v{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return agg.select(F.col(id_col), sim.cast("bigint").alias("simhash"))
-
-
 def minhash_jaccard_estimate(sig: DataFrame, pairs: DataFrame,
                              id_col: str = "doc_id",
                              n_hashes: int = 8) -> DataFrame:
@@ -228,8 +124,7 @@ def minhash_jaccard_estimate(sig: DataFrame, pairs: DataFrame,
     of agreeing minhash components (the standard estimator; E[est] =
     J). Exact n/n_hashes rational arithmetic — no text access, so the
     verify step costs O(pairs x n_hashes) regardless of document
-    size; exact jaccard_pairs remains the precise (text-reading)
-    alternative."""
+    size."""
     hs = [f"h{i}" for i in range(n_hashes)]
     a = sig.select(F.col(id_col).alias("id_a"),
                    *[F.col(h).alias(f"a_{h}") for h in hs])
@@ -250,9 +145,9 @@ def minhash_containment_estimate(sig: DataFrame, sizes: DataFrame,
     minhash Jaccard estimate J and the exact per-doc distinct-shingle
     counts (na, nb), invert J = I / (na + nb - I) to the intersection
     estimate I = J * (na + nb) / (1 + J), then C(a in b) = I / na —
-    the asymmetric doc-in-doc signal (setsim.containment_pairs is the
-    exact text-reading twin) at sketch cost: O(pairs * n_hashes), no
-    text access, so a 10^12-doc verify step never rereads the corpus.
+    the asymmetric doc-in-doc signal at sketch cost: O(pairs *
+    n_hashes), no text access, so a 10^12-doc verify step never
+    rereads the corpus.
 
     ``sizes`` carries (id_col, n_shingles). All arithmetic is exact
     rationals through IEEE-identical divisions — oracle-reproducible
@@ -298,8 +193,7 @@ def simhash_hamming_pairs(sim: DataFrame, max_hamming: int = 3,
     loud error otherwise, not silent under-recall). Scale shape:
     identical to minhash LSH banding — bucket sizes bounded by band
     collision rates; degenerate buckets (all-identical content) are
-    collapsed upstream by exact_representatives exactly as in the
-    minhash path."""
+    collapsed upstream by an exact dedup, as in the minhash path."""
     if max_hamming >= n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} needs n_bands > max_hamming "

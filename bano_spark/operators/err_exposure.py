@@ -28,8 +28,6 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["err_at_k", "exposure_fairness"]
 
 # grade -> stopping probability (2^g - 1) / 2^gmax, gmax = 4 (dyadic)
-R_CASE = ("CASE CAST(v[3] AS INT) WHEN 0 THEN 0.0 WHEN 1 THEN 0.0625 "
-          "WHEN 2 THEN 0.1875 ELSE 0.4375 END")
 _R_SPARK = ("CASE CAST(v.g AS INT) WHEN 0 THEN 0.0 WHEN 1 THEN 0.0625 "
             "WHEN 2 THEN 0.1875 ELSE 0.4375 END")
 

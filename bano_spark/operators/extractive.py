@@ -1,9 +1,8 @@
 """Centroid-based extractive summarization (Radev's MEAD family) —
 pick each document's most representative pseudo-sentences by cosine
 to the document's own term distribution — the curation-side
-summarizer next to tfidf_keywords / textrank_keywords (which rank
-TERMS; this ranks SPANS, the thing a context-budgeted pipeline
-actually keeps).
+summarizer next to the keyword rankers (which rank TERMS; this ranks
+SPANS, the thing a context-budgeted pipeline actually keeps).
 
 Exactness: term counts are integers, so every dot product and norm
 is an exact integer aggregate (sums of integer products are

@@ -25,7 +25,7 @@ line-geometry members Spark lacks natively:
 - ``segment_intersections_join``: all strictly-crossing segment pairs
   between two line layers (road-graph conflation, overlay candidate
   edges). Candidates come from a bbox cell-cover equi-join (same
-  discipline as ``pip_join``/``overlay.py`` — never a cross product);
+  discipline as ``pip_join`` — never a cross product);
   the exact refine is the classic double-orientation (ccw) test,
   expressed as column arithmetic so the whole operator stays in
   whole-stage codegen. Strict crossings only (collinear overlaps and

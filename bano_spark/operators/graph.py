@@ -890,10 +890,9 @@ def boruvka_mst(edges: DataFrame, *, src: str = "src", dst: str = "dst",
     (map-side combinable), then contraction runs ONLY on the
     chosen-edge COMPONENT graph (at most one edge per live component).
     That graph is collected to the driver and contracted with an exact
-    union-find when it has <= ``collect_threshold`` edges (the same
-    disclosed small-side escape hatch as kmeans' centroid collect —
-    O(components) driver memory, zero shuffle rounds); above the
-    threshold it falls back to the distributed min-label
+    union-find when it has <= ``collect_threshold`` edges (a disclosed
+    small-side escape hatch — O(components) driver memory, zero shuffle
+    rounds); above the threshold it falls back to the distributed min-label
     ``connected_components`` operator. Components at least halve per
     round, so rounds <= log2(n) and the chosen graph shrinks
     geometrically — at 100x scale only the first round or two take the

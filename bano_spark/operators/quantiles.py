@@ -153,7 +153,7 @@ def exact_quantiles_df(df: DataFrame, col: str, qs: list[float], *,
                        bins: int = 10_000) -> DataFrame:
     """DataFrame wrapper for the oracle harness: one row per quantile
     (q, value). The selection runs eagerly (a driver-coordinated
-    algorithm, like the k-means and prefix-sum operators); the result
+    algorithm, like the prefix-sum operator); the result
     is O(len(qs)) rows."""
     vals = exact_quantiles(df, col, qs, bins=bins)
     spark = df.sparkSession

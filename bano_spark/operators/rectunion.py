@@ -1,7 +1,6 @@
 """Klee's measure problem in 2-D — exact union area of axis-aligned
 rectangles via coordinate-compression sweep, fully keyed (no global
-window, no Python). The 2-D twin of the wave-79 1-D interval union
-and the union-side complement of rect_intersection_areas (wave 5).
+window, no Python). The 2-D twin of the wave-79 1-D interval union.
 
 Method (Bentley 1977 sweep, re-expressed relationally): per group,
 the distinct x-edges cut the plane into slabs; because slab edges ARE

@@ -160,24 +160,6 @@ def distributed_cumsum(df: DataFrame, range_col: str, order_by: list[Column],
             .drop("_pid", "_local_cum", "_off"))
 
 
-def token_budget_select(scored: DataFrame, budget: int,
-                        tokens_col: str = "n_tokens",
-                        quality_col: str = "quality_rank",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Greedy best-first selection: order by quality desc (id tiebreak),
-    keep documents while the running token total before each document
-    is under `budget`. Matches SQL
-    ``sum(tokens) OVER (ORDER BY quality DESC, id) - tokens < budget``.
-    Bucketing uses the composite (quality, id) key, so a corpus with
-    only a handful of distinct quality values still spreads across all
-    buckets."""
-    order = [F.desc(quality_col), F.asc(id_col)]
-    cum = distributed_cumsum(scored, quality_col, order, tokens_col,
-                             out_col="cum_tokens", descending=True,
-                             tiebreak_col=id_col)
-    return cum.filter(F.col("cum_tokens") - F.col(tokens_col) < budget)
-
-
 def weighted_sample_wor(df: DataFrame, weight_col: str, n: int,
                         id_col: str = "doc_id",
                         key_col: str = "sample_key",
@@ -189,8 +171,8 @@ def weighted_sample_wor(df: DataFrame, weight_col: str, n: int,
     derived from the row's content — the first 8 hex digits of
     md5(id) scaled to (0,1) — so the sample is a pure function of the
     data: re-running, re-partitioning, or recomputing lineage draws
-    the SAME rows (the property `stratified_sample` relies on, and the
-    reason any SQL engine can replay the draw exactly).
+    the SAME rows (the reason any SQL engine can replay the draw
+    exactly).
 
     Scale shape: key derivation is pure codegen (md5/conv/ln — no
     Python, no RNG broadcast); top-n is orderBy+limit, which Spark
@@ -264,9 +246,8 @@ def source_mixing_weights(docs: DataFrame, alpha: float = 0.7,
     up-samples small sources, alpha = 1 keeps natural proportions).
     Output: one row per source with doc/token counts, the natural
     share, the tempered weight, and — when ``budget_tokens`` is given —
-    the token allocation floor(w_i * budget). Applying an allocation is
-    the existing hash-threshold ``stratified_sample`` / token-budget
-    selection per source.
+    the token allocation floor(w_i * budget); applying it is a
+    token-budget selection per source.
 
     Scale shape: ONE aggregation over the corpus (map-side combine;
     the shuffle carries one row per source), then arithmetic on the
@@ -399,8 +380,8 @@ def selection_tradeoff_curve(docs: DataFrame, score_col: str,
     """Quality-vs-quantity Pareto curve for corpus selection: group
     documents by their (few, discrete) quality scores, order bands
     best-first, and report the CUMULATIVE document and token shares
-    at each band — the picture a data-mixing decision reads before
-    `token_budget_selection` commits to a cut.
+    at each band — the picture a data-mixing decision reads before a
+    token-budget selection commits to a cut.
 
     Scale shape: one groupBy(score), then the cumulative sums fold
     over the collected band ARRAY (bounded by distinct scores, tiny

@@ -1,7 +1,7 @@
 """KMV (k-minimum-values) distinct-count sketch.
 
-Completes the sketch family next to count-min (frequency,
-queries_wave4 w110) and minhash (similarity, operators/dedup.py):
+Completes the sketch family next to count-min (frequency) and minhash
+(similarity, operators/dedup.py):
 bottom-k estimation of per-group cardinality. BANO's batch stats count
 distinct sources per commune exactly (ref bano/sql templates'
 count(distinct ...)); at 10^12 rows an exact distinct per group is a

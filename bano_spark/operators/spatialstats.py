@@ -16,8 +16,7 @@ Scale shape: per-cell values come from the caller's aggregation
 explode + equi-join on the cell key (bounded, never a cross product);
 the three sums are single aggregates with map-side partials. The mean
 is computed exactly (integer sum / count) and shipped as a literal
-into the second pass — an O(1) driver value, same discipline as
-clustering.py's centroid literals.
+into the second pass — an O(1) driver value.
 """
 
 from __future__ import annotations
@@ -712,9 +711,8 @@ def knox_test(points: DataFrame, delta: float, tau: float, *,
     Scale shape: each pair family is a BOUNDED bucket join, never the
     cross product the definition states — spatial pairs from the
     3x3 cell-ring at cell = delta, temporal pairs from the 3-offset
-    time-bucket ring at bucket = tau, joint pairs from the 3-D ring
-    (the st_dbscan candidate discipline). All counts integer; one
-    exact division at the end. Returns a single row
+    time-bucket ring at bucket = tau, joint pairs from the 3-D ring.
+    All counts integer; one exact division at the end. Returns a single row
     (n_points, n_space_pairs, n_time_pairs, n_joint_pairs, expected,
     knox_ratio)."""
     pts = points.select(F.col(id_col).alias("_pid"),

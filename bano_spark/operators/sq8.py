@@ -1,9 +1,8 @@
 """Scalar int8 embedding quantization audit — per-dimension affine
 uint8 codes (the storage-4x-cheaper baseline every vector store
 offers) measured two ways: cosine distortion per query and top-k
-recall against the exact ranking — completing the ANN family
-(ann_cosine_topk exact, ivf_topk/pq_adc_topk where PQ is the
-codebook alternative; SQ8 is the no-codebook one).
+recall against the exact ranking (SQ8 is the no-codebook
+alternative to product quantization).
 
 Determinism: per-dim min/max are order-free exact aggregates over
 float32 values (cast to double losslessly); the code is

@@ -610,9 +610,9 @@ def kaplan_meier(durations: DataFrame, *, dur_col: str = "duration",
     times, already bounded for bucketed durations) + an ordered
     window cumsum of integer counts; the running product folds over
     the collected risk table in ascending-time order — an O(distinct
-    times) array on one executor, the kmeans O(k) discipline, never
-    the raw spell count. Every factor is a ratio of exact integers
-    and the fold order is fixed, so S(t) is bit-stable. Returns
+    times) array on one executor, never the raw spell count. Every
+    factor is a ratio of exact integers and the fold order is fixed,
+    so S(t) is bit-stable. Returns
     (duration, n_risk, n_events, n_censored, survival) for event
     times only (the censored-only times thin the risk set but add no
     step, per the estimator)."""

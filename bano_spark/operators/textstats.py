@@ -1,5 +1,6 @@
-"""Text analysis for training-data pipelines: language-ID heuristic,
-quality scoring, token counting, document fingerprinting.
+"""Text statistics for training-data pipelines: BPE-ish token counts,
+DSIR importance weights, n-gram, keyword and language-model scores,
+and divergences between sources.
 
 All pure built-in column expressions (regexp + array ops in codegen) so
 a 10^12-document pass never leaves the JVM.
@@ -11,68 +12,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .dedup import tokens
 
-# tiny per-language stopword inventories (public common words)
-STOPWORDS = {
-    "fr": ["le", "la", "les", "de", "des", "du", "et", "un", "une", "est", "dans"],
-    "en": ["the", "of", "and", "to", "in", "is", "it", "that", "for", "was", "with"],
-    "es": ["el", "la", "los", "de", "que", "y", "en", "un", "es", "por", "con"],
-}
-
-def token_count(col: Column) -> Column:
-    t = F.split(F.trim(col), r"\s+")
-    return F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(t)).cast("bigint")
-
-
-def stopword_hits(col: Column, lang: str) -> Column:
-    words = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.array_intersect(F.array_distinct(tokens(col)), words)).cast("bigint")
-
-
-def lang_id(col: Column) -> Column:
-    """Argmax of distinct-stopword hits; ties and zero-hit -> 'und'.
-    Deterministic tie-break by language code order fr < en < es is made
-    explicit (strictly-greater comparisons in fixed order)."""
-    fr, en, es = (stopword_hits(col, l) for l in ("fr", "en", "es"))
-    best = F.greatest(fr, en, es)
-    return (
-        F.when(best == 0, "und")
-        .when(fr == best, "fr")
-        .when(en == best, "en")
-        .otherwise("es")
-    )
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1] quality heuristic: length band, punctuation
-    density, mean word length band. Deterministic arithmetic only."""
-    n_chars = F.length(col).cast("double")
-    n_punct = (n_chars - F.length(F.regexp_replace(col, r"[.,;:!?]", ""))).cast("double")
-    n_tok = token_count(col).cast("double")
-    mean_word = F.when(n_tok > 0, (n_chars / n_tok)).otherwise(F.lit(0.0))
-    len_ok = F.when((n_chars >= 50) & (n_chars <= 10000), 1.0).otherwise(0.0)
-    punct_ok = F.when(n_chars > 0, F.when(n_punct / n_chars <= 0.1, 1.0).otherwise(0.0)).otherwise(0.0)
-    word_ok = F.when((mean_word >= 3.0) & (mean_word <= 12.0), 1.0).otherwise(0.0)
-    return F.round((len_ok + punct_ok + word_ok) / F.lit(3.0), 6)
-
-
-def fingerprint(col: Column) -> Column:
-    """Order-insensitive document fingerprint: md5 of the sorted
-    distinct token set (the classic 'fingerprint' dedup key)."""
-    return F.md5(F.concat_ws(" ", F.sort_array(F.array_distinct(tokens(col)))))
-
-
-def document_profile(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    c = F.col(text_col)
-    return docs.select(
-        F.col(id_col),
-        token_count(c).alias("n_tokens"),
-        lang_id(c).alias("pred_lang"),
-        quality_score(c).alias("quality"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 BPE_ISH_RE = r"[a-z]+|[0-9]|[^a-z0-9\s]"
 
 
@@ -83,75 +22,6 @@ def bpe_token_count(col: Column) -> Column:
     regexp_extract_all."""
     lowered = F.lower(col)
     return F.size(F.regexp_extract_all(lowered, F.lit(BPE_ISH_RE), F.lit(0))).cast("bigint")
-
-
-def tfidf_keywords(docs: DataFrame, k: int = 3, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
-    """Top-k characteristic terms per document by tf-idf.
-
-    Real log idf: score = tf * ln((N + 1) / (df + 1)). The log matters
-    for the tf*idf PRODUCT — the rational variant (N+1)/(df+1) is only
-    rank-equivalent per fixed tf, so its top-k diverges from tf-idf's
-    whenever tf varies across terms (ADVICE r2). The score is rounded
-    to 6 decimals so the cross-engine oracle compare is insensitive to
-    libm ulp drift; ranking uses the rounded score in both engines.
-    All relational: explode -> two aggregations (term counts per doc,
-    doc freq per term) -> join -> top-k window. The df table is
-    |vocabulary| rows; at corpus scale it broadcasts."""
-    from pyspark.sql import Window
-
-    term_rows = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-    tf = term_rows.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_t = (term_rows.select(id_col, "term").distinct()
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df")))
-    n_docs = docs.select(id_col).distinct().count()
-    scored = tf.join(F.broadcast(df_t), "term").select(
-        id_col, "term", "tf", "df",
-        F.round(
-            F.col("tf") * F.log((float(n_docs) + 1.0) / (F.col("df") + 1.0)),
-            6).alias("score"))
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select(id_col, "term", "tf", "df", "score", "rnk"))
-
-
-def bigram_lm_score(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """CCNet-style perplexity filtering with an IN-CORPUS bigram LM
-    (Wenzek et al. 2019 filter by LM score; here the LM is trained on
-    the corpus itself, so the whole thing is relational and exactly
-    reproducible — no external model): Laplace-smoothed
-    P(w2|w1) = (c12 + 1) / (c1 + V) where c12 is the corpus bigram
-    count, c1 the count of w1 as a left context, V the corpus
-    vocabulary size. Per document: avg negative ln-probability over
-    its bigrams (lower = more typical of the corpus; the quality
-    band cut is the caller's policy).
-
-    Scale shape: train = two hash aggregations over exploded bigrams
-    (map-side partial combine; shuffles carry token pairs + counters,
-    never documents); score = one shuffle join of doc-bigrams against
-    the bigram-count table plus a broadcast-sized context table; one
-    final per-doc aggregation. No Python anywhere."""
-    toked = docs.select(F.col(id_col), tokens(F.col(text_col)).alias("_t")) \
-        .filter(F.size("_t") >= 2)
-    bi = toked.select(
-        F.col(id_col),
-        F.explode(F.expr(
-            "transform(sequence(1, size(_t) - 1),"
-            " i -> struct(element_at(_t, i) AS w1,"
-            " element_at(_t, i + 1) AS w2))")).alias("b")
-    ).select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    c12 = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    v = toked.select(F.explode("_t").alias("w")).select("w").distinct().count()
-    scored = (bi.join(c12, ["w1", "w2"]).join(c1, "w1")
-              .withColumn("_nlp", -F.log(
-                  (F.col("c12") + 1) / (F.col("c1") + F.lit(float(v))))))
-    return (scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        F.round(F.avg("_nlp"), 6).alias("avg_neg_logp")))
 
 
 def dsir_importance(docs: DataFrame, target_cond: Column,
@@ -227,48 +97,6 @@ def top_ngrams(docs: DataFrame, k: int = 50, n: int = 2,
                 % (n - 1, n))).alias("gram"))
             .groupBy("gram").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("gram")).limit(k))
-
-
-def syllable_groups(col: Column) -> Column:
-    """Vowel-group count — the standard regex syllable proxy
-    ('[aeiouy]+' runs in lowercase text). Pure codegen
-    (regexp_count), identical semantics in DuckDB via
-    len(regexp_extract_all(...))."""
-    return F.regexp_count(F.lower(col), F.lit("[aeiouy]+")).cast("bigint")
-
-
-def sentence_count(col: Column, words: Column,
-                   words_per_sentence: int = 15) -> Column:
-    """Terminal-punctuation sentence count with a deterministic
-    fallback for punctuation-less corpora (token streams, ASR
-    transcripts): ceil(words / words_per_sentence) ONLY when the text
-    has no terminal punctuation at all, never 0 for nonempty text.
-    A genuine punctuation count is authoritative — overriding it via
-    greatest() would inflate n_sent (and Flesch) for any prose whose
-    average sentence tops words_per_sentence words (ADVICE r3)."""
-    punct = F.regexp_count(col, F.lit(r"[.!?]")).cast("bigint")
-    fallback = F.ceil(words.cast("double") / words_per_sentence).cast("bigint")
-    return F.when(punct > 0, punct).otherwise(
-        F.greatest(fallback, F.lit(1).cast("bigint")))
-
-
-def flesch_reading_ease(words: Column, sentences: Column,
-                        syllables: Column) -> Column:
-    """Flesch reading-ease over the proxy counts:
-    206.835 - 1.015*(words/sentences) - 84.6*(syllables/words)."""
-    w = words.cast("double")
-    return F.round(
-        F.lit(206.835)
-        - 1.015 * (w / sentences.cast("double"))
-        - 84.6 * (syllables.cast("double") / w), 4)
-
-
-def lexical_diversity(col: Column) -> Column:
-    """Type-token ratio: distinct tokens / tokens, round 6."""
-    toks = tokens(col)
-    return F.round(
-        F.size(F.array_distinct(toks)).cast("double")
-        / F.size(toks).cast("double"), 6)
 
 
 def zipf_slope(docs: DataFrame, text_col: str = "text",
@@ -810,11 +638,10 @@ def js_divergence_sources(docs: DataFrame, source_a: str, source_b: str,
     """Jensen-Shannon divergence (base-2, in [0, 1]) between the
     unigram distributions of two sources: JS = 0.5 KL(P||M) +
     0.5 KL(Q||M) with M = (P+Q)/2 — the symmetric, always-finite
-    companion to the KL divergence of the ``source_kl_divergence``
-    query (KL explodes when Q misses a token P has; JS's mixture
-    denominator never vanishes where p or q is positive, so disjoint
-    vocabularies are handled exactly, scoring the theoretical
-    maximum 1).
+    counterpart of the KL divergence (KL explodes when Q misses a
+    token P has; JS's mixture denominator never vanishes where p or q
+    is positive, so disjoint vocabularies are handled exactly, scoring
+    the theoretical maximum 1).
 
     Scale shape: two token-count aggregations + one FULL OUTER join on
     token (vocabulary-sized, not corpus-sized) + one scalar agg.
@@ -850,8 +677,8 @@ def source_tfidf_cosine(docs, source_col: str = "source",
                         bigrams: bool = False,
                         round_to: int = 6):
     """Pairwise cosine similarity of source-level tf-idf vectors —
-    the vector-space companion of the divergence family (the KL of
-    the ``source_kl_divergence`` query, and js): each source becomes
+    the vector-space companion of the divergence family (KL, and
+    ``js_divergence_sources``): each source becomes
     one tf-idf vector over the shared vocabulary (idf = ln(S / df_t)
     at source granularity, so universal terms vanish) and every
     unordered source pair gets dot/(|a||b|). ``bigrams=True`` uses
@@ -862,7 +689,7 @@ def source_tfidf_cosine(docs, source_col: str = "source",
     Scale shape: token counts collapse to one row per (source, term)
     with map-side combine; the pair join fans out O(df_t^2) per term
     over S sources — S is small by definition (corpus mixture
-    components), the same bounded-pair contract as source_mixing.
+    components), so the pair count stays bounded.
     Returns (src_a, src_b, n_common_terms, cosine)."""
     from pyspark.sql import functions as F
 

@@ -29,7 +29,7 @@ model the Spark rebuild uses to pick encodings for the same columns.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 __all__ = ["dod_point_bits", "BIT_LADDER"]
 

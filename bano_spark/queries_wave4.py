@@ -1,10 +1,11 @@
-"""Wave-4 driver queries: remaining SURVEY.md §2 operators + extra
-training-pipeline ops, each with a DuckDB oracle.
+"""Wave-4 driver queries: remaining SURVEY.md §2 operators + engine
+ops, each with a DuckDB oracle.
 
 Coverage in this wave: J4 J10 J13 J15, W2 W6 W7, A2 A5/A6 A11/A12/A13,
-U1, S3 S8 S11 S14, F5, C6 C7/C8 C11/C12, M3, plus IVF ANN, BPE-ish
-token counting, and multimodal metadata plumbing (deterministic fake
-decode whose header math a SQL oracle reproduces from the ids).
+U1, S3 S8 S11 S14, F5, C6 C7/C8 C11/C12, M3, plus the tile pyramid,
+raster <-> vector, hex k-ring and PIP-with-holes engine ops, and the
+graph, event, sketch, quantile, web-text, n-gram and geodesic-length
+queries that ROADMAP item 1 lists for later cuts.
 """
 
 from __future__ import annotations
@@ -796,127 +797,6 @@ def w_point_par_rue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w18 — IVF-bucketed ANN (nprobe=1 scale path for similarity search)
-# ---------------------------------------------------------------------------
-
-def _ivf_cell_sql(tbl: str, vec: str) -> str:
-    comps = [f"CAST({tbl}.{vec}[{j + 1}] AS DOUBLE)" for j in range(4)]
-    best = f"greatest({', '.join(comps)})"
-    whens = " ".join(f"WHEN {comps[j]} = {best} THEN {j}" for j in range(4))
-    return f"(CASE {whens} END)"
-
-
-_W18_DOT = ("list_sum(list_transform(generate_series(1, 64), "
-            "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(q.q_vec[i] AS DOUBLE)))")
-_W18_NA = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))")
-_W18_NQ = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(q.q_vec[i] AS DOUBLE) * CAST(q.q_vec[i] AS DOUBLE))))")
-
-_W18_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding, {_ivf_cell_sql('embeddings', 'embedding')} AS cell
-           FROM embeddings),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec,
-             {_ivf_cell_sql('embeddings', 'embedding')} AS cell
-      FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT q.q_id, a.vec_id, round({_W18_DOT} / ({_W18_NA} * {_W18_NQ}), 4) AS cos_sim
-  FROM v a JOIN q ON a.cell = q.cell AND a.vec_id != q.q_id
-)
-SELECT q_id, vec_id, cos_sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, vec_id) AS rnk
-  FROM scored
-) WHERE rnk <= 5
-ORDER BY q_id, rnk
-"""
-
-
-@register("ivf_topk", _W18_ORACLE)
-def w_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import ivf_topk
-
-    vecs = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries_df = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return ivf_topk(vecs, queries_df, k=5, n_cells=4).orderBy("q_id", "rnk")
-
-
-# ---------------------------------------------------------------------------
-# w19 — BPE-ish token counting (training-pipeline op)
-# ---------------------------------------------------------------------------
-
-_W19_ORACLE = r"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]'))
-            AS BIGINT) AS n_bpe_tokens
-FROM documents ORDER BY doc_id
-"""
-
-
-@register("bpe_token_count", _W19_ORACLE)
-def w_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.textstats import bpe_token_count
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", bpe_token_count(F.col("text")).alias("n_bpe_tokens")
-    ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# w20 — image metadata plumbing (multimodal: mapInPandas fake decode;
-# the oracle recomputes the header math from the ids)
-# ---------------------------------------------------------------------------
-
-_W20_ORACLE = """
-SELECT o_orderkey AS media_id,
-       CAST(16 + (o_orderkey * 7) % 256 AS INTEGER) AS width,
-       CAST(16 + (o_orderkey * 7 + 1) % 256 AS INTEGER) AS height,
-       CAST(1 + ((o_orderkey * 7 + 2) % 256) % 3 AS INTEGER) AS n_channels
-FROM orders WHERE o_orderkey % 3 = 0
-ORDER BY media_id
-"""
-
-
-@register("image_features_meta", _W20_ORACLE)
-def w_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.multimodal import image_features, media_from_ids
-
-    orders = _read(spark, sf_dir, "orders")
-    media = media_from_ids(orders.select(F.col("o_orderkey").alias("media_id")))
-    feats = image_features(media, fake=True)
-    return feats.select("media_id", "width", "height", "n_channels").orderBy("media_id")
-
-
-# ---------------------------------------------------------------------------
-# w21 — video frame-sampling plumbing (1-to-many mapInPandas; frame
-# counts derivable from the payload-length formula)
-# ---------------------------------------------------------------------------
-
-_W21_ORACLE = """
-WITH vids AS (
-  SELECT o_orderkey AS media_id,
-         CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE o_orderkey % 5 END AS n_frames
-  FROM orders WHERE o_orderkey % 3 = 2
-)
-SELECT media_id, CAST((n_frames + 1) // 2 AS BIGINT) AS n_sampled
-FROM vids ORDER BY media_id
-"""
-
-
-@register("video_frame_counts", _W21_ORACLE)
-def w_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.multimodal import media_from_ids, sample_frames
-
-    orders = _read(spark, sf_dir, "orders")
-    media = media_from_ids(orders.select(F.col("o_orderkey").alias("media_id")))
-    frames = sample_frames(media, every_n=2, fake=True)
-    return frames.groupBy("media_id").agg(
-        F.count(F.lit(1)).alias("n_sampled")).orderBy("media_id")
-
-
-# ---------------------------------------------------------------------------
 # w22 — BAN CSV parse (S3: sep=';' with explicit schema;
 # bano/sources/ban.py:36-72)
 # ---------------------------------------------------------------------------
@@ -964,9 +844,10 @@ def w_ban_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tile-expiry feed -> distinct dirty communes), now ORACLE-CHECKED
 # (r1 verdict minor #8: the harness used to collect+recreate, leaving
 # this rows-only): the feed is a deterministic subset (event_id%50==0),
-# the stream writes parquet, and the returned DataFrame reads the
-# written artifact directly; the oracle restates feed->tiles->communes
-# in SQL with the reference's admin special-casing.
+# the stream writes parquet, the written artifact is read back into a
+# driver-local frame and the run's temp directory removed; the oracle
+# restates feed->tiles->communes in SQL with the reference's admin
+# special-casing.
 # ---------------------------------------------------------------------------
 
 def _w23_oracle() -> str:
@@ -1003,29 +884,35 @@ ORDER BY 1
 @register("dirty_insee_stream", _w23_oracle())
 def w_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
+    import shutil
     import tempfile
 
     from bano_spark.geo import tiles as tl
     from bano_spark.streaming.incremental import run_dirty_insee_stream
 
     base = tempfile.mkdtemp(prefix="bano_stream_")
-    tiles_dir = os.path.join(base, "tiles")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    os.makedirs(tiles_dir)
-    # deterministic expiry feed: z16 tiles of every 50th synth point
-    pts = synth.points_df(spark, sf_dir).filter(
-        F.col("event_id") % 50 == 0).collect()
-    cell = tl.cell_size(tl.DEFAULT_ZOOM)
-    with open(os.path.join(tiles_dir, "batch0.tiles"), "w") as f:
-        for r in pts:
-            tx = int((r.x - tl.ORIGIN) / cell)
-            ty = int((-tl.ORIGIN - r.y) / cell)
-            f.write(f"{tl.DEFAULT_ZOOM}/{tx}/{ty}\n")
-    run_dirty_insee_stream(spark, tiles_dir, synth.commune_polygons_df(spark),
-                           out_dir, ckpt)
-    # per-batch subdirs (idempotent replay sink) -> glob read
-    return spark.read.parquet(os.path.join(out_dir, "*")).orderBy("insee_com")
+    try:
+        tiles_dir = os.path.join(base, "tiles")
+        out_dir = os.path.join(base, "out")
+        ckpt = os.path.join(base, "ckpt")
+        os.makedirs(tiles_dir)
+        # deterministic expiry feed: z16 tiles of every 50th synth point
+        pts = synth.points_df(spark, sf_dir).filter(
+            F.col("event_id") % 50 == 0).collect()
+        cell = tl.cell_size(tl.DEFAULT_ZOOM)
+        with open(os.path.join(tiles_dir, "batch0.tiles"), "w") as f:
+            for r in pts:
+                tx = int((r.x - tl.ORIGIN) / cell)
+                ty = int((-tl.ORIGIN - r.y) / cell)
+                f.write(f"{tl.DEFAULT_ZOOM}/{tx}/{ty}\n")
+        run_dirty_insee_stream(spark, tiles_dir, synth.commune_polygons_df(spark),
+                               out_dir, ckpt)
+        # per-batch subdirs (idempotent replay sink) -> glob read, into
+        # a driver-local relation so the directory can go
+        dirty = spark.read.parquet(os.path.join(out_dir, "*"))
+        return spark.createDataFrame(dirty.toArrow()).orderBy("insee_com")
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1487,43 +1374,6 @@ def w_closest_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w32 — watermarked streaming window aggregation (§2.9: the batch q27
-# plan run under Structured Streaming, availableNow + 1-hour
-# watermark). ORACLE-CHECKED now: availableNow processes the whole
-# input in one pass, so complete-mode output is deterministic and
-# equals the batch hourly rollup the oracle states with date_trunc.
-# ---------------------------------------------------------------------------
-
-_W32_ORACLE = """
-SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
-       event_type, count(*) AS n
-FROM events GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-@register("streaming_windowed_counts", _W32_ORACLE)
-def w_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    feed = (spark.readStream.schema(
-        _read(spark, sf_dir, "events").schema).parquet(sf_dir.rstrip("/"))
-        .filter(F.input_file_name().endswith("events.parquet")))
-    agg = (
-        feed.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    qname = "w32_stream"
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.table(qname).orderBy("window_start", "event_type")
-    rows = out.collect()
-    q.stop()
-    return spark.createDataFrame(rows, out.schema)
-
-
-# ---------------------------------------------------------------------------
 # w33-w36 — web-corpus curation suite (training-data pipeline):
 # canonical URL dedup key, Gopher repetition ratios, Gopher quality
 # flags, exact 13-gram duplicate-span detection
@@ -1903,137 +1753,6 @@ def w_zone_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w41 — benchmark decontamination (training-data pipeline): flag docs
-# sharing any word-13-gram with a benchmark set (hash semi-join — the
-# standard eval-contamination sweep)
-# ---------------------------------------------------------------------------
-
-_W41_ORACLE = f"""
-WITH toked AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-doc_grams AS (
-  SELECT DISTINCT doc_id, u.g FROM (
-    SELECT doc_id, CASE WHEN len(t) >= 13 THEN
-        list_transform(generate_series(0, len(t) - 13),
-            i -> md5(array_to_string(list_slice(t, i + 1, i + 13), ' ')))
-        ELSE [] END AS gs
-    FROM toked), UNNEST(gs) AS u(g)
-),
-bench AS (
-  SELECT DISTINCT md5(array_to_string(list_slice(t, 1, 13), ' ')) AS g
-  FROM (SELECT {_TOKS_SQL} AS t FROM documents WHERE doc_id % 17 = 0)
-  WHERE len(t) >= 13
-)
-SELECT d.doc_id,
-       CAST(count(b.g) AS BIGINT) AS n_contaminated_grams,
-       count(b.g) > 0 AS contaminated
-FROM doc_grams d LEFT JOIN bench b ON d.g = b.g
-GROUP BY 1 ORDER BY 1
-"""
-
-
-@register("benchmark_decontamination", _W41_ORACLE)
-def w_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import tokens
-
-    docs = _read(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", tokens(F.col("text")).alias("_toks"))
-    doc_grams = toked.select(
-        "doc_id",
-        F.explode(F.expr(
-            "CASE WHEN size(_toks) >= 13 THEN transform(sequence(0, size(_toks) - 13),"
-            " i -> md5(concat_ws(' ', slice(_toks, i + 1, 13)))) ELSE array() END"))
-        .alias("g")).distinct()
-    bench = (
-        docs.filter(F.col("doc_id") % 17 == 0)
-        .select(tokens(F.col("text")).alias("_toks"))
-        .filter(F.size("_toks") >= 13)
-        .select(F.md5(F.concat_ws(" ", F.slice("_toks", 1, 13))).alias("g"))
-        .distinct()
-    )
-    hits = doc_grams.join(F.broadcast(bench.withColumn("_hit", F.lit(1))), "g", "left")
-    return (
-        hits.groupBy("doc_id")
-        .agg(F.sum(F.coalesce("_hit", F.lit(0))).cast("bigint")
-             .alias("n_contaminated_grams"))
-        .withColumn("contaminated", F.col("n_contaminated_grams") > 0)
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# w42 — deterministic hash-stratified sampling: per-language rates via
-# an md5 threshold (reproducible in any engine; the standard "sample
-# 10% of lang X, 50% of lang Y" corpus mix step)
-# ---------------------------------------------------------------------------
-
-_W42_ORACLE = """
-WITH r AS (
-  SELECT doc_id, lang,
-         substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS h
-  FROM documents
-)
-SELECT doc_id, lang FROM r
-WHERE h < CASE lang WHEN 'fr' THEN '80000000'
-                    WHEN 'en' THEN '40000000'
-                    ELSE '20000000' END
-ORDER BY doc_id
-"""
-
-
-@register("stratified_sample", _W42_ORACLE)
-def w_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8)
-    thr = (F.when(F.col("lang") == "fr", "80000000")
-           .when(F.col("lang") == "en", "40000000")
-           .otherwise("20000000"))
-    return docs.select("doc_id", "lang", h.alias("_h"), thr.alias("_t")) \
-        .filter(F.col("_h") < F.col("_t")).select("doc_id", "lang").orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# w43 — token-budget selection: order by quality desc, take documents
-# until the cumulative token count exceeds the budget (corpus mixing)
-# ---------------------------------------------------------------------------
-
-_W43_ORACLE = f"""
-WITH scored AS (
-  SELECT doc_id,
-         CAST(CASE WHEN trim(text) = '' THEN 0
-              ELSE len({_TOKS_SQL}) END AS BIGINT) AS n_tokens,
-         (doc_id * 2654435761) % 1000 AS quality_rank
-  FROM documents
-),
-cum AS (
-  SELECT doc_id, n_tokens, quality_rank,
-         CAST(sum(n_tokens) OVER (ORDER BY quality_rank DESC, doc_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-             AS cum_tokens
-  FROM scored
-)
-SELECT doc_id, n_tokens, quality_rank, cum_tokens
-FROM cum WHERE cum_tokens - n_tokens < 20000
-ORDER BY doc_id
-"""
-
-
-@register("token_budget_selection", _W43_ORACLE)
-def w_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.selection import token_budget_select
-    from bano_spark.operators.textstats import token_count
-
-    docs = _read(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        ((F.col("doc_id") * 2654435761) % 1000).alias("quality_rank"))
-    # two-pass distributed prefix sum — no single-partition Exchange
-    # (round-1 verdict item #4: the old global Window.orderBy funneled
-    # the whole corpus through one task)
-    return token_budget_select(scored, 20000).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
 # w44 — geometric kNN points join: top-3 nearest right points per left
 # point within the k-ring (squared euclidean, deterministic ties)
 # ---------------------------------------------------------------------------
@@ -2102,95 +1821,6 @@ def w_knn_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "s_suppkey", F.round("d2", 6).alias("d2"), "rnk")
         .orderBy("event_id", "rnk")
     )
-
-
-# ---------------------------------------------------------------------------
-# w45 — shoelace polygon area + centroid (ST_Area/ST_Centroid for
-# arbitrary rings) through an Arrow UDF; the oracle runs the identical
-# shoelace sums over the same deterministic pentagon vertices in SQL
-# ---------------------------------------------------------------------------
-
-def _pentagon_cte(dialect: str) -> str:
-    """Pentagon ring per polygon; DuckDB uses list literals, Spark SQL
-    uses array()."""
-    pts = [("cx + r", "cy"), ("cx", "cy + 2 * r"), ("cx - 2 * r", "cy"),
-           ("cx", "cy - r"), ("cx + r", "cy - r")]
-    if dialect == "duckdb":
-        ring = "[" + ", ".join(f"[{x}, {y}]" for x, y in pts) + "]"
-    else:
-        ring = "array(" + ", ".join(f"array({x}, {y})" for x, y in pts) + ")"
-    return f"""
-pent AS (
-  SELECT o_orderkey AS poly_id,
-         CAST(1000 + (o_orderkey % 97) * 10 AS DOUBLE) AS cx,
-         CAST(2000 + (o_orderkey % 89) * 10 AS DOUBLE) AS cy,
-         CAST(2 + o_orderkey % 7 AS DOUBLE) AS r
-  FROM orders
-),
-verts AS (SELECT poly_id, {ring} AS ring FROM pent)"""
-
-
-_W45_ORACLE = f"""
-WITH {_pentagon_cte("duckdb")},
-edges AS (
-  SELECT poly_id, ring,
-         list_transform(generate_series(1, 5),
-             i -> ring[i][1] * ring[CASE WHEN i = 5 THEN 1 ELSE i + 1 END][2]
-                - ring[CASE WHEN i = 5 THEN 1 ELSE i + 1 END][1] * ring[i][2])
-             AS cross_terms
-  FROM verts
-),
-sums AS (
-  SELECT poly_id, ring, list_sum(cross_terms) AS a2, cross_terms FROM edges
-)
-SELECT poly_id,
-       round(abs(a2) / 2.0, 9) AS area,
-       round(list_sum(list_transform(generate_series(1, 5),
-           i -> (ring[i][1] + ring[CASE WHEN i = 5 THEN 1 ELSE i + 1 END][1])
-                * cross_terms[i])) / (3.0 * a2), 9) AS cx,
-       round(list_sum(list_transform(generate_series(1, 5),
-           i -> (ring[i][2] + ring[CASE WHEN i = 5 THEN 1 ELSE i + 1 END][2])
-                * cross_terms[i])) / (3.0 * a2), 9) AS cy
-FROM sums ORDER BY poly_id
-"""
-
-
-@register("polygon_area_centroid", _W45_ORACLE)
-def w_area_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from bano_spark.geo.geometry import polygon_area_centroid
-
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    verts = spark.sql(
-        "WITH " + _pentagon_cte("spark") + " SELECT poly_id, ring FROM verts")
-
-    schema = T.StructType([
-        T.StructField("poly_id", T.LongType()),
-        T.StructField("area", T.DoubleType()),
-        T.StructField("cx", T.DoubleType()),
-        T.StructField("cy", T.DoubleType()),
-    ])
-
-    def kernel(batches):
-        import numpy as np
-
-        from bano_spark.geo.geometry import polygon_area_centroid_batch
-
-        for pdf in batches:
-            rings = [np.asarray([list(p) for p in ring], dtype=np.float64)
-                     for ring in pdf["ring"]]
-            a, cx, cy = polygon_area_centroid_batch(rings)
-            yield pd.DataFrame({"poly_id": pdf["poly_id"].to_numpy(),
-                                "area": a, "cx": cx, "cy": cy})
-
-    out = verts.mapInPandas(kernel, schema)
-    return out.select(
-        "poly_id", F.round("area", 9).alias("area"),
-        F.round("cx", 9).alias("cx"), F.round("cy", 9).alias("cy"),
-    ).orderBy("poly_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2628,8 +2258,9 @@ def w_json_lieux_dits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CSV export lines are written as one gzip file per département
 # (distributed write, one rename per file on the driver), concatenated
 # into full.csv.gz in sorted dept order, and read BACK from the
-# published artifact — the driver checks the decompressed bytes against
-# the oracle's logical line set.
+# published artifact into a driver-local frame before the temp
+# directory is removed — the driver checks the decompressed bytes
+# against the oracle's logical line set.
 # ---------------------------------------------------------------------------
 
 _W52_ORACLE = _W30_ORACLE  # same logical lines; the engine path adds the
@@ -2638,6 +2269,7 @@ _W52_ORACLE = _W30_ORACLE  # same logical lines; the engine path adds the
 
 @register("publish_full_roundtrip", _W52_ORACLE)
 def w_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
     import tempfile
 
     from bano_spark.operators.publish import publish_full, write_dept_files
@@ -2649,10 +2281,13 @@ def w_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = export_csv(pages).select(
         F.substring("line", 1, 2).alias("dept"), "line")
     out_dir = tempfile.mkdtemp(prefix="bano_publish_")
-    depts = write_dept_files(lines, out_dir, "csv")
-    full = publish_full(out_dir, "csv", depts)
-    return spark.read.text(full).withColumnRenamed("value", "line") \
-        .orderBy("line")
+    try:
+        depts = write_dept_files(lines, out_dir, "csv")
+        full = publish_full(out_dir, "csv", depts)
+        back = spark.read.text(full).withColumnRenamed("value", "line")
+        return spark.createDataFrame(back.toArrow()).orderBy("line")
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2779,215 +2414,6 @@ def w_shp_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("ll.lon"), 9).alias("lon"),
         F.round(F.col("ll.lat"), 9).alias("lat"),
     ).orderBy("dept", "record_no")
-
-
-# ---------------------------------------------------------------------------
-# w55 — connected components over candidate-pair edges (the near-dup
-# clustering step after LSH; operators/components.py iterative
-# min-label propagation). Fixture: chain edges (k, k+1) between
-# existing residues with a break every 10 — components are maximal
-# consecutive runs, which the oracle states with lag/lead windows (no
-# recursion), while Spark runs the real iterative algorithm
-# (diameter <= 9 here, so convergence is exercised, not trivial).
-# ---------------------------------------------------------------------------
-
-_W55_ORACLE = """
-WITH verts AS (SELECT DISTINCT o_orderkey % 3000 AS k FROM orders),
-nb AS (
-  SELECT k, lag(k) OVER (ORDER BY k) AS pk, lead(k) OVER (ORDER BY k) AS nk
-  FROM verts
-),
-conn AS (
-  SELECT k,
-         (pk = k - 1 AND k % 10 != 0) AS has_prev,
-         (nk = k + 1 AND k % 10 != 9) AS has_next
-  FROM nb
-),
-runs AS (
-  SELECT k, has_prev, has_next,
-         max(CASE WHEN NOT coalesce(has_prev, false) THEN k END)
-             OVER (ORDER BY k ROWS UNBOUNDED PRECEDING) AS comp
-  FROM conn
-)
-SELECT k AS id, comp FROM runs
-WHERE coalesce(has_prev, false) OR coalesce(has_next, false)
-ORDER BY id
-"""
-
-
-@register("near_dup_components", _W55_ORACLE)
-def w_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.components import connected_components
-
-    orders = _read(spark, sf_dir, "orders")
-    verts = orders.select((F.col("o_orderkey") % 3000).alias("k")).distinct()
-    a, b = verts.alias("a"), verts.alias("b")
-    edges = a.join(b, (F.col("a.k") + 1 == F.col("b.k"))
-                   & (F.col("a.k") % 10 != 9)).select(
-        F.col("a.k").alias("src"), F.col("b.k").alias("dst"))
-    return connected_components(edges).orderBy("id")
-
-
-# ---------------------------------------------------------------------------
-# w56 — custom stateful streaming operator (applyInPandasWithState,
-# §2.9): per-key running counters folded across micro-batches. The
-# final state per key is deterministic whatever the batching (counters
-# are monotone; we keep each key's max-n_rows row), so the oracle is
-# the plain per-key rollup. Values go through floor() so the double
-# sum is integer-exact and order-independent across engines.
-# ---------------------------------------------------------------------------
-
-_W56_ORACLE = """
-SELECT event_type AS key, count(*) AS n_rows,
-       CAST(sum(CAST(floor(value) AS BIGINT)) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1 ORDER BY 1
-"""
-
-
-@register("stateful_running_stats", _W56_ORACLE)
-def w_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from bano_spark.streaming.stateful import running_commune_stats
-
-    schema = _read(spark, sf_dir, "events").schema
-    feed = (spark.readStream.schema(schema).parquet(sf_dir.rstrip("/"))
-            .filter(F.input_file_name().endswith("events.parquet")))
-    src = feed.select(F.col("event_type").alias("key"),
-                      F.floor(F.col("value")).alias("value"))
-    out = running_commune_stats(src.groupBy("key"))
-    ckpt = tempfile.mkdtemp(prefix="bano_state_ckpt_")
-    qname = "w56_state"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    tbl = spark.table(qname)
-    w = Window.partitionBy("key").orderBy(F.desc("n_rows"))
-    final = (tbl.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") == 1)
-             .select("key", "n_rows", "sum_value").orderBy("key"))
-    rows = final.collect()
-    q.stop()
-    return spark.createDataFrame(rows, final.schema)
-
-
-# ---------------------------------------------------------------------------
-# w57 — embedding exact-dedup pre-collapse (the upstream step for the
-# sign-LSH near-dup join, mirroring dedup.exact_representatives on
-# text): group by the raw vector VALUE (both engines compare float
-# arrays bitwise from the same parquet — no string round-trip), keep
-# the min id. Fixture doubles every third vector under a shifted id so
-# real duplicate clusters exist.
-# ---------------------------------------------------------------------------
-
-_W57_ORACLE = """
-WITH allv AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings
-  WHERE vec_id % 3 = 0
-)
-SELECT min(vec_id) AS keeper, count(*) AS n_dups
-FROM allv GROUP BY embedding ORDER BY keeper
-"""
-
-
-@register("embedding_exact_dedup", _W57_ORACLE)
-def w_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import embedding_exact_dedup
-
-    emb = _read(spark, sf_dir, "embeddings")
-    allv = emb.select("vec_id", "embedding").unionByName(
-        emb.filter(F.col("vec_id") % 3 == 0)
-        .select((F.col("vec_id") + 100000).alias("vec_id"), "embedding"))
-    return embedding_exact_dedup(allv).orderBy("keeper")
-
-
-# ---------------------------------------------------------------------------
-# w58 — tf-idf keyword extraction over documents (corpus
-# characterization for training-data curation). Real log idf
-# tf * ln((N+1)/(df+1)) (ADVICE r2: the rational variant is not
-# rank-equivalent for the product when tf varies); score rounded to 6
-# decimals in BOTH engines and ranked on the rounded value, so the
-# compare is libm-drift-proof.
-# ---------------------------------------------------------------------------
-
-_W58_ORACLE = f"""
-WITH term_rows AS (
-  SELECT doc_id, u.term FROM (
-    SELECT doc_id, {{toks}} AS t FROM documents), UNNEST(t) AS u(term)
-),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM term_rows GROUP BY 1, 2),
-dft AS (SELECT term, count(*) AS df
-        FROM (SELECT DISTINCT doc_id, term FROM term_rows) GROUP BY 1),
-nd AS (SELECT count(DISTINCT doc_id) AS n FROM term_rows),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dft.df,
-         round(tf.tf * ln((CAST(nd.n AS DOUBLE) + 1.0) / (dft.df + 1.0)),
-               6) AS score
-  FROM tf JOIN dft USING (term) CROSS JOIN nd
-)
-SELECT doc_id, term, tf, df, score, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                               ORDER BY score DESC, term) AS rnk
-  FROM scored
-) WHERE rnk <= 3
-ORDER BY doc_id, rnk
-""".format(toks="string_split_regex(trim(lower(text)), '\\s+')")
-
-
-@register("tfidf_keywords", _W58_ORACLE)
-def w_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.textstats import tfidf_keywords
-
-    return tfidf_keywords(_read(spark, sf_dir, "documents")) \
-        .orderBy("doc_id", "rnk")
-
-
-# ---------------------------------------------------------------------------
-# w59 — near-dup cluster keeper/size table (dedup_keepers over the w55
-# chain fixture): per component, the min-id keeper and member count —
-# the decision table that collapses a duplicate cluster to one kept
-# document. Oracle: same closed-form runs as w55, grouped.
-# ---------------------------------------------------------------------------
-
-_W59_ORACLE = """
-WITH verts AS (SELECT DISTINCT o_orderkey % 3000 AS k FROM orders),
-nb AS (
-  SELECT k, lag(k) OVER (ORDER BY k) AS pk, lead(k) OVER (ORDER BY k) AS nk
-  FROM verts
-),
-conn AS (
-  SELECT k,
-         (pk = k - 1 AND k % 10 != 0) AS has_prev,
-         (nk = k + 1 AND k % 10 != 9) AS has_next
-  FROM nb
-),
-runs AS (
-  SELECT k, has_prev, has_next,
-         max(CASE WHEN NOT coalesce(has_prev, false) THEN k END)
-             OVER (ORDER BY k ROWS UNBOUNDED PRECEDING) AS comp
-  FROM conn
-)
-SELECT comp AS keeper, count(*) AS cluster_size
-FROM runs
-WHERE coalesce(has_prev, false) OR coalesce(has_next, false)
-GROUP BY 1 ORDER BY 1
-"""
-
-
-@register("near_dup_cluster_sizes", _W59_ORACLE)
-def w_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.components import dedup_keepers
-
-    orders = _read(spark, sf_dir, "orders")
-    verts = orders.select((F.col("o_orderkey") % 3000).alias("k")).distinct()
-    a, b = verts.alias("a"), verts.alias("b")
-    edges = a.join(b, (F.col("a.k") + 1 == F.col("b.k"))
-                   & (F.col("a.k") % 10 != 9)).select(
-        F.col("a.k").alias("src"), F.col("b.k").alias("dst"))
-    return dedup_keepers(edges).orderBy("keeper")
 
 
 # ---------------------------------------------------------------------------
@@ -3271,94 +2697,6 @@ def w_host_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w64 — STREAMING exact dedup (stateful): the dedup table maintained
-# incrementally over a document stream via applyInPandasWithState;
-# the converged state equals the batch dedup_exact result, checked
-# against the same SQL oracle.
-# ---------------------------------------------------------------------------
-
-_W64_ORACLE = """
-SELECT md5(text) AS text_hash, CAST(min(doc_id) AS BIGINT) AS keeper,
-       CAST(count(*) AS BIGINT) AS n_dups
-FROM documents GROUP BY 1 ORDER BY text_hash
-"""
-
-
-@register("streaming_exact_dedup", _W64_ORACLE)
-def w_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from bano_spark.streaming.stateful import streaming_exact_dedup
-
-    schema = _read(spark, sf_dir, "documents").schema
-    feed = (spark.readStream.schema(schema).parquet(sf_dir.rstrip("/"))
-            .filter(F.input_file_name().endswith("documents.parquet")))
-    src = feed.select(F.md5("text").alias("text_hash"), "doc_id")
-    out = streaming_exact_dedup(src.groupBy("text_hash"))
-    ckpt = tempfile.mkdtemp(prefix="bano_dedup_ckpt_")
-    qname = "w64_dedup"
-    q = (out.writeStream.format("memory").queryName(qname)
-         .outputMode("update").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    tbl = spark.table(qname)
-    # keep the last upsert per key (max n_dups = converged state)
-    w = Window.partitionBy("text_hash").orderBy(F.desc("n_dups"))
-    final = (tbl.withColumn("rn", F.row_number().over(w))
-             .filter(F.col("rn") == 1)
-             .select("text_hash", "keeper", "n_dups").orderBy("text_hash"))
-    rows = final.collect()
-    q.stop()
-    return spark.createDataFrame(rows, final.schema)
-
-
-# ---------------------------------------------------------------------------
-# w65 — IVF ANN with nprobe=2 (the recall knob): queries probe their
-# top-2 coarse cells; the data side is never amplified. Cell ranking
-# is an array_sort over (negated component, id) structs with identical
-# lexicographic semantics in both engines.
-# ---------------------------------------------------------------------------
-
-def _ivf_probe2_sql(tbl: str, vec: str) -> str:
-    pairs = ", ".join(
-        f"struct_pack(v := -CAST({tbl}.{vec}[{j + 1}] AS DOUBLE), j := {j})"
-        for j in range(4))
-    return f"list_transform(list_sort([{pairs}])[1:2], x -> x.j)"
-
-
-_W65_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding,
-                  {_ivf_cell_sql('embeddings', 'embedding')} AS cell
-           FROM embeddings),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec,
-             unnest({_ivf_probe2_sql('embeddings', 'embedding')}) AS cell
-      FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT q.q_id, a.vec_id, round({_W18_DOT} / ({_W18_NA} * {_W18_NQ}), 4)
-         AS cos_sim
-  FROM v a JOIN q ON a.cell = q.cell AND a.vec_id != q.q_id
-)
-SELECT q_id, vec_id, cos_sim, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                               ORDER BY cos_sim DESC, vec_id) AS rnk
-  FROM scored
-) WHERE rnk <= 5
-ORDER BY q_id, rnk
-"""
-
-
-@register("ivf_topk_nprobe", _W65_ORACLE)
-def w_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import ivf_topk
-
-    vecs = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries_df = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return ivf_topk(vecs, queries_df, k=5, n_cells=4, nprobe=2) \
-        .orderBy("q_id", "rnk")
-
-
-# ---------------------------------------------------------------------------
 # w66 — raster -> vector: per-commune tile sets traced back into
 # boundary rings (inverse of polygon_cover; the other half of the
 # north rule's raster<->vector stage). The oracle cross-checks the
@@ -3411,308 +2749,6 @@ def w_tiles_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w67 — CCNet-style LM quality score with an in-corpus bigram LM
-# (Wenzek et al. 2019): Laplace-smoothed P(w2|w1), per-doc average
-# negative ln-probability. Train + score are four hash aggregations
-# and two joins — fully relational in both engines.
-# ---------------------------------------------------------------------------
-
-_W67_ORACLE = f"""
-WITH toked AS (
-  SELECT doc_id, {_TOKS_SQL} AS t FROM documents
-  WHERE len({_TOKS_SQL}) >= 2
-),
-bi AS (
-  SELECT doc_id,
-         t[CAST(i AS BIGINT)] AS w1, t[CAST(i AS BIGINT) + 1] AS w2
-  FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM toked)
-),
-c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-v AS (SELECT count(DISTINCT u.w) AS v FROM toked, UNNEST(t) AS u(w)),
-scored AS (
-  SELECT bi.doc_id,
-         -ln((c12.c12 + 1) / (c1.c1 + CAST(v.v AS DOUBLE))) AS nlp
-  FROM bi JOIN c12 USING (w1, w2) JOIN c1 USING (w1) CROSS JOIN v
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(avg(nlp), 6) AS avg_neg_logp
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-@register("bigram_lm_score", _W67_ORACLE)
-def w_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.textstats import bigram_lm_score
-
-    return bigram_lm_score(_read(spark, sf_dir, "documents")) \
-        .orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# w68 — product quantization: encode embeddings to 8 subspace codes
-# (axis-aligned deterministic codebook -> argmax per subspace, same
-# convention as ivf_cell) and search by asymmetric distance over the
-# CODES — the 8x-compressed-scan mechanics of PQ, oracle-exact.
-# ---------------------------------------------------------------------------
-
-def _pq_code_sql(tbl: str, vec: str, mi: int, dsub: int = 8, k: int = 4) -> str:
-    comps = [f"CAST({tbl}.{vec}[{mi * dsub + j + 1}] AS DOUBLE)"
-             for j in range(k)]
-    best = f"greatest({', '.join(comps)})"
-    whens = " ".join(f"WHEN {comps[j]} = {best} THEN {j}" for j in range(k))
-    return f"(CASE {whens} END)"
-
-
-_W68_SUBNORM = " + ".join(
-    f"pow(CAST(q.q_vec[m * 8 + {j + 1}] AS DOUBLE), 2)" for j in range(8))
-
-_W68_ORACLE = f"""
-WITH codes AS (
-  SELECT vec_id,
-         [{", ".join(_pq_code_sql('embeddings', 'embedding', mi)
-                     for mi in range(8))}] AS codes
-  FROM embeddings
-),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings
-      WHERE vec_id < 8),
-scored AS (
-  SELECT q.q_id, c.vec_id,
-         round(list_sum(list_transform(generate_series(0, 7),
-               m -> ({_W68_SUBNORM})
-                    - 2 * CAST(q.q_vec[m * 8 + c.codes[m + 1] + 1] AS DOUBLE)
-                    + 1.0)), 4) AS adc_dist
-  FROM codes c CROSS JOIN q
-  WHERE c.vec_id != q.q_id
-)
-SELECT q_id, vec_id, adc_dist, rnk FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-                               ORDER BY adc_dist ASC, vec_id) AS rnk
-  FROM scored
-) WHERE rnk <= 5
-ORDER BY q_id, rnk
-"""
-
-
-@register("pq_adc_topk", _W68_ORACLE)
-def w_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import pq_adc_topk
-
-    vecs = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries_df = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    return pq_adc_topk(vecs, queries_df, topk=5).orderBy("q_id", "rnk")
-
-
-# ---------------------------------------------------------------------------
-# w69 — gap-based sessionization (clickstream primitive; batch twin of
-# session_window): windows partitioned by user only — no global order
-# anywhere in the plan.
-# ---------------------------------------------------------------------------
-
-_W69_ORACLE = """
-WITH g AS (
-  SELECT user_id, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         CAST(floor(epoch(ts)) AS BIGINT)
-             - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-  FROM events
-),
-marked AS (
-  SELECT user_id, sec,
-         CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END AS new_s,
-         event_id, ROW_NUMBER() OVER (PARTITION BY user_id
-                                      ORDER BY sec, event_id) AS rn
-  FROM g
-),
-sess AS (
-  SELECT user_id, sec,
-         CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id
-                               ROWS UNBOUNDED PRECEDING) AS BIGINT)
-             AS session_id
-  FROM marked
-)
-SELECT user_id, session_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(min(sec) AS BIGINT) AS start_sec,
-       CAST(max(sec) AS BIGINT) AS end_sec,
-       CAST(max(sec) - min(sec) AS BIGINT) AS duration_sec
-FROM sess GROUP BY user_id, session_id
-ORDER BY user_id, session_id
-"""
-
-
-@register("sessionize_events", _W69_ORACLE)
-def w_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.sessions import sessionize
-
-    return sessionize(_read(spark, sf_dir, "events")) \
-        .orderBy("user_id", "session_id")
-
-
-# ---------------------------------------------------------------------------
-# w70 — distributed Lloyd's k-means (trainable codebook for IVF/PQ):
-# 2 quantized iterations from the k-smallest-id init, oracle-exact via
-# an unrolled SQL twin (centroids rounded to 6, distances to 4, argmin
-# ties -> lowest cluster id in both engines).
-# ---------------------------------------------------------------------------
-
-def _kmeans_oracle(k: int = 4, iters: int = 2, dim: int = 64) -> str:
-    parts = [f"""
-WITH v AS (SELECT vec_id, embedding FROM embeddings),
-cp0 AS (
-  SELECT vec_id AS cid, unnest(generate_series(1, {dim})) AS i, embedding
-  FROM embeddings WHERE vec_id < {k}
-),
-cf0 AS (SELECT cid, i, CAST(embedding[i] AS DOUBLE) AS c FROM cp0)"""]
-    prev = "cf0"
-    for t in range(iters):
-        parts.append(f""",
-d{t} AS (
-  SELECT v.vec_id, {prev}.cid,
-         round(sum(pow(CAST(v.embedding[{prev}.i] AS DOUBLE) - {prev}.c, 2)),
-               4) AS d
-  FROM v CROSS JOIN {prev} GROUP BY v.vec_id, {prev}.cid
-),
-a{t} AS (
-  SELECT vec_id, cid AS cluster FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-    FROM d{t}) WHERE rn = 1
-),
-u{t} AS (
-  SELECT a{t}.cluster AS cid, pe.i,
-         round(avg(CAST(pe.embedding[pe.i] AS DOUBLE)), 6) AS c
-  FROM a{t} JOIN (
-    SELECT vec_id, unnest(generate_series(1, {dim})) AS i, embedding
-    FROM embeddings) pe ON pe.vec_id = a{t}.vec_id
-  GROUP BY 1, 2
-),
-cf{t + 1} AS (
-  SELECT {prev}.cid, {prev}.i, COALESCE(u{t}.c, {prev}.c) AS c
-  FROM {prev} LEFT JOIN u{t} USING (cid, i)
-)""")
-        prev = f"cf{t + 1}"
-    parts.append(f""",
-df AS (
-  SELECT v.vec_id, {prev}.cid,
-         round(sum(pow(CAST(v.embedding[{prev}.i] AS DOUBLE) - {prev}.c, 2)),
-               4) AS d
-  FROM v CROSS JOIN {prev} GROUP BY v.vec_id, {prev}.cid
-)
-SELECT vec_id, CAST(cluster AS INT) AS cluster, dist FROM (
-  SELECT vec_id, cid AS cluster, d AS dist,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-  FROM df) WHERE rn = 1
-ORDER BY vec_id""")
-    return "".join(parts)
-
-
-_W70_ORACLE = _kmeans_oracle()
-
-
-@register("kmeans_assign", _W70_ORACLE)
-def w_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.clustering import kmeans_assign
-
-    vecs = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return kmeans_assign(vecs, k=4, iters=2).orderBy("vec_id")
-
-
-# ---------------------------------------------------------------------------
-# w70 — SemDeDup (Abbas et al. 2023): cluster-confined semantic dedup
-# over embeddings. The corpus' synthetic embeddings are near-orthogonal
-# (max pairwise cosine ~0.51), so the fixture unions in deterministic
-# near-dup twins (scaled copies: cos == 1.0 exactly, and uniform
-# scaling preserves the argmax cell) that the prune must drop while
-# keeping every original.
-# ---------------------------------------------------------------------------
-
-_W70_DOT = ("list_sum(list_transform(generate_series(1, 64), "
-            "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))")
-_W70_NA = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE))))")
-_W70_NB = ("sqrt(list_sum(list_transform(generate_series(1, 64), "
-           "i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))")
-
-_W70_ORACLE = f"""
-WITH base AS (SELECT vec_id, embedding FROM embeddings),
-twin AS (SELECT vec_id + 10000 AS vec_id,
-                list_transform(embedding, x -> x * 2) AS embedding
-         FROM base WHERE vec_id < 40),
-u AS (SELECT * FROM base UNION ALL SELECT * FROM twin),
-v AS (SELECT vec_id, embedding, {_ivf_cell_sql('u', 'embedding')} AS cell FROM u),
-dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM v a JOIN v b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round({_W70_DOT} / ({_W70_NA} * {_W70_NB}), 4) >= 0.95
-)
-SELECT vec_id, cell FROM v
-WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-ORDER BY vec_id
-"""
-
-
-@register("semdedup_prune", _W70_ORACLE)
-def w_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.similarity import semdedup_prune
-
-    base = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    twins = base.filter(F.col("vec_id") < 40).select(
-        (F.col("vec_id") + 10000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * CAST(2.0 AS FLOAT))")
-        .alias("embedding"))
-    return semdedup_prune(base.unionByName(twins), threshold=0.95,
-                          n_cells=4).orderBy("vec_id")
-
-
-# ---------------------------------------------------------------------------
-# w71 — DSIR importance weights (Xie et al. 2023): log likelihood ratio
-# of each doc's bigram bag under a target-domain LM (here: the corpus'
-# lang='fr' slice) vs the raw-corpus LM, both Laplace-smoothed
-# multinomials trained in one aggregation pass.
-# ---------------------------------------------------------------------------
-
-_W71_ORACLE = f"""
-WITH toked AS (
-  SELECT doc_id, CASE WHEN lang = 'fr' THEN 1 ELSE 0 END AS tgt,
-         {_TOKS_SQL} AS t
-  FROM documents WHERE len({_TOKS_SQL}) >= 2
-),
-bi AS (
-  SELECT doc_id, tgt,
-         t[CAST(i AS BIGINT)] AS w1, t[CAST(i AS BIGINT) + 1] AS w2
-  FROM (SELECT doc_id, tgt, t, unnest(generate_series(1, len(t) - 1)) AS i
-        FROM toked)
-),
-counts AS (SELECT w1, w2, count(*) AS c_raw, sum(tgt) AS c_tgt
-           FROM bi GROUP BY 1, 2),
-tot AS (SELECT CAST(sum(c_raw) AS DOUBLE) AS r,
-               CAST(sum(c_tgt) AS DOUBLE) AS t,
-               CAST(count(*) AS DOUBLE) AS b FROM counts),
-scored AS (
-  SELECT bi.doc_id,
-         ln((counts.c_tgt + 1) / (tot.t + tot.b))
-         - ln((counts.c_raw + 1) / (tot.r + tot.b)) AS lr
-  FROM bi JOIN counts USING (w1, w2) CROSS JOIN tot
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-       round(sum(lr), 6) AS log_weight
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-@register("dsir_importance", _W71_ORACLE)
-def w_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.textstats import dsir_importance
-
-    return dsir_importance(_read(spark, sf_dir, "documents"),
-                           F.col("lang") == "fr").orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
 # w72 — tile-pyramid rollup: per-tile point counts at the base zoom and
 # two coarser levels, each level aggregated from the PREVIOUS level's
 # output (raw rows shuffle exactly once). The oracle recomputes every
@@ -3756,99 +2792,6 @@ def w_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w73 — STREAMING sessionization (§2.9): the native session_window
-# aggregation under availableNow, checked against a batch gap-scan
-# twin in exact microsecond interval arithmetic. session_window merges
-# an event into the open session when its timestamp is <= the
-# session's end (last event + gap) INCLUSIVE — verified by a
-# boundary unit test — so a new session starts iff the gap is
-# STRICTLY greater than the window size (the same `> 1800` rule as
-# the batch sessionize twin); end = last event + gap.
-# ---------------------------------------------------------------------------
-
-_W73_ORACLE = """
-WITH g AS (
-  SELECT user_id, ts,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-),
-marked AS (
-  SELECT user_id, ts,
-         CASE WHEN prev IS NULL OR ts - prev > INTERVAL '30 minutes'
-              THEN 1 ELSE 0 END AS new_s
-  FROM g
-),
-sess AS (
-  SELECT user_id, ts,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT user_id, min(ts) AS session_start,
-       max(ts) + INTERVAL '30 minutes' AS session_end,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM sess GROUP BY user_id, sid
-ORDER BY user_id, session_start
-"""
-
-
-@register("streaming_sessionize", _W73_ORACLE)
-def w_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.sessions import streaming_sessionize
-
-    schema = _read(spark, sf_dir, "events").schema
-    feed = (spark.readStream.schema(schema).parquet(sf_dir.rstrip("/"))
-            .filter(F.input_file_name().endswith("events.parquet")))
-    agg = streaming_sessionize(
-        feed.withColumn("ts", F.col("ts").cast("timestamp")))
-    qname = "w73_sessions"
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.table(qname).orderBy("user_id", "session_start")
-    rows = out.collect()
-    q.stop()
-    return spark.createDataFrame(rows, out.schema)
-
-
-# ---------------------------------------------------------------------------
-# w74 — temperature-based corpus mixing weights (mBERT/XLM-R sampling
-# rule; the source-weighting step of LLM data mixtures). The token
-# allocation is floor(ROUNDED_weight * budget): rounding the weight to
-# 6 decimals first makes the double bit-identical across engines, so
-# the floor is deterministic (floor over an unrounded pow() quotient
-# would be 1-off whenever the engines' pow differs by an ulp near an
-# integer boundary).
-# ---------------------------------------------------------------------------
-
-_W74_ORACLE = f"""
-WITH d AS (SELECT source, len({_TOKS_SQL}) AS nt FROM documents),
-per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(nt) AS BIGINT) AS n_tokens
-        FROM d GROUP BY 1),
-tot AS (SELECT CAST(sum(n_tokens) AS DOUBLE) AS total,
-               sum(pow(CAST(n_tokens AS DOUBLE), 0.7)) AS zsum FROM per)
-SELECT source, n_docs, n_tokens,
-       round(n_tokens / tot.total, 6) AS nat_share,
-       round(pow(CAST(n_tokens AS DOUBLE), 0.7) / tot.zsum, 6) AS weight,
-       CAST(floor(round(pow(CAST(n_tokens AS DOUBLE), 0.7) / tot.zsum, 6)
-                  * 12345678.0) AS BIGINT) AS alloc_tokens
-FROM per CROSS JOIN tot ORDER BY source
-"""
-
-
-@register("source_mixing", _W74_ORACLE)
-def w_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import tokens
-    from bano_spark.operators.selection import source_mixing_weights
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "source", F.size(tokens(F.col("text"))).alias("n_tokens"))
-    return source_mixing_weights(docs, alpha=0.7,
-                                 budget_tokens=12_345_678).orderBy("source")
-
-
-# ---------------------------------------------------------------------------
 # w75 — corpus-wide top-k bigram vocabulary (heavy hitters; the seed
 # of vocabulary/BPE-merge construction). Global top-k is orderBy +
 # limit = TakeOrderedAndProject (per-partition top-k, driver merges
@@ -3872,44 +2815,6 @@ def w_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bano_spark.operators.textstats import top_ngrams
 
     return top_ngrams(_read(spark, sf_dir, "documents"), k=50, n=2)
-
-
-# ---------------------------------------------------------------------------
-# w76 — ST_DWithin pair join (distance-within, the last spatial
-# predicate gap): all event-point pairs within 200 m, candidates from
-# an auto-zoomed k-ring cell equi-join with an exact d2 refine. The
-# oracle is a brute-force range join that never sees the cell logic —
-# a hash match proves the candidate set is COMPLETE (a missed
-# cross-cell pair would drop a row), not merely that the refine
-# filter agrees.
-# ---------------------------------------------------------------------------
-
-def _w76_oracle() -> str:
-    pts = synth.points_select_sql("duckdb", "events", "event_id", 0)
-    return f"""
-WITH p AS ({pts})
-SELECT a.event_id AS event_id_a, b.event_id AS event_id_b,
-       round((a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y), 6) AS d2
-FROM p a JOIN p b
-  ON b.x BETWEEN a.x - 200.0 AND a.x + 200.0
- AND b.y BETWEEN a.y - 200.0 AND a.y + 200.0
- AND a.event_id < b.event_id
-WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) <= 40000.0
-ORDER BY event_id_a, event_id_b
-"""
-
-
-@register("dwithin_pairs", _w76_oracle())
-def w_dwithin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.knn_join import dwithin_pairs
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    pts = spark.sql(synth.points_select_sql("spark", "events", "event_id", 0))
-    return (dwithin_pairs(pts, pts, 200.0, left_id="event_id",
-                          right_id="event_id", dedup_pairs=True)
-            .select("event_id_a", "event_id_b",
-                    F.round("d2", 6).alias("d2"))
-            .orderBy("event_id_a", "event_id_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -4157,418 +3062,6 @@ def w_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w83 — weighted sampling without replacement (Efraimidis-Spirakis
-# exponential keys), 50 documents weighted by n_chars. The uniform is
-# content-derived (first 8 md5 hex digits of the id), so the draw is a
-# pure function of the data and the oracle replays it exactly:
-# key = ln(u)/w, top-50 by key. Both engines compute the identical
-# md5 -> hex -> integer -> (0,1) -> ln pipeline.
-# ---------------------------------------------------------------------------
-
-_W83_ORACLE = """
-WITH keyed AS (
-  SELECT doc_id, n_chars,
-         round(ln((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-                                            1, 8)) AS UBIGINT) + 0.5)
-                  / 4294967296.0)
-               / CAST(n_chars AS DOUBLE), 6) AS sample_key
-  FROM documents
-)
-SELECT doc_id, n_chars, sample_key
-FROM keyed ORDER BY sample_key DESC, doc_id LIMIT 50
-"""
-
-
-@register("weighted_sample", _W83_ORACLE)
-def w_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.selection import weighted_sample_wor
-
-    docs = _read(spark, sf_dir, "documents")
-    return (weighted_sample_wor(docs, "n_chars", 50)
-            .select("doc_id", "n_chars", "sample_key"))
-
-
-# ---------------------------------------------------------------------------
-# w84 — bloom-pruned selective join: lineitem probe rows are dropped by
-# a distributed-built bloom filter (single array-literal membership
-# test, pure codegen) BEFORE the shuffle join to a filtered orders
-# build side; false positives only pass through to the exact join, so
-# the result is identical to the plain join the oracle runs.
-# ---------------------------------------------------------------------------
-
-_W84_ORACLE = """
-WITH build AS (
-  SELECT o_orderkey, o_orderpriority FROM orders
-  WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
-)
-SELECT l.l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(l.l_quantity) AS DOUBLE) AS sum_qty
-FROM lineitem l JOIN build b ON l.l_orderkey = b.o_orderkey
-GROUP BY l.l_returnflag ORDER BY l.l_returnflag
-"""
-
-
-@register("bloom_pruned_join", _W84_ORACLE)
-def w_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.bloom import bloom_pruned_join
-
-    li = _read(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_returnflag",
-        "l_quantity")
-    build = (_read(spark, sf_dir, "orders")
-             .filter((F.col("o_orderpriority") == "1-URGENT")
-                     & (F.col("o_totalprice") > 150000))
-             .select("o_orderkey", "o_orderpriority"))
-    joined = bloom_pruned_join(li, build, "o_orderkey")
-    return (joined.groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                 F.sum("l_quantity").cast("double").alias("sum_qty"))
-            .orderBy("l_returnflag"))
-
-
-# ---------------------------------------------------------------------------
-# w85 — exact set-similarity self-join (AllPairs prefix filtering):
-# every document pair with distinct-token Jaccard >= 0.8, candidates
-# generated only from rarity-ordered prefix tokens. The oracle is the
-# brute-force token equi-join over ALL tokens — a hash match proves
-# the prefix bound dropped no qualifying pair.
-# ---------------------------------------------------------------------------
-
-_W85_ORACLE = r"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS term
-    FROM documents)
-  WHERE term <> ''
-),
-sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(count(*) AS DOUBLE) AS c
-          FROM tok a JOIN tok b ON a.term = b.term
-                                AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-SELECT i.id_a, i.id_b, round(i.c / (sa.n + sb.n - i.c), 6) AS jac
-FROM inter i
-JOIN sz sa ON sa.doc_id = i.id_a
-JOIN sz sb ON sb.doc_id = i.id_b
-WHERE i.c / (sa.n + sb.n - i.c) >= 0.8
-ORDER BY id_a, id_b
-"""
-
-
-@register("allpairs_jaccard", _W85_ORACLE)
-def w_allpairs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.setsim import allpairs_jaccard
-
-    docs = _read(spark, sf_dir, "documents")
-    return allpairs_jaccard(docs, 0.8).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# w86 — semi-structured JSON ingestion: events.props is a JSON string;
-# the engine extracts typed fields with get_json_object (JVM jsonpath,
-# codegen — the schema-on-read path a webtext pipeline uses for crawl
-# metadata) and rolls up value stats per extracted key decile. Oracle:
-# DuckDB's native JSON extraction.
-# ---------------------------------------------------------------------------
-
-_W86_ORACLE = """
-SELECT CAST(floor(CAST(json_extract(props, '$.k') AS INTEGER) / 10.0)
-            AS INTEGER) AS k_decile,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(avg(value), 6) AS avg_value,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM events
-WHERE json_extract(props, '$.k') IS NOT NULL
-GROUP BY 1 ORDER BY 1
-"""
-
-
-@register("json_props_parse", _W86_ORACLE)
-def w_json_props_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return (ev.withColumn("_k", k)
-            .filter(F.col("_k").isNotNull())
-            .groupBy((F.col("_k") / 10).cast("int").alias("k_decile"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                 F.round(F.avg("value"), 6).alias("avg_value"),
-                 F.countDistinct("user_id").cast("bigint").alias("n_users"))
-            .orderBy("k_decile"))
-
-
-# ---------------------------------------------------------------------------
-# w87 — stratified weighted sampling: 10 docs per source, weighted by
-# n_chars, keys derived from md5(source, id) — the per-group quota
-# draw behind source-mixing allocations. The oracle replays the same
-# key construction and takes row_number() <= 10 per source.
-# ---------------------------------------------------------------------------
-
-_W87_ORACLE = """
-WITH keyed AS (
-  SELECT source, doc_id, n_chars,
-         round(ln((CAST(concat('0x', substr(md5(source || chr(31) ||
-                                            CAST(doc_id AS VARCHAR)),
-                                            1, 8)) AS UBIGINT) + 0.5)
-                  / 4294967296.0)
-               / CAST(n_chars AS DOUBLE), 6) AS sample_key
-  FROM documents
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY source
-                               ORDER BY sample_key DESC, doc_id) AS rk
-  FROM keyed
-)
-SELECT source, doc_id, n_chars, sample_key
-FROM ranked WHERE rk <= 10 ORDER BY source, doc_id
-"""
-
-
-@register("weighted_sample_per_source", _W87_ORACLE)
-def w_weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.selection import weighted_sample_per_group
-
-    docs = _read(spark, sf_dir, "documents")
-    return (weighted_sample_per_group(docs, "n_chars", 10, "source")
-            .select("source", "doc_id", "n_chars", "sample_key")
-            .orderBy("source", "doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w88 — STREAMING stream-stream interval join (§2.9): clicks and
-# errors read as two streams; each click joins the same user's errors
-# from the preceding hour. Watermarks on both sides bound the join
-# state (eviction at watermark + lookback); the time range lives in
-# the JOIN CONDITION, which is what lets Spark's symmetric hash join
-# prune state — a post-filter would grow state without bound. Under
-# availableNow all rows arrive before the watermark advances, so the
-# single-batch output equals the batch inequality join the oracle runs.
-# ---------------------------------------------------------------------------
-
-_W88_ORACLE = """
-SELECT c.event_id, c.user_id, c.ts, e.ts AS err_ts,
-       round(e.value, 6) AS err_value
-FROM (SELECT event_id, user_id, ts FROM events
-      WHERE event_type = 'click') c
-JOIN (SELECT user_id, ts, value FROM events
-      WHERE event_type = 'error') e
-  ON c.user_id = e.user_id
- AND e.ts >= c.ts - INTERVAL '1 hour' AND e.ts <= c.ts
-ORDER BY c.event_id, err_ts
-"""
-
-
-@register("streaming_interval_join", _W88_ORACLE)
-def w_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.streaming.incremental import stream_stream_interval_join
-
-    schema = _read(spark, sf_dir, "events").schema
-
-    def feed():
-        return (spark.readStream.schema(schema)
-                .parquet(sf_dir.rstrip("/"))
-                .filter(F.input_file_name().endswith("events.parquet")))
-
-    clicks = (feed().filter(F.col("event_type") == "click")
-              .select("event_id", "user_id", F.col("ts").cast("timestamp")
-                      .alias("ts")))
-    errors = (feed().filter(F.col("event_type") == "error")
-              .select("user_id", F.col("ts").cast("timestamp").alias("r_ts"),
-                      F.col("value").alias("r_value")))
-    joined = stream_stream_interval_join(
-        clicks, errors, key="user_id", left_ts="ts", right_ts="r_ts",
-        lookback="1 hour", watermark="2 hours")
-    out_df = joined.select(
-        "event_id", "user_id", "ts", F.col("r_ts").alias("err_ts"),
-        F.round("r_value", 6).alias("err_value"))
-    qname = "w88_ssjoin"
-    q = (out_df.writeStream.format("memory").queryName(qname)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.table(qname).orderBy("event_id", "err_ts")
-    rows = out.collect()
-    q.stop()
-    return spark.createDataFrame(rows, out.schema)
-
-
-# ---------------------------------------------------------------------------
-# w89 — corpus-wide quantile rank of document length WITHOUT a global
-# window: the scale-safe percent_rank. The naive form is
-# percent_rank() OVER (ORDER BY n_chars) — a single-partition funnel;
-# the engine instead feeds a constant-1 value column through the
-# two-pass distributed prefix sum (composite tie-broken bucketing) and
-# derives rank = (cum - 1) / (N - 1). The oracle IS the naive window.
-# ---------------------------------------------------------------------------
-
-_W89_ORACLE = """
-SELECT doc_id, n_chars,
-       round((row_number() OVER (ORDER BY n_chars, doc_id) - 1.0)
-             / (count(*) OVER () - 1.0), 6) AS qrank
-FROM documents ORDER BY doc_id
-"""
-
-
-@register("doclen_quantile_rank", _W89_ORACLE)
-def w_doclen_quantile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.selection import distributed_cumsum
-
-    docs = (_read(spark, sf_dir, "documents")
-            .select("doc_id", "n_chars")
-            .withColumn("_one", F.lit(1)))
-    cum = distributed_cumsum(
-        docs, "n_chars", [F.asc("n_chars"), F.asc("doc_id")], "_one",
-        out_col="_cum", tiebreak_col="doc_id")
-    n = docs.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    return (cum.crossJoin(F.broadcast(n))
-            .select("doc_id", "n_chars",
-                    F.round((F.col("_cum") - 1.0) / (F.col("_n") - 1.0), 6)
-                    .alias("qrank"))
-            .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w90 — per-source unigram KL divergence vs the corpus distribution
-# (training-mix drift metric: which sources' token distributions
-# deviate most). Pure aggregations + one broadcast of the corpus
-# term distribution; the per-source sum is over the vocabulary.
-# ---------------------------------------------------------------------------
-
-_W90_ORACLE = r"""
-WITH tok AS (
-  SELECT source, unnest(string_split_regex(text, '\s+')) AS term
-  FROM documents
-),
-t AS (SELECT source, term, CAST(count(*) AS DOUBLE) AS c
-      FROM tok WHERE term <> '' GROUP BY 1, 2),
-st AS (SELECT source, sum(c) AS tot FROM t GROUP BY source),
-ct AS (SELECT term, sum(c) AS cc FROM t GROUP BY term),
-g AS (SELECT CAST(sum(cc) AS DOUBLE) AS gtot FROM ct)
-SELECT t.source,
-       round(sum((t.c / st.tot) * ln((t.c / st.tot) / (ct.cc / g.gtot))),
-             6) AS kl
-FROM t
-JOIN st ON st.source = t.source
-JOIN ct ON ct.term = t.term
-CROSS JOIN g
-GROUP BY t.source ORDER BY t.source
-"""
-
-
-@register("source_kl_divergence", _W90_ORACLE)
-def w_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    t = (docs.select("source",
-                     F.explode(F.split("text", r"\s+")).alias("term"))
-         .filter(F.col("term") != "")
-         .groupBy("source", "term")
-         .agg(F.count(F.lit(1)).cast("double").alias("c")))
-    st = t.groupBy("source").agg(F.sum("c").alias("tot"))
-    ct = t.groupBy("term").agg(F.sum("c").alias("cc"))
-    g = ct.agg(F.sum("cc").cast("double").alias("gtot"))
-    return (t.join(st, "source")
-            .join(F.broadcast(ct), "term")
-            .crossJoin(F.broadcast(g))
-            .withColumn("_kl_term",
-                        (F.col("c") / F.col("tot"))
-                        * F.log((F.col("c") / F.col("tot"))
-                                / (F.col("cc") / F.col("gtot"))))
-            .groupBy("source")
-            .agg(F.round(F.sum("_kl_term"), 6).alias("kl"))
-            .orderBy("source"))
-
-
-# ---------------------------------------------------------------------------
-# w91 — distributed covariance matrix of the embedding column (the
-# PCA/whitening building block): one NumPy pass emits per-partition
-# sufficient statistics (X'X, component sums, count — additive, so
-# map-side combined); cov assembles from the global sums. The oracle
-# recomputes the same explicit formula from a double-unnest in SQL —
-# the vectors' float32 components convert exactly to float64 in both
-# engines, so only the final rounding is needed.
-# ---------------------------------------------------------------------------
-
-_W91_ORACLE = """
-WITH idx AS (SELECT CAST(range AS INTEGER) AS i FROM range(64)),
-x AS (
-  SELECT e.vec_id, i.i, j.j,
-         CAST(e.embedding[i.i + 1] AS DOUBLE) AS xi,
-         CAST(e.embedding[j.j + 1] AS DOUBLE) AS xj
-  FROM embeddings e
-  CROSS JOIN idx i
-  CROSS JOIN (SELECT i AS j FROM idx) j
-  WHERE i.i <= j.j
-)
-SELECT i, j,
-       round((sum(xi * xj) - sum(xi) * sum(xj) / count(*))
-             / (count(*) - 1), 6) + 0.0 AS cov
-FROM x GROUP BY i, j ORDER BY i, j
-"""
-
-
-@register("embedding_covariance", _W91_ORACLE)
-def w_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.linalg import embedding_covariance
-
-    embs = _read(spark, sf_dir, "embeddings")
-    # + 0.0 normalizes IEEE negative zero (round can yield -0.0 in one
-    # engine and 0.0 in the other; repr-level compare would diverge)
-    return (embedding_covariance(embs, round_to=6)
-            .withColumn("cov", F.col("cov") + F.lit(0.0))
-            .orderBy("i", "j"))
-
-
-# ---------------------------------------------------------------------------
-# w92 — robust outlier screening via median absolute deviation (the
-# data-cleaning step before length-based quality cuts): per source,
-# exact interpolated median of n_chars, MAD, and the count of docs
-# outside 3 scaled MADs. Spark's `percentile` and DuckDB's
-# `quantile_cont` share the p*(n-1) linear-interpolation definition.
-# ---------------------------------------------------------------------------
-
-_W92_ORACLE = """
-WITH med AS (
-  SELECT source, quantile_cont(CAST(n_chars AS DOUBLE), 0.5) AS med
-  FROM documents GROUP BY source
-),
-dev AS (
-  SELECT d.source, d.doc_id, m.med,
-         abs(CAST(d.n_chars AS DOUBLE) - m.med) AS adev,
-         CAST(d.n_chars AS DOUBLE) AS nc
-  FROM documents d JOIN med m ON m.source = d.source
-),
-mad AS (
-  SELECT source, quantile_cont(adev, 0.5) AS mad FROM dev GROUP BY source
-)
-SELECT v.source, round(v.med, 6) AS med, round(a.mad, 6) AS mad,
-       CAST(sum(CASE WHEN abs(v.nc - v.med) > 3 * 1.4826 * a.mad
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-FROM (SELECT DISTINCT source, doc_id, med, adev, nc FROM dev) v
-JOIN mad a ON a.source = v.source
-GROUP BY v.source, v.med, a.mad ORDER BY v.source
-"""
-
-
-@register("mad_outliers", _W92_ORACLE)
-def w_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents").select(
-        "source", "doc_id", F.col("n_chars").cast("double").alias("nc"))
-    med = docs.groupBy("source").agg(
-        F.expr("percentile(nc, 0.5)").alias("med"))
-    dev = docs.join(med, "source").withColumn(
-        "adev", F.abs(F.col("nc") - F.col("med")))
-    mad = dev.groupBy("source").agg(
-        F.expr("percentile(adev, 0.5)").alias("mad"))
-    return (dev.join(mad, "source")
-            .groupBy("source", "med", "mad")
-            .agg(F.sum(F.when(F.abs(F.col("nc") - F.col("med"))
-                              > 3 * 1.4826 * F.col("mad"), 1)
-                       .otherwise(0)).cast("bigint").alias("n_outliers"))
-            .select("source", F.round("med", 6).alias("med"),
-                    F.round("mad", 6).alias("mad"), "n_outliers")
-            .orderBy("source"))
-
-
-# ---------------------------------------------------------------------------
 # w93 — SCD2 build: collapse the event stream into type-2 validity
 # intervals of each user's event_type (one row per value change,
 # half-open [valid_from, valid_to), open-ended current row). Windows
@@ -4704,56 +3197,6 @@ def w_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w97 — polygon-polygon intersects join: two rectangle layers derived
-# from events run through the GENERIC ring-intersection operator (cell
-# -cover candidates + orientation-test refine); the oracle is the
-# closed-form strict interval-overlap test rectangles admit. Fractional
-# side lengths (+0.3 on integer-plus-half grids) make exact
-# edge-touching impossible, so strict overlap == ring intersection and
-# the generic kernel must reproduce the closed form pair-for-pair.
-# ---------------------------------------------------------------------------
-
-def _w97_rects_sql(dialect: str, mod: int, alias_id: str,
-                   wmod: int, hmod: int) -> str:
-    pts = synth.points_select_sql(dialect, "events", "event_id", 0)
-    return f"""
-SELECT event_id AS {alias_id}, x AS x0, y AS y0,
-       x + 100 + (event_id % {wmod}) * 50 + 0.3 AS x1,
-       y + 100 + (event_id % {hmod}) * 50 + 0.3 AS y1
-FROM ({pts}) WHERE event_id % {mod} = 0"""
-
-
-_W97_ORACLE = f"""
-WITH a AS ({_w97_rects_sql('duckdb', 13, 'id_a', 7, 5)}),
-b AS ({_w97_rects_sql('duckdb', 17, 'id_b', 11, 3)})
-SELECT a.id_a, b.id_b
-FROM a JOIN b
-  ON a.x0 < b.x1 AND b.x0 < a.x1 AND a.y0 < b.y1 AND b.y0 < a.y1
-ORDER BY id_a, id_b
-"""
-
-
-@register("polygon_intersects_join", _W97_ORACLE)
-def w_polygon_intersects_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.overlay import polygon_intersects_join
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-    def rects(mod, alias_id, wmod, hmod):
-        df = spark.sql(_w97_rects_sql("spark", mod, alias_id, wmod, hmod))
-        ring = F.array(
-            F.array("x0", "y0"), F.array("x1", "y0"),
-            F.array("x1", "y1"), F.array("x0", "y1"))
-        return df.select(alias_id, ring.alias("verts"))
-
-    a = rects(13, "id_a", 7, 5)
-    b = rects(17, "id_b", 11, 3)
-    return (polygon_intersects_join(a, b, id_a="id_a", id_b="id_b",
-                                    zoom=14)
-            .orderBy("id_a", "id_b"))
-
-
-# ---------------------------------------------------------------------------
 # w98 — per-node triangle participation on the host co-citation graph.
 # The engine uses degree-oriented enumeration (skew-bounded wedge
 # joins, each triangle found once then exploded to its corners); the
@@ -4824,105 +3267,6 @@ def w_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w100 — Pareto skyline (maximize quality, minimize length): the
-# dominance filter behind "best quality at every length budget"
-# corpus curation. The engine exploits the low-cardinality quality
-# axis: per-quality minimum lengths (one aggregation), the
-# strictly-higher-quality prefix minimum via a TINY self-join on the
-# O(levels) quality table (NO global window — the audit's
-# single-partition check stays clean), then one broadcast join back.
-# The oracle is the direct NOT EXISTS dominance definition — a
-# completely different formulation.
-# ---------------------------------------------------------------------------
-
-_W100_ORACLE = """
-WITH d AS (
-  SELECT doc_id, (doc_id * 31) % 7 AS q, n_chars FROM documents
-)
-SELECT a.doc_id, a.q, a.n_chars
-FROM d a
-WHERE NOT EXISTS (
-  SELECT 1 FROM d b
-  WHERE b.q >= a.q AND b.n_chars <= a.n_chars
-    AND (b.q > a.q OR b.n_chars < a.n_chars)
-)
-ORDER BY a.doc_id
-"""
-
-
-@register("pareto_skyline", _W100_ORACLE)
-def w_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", ((F.col("doc_id") * 31) % 7).alias("q"), "n_chars")
-    per_q = docs.groupBy("q").agg(F.min("n_chars").alias("min_len"))
-    # min length over STRICTLY higher qualities, via the tiny
-    # level-level self-join (levels x levels, not docs x docs)
-    higher = (per_q.alias("a")
-              .join(per_q.alias("b"), F.col("b.q") > F.col("a.q"), "left")
-              .groupBy(F.col("a.q").alias("q"),
-                       F.col("a.min_len").alias("min_len"))
-              .agg(F.min(F.col("b.min_len")).alias("m_high")))
-    return (docs.join(F.broadcast(higher), "q")
-            .filter((F.col("n_chars") == F.col("min_len"))
-                    & (F.col("m_high").isNull()
-                       | (F.col("m_high") > F.col("n_chars"))))
-            .select("doc_id", "q", "n_chars")
-            .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w101 — incremental view maintenance: a per-user stats view
-# (count/sum/min/max — all mergeable) is maintained by MERGING the
-# stored pre-T base aggregate with the aggregate of the post-T delta
-# batch, never rescanning the base. The oracle recomputes from the
-# full table — merge-equals-recompute is exactly the IVM contract
-# (and what resumable_partition_write relies on per partition).
-# ---------------------------------------------------------------------------
-
-_W101_ORACLE = """
-SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-       round(sum(value), 6) AS sum_v,
-       round(min(value), 6) AS min_v,
-       round(max(value), 6) AS max_v
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-@register("incremental_view_merge", _W101_ORACLE)
-def w_incremental_view_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    cut = "2024-01-20"
-
-    def agg(df):
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("value").alias("sum_v"),
-            F.min("value").alias("min_v"),
-            F.max("value").alias("max_v"))
-
-    base = agg(ev.filter(F.col("ts") < cut))      # the "stored" view
-    delta = agg(ev.filter(F.col("ts") >= cut))    # the new batch
-    merged = (base.alias("b").join(delta.alias("d"), "user_id", "full")
-              .select(
-                  "user_id",
-                  (F.coalesce(F.col("b.n"), F.lit(0))
-                   + F.coalesce(F.col("d.n"), F.lit(0))).alias("n"),
-                  (F.coalesce(F.col("b.sum_v"), F.lit(0.0))
-                   + F.coalesce(F.col("d.sum_v"), F.lit(0.0))).alias("sum_v"),
-                  F.least(F.coalesce(F.col("b.min_v"), F.col("d.min_v")),
-                          F.coalesce(F.col("d.min_v"), F.col("b.min_v")))
-                  .alias("min_v"),
-                  F.greatest(F.coalesce(F.col("b.max_v"), F.col("d.max_v")),
-                             F.coalesce(F.col("d.max_v"), F.col("b.max_v")))
-                  .alias("max_v")))
-    return (merged.select(
-        "user_id", "n", F.round("sum_v", 6).alias("sum_v"),
-        F.round("min_v", 6).alias("min_v"),
-        F.round("max_v", 6).alias("max_v"))
-        .orderBy("user_id"))
-
-
-# ---------------------------------------------------------------------------
 # w102 — TrustRank: PageRank with the restart distribution
 # concentrated on a trusted seed set (hosts 0/5/10/15) — the
 # spam-demotion prior of web corpus curation (Gyöngyi et al. 2004).
@@ -4977,133 +3321,6 @@ def w_trustrank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (ranks.select(F.col("node").alias("host_id"),
                          F.round("rank", 6).alias("rank"))
             .orderBy("host_id"))
-
-
-# ---------------------------------------------------------------------------
-# w103 — Z-order (Morton) clustering keys: interleave z14 tile indices
-# into the lakehouse layout sort key that makes min/max file stats
-# prune 2-D range predicates. The oracle computes the identical
-# 32-term shift/mask interleave in SQL — a cross-engine check of the
-# bit-op semantics the layout relies on.
-# ---------------------------------------------------------------------------
-
-def _w103_oracle() -> str:
-    from bano_spark.geo import tiles as tl
-
-    pts = synth.points_select_sql("duckdb", "events", "event_id", 0)
-    cell = tl.cell_size(14)
-    zexpr = tl.zorder_sql("tx", "ty", 16)
-    return f"""
-WITH p AS ({pts}),
-t AS (
-  SELECT event_id,
-         CAST(floor((x - ({tl.ORIGIN!r})) / {cell!r}) AS BIGINT) AS tx,
-         CAST(floor(({-tl.ORIGIN!r} - y) / {cell!r}) AS BIGINT) AS ty
-  FROM p
-)
-SELECT event_id, tx, ty, CAST({zexpr} AS BIGINT) AS zkey
-FROM t ORDER BY event_id
-"""
-
-
-@register("zorder_keys", _w103_oracle())
-def w_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.geo import tiles as tl
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    pts = spark.sql(synth.points_select_sql("spark", "events", "event_id", 0))
-    t = (pts.withColumn("tx", tl.tile_x(F.col("x"), 14))
-         .withColumn("ty", tl.tile_y(F.col("y"), 14)))
-    return (t.select("event_id", "tx", "ty",
-                     tl.zorder_key(F.col("tx"), F.col("ty")).alias("zkey"))
-            .orderBy("event_id"))
-
-
-# ---------------------------------------------------------------------------
-# w104 — CUBE grouping sets (the OLAP rollup surface): counts and
-# value sums over every combination of (event_type, value-sign
-# bucket), including the grand total, via F.cube == GROUP BY CUBE.
-# ---------------------------------------------------------------------------
-
-_W104_ORACLE = """
-SELECT event_type,
-       CASE WHEN value >= 50 THEN 'hi' ELSE 'lo' END AS vband,
-       CAST(count(*) AS BIGINT) AS n, round(sum(value), 6) AS sum_v
-FROM events
-GROUP BY CUBE (event_type,
-               CASE WHEN value >= 50 THEN 'hi' ELSE 'lo' END)
-ORDER BY event_type NULLS FIRST, vband NULLS FIRST
-"""
-
-
-@register("grouping_sets_cube", _W104_ORACLE)
-def w_grouping_sets_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events").withColumn(
-        "vband", F.when(F.col("value") >= 50, "hi").otherwise("lo"))
-    return (ev.cube("event_type", "vband")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"),
-                 F.round(F.sum("value"), 6).alias("sum_v"))
-            .orderBy(F.asc_nulls_first("event_type"),
-                     F.asc_nulls_first("vband")))
-
-
-# ---------------------------------------------------------------------------
-# w105 — pivot: event types to columns of per-user counts (the
-# wide-table reshape). The pivot values are pinned explicitly, so the
-# plan is ONE aggregation pass (no distinct-values pre-query); the
-# oracle is conditional aggregation.
-# ---------------------------------------------------------------------------
-
-_W105_ORACLE = """
-SELECT user_id,
-       CAST(count(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT)
-         AS click,
-       CAST(count(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT)
-         AS error,
-       CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-         AS purchase,
-       CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT)
-         AS signup,
-       CAST(count(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT)
-         AS view
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-@register("event_type_pivot", _W105_ORACLE)
-def w_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    out = (ev.groupBy("user_id")
-           .pivot("event_type", kinds)
-           .agg(F.count(F.lit(1))))
-    for k in kinds:
-        out = out.withColumn(k, F.coalesce(F.col(k), F.lit(0))
-                             .cast("bigint"))
-    return out.orderBy("user_id")
-
-
-# ---------------------------------------------------------------------------
-# w106 — unpivot (melt): the wide per-user count table back to long
-# (user_id, event_type, n) via the native unpivot; round-trips the
-# pivot. Oracle: the long-form aggregation directly.
-# ---------------------------------------------------------------------------
-
-_W106_ORACLE = """
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-FROM events GROUP BY user_id, event_type
-ORDER BY user_id, event_type
-"""
-
-
-@register("event_type_unpivot", _W106_ORACLE)
-def w_event_type_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wide = w_event_type_pivot(spark, sf_dir)
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    long = wide.unpivot("user_id", kinds, "event_type", "n")
-    return (long.filter(F.col("n") > 0)
-            .select("user_id", "event_type", F.col("n").cast("bigint"))
-            .orderBy("user_id", "event_type"))
 
 
 # ---------------------------------------------------------------------------
@@ -5191,133 +3408,6 @@ def w_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w109 — PMI token co-occurrence (the SGNS/word2vec co-occurrence
-# prestep): distinct-token pairs within documents, scored
-# pmi = ln(c_ab * D / (df_a * df_b)). The per-doc self-join is bounded
-# by the per-doc distinct-token count; at corpus scale the vocabulary
-# prefilter (same contract as inverted_index max_df) bounds the hot
-# end. Minimum pair support 5 keeps the estimate stable.
-# ---------------------------------------------------------------------------
-
-_W109_ORACLE = r"""
-WITH tok AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS term
-    FROM documents)
-  WHERE term <> ''
-),
-df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tok GROUP BY term),
-dd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM tok),
-pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b,
-         CAST(count(*) AS DOUBLE) AS c
-  FROM tok a JOIN tok b
-    ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2
-)
-SELECT p.term_a, p.term_b, CAST(p.c AS BIGINT) AS n_docs,
-       round(ln(p.c * dd.n / (fa.df * fb.df)), 6) AS pmi
-FROM pairs p
-JOIN df fa ON fa.term = p.term_a
-JOIN df fb ON fb.term = p.term_b
-CROSS JOIN dd
-WHERE p.c >= 5
-ORDER BY term_a, term_b
-"""
-
-
-@register("pmi_cooccurrence", _W109_ORACLE)
-def w_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _read(spark, sf_dir, "documents")
-    tok = (docs.select("doc_id",
-                       F.explode(F.split("text", r"\s+")).alias("term"))
-           .filter(F.col("term") != "")
-           .distinct())
-    df_t = tok.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df"))
-    n_docs = tok.agg(
-        F.countDistinct("doc_id").cast("double").alias("n"))
-    pairs = (tok.alias("a").join(
-        tok.alias("b"),
-        (F.col("a.doc_id") == F.col("b.doc_id"))
-        & (F.col("a.term") < F.col("b.term")))
-        .groupBy(F.col("a.term").alias("term_a"),
-                 F.col("b.term").alias("term_b"))
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .filter(F.col("c") >= 5))
-    return (pairs
-            .join(F.broadcast(df_t.withColumnRenamed("term", "term_a")
-                              .withColumnRenamed("df", "dfa")), "term_a")
-            .join(F.broadcast(df_t.withColumnRenamed("term", "term_b")
-                              .withColumnRenamed("df", "dfb")), "term_b")
-            .crossJoin(F.broadcast(n_docs))
-            .select("term_a", "term_b",
-                    F.col("c").cast("bigint").alias("n_docs"),
-                    F.round(F.log(F.col("c") * F.col("n")
-                                  / (F.col("dfa") * F.col("dfb"))), 6)
-                    .alias("pmi"))
-            .orderBy("term_a", "term_b"))
-
-
-# ---------------------------------------------------------------------------
-# w110 — count-min sketch: the mergeable frequency sketch (Cormode &
-# Muthukrishnan) built distributed — depth-3 md5-derived bucket rows,
-# one partial-aggregated groupBy per (row, depth) pair; estimates are
-# the min over depths. Hashes derive from md5 so the oracle rebuilds
-# the IDENTICAL sketch in SQL; the exact count rides along, making the
-# overestimate property (est >= exact) visible in the checked output.
-# ---------------------------------------------------------------------------
-
-_W110_ORACLE = """
-WITH hk AS (
-  SELECT user_id, t.i,
-         CAST(CAST(concat('0x', substr(md5(CAST(t.i AS VARCHAR) || ':' ||
-                                       CAST(user_id AS VARCHAR)), 1, 8))
-                   AS UBIGINT) % 256 AS INTEGER) AS bucket
-  FROM events, range(3) t(i)
-),
-counters AS (SELECT i, bucket, count(*) AS c FROM hk GROUP BY 1, 2),
-keys AS (SELECT DISTINCT user_id, i, bucket FROM hk),
-est AS (
-  SELECT k.user_id, min(c.c) AS est
-  FROM keys k JOIN counters c ON c.i = k.i AND c.bucket = k.bucket
-  GROUP BY k.user_id
-),
-exact AS (SELECT user_id, count(*) AS exact FROM events GROUP BY user_id)
-SELECT e.user_id, CAST(e.est AS BIGINT) AS est,
-       CAST(x.exact AS BIGINT) AS exact
-FROM est e JOIN exact x ON x.user_id = e.user_id
-ORDER BY e.user_id
-"""
-
-
-@register("cms_user_counts", _W110_ORACLE)
-def w_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events").select("user_id")
-
-    def bucket(i):
-        return (F.conv(F.substring(F.md5(F.concat_ws(
-            ":", F.lit(i), F.col("user_id").cast("string"))), 1, 8),
-            16, 10).cast("bigint") % 256).cast("int")
-
-    hk = ev.select(
-        "user_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("i"), bucket(i).alias("bucket"))
-            for i in range(3)])).alias("h")
-    ).select("user_id", F.col("h.i").alias("i"),
-             F.col("h.bucket").alias("bucket"))
-    counters = hk.groupBy("i", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    keys = hk.distinct()
-    est = (keys.join(F.broadcast(counters), ["i", "bucket"])
-           .groupBy("user_id")
-           .agg(F.min("c").cast("bigint").alias("est")))
-    exact = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("exact"))
-    return est.join(exact, "user_id").orderBy("user_id")
-
-
-# ---------------------------------------------------------------------------
 # w111 — HITS hubs & authorities on the directed host graph: mutual
 # reinforcement with per-iteration L1 normalization (scalar aggregate
 # + broadcast division — no sqrt, so the unrolled SQL oracle replays
@@ -5367,107 +3457,6 @@ def w_hits_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
                        (F.round("hub", 6) + 0.0).alias("hub"),
                        (F.round("auth", 6) + 0.0).alias("auth"))
             .orderBy("host_id"))
-
-
-# ---------------------------------------------------------------------------
-# w112 — hopping (sliding) time windows: 2-hour windows every hour via
-# the native window() generator — each event lands in exactly 2
-# windows; per-window counts + distinct users. The oracle derives both
-# member window starts arithmetically.
-# ---------------------------------------------------------------------------
-
-_W112_ORACLE = """
-WITH w AS (
-  SELECT ts, user_id,
-         date_trunc('hour', ts) - INTERVAL (t.i) HOUR AS win_start
-  FROM events, range(2) t(i)
-)
-SELECT win_start, CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-FROM w GROUP BY win_start ORDER BY win_start
-"""
-
-
-@register("hopping_window_counts", _W112_ORACLE)
-def w_hopping_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    return (ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-                 F.countDistinct("user_id").cast("bigint").alias("n_users"))
-            .select(F.col("w.start").alias("win_start"),
-                    "n_events", "n_users")
-            .orderBy("win_start"))
-
-
-# ---------------------------------------------------------------------------
-# w113 — per-group exact percentile bands: p25/p50/p75/p90 of value
-# per event_type via ONE percentile-array aggregation + posexplode
-# (not four separate aggs). Spark percentile == DuckDB quantile_cont.
-# ---------------------------------------------------------------------------
-
-_W113_ORACLE = """
-SELECT event_type, p,
-       round(CASE p WHEN 0.25 THEN q[1] WHEN 0.5 THEN q[2]
-                    WHEN 0.75 THEN q[3] ELSE q[4] END, 6) AS v
-FROM (SELECT event_type,
-             quantile_cont(value, [0.25, 0.5, 0.75, 0.9]) AS q
-      FROM events GROUP BY event_type)
-CROSS JOIN (SELECT CAST(unnest([0.25, 0.5, 0.75, 0.9]) AS DOUBLE) AS p)
-ORDER BY event_type, p
-"""
-
-
-@register("group_percentile_bands", _W113_ORACLE)
-def w_group_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    qs = [0.25, 0.5, 0.75, 0.9]
-    agg = ev.groupBy("event_type").agg(
-        F.expr("percentile(value, array(0.25D, 0.5D, 0.75D, 0.9D))")
-        .alias("q"))
-    return (agg.select(
-        "event_type",
-        F.posexplode(F.col("q")).alias("i", "v"))
-        .select("event_type",
-                F.element_at(F.lit(qs), F.col("i") + 1).alias("p"),
-                F.round("v", 6).alias("v"))
-        .orderBy("event_type", "p"))
-
-
-# ---------------------------------------------------------------------------
-# w114 — equi-width value histogram per event_type (10 bins over the
-# GLOBAL [min, max] so bins are comparable across groups): bin index
-# by floor arithmetic, identical in both engines; the max value is
-# clamped into the last bin.
-# ---------------------------------------------------------------------------
-
-_W114_ORACLE = """
-WITH mm AS (SELECT min(value) AS lo, max(value) AS hi FROM events),
-b AS (
-  SELECT event_type,
-         least(CAST(floor((value - mm.lo) / ((mm.hi - mm.lo) / 10.0))
-                    AS INTEGER), 9) AS bin
-  FROM events CROSS JOIN mm WHERE value IS NOT NULL
-)
-SELECT event_type, bin, CAST(count(*) AS BIGINT) AS n
-FROM b GROUP BY event_type, bin ORDER BY event_type, bin
-"""
-
-
-@register("value_histogram", _W114_ORACLE)
-def w_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    mm = ev.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    return (ev.filter(F.col("value").isNotNull())
-            .crossJoin(F.broadcast(mm))
-            .select("event_type",
-                    F.least(
-                        F.floor((F.col("value") - F.col("lo"))
-                                / ((F.col("hi") - F.col("lo")) / 10.0))
-                        .cast("int"),
-                        F.lit(9)).alias("bin"))
-            .groupBy("event_type", "bin")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .orderBy("event_type", "bin"))
 
 
 # ---------------------------------------------------------------------------
@@ -5521,242 +3510,6 @@ def w_polyline_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# w116 — geohash cell rollup: base-32 geohash (precision 5) as staged
-# bit-interleave column arithmetic; engine and oracle SQL come from
-# the SAME generator (operators/geodesy.py), so the formula is shared
-# by construction rather than re-derived. Geohash prefixes give a
-# shuffle key with spatial locality — the index-free bucketing used
-# when polygon precision is not needed.
-# ---------------------------------------------------------------------------
-
-
-def _w116_oracle() -> str:
-    from bano_spark.operators.geodesy import (geohash_chars_sql,
-                                              geohash_interleave_sql,
-                                              geohash_quant_sql)
-
-    ix, iy = geohash_quant_sql("lon", "lat", 5)
-    inter = geohash_interleave_sql("_gix", "_giy", 5, "duckdb")
-    chars = geohash_chars_sql("_gg", 5, "duckdb")
-    return f"""
-WITH pts AS (
-  SELECT CASE WHEN user_id % 2 = 0
-              THEN 2.0 + (event_id % 1000) * 0.001
-              ELSE -61.5 + (event_id % 800) * 0.002 END AS lon,
-         CASE WHEN user_id % 2 = 0
-              THEN 48.0 + (user_id % 500) * 0.001
-              ELSE 16.0 + (user_id % 300) * 0.003 END AS lat
-  FROM events
-),
-q AS (SELECT {ix} AS _gix, {iy} AS _giy FROM pts),
-g AS (SELECT {inter} AS _gg FROM q)
-SELECT {chars} AS geohash, CAST(count(*) AS BIGINT) AS n
-FROM g GROUP BY 1 ORDER BY 1
-"""
-
-
-_W116_PTS = """
-SELECT CASE WHEN user_id % 2 = 0
-            THEN 2.0 + (event_id % 1000) * 0.001
-            ELSE -61.5 + (event_id % 800) * 0.002 END AS lon,
-       CASE WHEN user_id % 2 = 0
-            THEN 48.0 + (user_id % 500) * 0.001
-            ELSE 16.0 + (user_id % 300) * 0.003 END AS lat
-FROM events
-"""
-
-
-@register("geohash_cell_counts", _w116_oracle())
-def w_geohash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.geodesy import with_geohash
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    pts = spark.sql(_W116_PTS)
-    return (with_geohash(pts, "lon", "lat", precision=5)
-            .groupBy("geohash")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .orderBy("geohash"))
-
-
-# ---------------------------------------------------------------------------
-# w117 — segment-segment strict-crossing join (road-graph conflation /
-# overlay edges): bbox cell-cover equi-join for candidates, exact
-# double-orientation (ccw) refine as column arithmetic — the line-line
-# member of the spatial-join family, fully whole-stage-codegen. The
-# oracle states the same ccw predicate over the (fixture-scale) cross
-# join; coordinates are lattice integers so the strict test is exact
-# in both engines.
-# ---------------------------------------------------------------------------
-
-_W117_A = """
-SELECT DISTINCT l_orderkey % 200 AS a_id,
-       CAST((l_orderkey % 200) * 3 % 60 AS DOUBLE) AS ax1,
-       CAST((l_orderkey % 200) * 7 % 40 AS DOUBLE) AS ay1,
-       CAST((l_orderkey % 200) * 3 % 60 + 4 AS DOUBLE) AS ax2,
-       CAST((l_orderkey % 200) * 7 % 40 + 4 AS DOUBLE) AS ay2
-FROM lineitem
-"""
-
-_W117_B = """
-SELECT DISTINCT l_partkey % 200 AS b_id,
-       CAST((l_partkey % 200) * 5 % 60 AS DOUBLE) AS bx1,
-       CAST((l_partkey % 200) * 11 % 40 AS DOUBLE) AS by1,
-       CAST((l_partkey % 200) * 5 % 60 + 4 AS DOUBLE) AS bx2,
-       CAST((l_partkey % 200) * 11 % 40 - 4 AS DOUBLE) AS by2
-FROM lineitem
-"""
-
-_W117_ORACLE = f"""
-WITH a AS ({_W117_A}), b AS ({_W117_B})
-SELECT a_id, b_id FROM a CROSS JOIN b
-WHERE ((ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1))
-    * ((ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)) < 0
-  AND ((bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1))
-    * ((bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)) < 0
-ORDER BY a_id, b_id
-"""
-
-
-@register("segment_intersections", _W117_ORACLE)
-def w_segment_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.geodesy import segment_intersections_join
-
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    a = spark.sql(_W117_A)
-    b = spark.sql(_W117_B)
-    return (segment_intersections_join(a, b, cell=8.0)
-            .orderBy("a_id", "b_id"))
-
-
-# ---------------------------------------------------------------------------
-# w118 — readability profile (Flesch reading ease over regex proxies):
-# vowel-group syllables, terminal-punctuation sentences with a
-# deterministic words/15 fallback for punctuation-less corpora. All
-# regexp_count / split codegen — the cheap text-quality signal that
-# runs beside gopher_quality_flags in a curation sweep.
-# ---------------------------------------------------------------------------
-
-_W118_ORACLE = """
-WITH c AS (
-  SELECT doc_id,
-         CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT)
-           AS n_words,
-         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-           AS n_syll,
-         CAST(len(regexp_extract_all(text, '[.!?]')) AS BIGINT) AS n_punct
-  FROM documents
-),
-s AS (
-  SELECT doc_id, n_words, n_syll,
-         CASE WHEN n_punct > 0 THEN n_punct
-              ELSE greatest(
-                  CAST(ceil(CAST(n_words AS DOUBLE) / 15) AS BIGINT),
-                  1) END AS n_sent
-  FROM c
-)
-SELECT doc_id, n_words, n_syll, n_sent,
-       round(206.835
-             - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sent AS DOUBLE))
-             - 84.6 * (CAST(n_syll AS DOUBLE) / CAST(n_words AS DOUBLE)),
-             4) AS flesch
-FROM s ORDER BY doc_id
-"""
-
-
-@register("readability_scores", _W118_ORACLE)
-def w_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators import textstats as ts
-
-    docs = _read(spark, sf_dir, "documents")
-    t = F.col("text")
-    words = ts.token_count(t)
-    syll = ts.syllable_groups(t)
-    sent = ts.sentence_count(t, words)
-    return (docs.select(
-        "doc_id",
-        words.alias("n_words"),
-        syll.alias("n_syll"),
-        sent.alias("n_sent"),
-        ts.flesch_reading_ease(words, sent, syll).alias("flesch"))
-        .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w119 — lexical diversity (type-token ratio): distinct-token share
-# per document, the hapax-adjacent vocabulary-richness screen used in
-# quality filtering. Array ops in codegen; oracle via list_distinct.
-# ---------------------------------------------------------------------------
-
-_W119_ORACLE = """
-WITH t AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(toks) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-       round(CAST(len(list_distinct(toks)) AS DOUBLE)
-             / CAST(len(toks) AS DOUBLE), 6) AS ttr
-FROM t ORDER BY doc_id
-"""
-
-
-@register("lexical_diversity", _W119_ORACLE)
-def w_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators import textstats as ts
-    from bano_spark.operators.dedup import tokens
-
-    docs = _read(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    return (docs.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct"),
-        ts.lexical_diversity(F.col("text")).alias("ttr"))
-        .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w120 — sorted-neighborhood blocking (Hernandez-Stolfo SNM): pairs
-# within a window of the global (key, id) sort order, WITHOUT the
-# single-partition exchange of row_number() OVER (ORDER BY ...) — the
-# global rank comes from the two-pass distributed prefix sum, pairing
-# is a size-w explode + bigint equi-join. The oracle states the
-# textbook formulation directly.
-# ---------------------------------------------------------------------------
-
-_W120_ORACLE = """
-WITH k AS (
-  SELECT doc_id,
-         string_split(lower(text), ' ')[1] || ' '
-           || string_split(lower(text), ' ')[2] AS key
-  FROM documents
-),
-r AS (
-  SELECT doc_id, key,
-         row_number() OVER (ORDER BY key, doc_id) AS rn
-  FROM k
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.key AS key_a, b.key AS key_b
-FROM r a JOIN r b ON b.rn > a.rn AND b.rn <= a.rn + 4
-ORDER BY id_a, id_b
-"""
-
-
-@register("sorted_neighborhood_pairs", _W120_ORACLE)
-def w_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.linkage import sorted_neighborhood_pairs
-
-    docs = _read(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
-    keyed = docs.select(
-        "doc_id",
-        F.concat_ws(" ", toks.getItem(0), toks.getItem(1)).alias("key"))
-    return (sorted_neighborhood_pairs(keyed, "key", "doc_id", window=4)
-            .orderBy("id_a", "id_b"))
-
-
-# ---------------------------------------------------------------------------
 # w121 — time-RANGE rolling window (RANGE BETWEEN INTERVAL 1 HOUR
 # PRECEDING AND CURRENT ROW) per user: rangeBetween over epoch
 # seconds makes Spark's numeric frame exactly the SQL interval frame
@@ -5784,48 +3537,6 @@ def w_rolling_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "ts",
                     "n_in_window", "avg_in_window")
             .orderBy("event_id"))
-
-
-# ---------------------------------------------------------------------------
-# w122 — windowed z-score anomaly screen: hourly event counts per
-# type, standardized against that type's own mean/stddev_samp across
-# hours; |z| > 1.5 flags burst/dropout hours. Two partial-agg
-# shuffles (hour rollup, type stats) + one broadcast-size join — the
-# drift/incident detector shape over 10^12-event telemetry.
-# ---------------------------------------------------------------------------
-
-_W122_ORACLE = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, avg(n) AS mu, stddev_samp(n) AS sigma
-  FROM hourly GROUP BY 1
-)
-SELECT h.event_type, h.hour, h.n,
-       round((h.n - s.mu) / s.sigma, 6) AS z
-FROM hourly h JOIN stats s USING (event_type)
-WHERE s.sigma > 0 AND abs((h.n - s.mu) / s.sigma) > 1.5
-ORDER BY h.event_type, h.hour
-"""
-
-
-@register("windowed_zscore_anomalies", _W122_ORACLE)
-def w_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    hourly = (ev.groupBy("event_type",
-                         F.date_trunc("hour", "ts").alias("hour"))
-              .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
-    stats = (hourly.groupBy("event_type")
-             .agg(F.avg("n").alias("mu"),
-                  F.stddev_samp("n").alias("sigma")))
-    z = (F.col("n") - F.col("mu")) / F.col("sigma")
-    return (hourly.join(F.broadcast(stats), "event_type")
-            .filter((F.col("sigma") > 0) & (F.abs(z) > 1.5))
-            .select("event_type", "hour", "n", F.round(z, 6).alias("z"))
-            .orderBy("event_type", "hour"))
 
 
 # ---------------------------------------------------------------------------
@@ -5887,79 +3598,6 @@ def w_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         + " SELECT * FROM raw")
     return (k_core(raw, 5, src="u", dst="v")
             .orderBy("node"))
-
-
-# ---------------------------------------------------------------------------
-# w124 — watermark LATE-DATA EVICTION in append mode (§2.9): the
-# events table streams as THREE ordered file batches — batches 1-2
-# carry event_id % 4 != 0 (including the globally newest row), batch
-# 3 replays the % 4 == 0 slice, all of it older than the watermark
-# the first two batches established (max ts - 90 min). Three batches
-# because Spark filters late events with the PREVIOUS batch's
-# watermark (watermarkForLateEvents lags eviction by one trigger,
-# measured empirically on 4.1): the late slice must arrive two
-# triggers after the max-ts row for the drop to engage. Append mode
-# finalizes a window exactly once when the watermark passes its end;
-# the emitted counts are EXACTLY the on-time rows in windows ending
-# before the final watermark, which is what the oracle states. The
-# 90-minute delay is deliberately not a multiple of the window size
-# and the max ts is not hour-aligned, so no window end ever ties the
-# watermark and <-vs-<= boundary semantics cannot matter.
-# ---------------------------------------------------------------------------
-
-_W124_ORACLE = """
-WITH wm AS (
-  SELECT max(ts) - INTERVAL 90 MINUTE AS w FROM events WHERE event_id % 4 != 0
-)
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       CAST(count(*) AS BIGINT) AS n
-FROM events, wm
-WHERE event_id % 4 != 0
-  AND date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm.w
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-@register("streaming_late_data_eviction", _W124_ORACLE)
-def w_stream_late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from bano_spark.streaming.incremental import windowed_counts_append
-
-    ev = _read(spark, sf_dir, "events")
-    feed_dir = tempfile.mkdtemp(prefix="w124_feed_")
-    try:
-        b1 = os.path.join(feed_dir, "batch1")
-        b2 = os.path.join(feed_dir, "batch2")
-        b3 = os.path.join(feed_dir, "batch3")
-        on_time = ev.filter(F.col("event_id") % 4 != 0)
-        on_time.filter(F.col("event_id") % 8 >= 4).coalesce(1) \
-          .write.mode("overwrite").parquet(b1)
-        on_time.filter(F.col("event_id") % 8 < 4).coalesce(1) \
-          .write.mode("overwrite").parquet(b2)
-        ev.filter(F.col("event_id") % 4 == 0).coalesce(1) \
-          .write.mode("overwrite").parquet(b3)
-        # FileStreamSource orders by modification time: pin batch order
-        for d, t in ((b1, 1_000_000_000), (b2, 1_000_000_900),
-                     (b3, 1_000_001_800)):
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (t, t))
-        feed = (spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(feed_dir + "/*"))
-        agg = windowed_counts_append(feed)
-        qname = "w124_stream"
-        q = (agg.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-        out = (spark.table(qname)
-               .orderBy("window_start", "event_type").collect())
-    finally:
-        shutil.rmtree(feed_dir, ignore_errors=True)
-    return spark.createDataFrame(
-        out, "window_start timestamp, event_type string, n bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -6059,211 +3697,6 @@ def w_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     _read(spark, sf_dir, "events").createOrReplaceTempView("events")
     vals = spark.sql("WITH " + _w126_cells("spark") + " SELECT * FROM vals")
     return focal_mean(vals).orderBy("tx", "ty")
-
-
-# ---------------------------------------------------------------------------
-# w127 — per-group simple linear regression (value ~ hour-of-day) via
-# the closed-form moment aggregates: slope = cov/var, intercept,
-# r-squared — one partial-agg shuffle per group, the regression
-# analytics member (trend-per-segment) at 10^12 rows. The oracle uses
-# DuckDB's native regr_slope/regr_intercept/regr_r2, so the engine's
-# moment algebra is checked against an independent implementation.
-# ---------------------------------------------------------------------------
-
-_W127_ORACLE = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(regr_slope(value, CAST(date_part('hour', ts) AS DOUBLE)), 6)
-         AS slope,
-       round(regr_intercept(value, CAST(date_part('hour', ts) AS DOUBLE)), 6)
-         AS intercept,
-       round(regr_r2(value, CAST(date_part('hour', ts) AS DOUBLE)), 6) AS r2
-FROM events
-GROUP BY event_type ORDER BY event_type
-"""
-
-
-@register("linear_fit_per_group", _W127_ORACLE)
-def w_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    x = F.hour("ts").cast("double")
-    yv = F.col("value")
-    agg = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.avg(x).alias("mx"), F.avg(yv).alias("my"),
-        F.covar_pop(x, yv).alias("cxy"),
-        F.var_pop(x).alias("vx"), F.var_pop(yv).alias("vy"))
-    slope = F.col("cxy") / F.col("vx")
-    intercept = F.col("my") - slope * F.col("mx")
-    r2 = (F.col("cxy") * F.col("cxy")) / (F.col("vx") * F.col("vy"))
-    return (agg.select(
-        "event_type", "n",
-        F.round(slope, 6).alias("slope"),
-        F.round(intercept, 6).alias("intercept"),
-        F.round(r2, 6).alias("r2"))
-        .orderBy("event_type"))
-
-
-# ---------------------------------------------------------------------------
-# w128 — unigram token entropy per document (bits): the information-
-# density quality screen (repetitive boilerplate scores low, rich
-# prose high). explode -> per-(doc, token) counts -> per-doc entropy
-# via sum(p log2 p) — two partial-agg shuffles, no Python.
-# ---------------------------------------------------------------------------
-
-_W128_ORACLE = r"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-  FROM documents
-),
-tf AS (SELECT doc_id, t, CAST(count(*) AS DOUBLE) AS c
-       FROM tok GROUP BY 1, 2),
-tot AS (SELECT doc_id, sum(c) AS n FROM tf GROUP BY 1)
-SELECT tf.doc_id,
-       CAST(tot.n AS BIGINT) AS n_tokens,
-       round(-sum((tf.c / tot.n) * log2(tf.c / tot.n)), 6) AS entropy_bits
-FROM tf JOIN tot USING (doc_id)
-GROUP BY tf.doc_id, tot.n ORDER BY tf.doc_id
-"""
-
-
-@register("token_entropy", _W128_ORACLE)
-def w_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import tokens
-
-    docs = _read(spark, sf_dir, "documents")
-    tf = (docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
-          .groupBy("doc_id", "t")
-          .agg(F.count(F.lit(1)).cast("double").alias("c")))
-    tot = tf.groupBy("doc_id").agg(F.sum("c").alias("n"))
-    p = F.col("c") / F.col("n")
-    return (tf.join(tot, "doc_id")
-            .groupBy("doc_id", "n")
-            .agg(F.round(-F.sum(p * F.log2(p)), 6).alias("entropy_bits"))
-            .select("doc_id", F.col("n").cast("bigint").alias("n_tokens"),
-                    "entropy_bits")
-            .orderBy("doc_id"))
-
-
-# ---------------------------------------------------------------------------
-# w129 — DBSCAN over chain fixtures: 12 anchors, each a 1-D chain of
-# 3 + (a % 5) slots spaced 25 m (eps 60 -> each slot sees +-2 slots;
-# min_pts 5). Chains of length <= 4 go all-noise; length >= 5 yields
-# interior cores and end borders — the closed-form role/label rules
-# the oracle states directly (|N(k)| = min(k+2, L-1) - max(k-2, 0) + 1,
-# cluster = anchor's first core id, border iff a core sits within 2
-# slots). The engine runs the generic pipeline: auto-zoomed dwithin
-# pair join -> core filter -> min-label components -> border
-# attachment. Determinism is pinned by order-free rules (see
-# clustering.dbscan docstring).
-# ---------------------------------------------------------------------------
-
-
-def _w129_slots(dialect: str) -> str:
-    return """
-slots AS (
-  SELECT DISTINCT event_id % 12 AS a, event_id % 7 AS k
-  FROM events WHERE event_id % 7 < 3 + (event_id % 12) % 5
-),
-pts AS (
-  SELECT a * 100 + k AS id,
-         1000000.0 + a * 10000.0 + k * 25.0 AS x,
-         2000000.0 AS y,
-         a, k, 3 + (a % 5) AS L
-  FROM slots
-)"""
-
-
-_W129_ORACLE = f"""
-WITH {_w129_slots('duckdb')},
-sized AS (
-  SELECT id, a, k, L,
-         least(k + 2, L - 1) - greatest(k - 2, 0) + 1 AS nsize
-  FROM pts
-),
-cores AS (SELECT * FROM sized WHERE nsize >= 5),
-labels AS (SELECT a, min(id) AS cl FROM cores GROUP BY a)
-SELECT s.id,
-       CASE WHEN s.nsize >= 5 THEN 'core'
-            WHEN EXISTS (SELECT 1 FROM cores c
-                         WHERE c.a = s.a AND abs(c.k - s.k) <= 2)
-                 THEN 'border'
-            ELSE 'noise' END AS role,
-       CASE WHEN s.nsize >= 5 OR EXISTS (SELECT 1 FROM cores c
-                 WHERE c.a = s.a AND abs(c.k - s.k) <= 2)
-            THEN l.cl END AS cluster
-FROM sized s LEFT JOIN labels l ON l.a = s.a
-ORDER BY s.id
-"""
-
-
-@register("dbscan_chains", _W129_ORACLE)
-def w_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.clustering import dbscan
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    pts = spark.sql(
-        "WITH " + _w129_slots("spark") + " SELECT id, x, y FROM pts")
-    return dbscan(pts, 60.0, 5).orderBy("id")
-
-
-# ---------------------------------------------------------------------------
-# w130 — Douglas-Peucker polyline simplification (ST_Simplify; BANO
-# bounds street-geometry vertex counts before export). Tent fixture
-# with a closed-form answer: 12 polylines, each a tent of L = 5 + a%4
-# vertices (x = k*1000, y rising linearly to height d = 10*(a%3) at
-# the apex m = L//2, falling linearly after). First DP chord is the
-# flat base, so every vertex's distance is its y (apex = d, unique
-# max); with eps = 15 the apex is kept iff d > 15, and the two
-# sub-chords are then exactly collinear with the remaining vertices,
-# so recursion stops. Kept set == {0, L-1} ∪ ({m} iff d > eps} — the
-# oracle states it directly.
-# ---------------------------------------------------------------------------
-
-
-def _w130_slots(dialect: str) -> str:
-    return """
-slots AS (
-  SELECT DISTINCT event_id % 12 AS a, event_id % 17 AS k
-  FROM events WHERE event_id % 17 < 5 + (event_id % 12) % 4
-)"""
-
-
-_W130_ORACLE = f"""
-WITH {_w130_slots('duckdb')},
-sized AS (
-  SELECT a, k, 5 + a % 4 AS L, 10 * (a % 3) AS d FROM slots
-)
-SELECT CAST(a AS BIGINT) AS line_id, CAST(k AS BIGINT) AS idx
-FROM sized
-WHERE k = 0 OR k = L - 1 OR (d > 15 AND k = L // 2)
-ORDER BY line_id, idx
-"""
-
-
-@register("simplify_polylines", _W130_ORACLE)
-def w_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.simplify import simplify_polylines
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    base = spark.sql("WITH " + _w130_slots("spark") + " SELECT a, k FROM slots")
-    L = F.lit(5) + F.col("a") % 4
-    m = F.floor(L / 2).cast("double")
-    d = (F.col("a") % 3).cast("double") * 10.0
-    k = F.col("k").cast("double")
-    y = F.when(k <= m, d * k / m).otherwise(
-        d * (L - 1 - k) / (L - 1 - m))
-    verts = (base.select(F.col("a").cast("bigint").alias("line_id"),
-                         F.col("k").cast("long").alias("k"),
-                         (k * 1000.0).alias("x"), y.alias("y"))
-             .groupBy("line_id")
-             .agg(F.array_sort(F.collect_list(F.struct("k", "x", "y")))
-                  .alias("vs"))
-             .select("line_id",
-                     F.transform("vs", lambda s: s["x"]).alias("xs"),
-                     F.transform("vs", lambda s: s["y"]).alias("ys")))
-    return (simplify_polylines(verts, 15.0, id_col="line_id")
-            .orderBy("line_id", "idx"))
 
 
 # ---------------------------------------------------------------------------
@@ -6446,83 +3879,6 @@ def w_hex_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (hex_kring_smooth(vals, k=1)
             .select("hq", "hr", "n_neighbors", "ring_mean")
             .orderBy("hq", "hr"))
-
-
-# ---------------------------------------------------------------------------
-# w136 — ST_LineInterpolatePoint (planar): the midpoint-along-length
-# of each polyline, computed in the engine as ONE aggregate() fold
-# over the vertex arrays (zero shuffle — the classic "label point on
-# a street" export op). The oracle replays the identical sequential
-# walk with window functions: running length via ordered sum (same
-# association order as the fold), total as the running sum's last
-# value, first segment whose cumulative end reaches half the total
-# hosts the point. x strictly increases with k, so no zero-length
-# segments arise in the fixture.
-# ---------------------------------------------------------------------------
-
-
-def _w136_verts(dialect: str) -> str:
-    return """
-slots AS (
-  SELECT DISTINCT event_id % 12 AS a, event_id % 17 AS k
-  FROM events WHERE event_id % 17 < 4 + (event_id % 12) % 5
-),
-verts AS (
-  SELECT a AS line_id, k,
-         CAST(k * 100 + (a * 37) % 50 AS DOUBLE) AS x,
-         CAST(((k * k * 7 + a * 13) % 90) * 3 AS DOUBLE) AS y
-  FROM slots
-)"""
-
-
-_W136_ORACLE = f"""
-WITH {_w136_verts('duckdb')},
-segs AS (
-  SELECT line_id, k, x, y,
-         lead(x) OVER (PARTITION BY line_id ORDER BY k) AS x2,
-         lead(y) OVER (PARTITION BY line_id ORDER BY k) AS y2
-  FROM verts
-),
-lens AS (
-  SELECT *, sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS len
-  FROM segs WHERE x2 IS NOT NULL
-),
-cum AS (
-  SELECT *, sum(len) OVER (PARTITION BY line_id ORDER BY k) AS cume
-  FROM lens
-),
-tot AS (
-  SELECT *, max(cume) OVER (PARTITION BY line_id) AS total FROM cum
-),
-hit AS (
-  SELECT *, row_number() OVER (PARTITION BY line_id ORDER BY k) AS rn
-  FROM tot WHERE cume >= 0.5 * total
-)
-SELECT CAST(line_id AS BIGINT) AS line_id,
-       round(x + (x2 - x) * ((0.5 * total - (cume - len)) / len), 6) AS px,
-       round(y + (y2 - y) * ((0.5 * total - (cume - len)) / len), 6) AS py
-FROM hit WHERE rn = 1 ORDER BY line_id
-"""
-
-
-@register("line_interpolate_midpoint", _W136_ORACLE)
-def w_line_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.geodesy import line_interpolate_point
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    verts = spark.sql("WITH " + _w136_verts("spark")
-                      + " SELECT * FROM verts")
-    lines = (verts.groupBy("line_id")
-             .agg(F.array_sort(F.collect_list(F.struct("k", "x", "y")))
-                  .alias("vs"))
-             .select(F.col("line_id").cast("bigint").alias("line_id"),
-                     F.transform("vs", lambda s: s["x"]).alias("xs"),
-                     F.transform("vs", lambda s: s["y"]).alias("ys")))
-    p = line_interpolate_point(0.5)
-    return (lines.select("line_id", p.alias("p"))
-            .select("line_id", F.round("p.px", 6).alias("px"),
-                    F.round("p.py", 6).alias("py"))
-            .orderBy("line_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -6714,46 +4070,6 @@ def w_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (out.select(F.col("node").cast("bigint").alias("node"),
                        F.col("lbl").cast("bigint").alias("label"))
             .orderBy("node"))
-
-
-# ---------------------------------------------------------------------------
-# w140 — audio feature plumbing (the audio member of the multimodal
-# decode family; codec honestly stubbed like image/video, fake path
-# fully derivable from ids): payload byte j = (id*7 + j) % 256,
-# length 32 + (id%5)*64, kind 'audio' iff id % 3 = 1. The oracle
-# recomputes rate/samples/duration/amplitude from that arithmetic.
-# ---------------------------------------------------------------------------
-
-_W140_ORACLE = """
-WITH au AS (
-  SELECT o_orderkey AS media_id,
-         (o_orderkey * 7) % 256 AS b0,
-         32 + (o_orderkey % 5) * 64 AS plen
-  FROM orders WHERE o_orderkey % 3 = 1
-),
-amp AS (
-  SELECT a.media_id, sum((a.b0 + u.j) % 256) AS s
-  FROM au a, UNNEST(generate_series(4, a.plen - 1)) u(j)
-  GROUP BY a.media_id
-)
-SELECT a.media_id,
-       CAST(8000 + (a.b0 % 4) * 4000 AS INTEGER) AS sample_rate,
-       CAST((a.plen - 4) * 2 AS BIGINT) AS n_samples,
-       CAST((a.plen - 4) * 2 * 1000 // (8000 + (a.b0 % 4) * 4000)
-            AS BIGINT) AS duration_ms,
-       round(CAST(m.s AS DOUBLE) / ((a.plen - 4) * 255.0), 6) AS mean_amp
-FROM au a JOIN amp m USING (media_id) ORDER BY a.media_id
-"""
-
-
-@register("audio_features_meta", _W140_ORACLE)
-def w_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.multimodal import audio_features, media_from_ids
-
-    orders = _read(spark, sf_dir, "orders")
-    media = media_from_ids(
-        orders.select(F.col("o_orderkey").alias("media_id")))
-    return audio_features(media, fake=True).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------

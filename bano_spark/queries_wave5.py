@@ -1,9 +1,8 @@
 """Wave-5 driver queries: trajectory analytics, spatial anti-join
-coverage gaps, geodesic polygon area, Moran's I spatial
-autocorrelation, map-matching, asymmetric containment dedup, hex KDE
-smoothing, and a stream-static enrichment join — each with a DuckDB
-oracle over the same shared fixtures (synth.py one-source-of-truth
-discipline: a single emitter builds both dialects).
+coverage gaps, Moran's I and Getis-Ord spatial statistics, dissolve
+and cell-set compaction — each with a DuckDB oracle over the same
+shared fixtures (synth.py one-source-of-truth discipline: a single
+emitter builds both dialects).
 """
 
 from __future__ import annotations
@@ -206,39 +205,6 @@ def v_coverage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# v05 — geodesic (spherical) polygon area per commune: inverse-
-# Mercator + the discrete spherical trapezoid sum as ONE aggregate()
-# fold over the ring (operators/geodesy.spherical_ring_area_m2 —
-# ST_Area(geography) as a column kernel). The oracle is the CLOSED
-# FORM for a Mercator rectangle, R^2 * dlambda * dsin(phi) — a
-# different algebraic route to the same number, so the hash match
-# checks the math, not the code.
-# ---------------------------------------------------------------------------
-
-_V05_ORACLE = f"""
-SELECT insee_com,
-       round(6371008.8 * 6371008.8
-             * ((xmax - xmin) / 6378137.0)
-             * (sin(2.0 * atan(exp(ymax / 6378137.0)) - pi() / 2.0)
-                - sin(2.0 * atan(exp(ymin / 6378137.0)) - pi() / 2.0))
-             / 1000000.0, 6) AS area_km2
-FROM {synth.communes_values_sql()}
-ORDER BY insee_com
-"""
-
-
-@register("spherical_commune_area", _V05_ORACLE)
-def v_spherical_area(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.geodesy import spherical_ring_area_m2
-
-    polys = synth.commune_polygons_df(spark)
-    return (polys.select(
-        "insee_com",
-        F.round(spherical_ring_area_m2("verts") / 1e6, 6).alias("area_km2"))
-        .orderBy("insee_com"))
-
-
-# ---------------------------------------------------------------------------
 # v06 — global Moran's I over the 700 m hex-binned point counts:
 # "do dense cells neighbor dense cells?" Engine: 6-offset explode +
 # equi-join on the cell key (operators/spatialstats.moran_i_hex);
@@ -286,216 +252,6 @@ def v_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     _read(spark, sf_dir, "events").createOrReplaceTempView("events")
     cells = spark.sql("WITH " + _v06_cells("spark") + " SELECT * FROM cells")
     return moran_i_hex(cells, val_col="val")
-
-
-# ---------------------------------------------------------------------------
-# v07 — map-matching: snap each point (every 3rd event) to its
-# nearest street segment within 500 m. Engine: expanded-bbox cell
-# cover + home-cell equi-join + clamped projection + partitioned
-# top-1 window (operators/mapmatch.snap_to_segments); oracle: the
-# brute-force point x segment product with the identical projection
-# arithmetic — an O(n*m) route the engine never takes.
-# ---------------------------------------------------------------------------
-
-_V07_ORACLE = f"""
-WITH p AS ({synth.points_select_sql('duckdb')}),
-ps AS (SELECT * FROM p WHERE event_id % 3 = 0),
-segs AS ({synth.segments_select_sql('duckdb')}),
-cand AS (
-  SELECT ps.event_id, s.seg_id, ps.x, ps.y, s.x1, s.y1,
-         s.x2 - s.x1 AS dx, s.y2 - s.y1 AS dy,
-         (s.x2 - s.x1) * (s.x2 - s.x1)
-           + (s.y2 - s.y1) * (s.y2 - s.y1) AS d2seg
-  FROM ps, segs s
-),
-proj AS (
-  SELECT event_id, seg_id, x, y, x1, y1, dx, dy,
-         least(greatest(CASE WHEN d2seg > 0
-              THEN ((x - x1) * dx + (y - y1) * dy) / d2seg
-              ELSE 0.0 END, 0.0), 1.0) AS tc
-  FROM cand
-),
-scored AS (
-  SELECT event_id, seg_id,
-         x1 + tc * dx AS sx, y1 + tc * dy AS sy,
-         (x - (x1 + tc * dx)) * (x - (x1 + tc * dx))
-           + (y - (y1 + tc * dy)) * (y - (y1 + tc * dy)) AS d2
-  FROM proj
-),
-best AS (
-  SELECT event_id, seg_id, sx, sy, d2,
-         row_number() OVER (PARTITION BY event_id
-                            ORDER BY d2, seg_id) AS rk
-  FROM scored WHERE d2 <= 250000.0
-)
-SELECT event_id, seg_id, round(sx, 6) AS snap_x, round(sy, 6) AS snap_y,
-       round(sqrt(d2), 3) AS dist_m
-FROM best WHERE rk = 1 ORDER BY event_id
-"""
-
-
-@register("map_match_segments", _V07_ORACLE)
-def v_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.mapmatch import snap_to_segments
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    pts = (spark.sql(synth.points_select_sql("spark"))
-           .filter(F.col("event_id") % 3 == 0))
-    segs = spark.sql(synth.segments_select_sql("spark"))
-    return snap_to_segments(pts, segs, 500.0).orderBy("event_id")
-
-
-# ---------------------------------------------------------------------------
-# v08 — asymmetric near-CONTAINMENT dedup (doc-in-doc): directed
-# pairs with |A∩B| / |A| >= 0.9 over distinct tokens — the inclusion
-# case Jaccard structurally misses (a half-length excerpt of a page
-# has jac ~0.5 but containment ~1.0). Corpus: every 7th document plus
-# its front-half excerpt, so the fixture PROVES the operator catches
-# pairs allpairs_jaccard(0.8) does not. Engine: prefix-filtered
-# candidate join (operators/setsim.containment_pairs); oracle: the
-# full token-intersection join.
-# ---------------------------------------------------------------------------
-
-_V08_CORPUS = {
-    "duckdb": """
-corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT doc_id + 1000000, substr(text, 1, greatest(n_chars // 2, 20))
-  FROM documents WHERE doc_id % 7 = 0
-)""",
-    "spark": """
-SELECT doc_id, text FROM documents WHERE doc_id % 7 = 0
-UNION ALL
-SELECT doc_id + 1000000, substring(text, 1, greatest(CAST(n_chars div 2 AS INT), 20))
-FROM documents WHERE doc_id % 7 = 0
-""",
-}
-
-_V08_ORACLE = rf"""
-WITH {_V08_CORPUS['duckdb']},
-tok AS (
-  SELECT DISTINCT doc_id, term FROM (
-    SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS term
-    FROM corpus)
-  WHERE term <> ''
-),
-sz AS (SELECT doc_id, count(*) AS n FROM tok GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(count(*) AS DOUBLE) AS c
-          FROM tok a JOIN tok b ON a.term = b.term
-                                AND a.doc_id != b.doc_id
-          GROUP BY 1, 2)
-SELECT i.id_a, i.id_b, round(i.c / sa.n, 6) AS containment
-FROM inter i JOIN sz sa ON sa.doc_id = i.id_a
-WHERE i.c / sa.n >= 0.9
-ORDER BY id_a, id_b
-"""
-
-
-@register("containment_pairs", _V08_ORACLE)
-def v_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.setsim import containment_pairs
-
-    _read(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    corpus = spark.sql(_V08_CORPUS["spark"])
-    return containment_pairs(corpus, 0.9).orderBy("id_a", "id_b")
-
-
-# ---------------------------------------------------------------------------
-# v09 — distance-decay hex smoothing (discrete KDE): triangular
-# weights (k + 1 - ring) over each occupied cell's radius-2 disk.
-# Integer weight numerators keep the weighted sums exact in doubles
-# regardless of aggregation order (hex_kring_smooth discipline).
-# ---------------------------------------------------------------------------
-
-
-def _v09_vals(dialect: str) -> str:
-    return (_v06_cells(dialect)
-            + """,
-vals AS (
-  SELECT hq, hr,
-         CAST(((hq * 7 + hr * 13 + 100000000) % 100) AS DOUBLE) / 10.0 AS val
-  FROM cells
-)""")
-
-
-_V09_RING = ("greatest(abs(a.hq - b.hq), abs(a.hr - b.hr), "
-             "abs((a.hq + a.hr) - (b.hq + b.hr)))")
-
-_V09_ORACLE = f"""
-WITH {_v09_vals('duckdb')}
-SELECT a.hq, a.hr,
-       CAST(sum(3 - {_V09_RING}) AS BIGINT) AS w_total,
-       round(sum(b.val * (3 - {_V09_RING}))
-             / sum(3 - {_V09_RING}), 6) AS kde
-FROM vals a JOIN vals b ON {_V09_RING} <= 2
-GROUP BY a.hq, a.hr ORDER BY a.hq, a.hr
-"""
-
-
-@register("hex_kde_weighted", _V09_ORACLE)
-def v_hex_kde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.geo.hexgrid import hex_kring_weighted
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    vals = spark.sql("WITH " + _v09_vals("spark") + " SELECT * FROM vals")
-    return (hex_kring_weighted(vals, k=2)
-            .select("hq", "hr", "w_total", "kde")
-            .orderBy("hq", "hr"))
-
-
-# ---------------------------------------------------------------------------
-# v10 — stream-static enrichment join: the event stream joins the
-# static commune dimension (broadcast inside each micro-batch — the
-# canonical streaming enrich), then rolls up hourly counts per dept.
-# Structured Streaming supports stream-static inner joins stateless-
-# ly; the oracle is the batch equivalent over the same derivation.
-# ---------------------------------------------------------------------------
-
-
-def _v10_insee_case(col: str) -> str:
-    return "CASE " + " ".join(
-        f"WHEN {col} % 10 = {i} THEN '{synth.COMMUNES[i][0]}'"
-        for i in range(10)
-    ) + " END"
-
-
-_V10_ORACLE = f"""
-SELECT date_trunc('hour', CAST(e.ts AS TIMESTAMP)) AS window_start,
-       c.dept, CAST(count(*) AS BIGINT) AS n
-FROM events e
-JOIN {synth.communes_values_sql()}
-  ON c.insee_com = {_v10_insee_case('e.event_id')}
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-@register("streaming_static_enrich", _V10_ORACLE)
-def v_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim = synth.communes_df(spark).select("insee_com", "dept")
-    feed = (spark.readStream.schema(
-        _read(spark, sf_dir, "events").schema).parquet(sf_dir.rstrip("/"))
-        .filter(F.input_file_name().endswith("events.parquet")))
-    enriched = (feed
-                .withColumn("ts", F.col("ts").cast("timestamp"))
-                .withColumn("insee_com",
-                            F.expr(_v10_insee_case("event_id")))
-                .join(F.broadcast(dim), "insee_com"))
-    agg = (enriched
-           .withWatermark("ts", "1 hour")
-           .groupBy(F.window("ts", "1 hour").alias("w"), "dept")
-           .agg(F.count(F.lit(1)).alias("n"))
-           .select(F.col("w.start").alias("window_start"), "dept", "n"))
-    qname = "v10_stream"
-    q = (agg.writeStream.format("memory").queryName(qname)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    out = spark.table(qname).orderBy("window_start", "dept")
-    rows = out.collect()
-    q.stop()
-    return spark.createDataFrame(rows, out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -583,129 +339,6 @@ def v_getis_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# v13 — morphological classification of the occupied cell set:
-# interior (erosion), boundary (set minus erosion), halo (dilation
-# minus set) — the raster dilate/erode pair on the sparse hex
-# lattice. Oracle: EXISTS/NOT EXISTS over the 6-neighbor VALUES list.
-# ---------------------------------------------------------------------------
-
-_V13_ORACLE = f"""
-WITH {_v06_cells('duckdb')},
-occ AS (SELECT DISTINCT hq, hr FROM cells),
-nbr AS (
-  SELECT a.hq + d.dq AS hq, a.hr + d.dr AS hr
-  FROM occ a, (VALUES (1, 0), (-1, 0), (0, 1),
-                      (0, -1), (1, -1), (-1, 1)) d(dq, dr)
-),
-cnt AS (SELECT hq, hr, count(*) AS n FROM nbr GROUP BY hq, hr)
-SELECT o.hq, o.hr,
-       CASE WHEN coalesce(c.n, 0) = 6 THEN 'interior'
-            ELSE 'boundary' END AS cls,
-       CAST(coalesce(c.n, 0) AS BIGINT) AS n_occ_nbrs
-FROM occ o LEFT JOIN cnt c ON c.hq = o.hq AND c.hr = o.hr
-UNION ALL
-SELECT c.hq, c.hr, 'halo', CAST(c.n AS BIGINT)
-FROM cnt c
-WHERE NOT EXISTS (SELECT 1 FROM occ o
-                  WHERE o.hq = c.hq AND o.hr = c.hr)
-ORDER BY hq, hr, cls
-"""
-
-
-@register("hex_morphology_classes", _V13_ORACLE)
-def v_hex_morphology(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.geo.hexgrid import hex_morphology
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    cells = spark.sql("WITH " + _v06_cells("spark") + " SELECT * FROM cells")
-    return (hex_morphology(cells)
-            .withColumn("n_occ_nbrs", F.col("n_occ_nbrs").cast("bigint"))
-            .orderBy("hq", "hr", "cls"))
-
-
-# ---------------------------------------------------------------------------
-# v14 — sketch-based containment estimate on LSH candidate pairs:
-# invert the minhash Jaccard estimate to an intersection estimate
-# (I = J(na+nb)/(1+J)) and divide by the exact per-doc distinct-
-# shingle counts — the O(pairs * n_hashes) doc-in-doc verify that
-# never rereads text (setsim.containment_pairs is the exact twin).
-# The sig/band SQL below is kept textually identical to
-# __spark_entry__._sig_cte / the q21 bands (the oracle gate proves
-# both against the same engine output; a direct import would be
-# circular at module-import time).
-# ---------------------------------------------------------------------------
-
-_V14_TOKS = "string_split_regex(trim(lower(text)), '\\s+')"
-_V14_SHINGLES = (f"CASE WHEN len({_V14_TOKS}) >= 3 THEN "
-                 f"list_transform(generate_series(0, len({_V14_TOKS}) - 3), "
-                 f"i -> array_to_string(list_slice({_V14_TOKS}, i + 1, i + 3), ' ')) "
-                 f"ELSE [array_to_string({_V14_TOKS}, ' ')] END")
-
-
-def _v14_sig_cte() -> str:
-    mins = ",\n         ".join(
-        f"list_min(list_transform(m{i // 4}, x -> substr(x, {8 * (i % 4) + 1}, 8))) AS h{i}"
-        for i in range(8))
-    blocks = ",\n               ".join(
-        f"list_transform(sh, s -> md5('b{b}|' || s)) AS m{b}" for b in range(2))
-    return (f"sig AS (SELECT doc_id,\n         {mins}\n"
-            f"  FROM (SELECT doc_id,\n               {blocks}\n"
-            f"        FROM (SELECT doc_id, {_V14_SHINGLES} AS sh FROM documents)))")
-
-
-_V14_ORACLE = f"""
-WITH {_v14_sig_cte()},
-sizes AS (
-  SELECT doc_id, CAST(len(list_distinct(sh)) AS BIGINT) AS n_shingles
-  FROM (SELECT doc_id, {_V14_SHINGLES} AS sh FROM documents)
-),
-bands AS (
-  SELECT doc_id, 0 AS band, h0 || '|' || h1 AS key FROM sig
-  UNION ALL SELECT doc_id, 1, h2 || '|' || h3 FROM sig
-  UNION ALL SELECT doc_id, 2, h4 || '|' || h5 FROM sig
-  UNION ALL SELECT doc_id, 3, h6 || '|' || h7 FROM sig
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
-                            AND a.doc_id < b.doc_id
-),
-est AS (
-  SELECT p.id_a, p.id_b,
-         CAST({' + '.join(f'CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END'
-                          for i in range(8))} AS DOUBLE) / 8.0 AS ej
-  FROM pairs p
-  JOIN sig sa ON sa.doc_id = p.id_a
-  JOIN sig sb ON sb.doc_id = p.id_b
-)
-SELECT e.id_a, e.id_b, round(e.ej, 6) AS est_jaccard,
-       round((e.ej * (za.n_shingles + zb.n_shingles) / (1.0 + e.ej))
-             / za.n_shingles, 6) AS est_cont_a_in_b,
-       round((e.ej * (za.n_shingles + zb.n_shingles) / (1.0 + e.ej))
-             / zb.n_shingles, 6) AS est_cont_b_in_a
-FROM est e
-JOIN sizes za ON za.doc_id = e.id_a
-JOIN sizes zb ON zb.doc_id = e.id_b
-ORDER BY id_a, id_b
-"""
-
-
-@register("minhash_containment_est", _V14_ORACLE)
-def v_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import (lsh_candidate_pairs,
-                                            minhash_containment_estimate,
-                                            minhash_signature,
-                                            shingle_counts)
-
-    docs = _read(spark, sf_dir, "documents")
-    sig = minhash_signature(docs)
-    pairs = lsh_candidate_pairs(sig)
-    sizes = shingle_counts(docs)
-    return (minhash_containment_estimate(sig, sizes, pairs)
-            .orderBy("id_a", "id_b"))
-
-
-# ---------------------------------------------------------------------------
 # v15 — dissolve-by-attribute as distinct cell cover: per dept, the
 # number (and area) of distinct zoom-14 slippy cells covered by any
 # of its commune bboxes — overlapping geometries (the Paris umbrella
@@ -754,94 +387,6 @@ def v_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("dept", "n_cells",
                     F.round(F.col("n_cells") * F.lit(km2), 6).alias("area_km2"))
             .orderBy("dept"))
-
-
-# ---------------------------------------------------------------------------
-# v16 — STREAMING stay-point detection: the stateful incremental form
-# of staypoint_runs (applyInPandasWithState, keyed on the track id).
-# The feed is the trajectory fixture split into three time-ordered
-# file batches (maxFilesPerTrigger=1), so runs genuinely close across
-# micro-batch seams; the operator emits each run when a later
-# out-of-radius ping closes it, so the oracle is the batch islands
-# result RESTRICTED TO CLOSED RUNS (every run but each user's last).
-# ---------------------------------------------------------------------------
-
-_V16_ORACLE = f"""
-WITH t AS ({synth.traj_select_sql('duckdb')}),
-s AS (
-  SELECT user_id, seq, x, y,
-         lag(x) OVER w AS px, lag(y) OVER w AS py
-  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-b AS (
-  SELECT *, CASE WHEN px IS NULL
-                   OR (x - px) * (x - px) + (y - py) * (y - py) > 2500.0
-            THEN 1 ELSE 0 END AS brk
-  FROM s
-),
-r AS (
-  SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY seq
-                           ROWS UNBOUNDED PRECEDING) AS run
-  FROM b
-),
-runs AS (
-  SELECT user_id, run, CAST(count(*) AS BIGINT) AS n_pts,
-         sum(x) / count(*) AS cx, sum(y) / count(*) AS cy,
-         CAST(min(seq) AS BIGINT) AS seq_start,
-         CAST(max(seq) AS BIGINT) AS seq_end
-  FROM r GROUP BY user_id, run
-),
-mx AS (SELECT user_id, max(run) AS mr FROM runs GROUP BY user_id)
-SELECT runs.user_id AS user_id, runs.n_pts, runs.cx, runs.cy,
-       runs.seq_start, runs.seq_end
-FROM runs JOIN mx ON mx.user_id = runs.user_id
-WHERE runs.run < mx.mr AND n_pts >= 3
-ORDER BY runs.user_id, runs.seq_start
-"""
-
-
-@register("streaming_staypoint_runs", _V16_ORACLE)
-def v_streaming_staypoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from bano_spark.streaming.stateful import streaming_staypoints
-
-    traj = _traj(spark, sf_dir).select("user_id", "ts", "event_id",
-                                       "seq", "x", "y")
-    feed_dir = tempfile.mkdtemp(prefix="v16_feed_")
-    try:
-        bounds = [(None, 20), (20, 40), (40, None)]
-        for i, (lo, hi) in enumerate(bounds):
-            part = traj
-            if lo is not None:
-                part = part.filter(F.col("seq") > lo)
-            if hi is not None:
-                part = part.filter(F.col("seq") <= hi)
-            part.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(feed_dir, f"batch{i}"))
-        # FileStreamSource orders by modification time: pin batch order
-        for i in range(3):
-            d = os.path.join(feed_dir, f"batch{i}")
-            t = 1_000_000_000 + i * 900
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (t, t))
-        feed = (spark.readStream.schema(traj.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(feed_dir + "/*"))
-        out = streaming_staypoints(feed.groupBy("user_id"))
-        qname = "v16_stream"
-        q = (out.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-        rows = (spark.table(qname)
-                .orderBy("user_id", "seq_start").collect())
-    finally:
-        shutil.rmtree(feed_dir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "user_id bigint, n_pts bigint, cx double, cy double, "
-              "seq_start bigint, seq_end bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -940,137 +485,6 @@ def v_trip_legs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (out.select("user_id", "leg", "n_steps", "leg_dist_m",
                        "ts_start", "ts_end")
             .orderBy("user_id", "leg"))
-
-
-# ---------------------------------------------------------------------------
-# v19 — TIGER-style address-range interpolation: numbered points snap
-# to their nearest street segment (within 100 m), split by
-# housenumber parity (the odd/even side convention the reference's
-# rapprochement relies on), and each (segment, side) publishes its
-# interpolation range + a monotonicity quality bit (zero order
-# inversions of the (t, num) sequence in either direction). Oracle:
-# the brute-force nearest join + the same window statement.
-# ---------------------------------------------------------------------------
-
-_V19_NUM = "1 + ((event_id * 2654435761) % 2147483648{d}5) % 199"
-
-_V19_ORACLE = f"""
-WITH p AS ({synth.points_select_sql('duckdb')}),
-pn AS (
-  SELECT event_id, x, y,
-         CAST({_V19_NUM.format(d=' // ')} AS BIGINT) AS num
-  FROM p WHERE event_id % 3 = 1
-),
-segs AS ({synth.segments_select_sql('duckdb')}),
-cand AS (
-  SELECT pn.event_id, pn.num, s.seg_id, pn.x, pn.y, s.x1, s.y1,
-         s.x2 - s.x1 AS dx, s.y2 - s.y1 AS dy,
-         (s.x2 - s.x1) * (s.x2 - s.x1)
-           + (s.y2 - s.y1) * (s.y2 - s.y1) AS d2seg
-  FROM pn, segs s
-),
-proj AS (
-  SELECT event_id, num, seg_id, x, y, x1, y1, dx, dy,
-         least(greatest(CASE WHEN d2seg > 0
-              THEN ((x - x1) * dx + (y - y1) * dy) / d2seg
-              ELSE 0.0 END, 0.0), 1.0) AS tc
-  FROM cand
-),
-scored AS (
-  SELECT event_id, num, seg_id, tc,
-         (x - (x1 + tc * dx)) * (x - (x1 + tc * dx))
-           + (y - (y1 + tc * dy)) * (y - (y1 + tc * dy)) AS d2
-  FROM proj
-),
-best AS (
-  SELECT event_id, num, seg_id, tc,
-         row_number() OVER (PARTITION BY event_id
-                            ORDER BY d2, seg_id) AS rk
-  FROM scored WHERE d2 <= 10000.0
-),
-sided AS (
-  SELECT seg_id, event_id, num, tc,
-         CASE WHEN num % 2 = 0 THEN 'even' ELSE 'odd' END AS side
-  FROM best WHERE rk = 1
-),
-seq AS (
-  SELECT *, lag(num) OVER (PARTITION BY seg_id, side
-                           ORDER BY tc, num, event_id) AS pnum
-  FROM sided
-),
-inv AS (
-  SELECT seg_id, side, num, tc,
-         CASE WHEN pnum IS NOT NULL AND num < pnum THEN 1 ELSE 0 END AS up,
-         CASE WHEN pnum IS NOT NULL AND num > pnum THEN 1 ELSE 0 END AS dn
-  FROM seq
-)
-SELECT seg_id, side, CAST(count(*) AS BIGINT) AS n_points,
-       min(num) AS num_min, max(num) AS num_max,
-       round(min(tc), 6) AS t_min, round(max(tc), 6) AS t_max,
-       (sum(up) = 0 OR sum(dn) = 0) AS monotone
-FROM inv GROUP BY seg_id, side ORDER BY seg_id, side
-"""
-
-
-@register("address_range_interpolation", _V19_ORACLE)
-def v_address_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.interpolation import address_ranges
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    pts = (spark.sql(synth.points_select_sql("spark"))
-           .filter(F.col("event_id") % 3 == 1)
-           .withColumn("num", F.expr(
-               f"CAST({_V19_NUM.format(d=' div ')} AS BIGINT)")))
-    segs = spark.sql(synth.segments_select_sql("spark"))
-    out = address_ranges(pts, segs, 100.0, point_id="event_id")
-    return (out.select("seg_id", "side", "n_points", "num_min", "num_max",
-                       "t_min", "t_max", "monotone")
-            .orderBy("seg_id", "side"))
-
-
-# ---------------------------------------------------------------------------
-# v20 — axis-aligned overlay with exact intersection AREAS: commune
-# bboxes x postal bboxes. Candidates from a shared cell-cover
-# equi-join, deduped pair-per-representative-cell (the top-left cell
-# of the intersection) so no distinct shuffle exists; the oracle is
-# the direct O(n*m) overlap product.
-# ---------------------------------------------------------------------------
-
-_V20_ORACLE = f"""
-SELECT c.insee_com, pp.code_postal,
-       round((least(c.xmax, pp.xmax) - greatest(c.xmin, pp.xmin))
-             * (least(c.ymax, pp.ymax) - greatest(c.ymin, pp.ymin)),
-             6) AS inter_area
-FROM {synth.communes_values_sql()}, {synth.postal_values_sql()}
-WHERE least(c.xmax, pp.xmax) > greatest(c.xmin, pp.xmin)
-  AND least(c.ymax, pp.ymax) > greatest(c.ymin, pp.ymin)
-ORDER BY insee_com, code_postal
-"""
-
-
-@register("rect_intersection_areas", _V20_ORACLE)
-def v_rect_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.overlay import bbox_intersection_areas
-
-    communes = synth.communes_df(spark).select(
-        F.col("insee_com"), "xmin", "ymin", "xmax", "ymax")
-    # the postal fixture ships rings; rebuild its bbox columns from synth
-    from pyspark.sql import types as T
-
-    rows = [(p[0], p[1], p[2], p[3], p[4]) for p in synth.POSTAL]
-    schema = T.StructType([
-        T.StructField("code_postal", T.StringType()),
-        T.StructField("xmin", T.DoubleType()),
-        T.StructField("ymin", T.DoubleType()),
-        T.StructField("xmax", T.DoubleType()),
-        T.StructField("ymax", T.DoubleType()),
-    ])
-    postal = spark.createDataFrame(rows, schema)
-    out = bbox_intersection_areas(communes, postal,
-                                  left_id="insee_com",
-                                  right_id="code_postal")
-    return out.orderBy("insee_com", "code_postal")
 
 
 # ---------------------------------------------------------------------------
@@ -1183,144 +597,6 @@ def v_colocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# v23 — lag-1 autocorrelation per key: Pearson r over (v_t, v_{t-1})
-# pairs, computed from the five raw sums with IDENTICAL operation
-# order in both engines (no corr() built-in on either side, so the
-# formula — not a library — is what's checked).
-# ---------------------------------------------------------------------------
-
-_V23_ORACLE = """
-WITH s AS (
-  SELECT user_id, value AS vx,
-         lag(value) OVER (PARTITION BY user_id
-                          ORDER BY ts, event_id) AS vy
-  FROM events
-),
-p AS (SELECT user_id, vx, vy FROM s WHERE vy IS NOT NULL),
-a AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-         sum(vx) AS sx, sum(vy) AS sy, sum(vx * vy) AS sxy,
-         sum(vx * vx) AS sxx, sum(vy * vy) AS syy
-  FROM p GROUP BY user_id
-)
-SELECT user_id, n,
-       round((n * sxy - sx * sy)
-             / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)),
-             6) AS lag1_r
-FROM a WHERE (n * sxx - sx * sx) * (n * syy - sy * sy) > 0
-ORDER BY user_id
-"""
-
-
-@register("lag1_autocorrelation", _V23_ORACLE)
-def v_lag_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
-    p = (ev.withColumn("vy", F.lag("value").over(w))
-         .filter(F.col("vy").isNotNull())
-         .withColumnRenamed("value", "vx"))
-    a = (p.groupBy("user_id")
-         .agg(F.count(F.lit(1)).alias("n"),
-              F.sum("vx").alias("sx"), F.sum("vy").alias("sy"),
-              F.sum(F.col("vx") * F.col("vy")).alias("sxy"),
-              F.sum(F.col("vx") * F.col("vx")).alias("sxx"),
-              F.sum(F.col("vy") * F.col("vy")).alias("syy")))
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den2 = ((F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-            * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")))
-    return (a.filter(den2 > 0)
-            .select("user_id", "n",
-                    F.round(num / F.sqrt(den2), 6).alias("lag1_r"))
-            .orderBy("user_id"))
-
-
-# ---------------------------------------------------------------------------
-# v24 — polyline resampling (ST_LineInterpolatePoint at k fractions):
-# 5 equally spaced points along each polyline, each an aggregate()
-# fold over the vertex arrays (zero shuffle; the w136 midpoint op
-# generalized to a fraction grid). The oracle replays the ordered
-# walk once per fraction.
-# ---------------------------------------------------------------------------
-
-_V24_FRACS = [i / 6.0 for i in range(1, 6)]
-
-
-def _v24_verts(dialect: str) -> str:
-    return """
-slots AS (
-  SELECT DISTINCT event_id % 12 AS a, event_id % 17 AS k
-  FROM events WHERE event_id % 17 < 4 + (event_id % 12) % 5
-),
-verts AS (
-  SELECT a AS line_id, k,
-         CAST(k * 100 + (a * 37) % 50 AS DOUBLE) AS x,
-         CAST(((k * k * 7 + a * 13) % 90) * 3 AS DOUBLE) AS y
-  FROM slots
-)"""
-
-
-def _v24_oracle() -> str:
-    fr = ", ".join(f"({i}, CAST({f!r} AS DOUBLE))"
-                   for i, f in enumerate(_V24_FRACS))
-    return f"""
-WITH {_v24_verts('duckdb')},
-fr(i, frac) AS (VALUES {fr}),
-segs AS (
-  SELECT line_id, k, x, y,
-         lead(x) OVER (PARTITION BY line_id ORDER BY k) AS x2,
-         lead(y) OVER (PARTITION BY line_id ORDER BY k) AS y2
-  FROM verts
-),
-lens AS (
-  SELECT *, sqrt((x2 - x) * (x2 - x) + (y2 - y) * (y2 - y)) AS len
-  FROM segs WHERE x2 IS NOT NULL
-),
-cum AS (
-  SELECT *, sum(len) OVER (PARTITION BY line_id ORDER BY k) AS cume
-  FROM lens
-),
-tot AS (
-  SELECT *, max(cume) OVER (PARTITION BY line_id) AS total FROM cum
-),
-hit AS (
-  SELECT t.*, f.i, f.frac,
-         row_number() OVER (PARTITION BY t.line_id, f.i
-                            ORDER BY t.k) AS rn
-  FROM tot t JOIN fr f ON t.cume >= f.frac * t.total
-)
-SELECT CAST(line_id AS BIGINT) AS line_id, CAST(i AS INT) AS i,
-       round(x + (x2 - x) * ((frac * total - (cume - len)) / len), 6) AS px,
-       round(y + (y2 - y) * ((frac * total - (cume - len)) / len), 6) AS py
-FROM hit WHERE rn = 1 ORDER BY line_id, i
-"""
-
-
-@register("polyline_resample", _v24_oracle())
-def v_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.geodesy import line_interpolate_point
-
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    verts = spark.sql("WITH " + _v24_verts("spark") + " SELECT * FROM verts")
-    lines = (verts.groupBy("line_id")
-             .agg(F.array_sort(F.collect_list(F.struct("k", "x", "y")))
-                  .alias("vs"))
-             .select(F.col("line_id").cast("bigint").alias("line_id"),
-                     F.transform("vs", lambda s: s["x"]).alias("xs"),
-                     F.transform("vs", lambda s: s["y"]).alias("ys")))
-    samples = F.array(*[
-        F.struct(F.lit(i).alias("i"),
-                 line_interpolate_point(f, "xs", "ys").alias("p"))
-        for i, f in enumerate(_V24_FRACS)])
-    return (lines.select("line_id", F.explode(samples).alias("e"))
-            .select("line_id", F.col("e.i").alias("i"),
-                    F.round("e.p.px", 6).alias("px"),
-                    F.round("e.p.py", 6).alias("py"))
-            .orderBy("line_id", "i"))
-
-
-# ---------------------------------------------------------------------------
 # v25 — H3-style cell-set compaction: the commune cover at zoom 15
 # compacted two levels (complete 4-child quads promote to their
 # parent, twice) — interior area ships as coarse cells, boundary as
@@ -1379,47 +655,6 @@ def v_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (tiles.compact_cells(cov, 15, levels=2)
             .select(F.col("z").cast("int").alias("z"), "tx", "ty")
             .orderBy("z", "tx", "ty"))
-
-
-# ---------------------------------------------------------------------------
-# v26 — simhash Hamming-ball pair join (Manku et al.): all document
-# pairs within Hamming distance 3 of each other's 16-bit simhash.
-# Candidates from the 4-bit-band pigeonhole equi-join (distance < 4
-# guarantees a whole band agrees), exact bit_count(xor) verify on
-# candidates only. Oracle: the brute-force Hamming product over the
-# SQL simhash twin.
-# ---------------------------------------------------------------------------
-
-
-def _v26_oracle() -> str:
-    from bano_spark.operators.dedup import simhash_bits
-
-    votes = ",\n         ".join(
-        f"sum({e}) AS v{j}" for j, e in enumerate(simhash_bits(16, " // ")))
-    bits = " + ".join(f"(CASE WHEN v{j} > 0 THEN {2**j} ELSE 0 END)"
-                      for j in range(16))
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct({_V14_TOKS})) AS tok FROM documents
-),
-votes AS (SELECT doc_id,
-         {votes}
-  FROM toks GROUP BY doc_id),
-sh AS (SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM votes)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-ORDER BY id_a, id_b
-"""
-
-
-@register("simhash_hamming_pairs", _v26_oracle())
-def v_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bano_spark.operators.dedup import simhash, simhash_hamming_pairs
-
-    sh = simhash(_read(spark, sf_dir, "documents"))
-    return simhash_hamming_pairs(sh, max_hamming=3).orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame
 
 SHAPE_POINT = 1
 SHAPE_POLYGON = 5

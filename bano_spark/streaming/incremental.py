@@ -105,50 +105,3 @@ def snapshot_dirty_communes(old: DataFrame, new: DataFrame,
     external diff tool)."""
     dirty = snapshot_dirty_tiles(old, new, key, x, y, zoom)
     return expired_tiles_to_insee(dirty, commune_polys, zoom)
-
-
-def stream_stream_interval_join(left: DataFrame, right: DataFrame, *,
-                                key: str, left_ts: str = "ts",
-                                right_ts: str = "r_ts",
-                                lookback: str = "1 hour",
-                                watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream INNER join: each left event picks up the right
-    events for the same key whose timestamp falls in
-    [left_ts - lookback, left_ts]. Both sides carry a watermark so the
-    state store evicts rows older than the watermark + lookback —
-    bounded state, the requirement for an unbounded run. Spark plans
-    this as a StreamingSymmetricHashJoin on the equi-key with the
-    time-range as the state-eviction predicate: state per key is
-    O(events inside the lookback window), independent of stream
-    length. The time-bound MUST be part of the join condition (not a
-    post-filter) or state grows without bound.
-    """
-    from pyspark.sql import functions as F
-
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    cond = (
-        (l[key] == r[key])
-        & (r[right_ts] >= l[left_ts] - F.expr(f"INTERVAL {lookback}"))
-        & (r[right_ts] <= l[left_ts])
-    )
-    return l.join(r, cond, "inner").drop(r[key])
-
-
-def windowed_counts_append(feed: DataFrame, *, window: str = "1 hour",
-                           delay: str = "90 minutes") -> DataFrame:
-    """Watermarked tumbling-window counts in APPEND mode: a window row
-    is emitted exactly once, when the watermark (max event time seen
-    in prior batches minus ``delay``) passes its end; input rows whose
-    window has already been finalized are dropped as too late. This is
-    the at-scale contract — complete mode re-emits all state per
-    trigger, append keeps state bounded to open windows and the sink
-    idempotent."""
-    from pyspark.sql import functions as F
-
-    return (feed
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", delay)
-            .groupBy(F.window("ts", window).alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n"))

@@ -331,25 +331,3 @@ SELECT {"event_id"},
 FROM (SELECT event_id, (event_id * 2654435761 + 23) % 2147483648 AS u
       FROM {table})
 """
-
-
-def segments_select_sql(dialect: str, table: str = "orders") -> str:
-    """Deterministic street segments inside the commune band: one per
-    distinct ``o_orderkey % 500``, anchored in an x slot 0..18 with an
-    integer direction/length drawn from the key hash. Endpoints are
-    integer-valued doubles; segment lengths span 100..2000 m."""
-    d = " div " if dialect == "spark" else " // "
-    return f"""
-SELECT DISTINCT seg_id,
-       CAST({REG0!r} + (v % 19) * {W!r} + ((v{d}19) % 8000) AS DOUBLE) AS x1,
-       CAST({REGY0!r} + ((v{d}152000) % 8000) AS DOUBLE) AS y1,
-       CAST({REG0!r} + (v % 19) * {W!r} + ((v{d}19) % 8000)
-            + (100 + (v{d}3) % 1900) * (CASE (v{d}7) % 3
-                 WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END) AS DOUBLE) AS x2,
-       CAST({REGY0!r} + ((v{d}152000) % 8000)
-            + (100 + (v{d}5) % 1900) * (CASE (v{d}11) % 3
-                 WHEN 0 THEN -1 WHEN 1 THEN 0 ELSE 1 END) AS DOUBLE) AS y2
-FROM (SELECT o_orderkey % 500 AS seg_id,
-             ((o_orderkey % 500) * 2654435761 + 37) % 2147483648 AS v
-      FROM {table})
-"""

@@ -24,11 +24,6 @@ HEADLINE = [
     "end_to_end_csv_export",
     "knn_name_match",
     "postal_smallest_polygon",
-    "minhash_lsh_pairs",
-    "simhash",
-    "ann_cosine_topk",
-    "text_profile",
-    "windowed_event_counts",
 ]
 
 

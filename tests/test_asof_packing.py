@@ -3,7 +3,6 @@ a brute-force Python replay, and sequence packing vs a literal
 token-stream simulation."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from bano_spark.operators.asof import merge_asof, merge_asof_nearest
 from bano_spark.operators.packing import pack_sequences, packing_bin_stats

@@ -29,7 +29,6 @@ def _h_quad(aa, ba, ab, bb, n=200000):
     P(B>A) = ∫ f_B(x) * I_A(x) dx via midpoint rule on the
     regularized incomplete beta of A (itself by midpoint)."""
     # grid midpoint integration of the joint
-    import itertools
     # cdf_A(x) via integral of x^(aa-1)(1-x)^(ba-1)/B(aa,ba)
     lbeta_a = (math.lgamma(aa) + math.lgamma(ba) - math.lgamma(aa + ba))
     lbeta_b = (math.lgamma(ab) + math.lgamma(bb) - math.lgamma(ab + bb))

@@ -3,8 +3,6 @@ negatives (the structural guarantee), and the FPR audit bounds."""
 
 from __future__ import annotations
 
-import pytest
-
 from bano_spark.operators.bloom_audit import (HASHES, bloom_fpr_audit,
                                               bloom_words)
 

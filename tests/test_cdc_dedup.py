@@ -1,8 +1,6 @@
 """CDC char-level exact-substring dedup: shift robustness, the
 word-13-gram provable miss, and span accounting."""
 
-from pyspark.sql import functions as F
-
 from bano_spark.operators.webtext import (cdc_dup_span_ranges,
                                           cdc_dup_spans, dup_span_stats)
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 from bano_spark.operators.clipping import clip_to_tiles
 

@@ -8,7 +8,6 @@ import math
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _kruskal(edges):
@@ -152,35 +151,6 @@ def test_anderson_darling_uniform_hand_value(spark):
     row = anderson_darling_uniform(df, "g", "x").first()
     assert row["a_squared"] == pytest.approx(a2, abs=1e-6)
     assert row["n_out_of_bounds"] == 0
-
-
-def test_interval_scheduling_brute_force(spark):
-    from itertools import combinations
-
-    from bano_spark.operators.sessions import interval_scheduling
-
-    rng = random.Random(11)
-    rows, expect = [], {}
-    for g in range(5):
-        iv = [(rng.randrange(50), rng.randrange(1, 12))
-              for _ in range(10)]
-        iv = [(s, s + d) for s, d in iv]
-        best = 0
-        for r in range(len(iv), 0, -1):
-            if best:
-                break
-            for sub in combinations(iv, r):
-                ss = sorted(sub, key=lambda t: t[1])
-                if all(ss[i + 1][0] >= ss[i][1]
-                       for i in range(len(ss) - 1)):
-                    best = r
-                    break
-        expect[g] = best
-        rows += [(g, s, e) for s, e in iv]
-    df = spark.createDataFrame(rows, "g int, s long, e long")
-    out = {r["g"]: r["max_non_overlapping"]
-           for r in interval_scheduling(df, "g", "s", "e").collect()}
-    assert out == expect
 
 
 def test_knapsack_brute_force(spark):

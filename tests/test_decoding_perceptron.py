@@ -4,7 +4,6 @@ and the IPM perceptron vs a Python sequential replay."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from bano_spark.operators.decoding import (perceptron_ipm,
                                            perceptron_ipm_eval,

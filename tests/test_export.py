@@ -6,8 +6,6 @@ import io
 import json
 import os
 
-from pyspark.sql import functions as F
-
 from bano_spark.operators import export as X
 
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from bano_spark.operators.extsort import (merge_pass_advisor,
                                           natural_runs_per_key)
 

@@ -2,11 +2,10 @@
 an independent pure-Python bit-walk encoder, segment crossing vs a
 brute-force cross join."""
 
-import math
 import random
 
 import pytest
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 from bano_spark.geo import geometry
 from bano_spark.operators import geodesy

@@ -5,8 +5,6 @@ import heapq
 import math
 import random
 
-from pyspark.sql import functions as F
-
 from bano_spark.geo.hexgrid import hex_bin
 from bano_spark.operators.graph import sssp_weighted
 

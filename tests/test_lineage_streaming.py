@@ -219,43 +219,3 @@ def test_streaming_dirty_insee(spark, tmp_path):
     batch = sorted(r.insee_com for r in
                    dirty_insee_batch(spark, str(feed), communes).collect())
     assert batch == got
-
-
-def test_stateful_running_stats(spark, tmp_path):
-    """applyInPandasWithState keeps per-key state across micro-batches:
-    two input files processed as separate batches must fold into one
-    running (count, sum) per key."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from bano_spark.streaming.stateful import run_running_stats_stream
-
-    src = tmp_path / "feed"
-    src.mkdir()
-    pd.DataFrame({"k": ["a", "a", "b"], "v": [1.0, 2.0, 10.0]}).to_parquet(
-        src / "f1.parquet")
-    pd.DataFrame({"k": ["a", "b"], "v": [4.0, 20.0]}).to_parquet(
-        src / "f2.parquet")
-    schema = "k string, v double"
-    # one file per trigger => two micro-batches
-    feed = (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    from bano_spark.streaming.stateful import running_commune_stats
-    out = running_commune_stats(
-        feed.select(F.col("k").alias("key"), F.col("v").alias("value"))
-        .groupBy("key"))
-    q = (out.writeStream.format("memory").queryName("rs_test")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = {r.key: (r.n_rows, r.sum_value)
-            for r in spark.table("rs_test").orderBy("key").collect()
-            }  # update mode: last row per key wins; collect dedups below
-    final = {}
-    for r in spark.table("rs_test").collect():
-        prev = final.get(r.key)
-        if prev is None or r.n_rows >= prev[0]:
-            final[r.key] = (r.n_rows, r.sum_value)
-    assert final["a"] == (3, 7.0)
-    assert final["b"] == (2, 30.0)

@@ -1,4 +1,4 @@
-"""Unit tests: ring-intersection kernel + polygon-polygon join."""
+"""Unit tests: ring-intersection kernel."""
 
 import numpy as np
 
@@ -40,32 +40,3 @@ def test_rings_intersect_random_rects_match_interval_logic():
                     and ra[1] < rb[3] and rb[1] < ra[3])
             got = rings_intersect(_rect(*ra), _rect(*rb))
             assert got == want, (ra, rb)
-
-
-def test_polygon_intersects_join_matches_bruteforce(spark):
-    from bano_spark.operators.overlay import polygon_intersects_join
-
-    rng = np.random.default_rng(9)
-
-    def layer(n, id_col):
-        rows = []
-        for i in range(n):
-            x0 = float(rng.uniform(0, 2_000_000))  # spans many z14 cells
-            y0 = float(rng.uniform(0, 2_000_000))
-            w, h = (float(v) for v in rng.uniform(1000, 300_000, 2))
-            rows.append((i, [[x0, y0], [x0 + w, y0], [x0 + w, y0 + h],
-                             [x0, y0 + h]],
-                         (x0, y0, x0 + w, y0 + h)))
-        df = spark.createDataFrame(
-            [(r[0], r[1]) for r in rows],
-            f"{id_col} int, verts array<array<double>>")
-        return df, {r[0]: r[2] for r in rows}
-
-    a, ba = layer(40, "id_a")
-    b, bb = layer(40, "id_b")
-    got = sorted((r["id_a"], r["id_b"])
-                 for r in polygon_intersects_join(a, b, zoom=7).collect())
-    want = sorted(
-        (i, j) for i, ra in ba.items() for j, rb in bb.items()
-        if ra[0] < rb[2] and rb[0] < ra[2] and ra[1] < rb[3] and rb[1] < ra[3])
-    assert got == want

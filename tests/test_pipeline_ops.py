@@ -1,66 +1,12 @@
-"""Units for the round-3 training-pipeline additions: SemDeDup
-cluster-confined pruning, DSIR importance weights, tile-pyramid
-aggregate-reuse rollup, streaming session windows, corpus mixing,
-top-k n-gram vocabulary."""
+"""Units for the round-3 training-pipeline additions: DSIR importance
+weights, tile-pyramid aggregate-reuse rollup, corpus mixing, top-k
+n-gram vocabulary."""
 
 from __future__ import annotations
 
 import math
 
 from pyspark.sql import functions as F
-
-
-def _vec(i: int) -> list[float]:
-    return [float((i * 7 + j * 3) % 11 - 5) for j in range(64)]
-
-
-def test_semdedup_drops_within_cluster_only(spark):
-    from bano_spark.operators.similarity import ivf_cell, semdedup_prune
-
-    # _vec has period 11 in i, so stay below 11 distinct originals
-    base = [(i, _vec(i)) for i in range(10)]
-    # exact scaled twins of ids 0..4 -> cos == 1.0, same cell, must drop
-    twins = [(100 + i, [2.0 * x for x in v]) for i, v in base[:5]]
-    vecs = spark.createDataFrame(base + twins, ["vec_id", "embedding"])
-    kept = semdedup_prune(vecs, threshold=0.95, n_cells=4)
-    ids = sorted(r.vec_id for r in kept.collect())
-    assert ids == list(range(10))  # originals kept, every twin dropped
-    # keeper of each twin group is the min id, and cells come from ivf_cell
-    cells = {r.vec_id: r.cell for r in vecs.select(
-        "vec_id", ivf_cell("embedding", 4).alias("cell")).collect()}
-    for r in kept.collect():
-        assert r.cell == cells[r.vec_id]
-
-
-def test_semdedup_near_dup_across_cells_survives(spark):
-    from bano_spark.operators.similarity import semdedup_prune
-
-    # two identical-direction vectors forced into DIFFERENT cells by a
-    # tiny argmax flip: SemDeDup by design only compares within a
-    # cluster, so both must survive.
-    a = [10.0, 9.9] + [1.0] * 62   # argmax comp 0 -> cell 0
-    b = [9.9, 10.0] + [1.0] * 62   # argmax comp 1 -> cell 1, cos ~ 1.0
-    vecs = spark.createDataFrame([(1, a), (2, b)], ["vec_id", "embedding"])
-    kept = sorted(r.vec_id for r in
-                  semdedup_prune(vecs, threshold=0.95).collect())
-    assert kept == [1, 2]
-
-
-def test_semdedup_max_cluster_cap(spark):
-    from bano_spark.operators.similarity import semdedup_prune
-
-    rows = [(i, _vec(i)) for i in range(12)]
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    capped = semdedup_prune(vecs, threshold=0.95, n_cells=4, max_cluster=1)
-    # cap of 1 excludes every cell with >1 member from the output
-    from collections import Counter
-
-    from bano_spark.operators.similarity import ivf_cell
-
-    sizes = Counter(r.cell for r in vecs.select(
-        ivf_cell("embedding", 4).alias("cell")).collect())
-    expect = sum(1 for c, n in sizes.items() if n <= 1)
-    assert capped.count() == expect
 
 
 def test_dsir_weights_match_closed_form(spark):
@@ -114,36 +60,6 @@ def test_tile_pyramid_weighted(spark):
     pyr = tile_pyramid(cells, levels=2, weight_col="w").collect()
     top = {(r.tx, r.ty): r.n for r in pyr if r.lvl == 1}
     assert top == {(0, 0): 12, (1, 1): 11}
-
-
-def test_streaming_sessionize_gap_boundary(spark, tmp_path):
-    from datetime import datetime
-
-    from bano_spark.operators.sessions import streaming_sessionize
-
-    # gaps: 29:59 (merges), exactly 30:00 (STILL merges — the session
-    # end is inclusive), 30:01 (strictly greater -> new session)
-    rows = [
-        (1, datetime(2024, 1, 1, 10, 0, 0)),
-        (1, datetime(2024, 1, 1, 10, 29, 59)),
-        (1, datetime(2024, 1, 1, 10, 59, 59)),   # +30:00 exactly
-        (1, datetime(2024, 1, 1, 11, 30, 0)),    # +30:01
-    ]
-    src = tmp_path / "events.parquet"
-    spark.createDataFrame(rows, ["user_id", "ts"]).write.parquet(str(src))
-    feed = spark.readStream.schema("user_id bigint, ts timestamp") \
-        .parquet(str(src))
-    q = (streaming_sessionize(feed).writeStream.format("memory")
-         .queryName("t_sess").outputMode("complete")
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = [(r.session_start, r.n_events) for r in
-           spark.table("t_sess").orderBy("session_start").collect()]
-    q.stop()
-    assert got == [
-        (datetime(2024, 1, 1, 10, 0, 0), 3),
-        (datetime(2024, 1, 1, 11, 30, 0), 1),
-    ]
 
 
 def test_source_mixing_weights_closed_form(spark):
@@ -251,45 +167,6 @@ def test_exact_quantiles_degenerate(spark):
     with_nulls = spark.createDataFrame(
         [(None,), (1.0,), (None,), (2.0,)], "x double")
     assert exact_quantiles(with_nulls, "x", [0.0, 1.0]) == [1.0, 2.0]
-
-
-def test_dbscan_matches_bruteforce(spark):
-    import random
-
-    from bano_spark.operators.clustering import dbscan
-
-    rng = random.Random(31)
-    pts = [(i, 1_000_000.0 + rng.randint(0, 300) * 10.0,
-            2_000_000.0 + rng.randint(0, 300) * 10.0) for i in range(250)]
-    eps, min_pts = 65.0, 4
-
-    def d2(p, q):
-        return (p[1] - q[1]) ** 2 + (p[2] - q[2]) ** 2
-
-    neigh = {p[0]: [q[0] for q in pts if d2(p, q) <= eps * eps] for p in pts}
-    cores = {i for i, ns in neigh.items() if len(ns) >= min_pts}
-    # components over core-core edges (min-label fixpoint)
-    label = {c: c for c in cores}
-    changed = True
-    while changed:
-        changed = False
-        for c in cores:
-            for n in neigh[c]:
-                if n in cores and label[n] < label[c]:
-                    label[c] = label[n]
-                    changed = True
-    want = {}
-    for i, _, _ in pts:
-        if i in cores:
-            want[i] = ("core", label[i])
-        else:
-            core_ns = [label[n] for n in neigh[i] if n in cores and n != i]
-            want[i] = ("border", min(core_ns)) if core_ns else ("noise", None)
-
-    df = spark.createDataFrame(pts, ["id", "x", "y"]).repartition(4)
-    got = {r["id"]: (r["role"], r["cluster"])
-           for r in dbscan(df, eps, min_pts).collect()}
-    assert got == want
 
 
 def test_ewma_last_matches_sequential_reference(spark):

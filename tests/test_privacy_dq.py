@@ -4,7 +4,6 @@ aggregate, and the DQ expectation suite counts known violations."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from bano_spark.operators.dq import (expect_accepted, expect_in_range,
                                      expect_not_null, expect_subset,

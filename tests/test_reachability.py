@@ -26,6 +26,14 @@ keeping code. The package's own import statements are bindings, not
 uses. Each glob is listed explicitly rather than searched for
 recursively, so copies of the repo under ``.perfbench_work/`` cannot
 make a name look used.
+
+Imports: every name an ``import`` statement binds, in the package, the
+jobs, the tools, the tests, ``bench.py`` and ``__spark_entry__.py``,
+must be read in its scope: the module for a module-level import, the
+enclosing function for a function-level one. A read inside a function
+body or a string annotation counts. ``__future__`` imports, package
+``__init__`` files (which re-export) and lines marked ``# noqa`` are
+skipped.
 """
 
 from __future__ import annotations
@@ -37,6 +45,8 @@ REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "bano_spark"
 ROOT_GLOBS = ("jobs/*.py", "perfbench/*.py", "bench.py", "__spark_entry__.py")
 CALLER_GLOBS = ROOT_GLOBS + ("perfbench/tests/*.py", "tools/*.py", "tests/*.py")
+IMPORT_GLOBS = (f"{PACKAGE}/**/*.py", "jobs/*.py", "tools/*.py", "tests/*.py",
+                "bench.py", "__spark_entry__.py")
 KNOWN_ORPHANS = frozenset(f"bano_spark.operators.{name}" for name in (
     "agreement", "als", "asof", "bayes_ab", "bloom_audit", "butterfly",
     "cachesim", "calendrics", "causal", "checksums", "classing", "clipping",
@@ -159,6 +169,68 @@ def test_every_package_function_is_named():
     assert not dead, f"{len(dead)} top-level defs under {PACKAGE}/ that nothing names: {dead}"
 
 
+def _read_names(scope: ast.AST) -> set[str]:
+    """Names loaded anywhere under ``scope``, string annotations parsed.
+
+    A string inside an annotation that is not an expression (the
+    ``"a b"`` of ``Literal["a b"]``) names nothing and is skipped."""
+    names: set[str] = set()
+    for node in ast.walk(scope):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+        if isinstance(node, (ast.arg, ast.AnnAssign)):
+            annotation = node.annotation
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            annotation = node.returns
+        else:
+            continue
+        for sub in ast.walk(annotation) if annotation else ():
+            if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+                try:
+                    names |= _read_names(ast.parse(sub.value, mode="eval"))
+                except SyntaxError:
+                    pass
+    return names
+
+
+def unread_imports(repo: Path, globs) -> list[str]:
+    """``path:line name`` of every imported name its scope never reads."""
+    found = []
+    for pattern in globs:
+        for path in sorted(repo.glob(pattern)):
+            if path.name == "__init__.py":
+                continue
+            text = path.read_text()
+            lines = text.splitlines()
+            tree = ast.parse(text, filename=str(path))
+            scopes = [tree] + [n for n in ast.walk(tree)
+                               if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            for scope in scopes:
+                read = _read_names(scope)
+                # imports of this scope, not of functions nested in it
+                stack = list(ast.iter_child_nodes(scope))
+                while stack:
+                    node = stack.pop()
+                    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    stack.extend(ast.iter_child_nodes(node))
+                    if (not isinstance(node, (ast.Import, ast.ImportFrom))
+                            or getattr(node, "module", None) == "__future__"
+                            or any("# noqa" in lines[i - 1]
+                                   for i in range(node.lineno, node.end_lineno + 1))):
+                        continue
+                    for alias in node.names:
+                        bound = alias.asname or alias.name.split(".")[0]
+                        if bound not in read:
+                            found.append(f"{path.relative_to(repo)}:{node.lineno} {bound}")
+    return sorted(found)
+
+
+def test_every_import_is_read():
+    unread = unread_imports(REPO, IMPORT_GLOBS)
+    assert not unread, f"{len(unread)} imported names never read: {unread}"
+
+
 # -- negative controls: the walk on a planted package -----------------------
 
 def _plant(tmp_path: Path, files: dict[str, str]) -> Path:
@@ -236,3 +308,29 @@ def test_registered_query_is_used(tmp_path):
         "main.py": "import pkg.queries\n",
     })
     assert uncalled(repo, "pkg", ("main.py",)) == []
+
+
+def test_planted_unread_import_is_reported(tmp_path):
+    repo = _plant(tmp_path, {
+        "pkg/__init__.py": "import os\n",
+        "pkg/mod.py": ("import math\nimport os\n\n\n"
+                       "def f():\n    import json\n    return os.sep\n"),
+    })
+    assert unread_imports(repo, ("pkg/*.py",)) == ["pkg/mod.py:1 math",
+                                                  "pkg/mod.py:6 json"]
+
+
+def test_noqa_import_is_not_reported(tmp_path):
+    repo = _plant(tmp_path, {"mod.py": "import math  # noqa: F401\n"})
+    assert unread_imports(repo, ("mod.py",)) == []
+
+
+def test_import_read_in_function_or_string_annotation_is_read(tmp_path):
+    repo = _plant(tmp_path, {"mod.py": (
+        "from __future__ import annotations\n"
+        "import math\n"
+        "from decimal import Decimal\n"
+        "from typing import Literal\n\n\n"
+        "def f(x: \"Decimal\", unit: Literal[\"a b\"] = \"a b\") -> float:\n"
+        "    return math.sqrt(x)\n")})
+    assert unread_imports(repo, ("mod.py",)) == []

@@ -1,12 +1,15 @@
-"""The query registry: one definition per name, and the driver
-contract's query and oracle counts (no Spark session needed)."""
+"""The query registry: one definition per name, the driver contract's
+query and oracle counts, and bench.py's headline names (no Spark
+session needed)."""
 
+import ast
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bano_spark.registry import merge, registrar  # noqa: E402
 
@@ -38,3 +41,16 @@ def test_every_query_has_one_oracle():
 
     assert len(E.queries()) == len(E.oracle_sql())
     assert E.queries().keys() == E.oracle_sql().keys()
+
+
+def test_every_headline_query_is_registered():
+    import __spark_entry__ as E
+
+    with open(os.path.join(ROOT, "bench.py")) as f:
+        tree = ast.parse(f.read())
+    headline = next(ast.literal_eval(stmt.value) for stmt in tree.body
+                    if isinstance(stmt, ast.Assign)
+                    and [t.id for t in stmt.targets] == ["HEADLINE"])
+    assert headline
+    missing = sorted(set(headline) - E.queries().keys())
+    assert not missing, f"bench.py HEADLINE names unregistered queries: {missing}"

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from bano_spark.operators.spellcorrect import (
     build_vocab, candidate_pairs, correct_oov, oov_tokens)
 

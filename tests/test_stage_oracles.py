@@ -3,10 +3,12 @@
 Each registry pair exercises one pipeline stage through the engine's
 own operators (PIP join and refine, tiling and tile expiry, snapshot
 diff, normalization, FANTOIR loads, source priority, suffixes, places,
-scoring, postal lookup, the left spatial join) and is compared with the
-oracle SQL of `__spark_entry__.oracle_sql()` by
-tools/check_correctness.py. The conciliation and CSV-export pairs run
-in tests/test_conciliation.py. The PIP refine fixture also runs through
+scoring, postal lookup, the left spatial join, the dirty-INSEE stream,
+the publish round-trip) and is compared with the oracle SQL of
+`__spark_entry__.oracle_sql()` by tools/check_correctness.py, with
+Python's temp directory pointed at the test's own, which must be empty
+afterwards. The conciliation and CSV-export pairs run in
+tests/test_conciliation.py. The PIP refine fixture also runs through
 every `spatial_join` path against the same oracle rule.
 """
 
@@ -41,6 +43,8 @@ STAGE_QUERIES = [
     "importance_commune",
     "postal_smallest_polygon",
     "suffix_zone_left_join",
+    "dirty_insee_stream",
+    "publish_full_roundtrip",
 ]
 
 
@@ -51,12 +55,18 @@ def duck():
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.001 tables")
 @pytest.mark.parametrize("name", STAGE_QUERIES)
-def test_registry_pair(spark, duck, name):
+def test_registry_pair(spark, duck, name, tmp_path, monkeypatch):
+    """PASS against the oracle, and nothing left behind in the temp
+    directory (the stream and publish queries write files there)."""
+    import tempfile
+
     import __spark_entry__ as E
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     line = CC.check(spark, duck, SF_DIR, name,
                     E.queries()[name], E.oracle_sql()[name])
     assert line.startswith("PASS"), line
+    assert not list(tmp_path.iterdir())
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="needs the sf0.001 tables")

@@ -5,7 +5,6 @@ Mann-Kendall hand cases, and log-odds keyword sanity."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_heaps_law_matches_python_reference(spark):

@@ -1,48 +1,11 @@
-"""Wave-15 operator unit tests: route chainage against hand-computed
-projections, Horn slope/aspect on an analytic plane (exact closed
-form), supercover rasterization against a brute-force dense-sampling
-twin plus edge cases (vertical / horizontal / degenerate / diagonal),
-per-period Gi* moments, emerging-hot-spot categories on planted
-trends, and the Kulldorff scan finding a planted cluster."""
+"""Wave-15 operator unit tests: Horn slope/aspect on an analytic plane
+(exact closed form), supercover rasterization against a brute-force
+dense-sampling twin plus edge cases (vertical / horizontal /
+degenerate / diagonal), per-period Gi* moments, emerging-hot-spot
+categories on planted trends, and the Kulldorff scan finding a planted
+cluster."""
 
 import math
-
-from pyspark.sql import functions as F
-
-
-def test_route_chainage_hand_case(spark):
-    from bano_spark.operators.mapmatch import route_chainage
-
-    # route 1: L-shape (0,0) -> (10,0) -> (10,10)
-    routes = spark.createDataFrame(
-        [(1, 1, 0.0, 0.0), (1, 2, 10.0, 0.0), (1, 3, 10.0, 10.0)],
-        "route_id long, seq int, x double, y double")
-    pts = spark.createDataFrame(
-        [(100, 1, 4.0, 1.0),    # above first leg: chain 4, dist 1
-         (101, 1, 10.0, 10.0),  # terminal vertex: chain 20, dist 0
-         (102, 1, 12.0, -3.0)],  # beyond corner, clamps to (10,0): chain 10
-        "event_id long, route_id long, x double, y double")
-    out = {r["event_id"]: r for r in route_chainage(pts, routes).collect()}
-    assert out[100]["chainage_m"] == 4.0 and out[100]["dist_m"] == 1.0
-    assert out[100]["snap_x"] == 4.0 and out[100]["snap_y"] == 0.0
-    assert out[101]["chainage_m"] == 20.0 and out[101]["dist_m"] == 0.0
-    assert out[102]["chainage_m"] == 10.0
-    assert out[102]["dist_m"] == round(math.hypot(2.0, 3.0), 6)
-
-
-def test_route_chainage_tie_prefers_earlier_segment(spark):
-    from bano_spark.operators.mapmatch import route_chainage
-
-    # V-shape: point equidistant from both legs snaps to the first
-    routes = spark.createDataFrame(
-        [(7, 1, 0.0, 0.0), (7, 2, 10.0, 0.0), (7, 3, 10.0, 10.0)],
-        "route_id long, seq int, x double, y double")
-    pts = spark.createDataFrame([(1, 7, 8.0, 2.0)],
-                                "event_id long, route_id long, "
-                                "x double, y double")
-    r = route_chainage(pts, routes).collect()[0]
-    assert r["dist_m"] == 2.0
-    assert r["chainage_m"] == 8.0  # first leg's projection, not 12
 
 
 def test_slope_aspect_analytic_plane(spark):

@@ -1,7 +1,7 @@
 """Wave-19 operator unit tests: hillshade closed forms (flat plane,
 uniform slope), marching-squares topology (single-corner case,
-saddle, full/empty squares), areal-interpolation mass conservation,
-LCSS identity/disjoint extremes, and TextRank symmetry."""
+saddle, full/empty squares), LCSS identity/disjoint extremes, and
+TextRank symmetry."""
 
 import math
 
@@ -76,30 +76,6 @@ def test_contour_saddle_fixed_resolution(spark):
         "gx long, gy long, z long")
     r = contour_cells(dem, 1.0).collect()[0]
     assert r["case_id"] == 5 and r["n_segs"] == 2
-
-
-def test_areal_interpolation_mass_conserved(spark):
-    from bano_spark.operators.overlay import areal_interpolate_rect
-
-    # one 2x1-cell rect, val 10 -> each cell gets 5
-    src = spark.createDataFrame(
-        [("a", 10.0, 0.0, 0.0, 8.0, 4.0)],
-        "src_id string, val double, xmin double, ymin double, "
-        "xmax double, ymax double")
-    out = {(r["cx"], r["cy"]): r["value"]
-           for r in areal_interpolate_rect(src, 4.0, id_col="src_id")
-           .collect()}
-    assert out == {(0, 0): 5.0, (1, 0): 5.0}
-
-    # straddling rect: quarters split by cell boundary at x=4
-    src2 = spark.createDataFrame(
-        [("b", 8.0, 2.0, 0.0, 6.0, 4.0)],
-        "src_id string, val double, xmin double, ymin double, "
-        "xmax double, ymax double")
-    out2 = {(r["cx"], r["cy"]): r["value"]
-            for r in areal_interpolate_rect(src2, 4.0, id_col="src_id")
-            .collect()}
-    assert out2 == {(0, 0): 4.0, (1, 0): 4.0}
 
 
 def test_lcss_extremes(spark):

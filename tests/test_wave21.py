@@ -1,22 +1,8 @@
-"""Wave-21 operator unit tests: ST-DBSCAN temporal splitting, region
-dissolve closed forms, TWI on a tilted plane, Knox on a planted
-cluster, LLR sanity, and mirror jaccard arithmetic."""
+"""Wave-21 operator unit tests: region dissolve closed forms, TWI on a
+tilted plane, Knox on a planted cluster, LLR sanity, and mirror
+jaccard arithmetic."""
 
 import math
-
-
-def test_st_dbscan_time_splits_spatial_cluster(spark):
-    from bano_spark.operators.clustering import st_dbscan
-
-    # 5 points 10 m apart; times 0..4 for id<5 (clustered), then the
-    # same geometry with times spread 10000 apart -> noise
-    rows = [(i, 10.0 * i, 0.0, float(i)) for i in range(5)]
-    rows += [(10 + i, 10.0 * i, 1000.0, 10000.0 * i) for i in range(5)]
-    pts = spark.createDataFrame(rows, "id long, x double, y double, t double")
-    out = {r["id"]: (r["role"], r["cluster"])
-           for r in st_dbscan(pts, 50.0, 10.0, 5).collect()}
-    assert all(out[i] == ("core", 0) for i in range(5))
-    assert all(out[10 + i][0] == "noise" for i in range(5))
 
 
 def test_region_stats_square_and_line(spark):

@@ -1,5 +1,4 @@
-"""Wave-4 operator units: C6 expansion, IVF ANN, BPE tokens, streets,
-multimodal id-keyed media."""
+"""Wave-4 operator units: C6 expansion, BPE tokens, streets."""
 
 from __future__ import annotations
 
@@ -26,26 +25,6 @@ def test_expand_abbrev_goldens(spark):
     assert got == [c[1] for c in cases]
 
 
-def test_ivf_matches_brute_force_within_cell(spark):
-    from bano_spark.operators.similarity import brute_force_topk, ivf_cell, ivf_topk
-
-    rows = [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)])
-            for i in range(40)]
-    vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    qs = vecs.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-    ivf = ivf_topk(vecs, qs, k=3, n_cells=4).collect()
-    # every IVF hit must also be a brute-force hit *restricted to the
-    # query's cell* with identical similarity
-    cells = {r.vec_id: r.cell for r in vecs.select(
-        "vec_id", ivf_cell("embedding", 4).alias("cell")).collect()}
-    bf = brute_force_topk(vecs, qs, k=40).collect()
-    bf_sims = {(r.q_id, r.vec_id): r.cos_sim for r in bf}
-    for r in ivf:
-        assert cells[r.vec_id] == cells[r.q_id]
-        assert abs(bf_sims[(r.q_id, r.vec_id)] - r.cos_sim) < 1e-9
-
-
 def test_bpe_token_count(spark):
     from bano_spark.operators.textstats import bpe_token_count
 
@@ -65,20 +44,6 @@ def test_best_segment_prefers_within(spark):
         ["street_id", "seg_id", "within"])
     got = {(r.street_id, r.seg_id) for r in best_segment(segs).collect()}
     assert got == {(1, 11), (2, 20)}
-
-
-def test_media_from_ids_header_math(spark):
-    from bano_spark.operators.multimodal import image_features, media_from_ids
-
-    ids = spark.createDataFrame([(i,) for i in range(9)], ["media_id"])
-    feats = {r.media_id: r for r in
-             image_features(media_from_ids(ids), fake=True).collect()}
-    # only ids % 3 == 0 are images; header bytes are (id*7+j) % 256
-    assert set(feats) == {0, 3, 6}
-    for i in (0, 3, 6):
-        assert feats[i].width == 16 + (i * 7) % 256
-        assert feats[i].height == 16 + (i * 7 + 1) % 256
-        assert feats[i].n_channels == 1 + ((i * 7 + 2) % 256) % 3
 
 
 def test_lambert93_known_points():

@@ -1,5 +1,5 @@
-"""Wave-5 operator tests: trajectories, map-matching, spatial stats,
-spherical area, containment, coverage gaps."""
+"""Wave-5 operator tests: trajectories, spatial stats, spherical area,
+minhash containment, coverage gaps."""
 
 import math
 
@@ -78,46 +78,6 @@ def test_move_sectors_min_move_excludes_jitter(spark):
 
 
 # ---------------------------------------------------------------------------
-# map-matching
-# ---------------------------------------------------------------------------
-
-
-def test_snap_to_segments_picks_nearest_and_clamps(spark):
-    segs = _df(spark, [
-        (1, 0.0, 0.0, 1000.0, 0.0),      # horizontal
-        (2, 0.0, 500.0, 1000.0, 500.0),  # farther horizontal
-        (3, 5000.0, 0.0, 5000.0, 0.0),   # degenerate point-segment
-    ], "seg_id long, x1 double, y1 double, x2 double, y2 double")
-    pts = _df(spark, [
-        (10, 400.0, 100.0),   # 100 m to seg 1, 400 m to seg 2
-        (11, 1200.0, 30.0),   # beyond seg 1's end: clamped to (1000, 0)
-        (12, 5000.0, 90.0),   # 90 m above the degenerate segment
-        (13, 9999.0, 9999.0),  # nothing in range -> dropped
-    ], "event_id long, x double, y double")
-    from bano_spark.operators.mapmatch import snap_to_segments
-
-    out = {r["event_id"]: r
-           for r in snap_to_segments(pts, segs, 500.0).collect()}
-    assert set(out) == {10, 11, 12}
-    assert out[10]["seg_id"] == 1 and out[10]["dist_m"] == pytest.approx(100.0)
-    assert (out[11]["snap_x"], out[11]["snap_y"]) == (1000.0, 0.0)
-    assert out[11]["dist_m"] == pytest.approx(math.hypot(200.0, 30.0), abs=1e-3)
-    assert out[12]["seg_id"] == 3 and out[12]["dist_m"] == pytest.approx(90.0)
-
-
-def test_snap_tie_breaks_by_seg_id(spark):
-    segs = _df(spark, [
-        (7, 0.0, 100.0, 1000.0, 100.0),
-        (4, 0.0, -100.0, 1000.0, -100.0),
-    ], "seg_id long, x1 double, y1 double, x2 double, y2 double")
-    pts = _df(spark, [(1, 500.0, 0.0)], "event_id long, x double, y double")
-    from bano_spark.operators.mapmatch import snap_to_segments
-
-    out = snap_to_segments(pts, segs, 500.0).collect()
-    assert len(out) == 1 and out[0]["seg_id"] == 4  # equidistant -> min id
-
-
-# ---------------------------------------------------------------------------
 # spatial stats / geodesy / hex KDE
 # ---------------------------------------------------------------------------
 
@@ -173,37 +133,6 @@ def test_hex_kde_weights(spark):
     assert out[(0, 0)]["w_total"] == 4
     assert out[(0, 0)]["kde"] == pytest.approx(30.0 / 4.0)
     assert out[(2, 0)]["kde"] == pytest.approx((3 * 3.0 + 1 * 9.0) / 4.0)
-
-
-# ---------------------------------------------------------------------------
-# containment vs jaccard
-# ---------------------------------------------------------------------------
-
-
-def test_containment_catches_doc_in_doc_that_jaccard_misses(spark):
-    big = " ".join(f"tok{i}" for i in range(40))
-    half = " ".join(f"tok{i}" for i in range(20))
-    docs = _df(spark, [(1, big), (2, half)], "doc_id long, text string")
-    from bano_spark.operators.setsim import allpairs_jaccard, containment_pairs
-
-    jac = allpairs_jaccard(docs, 0.8).collect()
-    assert jac == []  # jaccard is 0.5 — invisible at tau 0.8
-    cont = {(r["id_a"], r["id_b"]): r["containment"]
-            for r in containment_pairs(docs, 0.9).collect()}
-    assert cont == {(2, 1): 1.0}  # half IS contained in big; not vice versa
-
-
-def test_containment_prefix_bound_exact_boundary(spark):
-    # |A| = 20, tau = 0.9 -> may miss exactly 2 tokens; engine must
-    # still find the pair when A misses exactly floor((1-tau)|A|)
-    a = " ".join(f"t{i}" for i in range(20))
-    b = " ".join(f"t{i}" for i in range(2, 20)) + " z1 z2 z3 z4"
-    docs = _df(spark, [(1, a), (2, b)], "doc_id long, text string")
-    from bano_spark.operators.setsim import containment_pairs
-
-    got = {(r["id_a"], r["id_b"]): r["containment"]
-           for r in containment_pairs(docs, 0.9).collect()}
-    assert got == {(1, 2): 0.9}
 
 
 # ---------------------------------------------------------------------------
@@ -306,40 +235,6 @@ def test_shingle_counts(spark):
     assert got == {1: 2, 2: 1}  # 3-shingles: "a b c","b c d"; short doc -> 1
 
 
-def test_streaming_staypoints_closes_runs_across_batch_seam(spark, tmp_path):
-    """A dwell run that SPANS the micro-batch seam must come out as
-    one stay; the final open run must not be emitted."""
-    import os
-
-    from bano_spark.streaming.stateful import streaming_staypoints
-
-    # user 1: dwell of 4 (rows 2 in batch A, 2 in batch B), jump,
-    # dwell of 3 (still open at stream end -> not emitted)
-    rows_a = [(1, 1, 1, 0.0, 0.0), (1, 2, 2, 10.0, 0.0)]
-    rows_b = [(1, 3, 3, 20.0, 0.0), (1, 4, 4, 30.0, 0.0),
-              (1, 5, 5, 1030.0, 0.0), (1, 6, 6, 1040.0, 0.0),
-              (1, 7, 7, 1050.0, 0.0)]
-    schema = "user_id long, ts long, event_id long, x double, y double"
-    da, db = str(tmp_path / "a"), str(tmp_path / "b")
-    spark.createDataFrame(rows_a, schema).coalesce(1).write.parquet(da)
-    spark.createDataFrame(rows_b, schema).coalesce(1).write.parquet(db)
-    for d, t in ((da, 1_000_000_000), (db, 1_000_000_900)):
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (t, t))
-    feed = (spark.readStream.schema(
-        spark.createDataFrame(rows_a, schema).schema)
-        .option("maxFilesPerTrigger", 1).parquet(str(tmp_path) + "/*"))
-    out = streaming_staypoints(feed.groupBy("user_id"))
-    q = (out.writeStream.format("memory").queryName("t_stay")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.table("t_stay").collect()
-    q.stop()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["n_pts"], r["cx"], r["seq_start"], r["seq_end"]) == (4, 15.0, 1, 4)
-
-
 def test_latest_capture_keeps_freshest(spark):
     from bano_spark.operators.webtext import latest_capture
 
@@ -383,56 +278,6 @@ def test_staypoints_partitioning_invariance(spark):
     b = staypoints(traj.coalesce(1), radius=50.0, min_pts=3) \
         .orderBy("user_id", "ts_start").collect()
     assert a == b and len(a) > 0
-
-
-def test_address_ranges_sides_and_monotone(spark):
-    from bano_spark.operators.interpolation import address_ranges
-
-    segs = _df(spark, [(1, 0.0, 0.0, 1000.0, 0.0)],
-               "seg_id long, x1 double, y1 double, x2 double, y2 double")
-    # odd numbers increase along the axis (monotone); even numbers
-    # scrambled (1000 at t=.1, 2 at t=.5, 500 at t=.9 -> inversions
-    # both ways)
-    pts = _df(spark, [
-        (1, 1, 100.0, 10.0), (2, 5, 500.0, 10.0), (3, 17, 900.0, 10.0),
-        (4, 1000, 100.0, -10.0), (5, 2, 500.0, -10.0),
-        (6, 500, 900.0, -10.0),
-    ], "point_id long, num long, x double, y double")
-    out = {r["side"]: r
-           for r in address_ranges(pts, segs, 50.0).collect()}
-    odd, even = out["odd"], out["even"]
-    assert (odd["num_min"], odd["num_max"], odd["monotone"]) == (1, 17, True)
-    assert (even["num_min"], even["num_max"], even["monotone"]) == (2, 1000, False)
-    assert odd["t_min"] == pytest.approx(0.1) and odd["t_max"] == pytest.approx(0.9)
-
-
-def test_address_ranges_descending_is_monotone(spark):
-    from bano_spark.operators.interpolation import address_ranges
-
-    segs = _df(spark, [(1, 0.0, 0.0, 1000.0, 0.0)],
-               "seg_id long, x1 double, y1 double, x2 double, y2 double")
-    pts = _df(spark, [(1, 9, 100.0, 5.0), (2, 5, 500.0, 5.0),
-                      (3, 1, 900.0, 5.0)],
-              "point_id long, num long, x double, y double")
-    out = address_ranges(pts, segs, 50.0).collect()
-    assert len(out) == 1 and out[0]["monotone"] is True  # strictly falling
-
-
-def test_bbox_intersection_dedup_across_cells(spark):
-    """A pair whose shared cover spans MANY cells must emit exactly one
-    row (representative-cell dedup), with the exact clip area."""
-    from bano_spark.operators.overlay import bbox_intersection_areas
-
-    left = _df(spark, [(1, 0.0, 0.0, 300000.0, 300000.0)],
-               "left_id long, xmin double, ymin double, xmax double, ymax double")
-    right = _df(spark, [(7, 100000.0, 100000.0, 500000.0, 250000.0),
-                        (8, 400000.0, 400000.0, 500000.0, 500000.0)],
-                "right_id long, xmin double, ymin double, xmax double, ymax double")
-    out = bbox_intersection_areas(left, right, zoom=10).collect()
-    assert len(out) == 1  # pair (1,7) once; (1,8) disjoint
-    r = out[0]
-    assert (r["left_id"], r["right_id"]) == (1, 7)
-    assert r["inter_area"] == 200000.0 * 150000.0
 
 
 def test_turn_classification_exact_angles(spark):

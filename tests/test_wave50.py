@@ -1,13 +1,12 @@
 """Hand-computed checks for the wave-50 operators: sampled harmonic
-centrality / effective diameter on per-seed BFS levels, diagonal
-Mahalanobis scores, Jensen-Shannon source divergence."""
+centrality / effective diameter on per-seed BFS levels, Jensen-Shannon
+source divergence."""
 
 import math
 
 from bano_spark.operators.graph import (
     effective_diameter_sampled, multi_source_bfs,
     sampled_harmonic_centrality)
-from bano_spark.operators.linalg import mahalanobis_diag_scores
 from bano_spark.operators.textstats import js_divergence_sources
 
 
@@ -53,23 +52,6 @@ def test_effective_diameter(spark):
         edges, seeds, src="s", dst="d", max_hops=10,
         quantile=0.5).collect()[0]
     assert out2["effective_diameter"] == 2
-
-
-def test_mahalanobis_diag_scores(spark):
-    rows = [(1, [0.0, 0.0]), (2, [2.0, 0.0]), (3, [4.0, 6.0])]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = {r["vec_id"]: r["maha_score"] for r in
-           mahalanobis_diag_scores(df).collect()}
-    # mu=(2,2), var=(8/3, 8): scores 2.0, 0.5, 3.5
-    assert out[1] == 2.0 and out[2] == 0.5 and out[3] == 3.5
-
-
-def test_mahalanobis_constant_dim_contributes_zero(spark):
-    rows = [(1, [1.0, 5.0]), (2, [1.0, 7.0])]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = {r["vec_id"]: r["maha_score"] for r in
-           mahalanobis_diag_scores(df).collect()}
-    assert out[1] == 1.0 and out[2] == 1.0
 
 
 def test_js_divergence(spark):

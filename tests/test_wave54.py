@@ -1,10 +1,6 @@
 """Hand-computed checks for the wave-54 operators: Vincenty inverse
 geodesic, rank-biased overlap, source tf-idf cosine."""
 
-import math
-
-from pyspark.sql import functions as F
-
 from bano_spark.operators.geodesy import vincenty_vs_haversine
 from bano_spark.operators.search import rank_biased_overlap
 from bano_spark.operators.textstats import source_tfidf_cosine

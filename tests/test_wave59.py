@@ -1,46 +1,8 @@
-"""Hand-computed checks for the wave-59 operators: Chaikin smoothing,
-Tissot distortion, circular dispersion."""
-
-import math
-
-from pyspark.sql import functions as F
+"""Hand-computed checks for the wave-59 operators: Tissot distortion,
+circular dispersion."""
 
 from bano_spark.operators.geodesy import tissot_mercator_stats
-from bano_spark.operators.simplify import chaikin_length_stats, chaikin_smooth
 from bano_spark.operators.trajectory import circular_dispersion
-
-
-def _L(spark, pts):
-    return spark.createDataFrame(
-        [(1, i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
-        "user_id bigint, seq bigint, x double, y double")
-
-
-def test_chaikin_one_round_right_angle(spark):
-    # L-shape (0,0)-(10,0)-(10,10): one round gives the classic
-    # 4-point cut: (0,0),(2.5,0),(7.5,0),(10,2.5),(10,7.5),(10,10)
-    out = chaikin_smooth(_L(spark, [(0, 0), (10, 0), (10, 10)]),
-                         iters=1).orderBy("seq").collect()
-    coords = [(r["x"], r["y"]) for r in out]
-    assert coords == [(0.0, 0.0), (2.5, 0.0), (7.5, 0.0),
-                      (10.0, 2.5), (10.0, 7.5), (10.0, 10.0)]
-
-
-def test_chaikin_shortens_and_counts(spark):
-    df = _L(spark, [(0, 0), (10, 0), (10, 10), (20, 10)])
-    out = chaikin_length_stats(df, iters=2).collect()[0]
-    assert out["n_verts_in"] == 4
-    # n -> 2(n-1) + 2 per round: 4 -> 8 -> 16
-    assert out["n_verts_out"] == 16
-    raw_len = 10 + 10 + 10
-    assert out["smoothed_length"] < raw_len
-    assert out["smoothed_length"] > 20  # still connects the ends
-
-
-def test_chaikin_straight_line_invariant_length(spark):
-    df = _L(spark, [(0, 0), (10, 0), (20, 0), (30, 0)])
-    out = chaikin_length_stats(df, iters=2).collect()[0]
-    assert out["smoothed_length"] == 30.0  # collinear: no shortening
 
 
 def test_tissot_equator_and_60n(spark):

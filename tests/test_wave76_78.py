@@ -1,63 +1,10 @@
-"""Waves 76-78 kernel tests: LRU stack distances vs a Python cache
-simulation, farthest-first centers vs a brute-force replay, hash
-walks vs a Python walk replay, Huffman cost vs the sorted-heap
-reference, and the Hilbert bijection sanity on the audit lattice."""
+"""Waves 76-78 kernel tests: hash walks vs a Python walk replay,
+Huffman cost vs the sorted-heap reference, and the Hilbert bijection
+sanity on the audit lattice."""
 
 import hashlib
 import heapq
 import random
-
-
-def test_lru_matches_python_simulation(spark):
-    from bano_spark.operators.sessions import lru_stack_distance
-
-    rng = random.Random(17)
-    rows, expect = [], {}
-    for g in range(6):
-        pages = [str(rng.randrange(9)) for _ in range(60)]
-        stack, h4, h16 = [], 0, 0
-        for p in pages:
-            if p in stack:
-                d = stack.index(p) + 1
-                h4 += d <= 4
-                h16 += d <= 16
-                stack.remove(p)
-            stack.insert(0, p)
-        expect[g] = (h4, h16, len(stack))
-        rows += [(g, i, p) for i, p in enumerate(pages)]
-    df = spark.createDataFrame(rows, "g int, seq int, page string")
-    out = {r["g"]: (r["hits_c4"], r["hits_c16"], r["distinct_pages"])
-           for r in lru_stack_distance(df, "g", ["seq"], "page",
-                                       caps=(4, 16)).collect()}
-    assert out == expect
-
-
-def test_farthest_first_matches_python(spark):
-    from bano_spark.operators.clustering import farthest_first_centers
-
-    rng = random.Random(19)
-    pts = [(i, rng.randrange(1000), rng.randrange(1000))
-           for i in range(40)]
-    centers = [min(pts)[0]]
-    coords = {i: (x, y) for i, x, y in pts}
-
-    def d2(a, b):
-        ax, ay = coords[a]
-        bx, by = coords[b]
-        return (ax - bx) ** 2 + (ay - by) ** 2
-
-    for _ in range(3):
-        best = max(((min(d2(i, c) for c in centers), -i), i)
-                   for i, _, _ in pts)[1]
-        centers.append(best)
-    df = spark.createDataFrame([(0, i, float(x), float(y))
-                                for i, x, y in pts],
-                               "g int, rid long, x double, y double")
-    row = farthest_first_centers(df, "g", "rid", "x", "y", k=4).first()
-    got = [row[f"c{j}_rid"] for j in range(1, 5)]
-    assert got == centers
-    rad = max(min(d2(i, c) for c in centers) for i, _, _ in pts)
-    assert row["radius2"] == rad
 
 
 def test_hash_walks_match_python(spark):

